@@ -31,7 +31,13 @@ object Bench {
           val df = fn(spark, sfDir)
           try df.count()
           finally graft.operators.Dedup.release(df)
-        } catch { case _: Throwable => () }
+        } catch { case e: Throwable =>
+          // the entry's time is still recorded (the stdout line keeps
+          // its keys); stderr names the failure so it is not mistaken
+          // for a fast run
+          System.err.println(
+            s"graft.Bench: $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        }
         name -> (System.nanoTime() - t0) / 1e9
       }
     // Steady-state protocol: the full suite runs SPARK_GRAFT_BENCH_PASSES

@@ -4,9 +4,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.graft.{PlanBridge, StatsWrite}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.json4s._
 import org.json4s.JsonDSL._
@@ -63,17 +63,6 @@ object TxLog {
 
   val LogDir = "_graft_log"
 
-  /** Exact row count of one parquet file from its FOOTER, read on the
-    * driver — corroborating one staged file must not cost a Spark job
-    * (~100 ms of scheduling for a metadata question). */
-  private def parquetFooterRows(spark: SparkSession,
-      p: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(p, spark.sessionState.newHadoopConf())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
-
   /** Materialize a bounded, multiply-consumed relation ONCE and
     * TRUNCATE its lineage (eager localCheckpoint). The DML surfaces
     * drive several actions over their directive/source relations;
@@ -86,17 +75,22 @@ object TxLog {
     * every consumer plans against one flat LogicalRDD. Blocks must be
     * freed with [[releaseCheckpoint]] once consumed — the
     * ContextCleaner only gets to them at some later GC. */
-  private[sources] def checkpointed(df: DataFrame): DataFrame =
+  private[graft] def checkpointed(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true)
 
-  /** Free the executor storage behind [[checkpointed]] (the
-    * [[graft.operators.Dedup.release]] recipe): unpersist every
-    * LogicalRDD leaf in the plan. After release the DataFrame is not
-    * recomputable — call only once every consumer is done. */
-  private[sources] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
+  /** Free the executor storage behind one frame [[checkpointed]]
+    * returned: exactly the RDD at its root — never another checkpoint
+    * it was built from, which may still have live consumers. After
+    * release the frame is not recomputable — call only once every
+    * consumer is done. */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case p => throw new IllegalArgumentException(
+        s"TxLog: releaseCheckpoint needs a frame returned by checkpointed, " +
+          s"got a ${p.nodeName} plan")
+    }
 
   /** Label the Spark jobs `f` launches (guide §1.5) so profilers and
     * the UI attribute commit-machinery phases; restores the caller's
@@ -399,14 +393,15 @@ object TxLog {
   /** One stats-collection projection per column: min/max in the
     * canonical cast-to-string form, the null count, and (atomic
     * columns) a KMV distinct-count sketch over `xxhash64(col)` —
-    * shared by [[stageData]] and [[convertInPlace]] so the recorded
-    * stats can never diverge between the two write paths. The sketch
+    * shared by [[stageData]] (evaluated per file inside the write
+    * tasks) and [[convertInPlace]] (a scan of files it did not write)
+    * so the recorded stats can never diverge between the two. The sketch
     * is what gives CBO a real NDV for ANY column type (strings —
     * document ids, categories — included; the old range bound only
     * ever covered dense integral keys); [[TxLogStats]] merges the
     * per-file sketches at snapshot load, so restriction re-estimates
     * from exactly the surviving files. */
-  private def statAggExprs(statsCols: Seq[String],
+  private[graft] def statAggExprs(statsCols: Seq[String],
       dtypes: Map[String, String] = Map.empty)
       : Seq[org.apache.spark.sql.Column] =
     statsCols.flatMap { c =>
@@ -430,7 +425,7 @@ object TxLog {
       }
     }
 
-  private def statsOfRow(r: Row, statsCols: Seq[String],
+  private[graft] def statsOfRow(r: Row, statsCols: Seq[String],
       dtypes: Map[String, String]): Map[String, ColStats] =
     statsCols.map { c =>
       val kmv =
@@ -749,9 +744,11 @@ object TxLog {
   }
 
   /** Write `df`'s data into the dataset dir as immutable uniquely-named
-    * parquet files WITHOUT touching the log: stage, stat rows (and
-    * `statsCols` min/max — the [[readPruned]] skipping metadata) per
-    * file in one scan of just the new files, move into place. The
+    * parquet files WITHOUT touching the log: stage, move into place.
+    * Each file's row count and `statsCols` stats (min/max — the
+    * [[readPruned]] skipping metadata — null count and KMV sketch) are
+    * collected by the write tasks while they write it, so staging is
+    * one pass over the batch and the new files are never re-read. The
     * files are invisible until a commit references them. */
   private[graft] def stageData(spark: SparkSession, dir: String,
       df: DataFrame, statsCols: Seq[String] = Nil,
@@ -801,76 +798,75 @@ object TxLog {
     val physParts =
       if (physParts0.forall(physOfBatch.contains)) physParts0 else Nil
     try {
-      val (added, _) =
-        stageBody(spark, dir, physDf, physStats, stageDir, f, dtypes,
-          physParts, sortWithinPhys, maxRecordsPerFile, valueTasks)
+      val added =
+        if (physParts.isEmpty)
+          writeStaged(spark, dir, physDf, physStats, dtypes, stageDir, f,
+            Nil, None)
+        else stageBodyPartitioned(spark, dir, physDf, physStats, stageDir,
+          f, dtypes, physParts, sortWithinPhys, maxRecordsPerFile,
+          valueTasks)
       (added, logicalJson)
     } catch { case e: Throwable =>
-      // a failed stage (write error, stats scan error, rename race)
+      // a failed stage (write error, rename race)
       // must not leak the staged copy: vacuum never touches `_` dirs
       f.delete(stageDir, true)
       throw e
     }
   }
 
-  private def stageBody(spark: SparkSession, dir: String, df: DataFrame,
-      statsCols: Seq[String], stageDir: Path, f: FileSystem,
-      dtypes: Map[String, String],
-      partCols: Seq[String] = Nil,
-      sortWithinPhys: Seq[Column] = Nil,
-      maxRecordsPerFile: Option[Long] = None,
-      valueTasks: Map[String, Int] = Map.empty): (Seq[TxFile], String) = {
-    if (partCols.nonEmpty)
-      return stageBodyPartitioned(spark, dir, df, statsCols, stageDir,
-        f, dtypes, partCols, sortWithinPhys, maxRecordsPerFile,
-        valueTasks)
-    described(spark, "stage-write") {
-      df.write.mode(SaveMode.Overwrite).parquet(stageDir.toString)
+  /** Write one batch into `stageDir` and move its files into the
+    * dataset dir under fresh names (partition dirs kept). The write
+    * tasks themselves count each file's rows and evaluate
+    * [[statAggExprs]] over them as they write ([[StatsWrite]]), so the
+    * staged data is never read back. A file with no rows (a flat write
+    * of an empty batch still emits one) registers with empty stats. */
+  private def writeStaged(spark: SparkSession, dir: String, df: DataFrame,
+      statsCols: Seq[String], dtypes: Map[String, String], stageDir: Path,
+      f: FileSystem, partCols: Seq[String],
+      maxRecordsPerFile: Option[Long]): Seq[TxFile] = {
+    val written = described(spark, "stage-write") {
+      StatsWrite.parquet(df, stageDir.toString, partCols,
+        maxRecordsPerFile.map(n => "maxRecordsPerFile" -> n.toString).toMap,
+        statAggExprs(statsCols, dtypes))
     }
-    val parts = f.listStatus(stageDir)
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
-    val byName: Map[String, (Long, Map[String, ColStats])] =
-      if (parts.isEmpty) Map.empty
-      else described(spark, "stage-stats") {
-        spark.read.parquet(stageDir.toString)
-          .groupBy(input_file_name().as("f"))
-          .agg(count(lit(1)).as("n"), statAggExprs(statsCols, dtypes): _*)
-          .collect()
-      }
-        .map { r =>
-          r.getString(0).split('/').last ->
-            (r.getLong(1), statsOfRow(r, statsCols, dtypes))
-        }.toMap
-    val uuid = UUID.randomUUID().toString.take(8)
-    val added = parts.zipWithIndex.map { case (st, i) =>
-      val name = f"$uuid-p$i%05d.parquet"
-      // a staged file ABSENT from the stats aggregation is only
-      // legitimate when it genuinely holds zero rows (static writes
-      // DO emit empty part files for empty tasks — no rows, no
-      // group). Corroborate before accepting rows = 0: registering a
-      // live file with zeroed stats would silently mis-prune its
-      // rows on every later filtered read. Cost: one single-file
-      // footer read, miss path only.
-      val (rows, stats) =
-        byName.get(st.getPath.getName).getOrElse {
-          // corroborate from the FOOTER on the driver (one metadata
-          // read) — a Spark count() job here cost ~100 ms of pure
-          // scheduling per empty part file
-          val n = parquetFooterRows(spark, st.getPath)
-          if (n != 0L) throw new IllegalStateException(
-            s"TxLog: staged file ${st.getPath} holds $n rows but " +
-              "matched no stats row — file-name keying drifted; " +
-              "refusing to register it with empty stats")
-          (0L, Map.empty[String, ColStats])
+    // relative paths exactly as they sit on disk ('%' in a partition
+    // value is the escaped "%25" in both listing and writer paths)
+    val stageAbs = f.makeQualified(stageDir).toString
+    val parts = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[
+        (String, org.apache.hadoop.fs.FileStatus)]
+      val it = f.listFiles(stageDir, true)
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isFile && st.getPath.getName.startsWith("part-")) {
+          val abs = f.makeQualified(st.getPath).toString
+          require(abs.startsWith(stageAbs + "/"),
+            s"TxLog: staged file $abs escapes the stage dir")
+          out += abs.drop(stageAbs.length + 1) -> st
         }
-      if (!f.rename(st.getPath, new Path(dir, name)))
+      }
+      out.sortBy(_._1).toSeq
+    }
+    val uuid = UUID.randomUUID().toString.take(8)
+    val added = parts.zipWithIndex.map { case ((rel, st), i) =>
+      val file = written.getOrElse(rel, throw new IllegalStateException(
+        s"TxLog: staged file ${st.getPath} was not reported by its " +
+          "write task — refusing to register it without stats"))
+      val partDir = rel.split('/').dropRight(1).mkString("/")
+      val name = f"$uuid-p$i%05d.parquet"
+      val relOut = if (partDir.isEmpty) name else s"$partDir/$name"
+      val target = new Path(dir, relOut)
+      if (partDir.nonEmpty) f.mkdirs(target.getParent)
+      if (!f.rename(st.getPath, target))
         throw new IllegalStateException(
           s"TxLog: staging move failed for ${st.getPath}")
-      TxFile(name, rows, stats, bytes = Some(st.getLen))
-    }.toSeq
+      val stats =
+        if (file.rows == 0L) Map.empty[String, ColStats]
+        else statsOfRow(file.stats, statsCols, dtypes)
+      TxFile(relOut, file.rows, stats, bytes = Some(st.getLen))
+    }
     f.delete(stageDir, true)
-    (added, df.schema.json)
+    added
   }
 
   /** Partition-PURE staging for PARTITIONED tables (round-18): the
@@ -891,9 +887,8 @@ object TxLog {
     * one task, so a V-value batch stages ~V files (per-value sizing
     * is OPTIMIZE's job, as with any small-file pattern). Base names
     * may repeat across partition dirs within one stage (same task
-    * number, different dir), so the stats scan matches files by
-    * their last `depth + 1` URI-decoded path segments — exactly
-    * [[convertInPlace]]'s relKey. */
+    * number, different dir), so [[writeStaged]] keys files by their
+    * dir-relative path. */
   /** The U+0001-joined canonical (cast-to-string) form of a row's
     * partition values — the key [[stageBodyPartitioned]]'s per-value
     * fan-out maps look up. Mirrors the per-file stat strings, so a
@@ -908,7 +903,7 @@ object TxLog {
       partCols: Seq[String],
       sortWithinPhys: Seq[Column] = Nil,
       maxRecordsPerFile: Option[Long] = None,
-      valueTasks: Map[String, Int] = Map.empty): (Seq[TxFile], String) = {
+      valueTasks: Map[String, Int] = Map.empty): Seq[TxFile] = {
     // `sortWithinPhys` (physical-name expressions) clusters rows
     // inside each partition's task before the write — the purify-
     // compaction leg of OPTIMIZE … ZORDER BY: per-file min/max
@@ -1081,90 +1076,8 @@ object TxLog {
       if (sortWithinPhys.isEmpty) shuffled
       else shuffled.sortWithinPartitions(
         partCols.map(col) ++ sortWithinPhys: _*)
-    val writer0 = laid.write.mode(SaveMode.Overwrite)
-    val writer = maxRecordsPerFile.fold(writer0)(n =>
-      writer0.option("maxRecordsPerFile", n.toString))
-    writer.partitionBy(partCols: _*).parquet(stageDir.toString)
-    val stageAbs = f.makeQualified(stageDir).toString
-    val parts = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[
-        org.apache.hadoop.fs.FileStatus]
-      val it = f.listFiles(stageDir, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.startsWith("part-"))
-          out += st
-      }
-      out.sortBy(st => f.makeQualified(st.getPath).toString).toSeq
-    }
-    def relOf(p: Path): String = {
-      val abs = f.makeQualified(p).toString
-      require(abs.startsWith(stageAbs + "/"),
-        s"TxLog: staged file $abs escapes the stage dir")
-      abs.drop(stageAbs.length + 1)
-    }
-    // keying contract: `input_file_name()` returns the URI-ENCODED
-    // path (a literal '%' in a partition dir arrives as "%25"), so
-    // the stats side decodes EXACTLY ONCE; the FileStatus side
-    // ([[relOf]]) is already the raw on-disk relative path and must
-    // never be decoded — running it through the decoder too would
-    // double-decode any value whose escaped form survives decoding
-    // (e.g. "100%" → dir "lang=100%25" → "lang=100%"), silently
-    // mismatching the two sides.
-    val depth = partCols.size + 1
-    def relKey(fullPath: String): String = {
-      val path = try new java.net.URI(fullPath).getPath
-      catch { case _: java.net.URISyntaxException => fullPath }
-      path.split('/').takeRight(depth).mkString("/")
-    }
-    // the scan carries the caller's DECLARED types for the
-    // path-encoded partition columns (inference could narrow them —
-    // '01' parsing as 1 would corrupt the recorded stat strings)
-    val byKey: Map[String, (Long, Map[String, ColStats])] =
-      if (parts.isEmpty) Map.empty
-      else spark.read.schema(df.schema).parquet(stageDir.toString)
-        .groupBy(input_file_name().as("f"))
-        .agg(count(lit(1)).as("n"), statAggExprs(statsCols, dtypes): _*)
-        .collect()
-        .map { r =>
-          relKey(r.getString(0)) ->
-            (r.getLong(1), statsOfRow(r, statsCols, dtypes))
-        }.toMap
-    val uuid = UUID.randomUUID().toString.take(8)
-    val added = parts.zipWithIndex.map { case (st, i) =>
-      val rel = relOf(st.getPath)
-      val partDir = rel.split('/').dropRight(1).mkString("/")
-      val name = f"$uuid-p$i%05d.parquet"
-      val relOut = if (partDir.isEmpty) name else s"$partDir/$name"
-      // every staged file MUST appear in the aggregation here: the
-      // partitionBy write only materializes files that received rows,
-      // so a byKey miss means the relKey derivation drifted from
-      // input_file_name's URI form (e.g. a partition value whose
-      // encoded path decodes differently) — and silently recording
-      // rows = 0 would make TxFileIndex.build map the file to an
-      // all-NULL partition value: `WHERE p = v` then silently prunes
-      // live rows away. Corroborate a genuine empty before accepting.
-      val (rows, stats) =
-        byKey.get(rel.split('/').takeRight(depth).mkString("/"))
-          .getOrElse {
-            // footer metadata on the driver — same corroboration,
-            // no per-file Spark job
-            val n = parquetFooterRows(spark, st.getPath)
-            if (n != 0L) throw new IllegalStateException(
-              s"TxLog: staged file ${st.getPath} holds $n rows but " +
-                "matched no stats row (relKey drift) — refusing to " +
-                "register it with empty stats")
-            (0L, Map.empty[String, ColStats])
-          }
-      val target = new Path(dir, relOut)
-      f.mkdirs(target.getParent)
-      if (!f.rename(st.getPath, target))
-        throw new IllegalStateException(
-          s"TxLog: staging move failed for ${st.getPath}")
-      TxFile(relOut, rows, stats, bytes = Some(st.getLen))
-    }
-    f.delete(stageDir, true)
-    (added, df.schema.json)
+    writeStaged(spark, dir, laid, statsCols, dtypes, stageDir, f, partCols,
+      maxRecordsPerFile)
   }
 
   private def deleteStaged(spark: SparkSession, dir: String,

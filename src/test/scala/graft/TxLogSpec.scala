@@ -1794,4 +1794,202 @@ class TxLogSpec extends SparkSpec {
     TxLog.clone(spark, dst, dst3) // the SELF-CONTAINED clone clones fine
     assert(idSet(TxLog.read(spark, dst3)) == idSet(TxLog.read(spark, dst)))
   }
+
+  // ---- write-time per-file stats ------------------------------------
+
+  /** For every live file: the row count and stats a SCAN of that file
+    * computes with [[TxLog.statAggExprs]] — what staging recorded
+    * before it collected stats inside the write. Stats columns are the
+    * LOGICAL names; files key them by physical name. */
+  private def assertStatsMatchScan(dir: String, statsCols: Seq[String])
+      : Unit = {
+    val snap = TxLog.snapshot(spark, dir)
+    val logical = org.apache.spark.sql.types.DataType
+      .fromJson(snap.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val phys = org.apache.spark.sql.types.StructType(
+      logical.fields.map(f => f.copy(name = snap.phys(f.name))))
+    val dtypes = phys.fields.map(f => f.name -> f.dataType.catalogString)
+      .toMap
+    val cols = statsCols.map(snap.phys)
+    assert(snap.files.nonEmpty)
+    snap.files.foreach { f =>
+      val r = spark.read.schema(phys).option("basePath", dir)
+        .parquet(TxLog.resolveData(dir, f.path))
+        .agg(count(lit(1)).as("n"), TxLog.statAggExprs(cols, dtypes): _*)
+        .head()
+      val n = r.getLong(0)
+      assert(f.rows == n, f.path)
+      val expected =
+        if (n == 0L) Map.empty[String, TxLog.ColStats]
+        else TxLog.statsOfRow(r, cols, dtypes)
+      assert(f.stats == expected, f.path)
+      assert(f.bytes.contains(
+        Files.size(java.nio.file.Paths.get(TxLog.resolveData(dir, f.path)))))
+    }
+  }
+
+  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("write-time file stats equal a scan: types, NaN and -0.0, nulls, empty tasks") {
+    // non-UTC session zone: timestamps render (and order) through it,
+    // and the rows straddle the 2024-03-10 US DST switch
+    withConf("spark.sql.session.timeZone" -> "America/Los_Angeles") {
+      val dir = tmp("txwstats").toString
+      def pick(c: org.apache.spark.sql.Column, vs: org.apache.spark.sql.Column*) =
+        element_at(array(vs: _*), (c % vs.size + 1).cast("int"))
+      // 8 range tasks, the first two filtered empty: task 0 still
+      // writes a (0-row) file, task 1 writes none
+      def batch(lo: Long, hi: Long) = spark.range(lo, hi, 1, 8)
+        .filter(col("id") >= lo + (hi - lo) / 4)
+        .select(
+          col("id").cast("int").as("i"),
+          (col("id") * 1000000007L - 5000000000L).as("l"),
+          (col("id") / 7 - 3).cast("decimal(12,3)").as("dec"),
+          date_add(lit("2024-02-27").cast("date"), col("id").cast("int"))
+            .as("d"),
+          timestamp_seconds(lit(1710054000L) + col("id") * 1800).as("ts"),
+          pick(col("id"), lit("Zürich"), lit("東京"), lit("ñandú"),
+            lit("😀x"), lit("abc"), lit("Ärger")).as("s"),
+          pick(col("id") * 3, lit(-0.0), lit(0.0), lit(Double.NaN),
+            lit(1.5), lit(-2.5), lit(0.0), lit(-0.0)).as("x"),
+          // signed zeros only: min/max tie, the first row seen wins
+          pick(col("id"), lit(0.0), lit(-0.0), lit(-0.0)).as("z"),
+          lit(null).cast("string").as("nul"))
+      val cols = Seq("i", "l", "dec", "d", "ts", "s", "x", "z", "nul")
+      TxLog.commitOverwrite(spark, dir, batch(0, 96), statsCols = cols)
+      val v0 = TxLog.snapshot(spark, dir)
+      assert(v0.files.exists(_.rows == 0L), "an empty task wrote no file")
+      // an empty batch, and a batch cut at 7 rows per file
+      TxLog.commitAppend(spark, dir, batch(0, 96).limit(0), statsCols = cols)
+      withConf("spark.sql.files.maxRecordsPerFile" -> "7") {
+        TxLog.commitAppend(spark, dir, batch(96, 200), statsCols = cols)
+      }
+      assert(TxLog.snapshot(spark, dir).files.count(_.rows == 7L) >= 4)
+      assertStatsMatchScan(dir, cols)
+      val live = TxLog.snapshot(spark, dir).files.filter(_.rows > 0)
+      assert(live.flatMap(_.stats.get("x")).exists(_.max.contains("NaN")))
+      val z = live.flatMap(_.stats.get("z")).flatMap(st => st.min ++ st.max)
+      assert(z.contains("-0.0") && z.contains("0.0"), z)
+      live.foreach { f =>
+        val nul = f.stats("nul")
+        assert(nul.min.isEmpty && nul.max.isEmpty &&
+          nul.nulls.contains(f.rows), f.path)
+      }
+    }
+  }
+
+  test("write-time file stats equal a scan: '%' and spaces in partitions, renames") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp("txwstatsp").toString
+    val langs = Seq("100%", "a b", "x%20y", "plain")
+    def rows(lo: Int, hi: Int) = (lo until hi).map(i =>
+      (i.toLong, s"v$i", langs(i % langs.size))).toDF("k", "v", "lang")
+    rows(0, 20).write.mode("overwrite").partitionBy("lang").parquet(dir)
+    TxLog.convertInPlace(spark, dir, statsCols = Seq("k", "v"))
+    withConf("spark.sql.files.maxRecordsPerFile" -> "5") {
+      TxLog.commitAppend(spark, dir, rows(20, 120),
+        statsCols = Seq("k", "v", "lang"))
+    }
+    val snap = TxLog.snapshot(spark, dir)
+    assert(snap.partitionCols == Seq("lang"))
+    assert(snap.files.exists(_.path.startsWith("lang=100%25/")), snap.files)
+    assert(snap.files.count(_.rows == 5L) >= 8, snap.files)
+    assertStatsMatchScan(dir, Seq("k", "v", "lang"))
+    assert(TxLog.read(spark, dir).where($"lang" === "100%").count() == 30)
+
+    // column mapping: a renamed column's stats key by its physical name
+    val flat = tmp("txwstatsm").toString
+    TxLog.commitOverwrite(spark, flat, rows(0, 10), statsCols = Seq("k", "v"))
+    TxLog.renameColumn(spark, flat, "v", "w")
+    TxLog.commitAppend(spark, flat,
+      rows(10, 30).withColumnRenamed("v", "w"), statsCols = Seq("k", "w"))
+    val m = TxLog.snapshot(spark, flat)
+    assert(m.phys("w") != "w")
+    assert(m.files.exists(_.stats.contains(m.phys("w"))))
+    assertStatsMatchScan(flat, Seq("k", "w"))
+  }
+
+  test("staged commits launch no stats re-scan job; their writes stay labelled") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    val labels = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        labels.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")); ()
+      }
+    }
+    def jobsOf(op: => Unit): Seq[String] = {
+      org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
+      labels.clear()
+      op
+      org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
+      labels.toArray.map(_.toString).toSeq
+    }
+    val dir = tmp("txjobs").toString
+    val pdir = tmp("txjobsp").toString
+    def kv(lo: Long, hi: Long) = (lo until hi).map(i =>
+      (i, s"n$i", s"p${i % 3}")).toDF("id", "name", "p")
+    kv(0, 10).write.mode("overwrite").partitionBy("p").parquet(pdir)
+    TxLog.convertInPlace(spark, pdir, statsCols = Seq("id"))
+    sc.addSparkListener(listener)
+    try {
+      val ops = Seq[(String, () => Unit)](
+        "overwrite" -> (() => TxLog.commitOverwrite(spark, dir, kv(0, 40),
+          statsCols = Seq("id"))),
+        "append" -> (() => TxLog.commitAppend(spark, dir, kv(40, 60),
+          statsCols = Seq("id"))),
+        "merge" -> (() => TxLog.merge(spark, dir, kv(50, 70), Seq("id"),
+          statsCols = Seq("id"))),
+        "applyChanges" -> (() => TxLog.applyChanges(spark, dir,
+          kv(65, 75).withColumn("del", $"id" % 2 === 0), Seq("id"), "del",
+          statsCols = Seq("id"))),
+        "partitioned append" -> (() => TxLog.commitAppend(spark, pdir,
+          kv(10, 30), statsCols = Seq("id"))))
+      ops.foreach { case (name, op) =>
+        val jobs = jobsOf(op())
+        assert(!jobs.contains("txlog:stage-stats"), s"$name: $jobs")
+        assert(jobs.contains("txlog:stage-write"), s"$name: $jobs")
+      }
+    } finally sc.removeSparkListener(listener)
+    assert(TxLog.read(spark, dir).count() == 70)
+    assert(TxLog.read(spark, pdir).count() == 30)
+  }
+
+  test("releaseCheckpoint frees the frame's own checkpoint, never the one beneath it") {
+    val sc = spark.sparkContext
+    def rddOf(d: DataFrame) = d.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    def cached(d: DataFrame): Boolean = sc.getRDDStorageInfo
+      .exists(i => i.id == rddOf(d).id && i.numCachedPartitions > 0)
+    val inner = TxLog.checkpointed(spark.range(0, 100, 1, 4).toDF("id"))
+    val outer = TxLog.checkpointed(inner.filter(col("id") % 2 === 0))
+    assert(cached(inner) && cached(outer))
+    // a frame DERIVED from checkpoints is not a handle: refused, and
+    // nothing is freed
+    intercept[IllegalArgumentException] {
+      TxLog.releaseCheckpoint(outer.join(inner, "id"))
+    }
+    assert(cached(inner) && cached(outer))
+    TxLog.releaseCheckpoint(outer)
+    assert(!sc.getPersistentRDDs.contains(rddOf(outer).id))
+    assert(cached(inner))
+    assert(inner.count() == 100L) // still readable: its blocks are live
+    TxLog.releaseCheckpoint(inner)
+    assert(!sc.getPersistentRDDs.contains(rddOf(inner).id))
+  }
 }
