@@ -17,7 +17,8 @@ import graft.quality.{DataZone, QualityValidator, Report, Rule}
   *
   *  - FULL        → overwrite           (etl_manager.py:452-453)
   *  - APPEND      → append              (etl_manager.py:454-455)
-  *  - MERGE       → key-precedence upsert via union + window
+  *  - MERGE       → key-precedence upsert via union + window; a
+  *                  logged dataset uses TxLog.merge
   *                                      (etl_manager.py:456-467)
   *  - INCREMENTAL → insert-only-new via left-anti join
   *                                      (etl_manager.py:468-475)
@@ -360,7 +361,10 @@ class MedallionPipeline(spark: SparkSession, root: String,
   /** MERGE INTO a logged dataset (TxLog mode only): source rows
     * replace target rows sharing `keyCols`, unmatched source rows
     * insert — one commit, only key-matching files rewritten
-    * ([[TxLog.merge]]). The log-native form of [[LoadType.Merge]]. */
+    * ([[TxLog.merge]]: `applyChanges` with no deletes; a source with
+    * duplicate keys is refused, an empty one commits nothing). What a
+    * logged [[LoadType.Merge]] write does, with the dataset's stats
+    * columns. */
   def mergeInto(zone: DataZone.Value, dataset: String,
       source: DataFrame, keyCols: Seq[String]): Long =
     TxLog.merge(spark, requireLogged(zone, dataset, "mergeInto"),
@@ -517,14 +521,22 @@ class MedallionPipeline(spark: SparkSession, root: String,
     * In TxLog mode every branch lands as one log commit (snapshot
     * isolation replaces the stage-and-swap rename); `txn` carries an
     * idempotence marker through to the commit, making a replayed
-    * streaming batch a no-op ([[ingestStream]]).
+    * streaming batch a no-op ([[ingestStream]]). MERGE into an
+    * existing logged dataset is [[TxLog.merge]]: only files holding an
+    * incoming key are rewritten, untouched files survive by path, and
+    * the commit is a `merge` the change feed (and so Scd2 /
+    * MaterializedAgg followers) can read. `df` must then carry the
+    * dataset's schema and be unique on `key` — duplicate incoming keys
+    * are refused (Delta's multiple-matches contract). On plain parquet
+    * MERGE stays a whole-dataset union+window rewrite, where one of
+    * several incoming rows sharing a key wins arbitrarily.
     */
   def write(zone: DataZone.Value, dataset: String, df: DataFrame,
       loadType: LoadType.Value, key: Seq[String] = Seq("id"),
       txn: Option[(String, Long)] = None): Unit = {
     val target = path(zone, dataset)
-    // union+window upsert shared by both storage modes: existing rows
-    // lose to incoming on the same key
+    // plain-parquet MERGE: union+window upsert, existing rows lose to
+    // incoming on the same key (logged datasets use TxLog.merge)
     def upsert(): DataFrame = {
       val existing = read(zone, dataset).withColumn("_prec", lit(1))
       val incoming = df.withColumn("_prec", lit(0))
@@ -553,8 +565,7 @@ class MedallionPipeline(spark: SparkSession, root: String,
         case LoadType.Merge if !exists(zone, dataset) =>
           TxLog.commitOverwrite(spark, target, df, sc(df))
         case LoadType.Merge =>
-          val merged = upsert()
-          TxLog.commitOverwrite(spark, target, merged, sc(merged))
+          TxLog.merge(spark, target, df, key, sc(df), txn)
         case LoadType.Incremental if !exists(zone, dataset) =>
           TxLog.commitOverwrite(spark, target, df, sc(df))
         case LoadType.Incremental =>

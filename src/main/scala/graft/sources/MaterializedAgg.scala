@@ -242,38 +242,33 @@ object MaterializedAgg {
     * dirty keys recompute from. */
   private[graft] def applyFeed(spark: SparkSession, mvDir: String, spec: MvSpec,
       feed: DataFrame, endVersion: Long, mor: Boolean = false): Unit = {
-    // Both relations are touched-key-sized but their LINEAGE is the
+    // The deltas are touched-key-sized but their LINEAGE is the
     // span's row-level diff (one union + diff-aggregate pipeline per
-    // DML commit) — and applyChanges drives several actions over the
-    // directives (duplicate guard, touched-file detection, the
-    // rewrite itself). Materialize both ONCE with lineage truncated
-    // (TxLog.checkpointed; measured 30× recompute on StressMv's
-    // scattered-delete trickle before caching, and with a plain
-    // persist every action still re-planned the span-sized tree).
+    // DML commit), and directivesFor reads them more than once —
+    // materialize them ONCE with lineage truncated (TxLog.checkpointed;
+    // measured 30× recompute on StressMv's scattered-delete trickle
+    // before caching, and with a plain persist every action still
+    // re-planned the span-sized tree). The directives need no
+    // checkpoint of their own: applyChanges / applyChangesMor
+    // materialize their input once before any action.
     val touched = TxLog.described(spark, "mv-deltas-materialize") {
       TxLog.checkpointed(touchedDeltas(spec, feed))
     }
     try {
-      val directives = TxLog.described(spark, "mv-directives-materialize") {
-        TxLog.checkpointed(
-          directivesFor(spark, mvDir, spec, touched, endVersion))
-      }
-      try {
-        // mor = true retires replaced/dead view rows through deletion
-        // vectors (TxLog.applyChangesMor) instead of rewriting the
-        // touched view files whole — the write-amplification trade a
-        // scattered-key trickle against a LARGE view wants; compact
-        // folds the vectors away on schedule
-        if (mor)
-          TxLog.applyChangesMor(spark, mvDir, directives, spec.keys,
-            "_mv_del", statsCols = spec.keys,
-            txn = Some((WatermarkApp, endVersion)))
-        else
-          TxLog.applyChanges(spark, mvDir, directives, spec.keys,
-            "_mv_del", statsCols = spec.keys,
-            txn = Some((WatermarkApp, endVersion)))
-        ()
-      } finally TxLog.releaseCheckpoint(directives)
+      val directives = directivesFor(spark, mvDir, spec, touched, endVersion)
+      // mor = true retires replaced/dead view rows through deletion
+      // vectors (TxLog.applyChangesMor) instead of rewriting the
+      // touched view files whole — the write-amplification trade a
+      // scattered-key trickle against a LARGE view wants; compact
+      // folds the vectors away on schedule
+      if (mor)
+        TxLog.applyChangesMor(spark, mvDir, directives, spec.keys,
+          "_mv_del", statsCols = spec.keys,
+          txn = Some((WatermarkApp, endVersion)))
+      else
+        TxLog.applyChanges(spark, mvDir, directives, spec.keys,
+          "_mv_del", statsCols = spec.keys,
+          txn = Some((WatermarkApp, endVersion)))
     } finally TxLog.releaseCheckpoint(touched)
     ()
   }

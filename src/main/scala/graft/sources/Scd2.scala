@@ -238,7 +238,7 @@ object Scd2 {
     * history: `changes` carries the source's columns plus boolean
     * `deleteCol` and integral `seqCol` (for the feed path, the source
     * commit version). At most one directive per (key, seq) —
-    * ambiguity refuses like [[TxLog.merge]]; a directive at or before
+    * ambiguity refuses like [[TxLog.applyChanges]]; a directive at or before
     * a touched key's latest recorded `valid_from` refuses
     * (out-of-order). Cost shape: one window + one aggregate over the
     * DIRECTIVE relation, one stats-pruned read of the touched keys'

@@ -3246,6 +3246,28 @@ object TxLog {
       conflictIfAdded = Some(addedMatchGuard(spark, snap, schema, pred)))
   }
 
+  /** Refuse assignments (an UPDATE's SET map, a MERGE clause's
+    * SET/INSERT values) naming an unknown or generated column — or,
+    * unless `identityOk`, an identity column (Delta's contracts).
+    * `verb` names the clause in the refusal. */
+  private def checkAssignments(snap: TxSnapshot, schema: StructType,
+      set: Map[String, Column], verb: String,
+      identityOk: Boolean = false): Unit = {
+    val unknown = set.keys.filterNot(schema.fieldNames.contains)
+    require(unknown.isEmpty,
+      s"TxLog: $verb sets unknown column(s): ${unknown.mkString(", ")}")
+    val ident =
+      if (identityOk) Nil else set.keys.filter(snap.identity.contains)
+    require(ident.isEmpty,
+      s"TxLog: $verb cannot set identity column(s) " +
+        s"${ident.mkString(", ")} (Delta's identity contract)")
+    val gen = set.keys.filter(snap.generated.contains)
+    require(gen.isEmpty,
+      s"TxLog: $verb cannot set generated column(s) " +
+        s"${gen.mkString(", ")} directly — update their source " +
+        "columns and the expression recomputes")
+  }
+
   /** Row-level UPDATE (Delta's `UPDATE t SET … WHERE …`): rows where
     * `pred` is TRUE get each `set` expression (cast back to the
     * column's declared type — an UPDATE never mutates the schema);
@@ -3263,19 +3285,7 @@ object TxLog {
     // reserved-name contract as TagFile/TagIdx)
     require(!schema.fieldNames.contains("_graft_upd"),
       "TxLog: table columns collide with reserved name _graft_upd")
-    val known = schema.fieldNames.toSet
-    val unknown = set.keys.filterNot(known)
-    require(unknown.isEmpty,
-      s"TxLog: update sets unknown column(s): ${unknown.mkString(", ")}")
-    val idSet = set.keys.filter(snap.identity.contains)
-    require(idSet.isEmpty,
-      s"TxLog: UPDATE cannot set identity column(s) " +
-        s"${idSet.mkString(", ")} (Delta's identity contract)")
-    val genSet = set.keys.filter(snap.generated.contains)
-    require(genSet.isEmpty,
-      s"TxLog: UPDATE cannot set generated column(s) " +
-        s"${genSet.mkString(", ")} directly — update their source " +
-        "columns and the expression recomputes")
+    checkAssignments(snap, schema, set, "UPDATE")
     // generated columns whose source columns this UPDATE touches
     // recompute on the updated rows (the Delta contract)
     val regen = snap.generated.filter { case (_, e) =>
@@ -3315,18 +3325,23 @@ object TxLog {
   /** Where a table's deletion vectors live (dir-relative). */
   val DvDir = "_graft_dv"
 
+  /** Rows per file key of a tagged relation (`TagFile` column) —
+    * driver-side, one row per file. */
+  private def rowsPerFile(tagged: DataFrame): Map[String, Long] =
+    tagged.groupBy(TagFile).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
   /** Stage ONE vector relation covering this DML's matches merged
     * with the touched files' existing vectors, and build the updated
     * file entries. `matched` must be `(TagFile, TagIdx)` pairs of
-    * LIVE rows (already-deleted rows excluded by the tagged read).
-    * Returns None when nothing matched; otherwise (vector path, the
-    * re-added entries, the dv pointers to pin at commit). */
+    * LIVE rows (already-deleted rows excluded by the tagged read) and
+    * `newCnt` their [[rowsPerFile]]. Returns None when nothing
+    * matched; otherwise (vector path, the re-added entries, the dv
+    * pointers to pin at commit). */
   private def stageDv(spark: SparkSession, dir: String, snap: TxSnapshot,
-      matched: DataFrame)
+      matched: DataFrame, newCnt: Map[String, Long])
       : Option[(String, Seq[TxFile], Map[String, Option[String]])] = {
-    val counts = matched.groupBy(TagFile).count().collect()
-    if (counts.isEmpty) return None
-    val newCnt = counts.map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (newCnt.isEmpty) return None
     val byPath = snap.files.map(f => fileKey(snap, f) -> f).toMap
     val touched = newCnt.keys.toSeq.sorted
     val pairs = matched.select(col(TagFile).as("file"),
@@ -3381,7 +3396,7 @@ object TxLog {
     val matched = readSnapshotTagged(spark, dir, snap.copy(files = cands))
       .filter(pred)
       .select(col(TagFile), col(TagIdx))
-    stageDv(spark, dir, snap, matched) match {
+    stageDv(spark, dir, snap, matched, rowsPerFile(matched)) match {
       case None => snap.version
       case Some((dvPath, entries, expect)) =>
         try commitStaged(spark, dir, "delete-dv", entries,
@@ -3409,19 +3424,7 @@ object TxLog {
       statsCols: Seq[String] = Nil): Long = {
     val snap = snapshot(spark, dir)
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val known = schema.fieldNames.toSet
-    val unknown = set.keys.filterNot(known)
-    require(unknown.isEmpty,
-      s"TxLog: update sets unknown column(s): ${unknown.mkString(", ")}")
-    val idSet = set.keys.filter(snap.identity.contains)
-    require(idSet.isEmpty,
-      s"TxLog: UPDATE cannot set identity column(s) " +
-        s"${idSet.mkString(", ")} (Delta's identity contract)")
-    val genSet = set.keys.filter(snap.generated.contains)
-    require(genSet.isEmpty,
-      s"TxLog: UPDATE cannot set generated column(s) " +
-        s"${genSet.mkString(", ")} directly — update their source " +
-        "columns and the expression recomputes")
+    checkAssignments(snap, schema, set, "UPDATE")
     val regen = snap.generated.filter { case (_, e) =>
       exprRefs(spark, e).exists(set.contains) }
     val cands =
@@ -3443,8 +3446,8 @@ object TxLog {
           d.withColumn(c, expr(e).cast(schema(c).dataType))
       }
       enforceConstraints(spark, dir, updated)
-      stageDv(spark, dir, snap,
-        matchedRows.select(col(TagFile), col(TagIdx))) match {
+      val matched = matchedRows.select(col(TagFile), col(TagIdx))
+      stageDv(spark, dir, snap, matched, rowsPerFile(matched)) match {
         case None => snap.version
         case Some((dvPath, entries, expect)) =>
           val touchedEntries = entries
@@ -3466,18 +3469,10 @@ object TxLog {
     } finally matchedRows.unpersist()
   }
 
-  /** Stats-prune a snapshot's files to those whose per-file key
-    * bounds intersect the source's key envelope — one tiny agg over
-    * the (directive-sized) source, no table scan. Shared by [[merge]]
-    * / [[applyChanges]] / [[applyChangesMor]]. */
-  private[graft] def keyBoundsOf(src: DataFrame,
-      keyCols: Seq[String]): Row =
-    described(src.sparkSession, "key-envelope") {
-      src.select(keyCols.flatMap(k =>
-        Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k"))): _*)
-        .head()
-    }
-
+  /** Stats-prune `files` to those whose per-file key bounds intersect
+    * the key envelope in `keyBounds` (`_lo_<k>` / `_hi_<k>` fields, as
+    * [[locateKeyed]]'s `apply-shape` row carries them) — driver-side,
+    * no table scan. */
   private def pruneByKeyBounds(spark: SparkSession, snap: TxSnapshot,
       files: Seq[TxFile], keyCols: Seq[String], keyBounds: Row)
       : Seq[TxFile] = {
@@ -3497,101 +3492,26 @@ object TxLog {
     }
   }
 
-  /** MERGE INTO (upsert): for each source row, the target row with
-    * the same `keyCols` is REPLACED by it (when-matched update-all);
-    * source rows matching nothing are INSERTED (when-not-matched
-    * insert-all) — Delta's canonical merge. The source must be unique
-    * on the keys (two source rows claiming one target row is
-    * ambiguous — refused, Delta's multiple-matches error) and must
-    * carry the table's schema. A table that is itself NOT unique on
-    * the keys collapses on merge: every target row matching a source
-    * key is replaced by that ONE source row (primary-key upsert
-    * semantics — the table is expected to be keyed). Only files holding matched keys are
-    * rewritten; inserts ride in the same staged write, so the whole
-    * upsert is ONE commit. Cost at scale: a stats-pruned semi-join to
-    * find touched files + one shuffle-join of (touched files ∪
-    * source) — the table outside the key range is never read. */
+  /** MERGE INTO (upsert): [[applyChanges]] with no deletes. For each
+    * source row, the target rows with the same `keyCols` are REPLACED
+    * by it (when-matched update-all); source rows matching nothing
+    * are INSERTED (when-not-matched insert-all) — Delta's canonical
+    * merge. The source must carry the table's schema and be unique on
+    * the keys (two source rows claiming one target row is ambiguous —
+    * refused, Delta's multiple-matches error). A table that is itself
+    * NOT unique on the keys collapses on merge: every target row
+    * matching a source key is replaced by that ONE source row
+    * (primary-key upsert semantics). Only files holding matched keys
+    * are rewritten and inserts ride in the same staged write: ONE
+    * `merge` commit, guarded against concurrent appends inside the
+    * source's key envelope. An empty source is a no-op (with `txn`,
+    * a metadata-only marker advance); a replayed `txn` returns the
+    * current version. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keyCols: Seq[String], statsCols: Seq[String] = Nil,
-      txn: Option[(String, Long)] = None): Long = {
-    require(keyCols.nonEmpty, "TxLog: merge needs at least one key column")
-    val snap = snapshot(spark, dir)
-    refuseAlwaysIdentity(snap, "merge")
-    // idempotent upsert: a replayed (appId, batchId) short-circuits
-    // before any staging work — the streaming-sink contract
-    for ((app, b) <- txn)
-      if (snap.txns.get(app).exists(_ >= b)) return snap.version
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val srcTypes = source.schema.fields
-      .map(fl => fl.name -> fl.dataType).toMap
-    val missing = schema.fields.filterNot(fl =>
-      srcTypes.get(fl.name).contains(fl.dataType))
-    require(missing.isEmpty,
-      s"TxLog: merge source must carry the table schema; missing or " +
-        s"mistyped: ${missing.map(_.name).mkString(", ")}")
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"TxLog: merge key '$k' is not a table column"))
-    // the source feeds FIVE actions (duplicate guard, key envelope,
-    // touched-file semi-join, survivors write, constraint check) —
-    // materialize it once with lineage truncated (Delta's
-    // materialize-source precedent; batch-sized by the keyed-upsert
-    // contract)
-    val src = checkpointed(
-      source.select(schema.fieldNames.map(col).toSeq: _*))
-    try {
-    enforceGenerated(snap, src)
-    val dupKeys = src.groupBy(keyCols.map(col): _*)
-      .count().filter(col("count") > 1).limit(1).count()
-    require(dupKeys == 0,
-      "TxLog: merge source has duplicate keys — each target row " +
-        "would match multiple source rows (ambiguous, refused)")
-
-    // stats-prune candidates by the source's key envelope (one tiny
-    // agg over the source), then exact-match via a semi-join; the
-    // same envelope guards the commit against concurrently-appended
-    // files whose keys it could have matched
-    val keyBounds = keyBoundsOf(src, keyCols)
-    val cands = pruneByKeyBounds(spark, snap, snap.files, keyCols,
-      keyBounds)
-    val seenPaths = snap.files.map(_.path).toSet
-    val mergeGuard: Seq[TxFile] => Seq[String] = files =>
-      pruneByKeyBounds(spark, snap,
-        files.filterNot(f => seenPaths.contains(f.path)), keyCols,
-        keyBounds).map(_.path)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    val touched: Seq[String] =
-      if (cands.isEmpty) Nil
-      else readSnapshotTagged(spark, dir, snap.copy(files = cands))
-        .select((col(TagFile) +: keyCols.map(col)).toSeq: _*)
-        .join(srcKeys, keyCols, "left_semi")
-        .select(TagFile).distinct().collect()
-        .map(_.getString(0)).toSeq.sorted
-    val tSet = touched.toSet
-    val keepFiles = snap.files.filter(f => tSet.contains(fileKey(snap, f)))
-    val survivors =
-      if (keepFiles.isEmpty) src
-      else readSnapshot(spark, dir, snap.copy(files = keepFiles))
-        .join(srcKeys, keyCols, "left_anti")
-        .unionByName(src)
-    // validating just the SOURCE suffices (survivor rows from touched
-    // files were already valid under the standing constraints)
-    enforceConstraints(spark, dir, src)
-    val (added, _) = stageData(spark, dir, survivors,
-      (inheritStats(keepFiles, statsCols, snap) ++
-        snap.identity.keys).distinct, snap.mapping,
-      partCols = snap.partitionCols)
-    commitStaged(spark, dir, "merge", added, keepFiles.map(_.path),
-      removeAll = false, snap.schemaJson, txn,
-      expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-      // BY DEFAULT identity (ALWAYS was refused above): the staged
-      // stats absorb any explicit ids the source carried past the
-      // watermark
-      identityOut = if (snap.identity.isEmpty) None
-        else Some(identityAfter(snap.identity, added, snap.phys)),
-      expectIdentity = snap.identity.map { case (c, s) => c -> s.high },
-      conflictIfAdded = Some(mergeGuard))
-    } finally releaseCheckpoint(src)
-  }
+      txn: Option[(String, Long)] = None): Long =
+    applyCowChanges(spark, dir, source.withColumn(MergeNoDelete, lit(false)),
+      keyCols, MergeNoDelete, statsCols, txn, group = false, op = "merge")
 
   /** CDC APPLY (the Delta-DLT `APPLY CHANGES INTO` shape): one
     * copy-on-write commit applying a batch of keyed change directives.
@@ -3599,20 +3519,22 @@ object TxLog {
     * matched target key is REPLACED (flag false) or DROPPED (flag
     * true); an unmatched flag-false row inserts; an unmatched delete
     * is a no-op (the row is already gone — the at-least-once replay
-    * case). At most one directive per key (ambiguity refused, like
-    * [[merge]]); `txn` gives exactly-once under streaming replay.
+    * case). At most one directive per key (ambiguity refused);
+    * `txn` gives exactly-once under streaming replay.
     *
-    * Same cost shape as merge: candidates stats-prune by the
+    * Cost shape ([[locateKeyed]]): candidates stats-prune by the
     * directive keys' envelope, only files actually holding a directive
     * key rewrite, survivors anti-join on the (directive-sized) key
     * relation. CHECK constraints validate the INSERTED rows only
-    * (survivors were already valid; deletes add nothing). */
+    * (survivors were already valid; deletes add nothing). A concurrent
+    * append of a file intersecting the key envelope refuses the commit
+    * (`ConcurrentModificationException`). */
   def applyChanges(spark: SparkSession, dir: String, changes: DataFrame,
       keyCols: Seq[String], deleteCol: String,
       statsCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long =
     applyCowChanges(spark, dir, changes, keyCols, deleteCol, statsCols,
-      txn, group = false)
+      txn, group = false, op = "applyChanges")
 
   // ---- general MERGE (arbitrary ON, clause lists) ------------------
 
@@ -3656,6 +3578,8 @@ object TxLog {
     }
 
   private val MergeAct = "__graft_act"
+  /** [[merge]]'s constant-false delete flag over its source. */
+  private val MergeNoDelete = "__graft_del"
   private val MergeNv = "__graft_nv_"
 
   /** Equality conjuncts `t.c = <source-only expr>` of a merge ON
@@ -3753,30 +3677,20 @@ object TxLog {
       case c: MergeNotMatchedBySourceDelete => c: MergeClause
     }
 
-    // assignment validation: known columns, never generated/identity
-    def checkSet(set: Map[String, Column], what: String): Unit = {
-      val unknown = set.keys.filterNot(fieldType.contains)
-      require(unknown.isEmpty,
-        s"TxLog: merge $what sets unknown column(s): ${unknown.mkString(", ")}")
-      val gen = set.keys.filter(snap.generated.contains)
-      require(gen.isEmpty,
-        s"TxLog: merge $what cannot set generated column(s) " +
-          s"${gen.mkString(", ")} — they recompute from their sources")
-      val ident = set.keys.filter(snap.identity.contains)
-      require(what == "INSERT" || ident.isEmpty,
-        s"TxLog: merge $what cannot set identity column(s) " +
-          s"${ident.mkString(", ")} (Delta's identity contract)")
-    }
     matched.foreach {
-      case MergeMatchedUpdate(set, _) => checkSet(set, "UPDATE")
+      case MergeMatchedUpdate(set, _) =>
+        checkAssignments(snap, schema, set, "merge UPDATE")
       case _ => ()
     }
     nmbs.foreach {
-      case MergeNotMatchedBySourceUpdate(set, _) => checkSet(set, "UPDATE")
+      case MergeNotMatchedBySourceUpdate(set, _) =>
+        checkAssignments(snap, schema, set, "merge UPDATE")
       case _ => ()
     }
     inserts.foreach { ins =>
-      checkSet(ins.values, "INSERT")
+      // INSERT values may name identity columns (BY DEFAULT)
+      checkAssignments(snap, schema, ins.values, "merge INSERT",
+        identityOk = true)
       val missing = schema.fieldNames.filterNot(c =>
         ins.values.contains(c) || snap.generated.contains(c) ||
           snap.defaults.contains(c))
@@ -4025,109 +3939,159 @@ object TxLog {
       statsCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long =
     applyCowChanges(spark, dir, changes, keyCols, deleteCol, statsCols,
-      txn, group = true)
+      txn, group = true, op = "applyChanges")
 
-  private def applyCowChanges(spark: SparkSession, dir: String,
+  /** What [[locateKeyed]] found for one keyed apply, handed to its
+    * staging body: `srcKeys` the distinct directive keys, `inserts`
+    * the flag-false directives projected to the table schema (`nIns`
+    * of them), `touched` each file key holding a live row of a
+    * directive key → its count of such rows, `keepFiles` those files'
+    * entries, and `guard` the key-envelope `conflictIfAdded` check. */
+  private final case class KeyedApply(snap: TxSnapshot, srcKeys: DataFrame,
+      inserts: DataFrame, nIns: Long, touched: Map[String, Long],
+      keepFiles: Seq[TxFile], guard: Seq[TxFile] => Seq[String])
+
+  /** The locate step of every keyed apply ([[merge]], [[applyChanges]],
+    * [[applyGroupChanges]], [[applyChangesMor]]): validate `changes`
+    * (table schema + `deleteCol`; refusals name `op`), materialize it
+    * once, answer empty-batch / ambiguity / insert count / key
+    * envelope with ONE `apply-shape` aggregate, check the inserts
+    * against generated columns and CHECK constraints, stats-prune the
+    * candidates by the envelope and find the files holding a directive
+    * key with ONE `apply-touched-probe`. `stage` writes and commits
+    * (with `guard`); the directives are released when it returns. A
+    * replayed `txn` returns the current version; an empty batch
+    * commits nothing but still advances a supplied marker. */
+  private def locateKeyed(spark: SparkSession, dir: String,
       changes: DataFrame, keyCols: Seq[String], deleteCol: String,
-      statsCols: Seq[String], txn: Option[(String, Long)],
-      group: Boolean): Long = {
-    require(keyCols.nonEmpty, "TxLog: applyChanges needs at least one key column")
+      op: String, txn: Option[(String, Long)], group: Boolean)
+      (stage: KeyedApply => Long): Long = {
+    require(keyCols.nonEmpty, s"TxLog: $op needs at least one key column")
     val snap = snapshot(spark, dir)
-    refuseAlwaysIdentity(snap, "applyChanges")
+    refuseAlwaysIdentity(snap, op)
+    // a replayed (appId, batchId) short-circuits before any staging
+    // work — the streaming-sink contract
     for ((app, b) <- txn)
       if (snap.txns.get(app).exists(_ >= b)) return snap.version
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     require(changes.columns.contains(deleteCol),
-      s"TxLog: applyChanges needs the delete flag column '$deleteCol'")
+      s"TxLog: $op needs the delete flag column '$deleteCol'")
     val srcTypes = changes.schema.fields
       .map(fl => fl.name -> fl.dataType).toMap
     val missing = schema.fields.filterNot(fl =>
       srcTypes.get(fl.name).contains(fl.dataType))
     require(missing.isEmpty,
-      s"TxLog: applyChanges source must carry the table schema; " +
+      s"TxLog: $op source must carry the table schema; " +
         s"missing or mistyped: ${missing.map(_.name).mkString(", ")}")
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"TxLog: applyChanges key '$k' is not a table column"))
-    // the directive relation feeds FIVE actions below (empty probe,
-    // duplicate guard, key envelope, touched-file semi-join, the
-    // survivors write) — materialized ONCE with lineage truncated
+      s"TxLog: $op key '$k' is not a table column"))
+    // the directive relation feeds every action below (shape, checks,
+    // probe, staging) — materialized ONCE with lineage truncated
     // ([[checkpointed]]): a persist alone leaves every action
     // re-planning the caller's whole directive tree (for Scd2: the
     // span's change-feed diff legs + the history closures — hundreds
-    // of plan nodes per action). Touched-key-sized by the
-    // applyChanges contract, so materializing is bounded (guide §5).
+    // of plan nodes per action). Touched-key-sized by the keyed-apply
+    // contract, so materializing is bounded (guide §5).
     val src = checkpointed(changes.select((schema.fieldNames.map(col) :+
       col(deleteCol).cast("boolean").as(deleteCol)).toSeq: _*))
     try {
-    // ONE directive-sized pass answers every metadata question the
-    // apply needs — empty-batch, the per-key ambiguity guard, and the
-    // key envelope that stats-prunes the candidate files — where
-    // three separate actions (isEmpty probe, dup-check aggregate,
-    // envelope aggregate) each re-scanned the directives (guide §1.2:
-    // don't compute things twice)
-    val shape = described(spark, "apply-shape") {
-      val aggs = Seq(count(lit(1)).as("_graft_nkeys"),
-        max(col("_graft_n")).as("_graft_maxn"),
-        max(col("_graft_forms")).as("_graft_maxforms")) ++
-        keyCols.flatMap(k =>
-          Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))
-      src.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("_graft_n"),
-          countDistinct(col(deleteCol)).as("_graft_forms"))
-        .agg(aggs.head, aggs.tail: _*)
-        .head()
-    }
-    // an empty directive batch (e.g. a compaction-only feed span) is
-    // a no-op for the DATA — but a supplied marker still advances
-    // (metadata-only), or the caller's watermark would never move
-    // past the span and every later refresh would re-read it
-    if (shape.getAs[Long]("_graft_nkeys") == 0L)
-      return txn.fold(snap.version)(commitTxnAdvance(spark, dir, _))
-    if (group)
-      // several inserts per key are the point; a key that is BOTH
-      // deleted and inserted in one batch is still ambiguous
-      require(shape.getAs[Long]("_graft_maxforms") <= 1L,
-        "TxLog: applyGroupChanges has both delete and insert " +
-          "directives for one key (ambiguous, refused) — a replaced " +
-          "group needs only its insert rows")
-    else
-      require(shape.getAs[Long]("_graft_maxn") <= 1L,
-        "TxLog: applyChanges has several directives for one key " +
-          "(ambiguous, refused) — collapse to the last change per key first")
-
-    val cands = pruneByKeyBounds(spark, snap, snap.files, keyCols, shape)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    val touched: Seq[String] =
-      if (cands.isEmpty) Nil
-      else described(spark, "apply-touched-probe") {
-        readSnapshotTagged(spark, dir, snap.copy(files = cands))
-          .select((col(TagFile) +: keyCols.map(col)).toSeq: _*)
-          .join(srcKeys, keyCols, "left_semi")
-          .select(TagFile).distinct().collect()
-      }.map(_.getString(0)).toSeq.sorted
-    val tSet = touched.toSet
-    val keepFiles = snap.files.filter(f => tSet.contains(fileKey(snap, f)))
-    val inserts = src.filter(!col(deleteCol))
-      .select(schema.fieldNames.map(col).toSeq: _*)
-    enforceGenerated(snap, inserts)
-    val survivors =
-      if (keepFiles.isEmpty) inserts
-      else readSnapshot(spark, dir, snap.copy(files = keepFiles))
-        .join(srcKeys, keyCols, "left_anti")
-        .unionByName(inserts)
-    enforceConstraints(spark, dir, inserts)
-    val (added, _) = stageData(spark, dir, survivors,
-      (inheritStats(keepFiles, statsCols, snap) ++
-        snap.identity.keys).distinct, snap.mapping,
-      partCols = snap.partitionCols)
-    commitStaged(spark, dir, "merge", added, keepFiles.map(_.path),
-      removeAll = false, snap.schemaJson, txn,
-      expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-      identityOut = if (snap.identity.isEmpty) None
-        else Some(identityAfter(snap.identity, added, snap.phys)),
-      expectIdentity = snap.identity.map { case (c, s) => c -> s.high })
+      // ONE directive-sized pass answers every metadata question:
+      // empty batch, the per-key ambiguity guard, the insert count
+      // (merge-on-read partitions its image staging by it) and the key
+      // envelope that stats-prunes candidates and guards the commit
+      val shape = described(spark, "apply-shape") {
+        val aggs = Seq(count(lit(1)).as("_graft_nkeys"),
+          max(col("_graft_n")).as("_graft_maxn"),
+          max(col("_graft_forms")).as("_graft_maxforms"),
+          sum(col("_graft_ins")).as("_graft_nins")) ++
+          keyCols.flatMap(k =>
+            Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))
+        // a key's forms: delete and/or insert — two maxes, where a
+        // countDistinct would plan a second aggregation round
+        def has(c: Column) = coalesce(max(c.cast("long")), lit(0L))
+        src.groupBy(keyCols.map(col): _*)
+          .agg(count(lit(1)).as("_graft_n"),
+            (has(col(deleteCol)) + has(!col(deleteCol))).as("_graft_forms"),
+            sum(when(col(deleteCol), 0L).otherwise(1L)).as("_graft_ins"))
+          .agg(aggs.head, aggs.tail: _*)
+          .head()
+      }
+      // an empty directive batch (e.g. a compaction-only feed span) is
+      // a no-op for the DATA — but a supplied marker still advances
+      // (metadata-only), or the caller's watermark would never move
+      // past the span and every later refresh would re-read it
+      if (shape.getAs[Long]("_graft_nkeys") == 0L)
+        return txn.fold(snap.version)(commitTxnAdvance(spark, dir, _))
+      if (group)
+        // several inserts per key are the point; a key that is BOTH
+        // deleted and inserted in one batch is still ambiguous
+        require(shape.getAs[Long]("_graft_maxforms") <= 1L,
+          "TxLog: applyGroupChanges has both delete and insert " +
+            "directives for one key (ambiguous, refused) — a replaced " +
+            "group needs only its insert rows")
+      else
+        require(shape.getAs[Long]("_graft_maxn") <= 1L,
+          s"TxLog: $op has several directives for one key " +
+            "(ambiguous, refused) — collapse to the last change per key first")
+      // validating just the INSERTS suffices: survivor rows were
+      // already valid under the standing constraints
+      val inserts = src.filter(!col(deleteCol))
+        .select(schema.fieldNames.map(col).toSeq: _*)
+      enforceGenerated(snap, inserts)
+      enforceConstraints(spark, dir, inserts)
+      val cands = pruneByKeyBounds(spark, snap, snap.files, keyCols, shape)
+      val srcKeys = src.select(keyCols.map(col): _*).distinct()
+      val touched =
+        if (cands.isEmpty) Map.empty[String, Long]
+        else described(spark, "apply-touched-probe") {
+          rowsPerFile(readSnapshotTagged(spark, dir, snap.copy(files = cands))
+            .select((col(TagFile) +: keyCols.map(col)).toSeq: _*)
+            .join(srcKeys, keyCols, "left_semi"))
+        }
+      // files a concurrent commit added inside the key envelope could
+      // hold a directive key: committing would duplicate the key or
+      // resurrect a deleted row
+      val seen = snap.files.map(_.path).toSet
+      stage(KeyedApply(snap, srcKeys, inserts,
+        shape.getAs[Long]("_graft_nins"), touched,
+        snap.files.filter(f => touched.contains(fileKey(snap, f))),
+        files => pruneByKeyBounds(spark, snap,
+          files.filterNot(f => seen.contains(f.path)), keyCols, shape)
+          .map(_.path)))
     } finally releaseCheckpoint(src)
   }
+
+  /** The copy-on-write staging body of [[merge]] / [[applyChanges]] /
+    * [[applyGroupChanges]]: rewrite the touched files without their
+    * directive keys' rows, plus the inserts — ONE `merge` commit. */
+  private def applyCowChanges(spark: SparkSession, dir: String,
+      changes: DataFrame, keyCols: Seq[String], deleteCol: String,
+      statsCols: Seq[String], txn: Option[(String, Long)],
+      group: Boolean, op: String): Long =
+    locateKeyed(spark, dir, changes, keyCols, deleteCol, op, txn,
+        group) { at =>
+      val snap = at.snap
+      val keepFiles = at.keepFiles
+      val survivors =
+        if (keepFiles.isEmpty) at.inserts
+        else readSnapshot(spark, dir, snap.copy(files = keepFiles))
+          .join(at.srcKeys, keyCols, "left_anti")
+          .unionByName(at.inserts)
+      val (added, _) = stageData(spark, dir, survivors,
+        (inheritStats(keepFiles, statsCols, snap) ++
+          snap.identity.keys).distinct, snap.mapping,
+        partCols = snap.partitionCols)
+      commitStaged(spark, dir, "merge", added, keepFiles.map(_.path),
+        removeAll = false, snap.schemaJson, txn,
+        expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
+        // BY DEFAULT identity (ALWAYS was refused by the locate step):
+        // the staged stats absorb any explicit ids the source carried
+        // past the watermark
+        identityOut = if (snap.identity.isEmpty) None
+          else Some(identityAfter(snap.identity, added, snap.phys)),
+        expectIdentity = snap.identity.map { case (c, s) => c -> s.high },
+        conflictIfAdded = Some(at.guard))
+    }
 
   /** Merge-on-read CDC APPLY: same directive semantics as
     * [[applyChanges]], but matched target rows are retired through a
@@ -4140,119 +4104,76 @@ object TxLog {
     * must not rewrite a file per touched key per micro-batch.
     * [[compact]] materializes the vectors away on schedule; the same
     * pin-by-vector-pointer concurrency contract as [[deleteMor]] /
-    * [[updateMor]] applies. A batch that matches nothing commits as
-    * an insert-only merge (no vector, no minReader bump). */
+    * [[updateMor]] applies, plus the key-envelope guard against
+    * concurrent appends of [[applyChanges]]. A batch that matches
+    * nothing commits as an insert-only merge (no vector, no minReader
+    * bump). */
   def applyChangesMor(spark: SparkSession, dir: String, changes: DataFrame,
       keyCols: Seq[String], deleteCol: String,
       statsCols: Seq[String] = Nil,
-      txn: Option[(String, Long)] = None): Long = {
-    require(keyCols.nonEmpty,
-      "TxLog: applyChangesMor needs at least one key column")
-    val snap = snapshot(spark, dir)
-    refuseAlwaysIdentity(snap, "applyChangesMor")
-    for ((app, b) <- txn)
-      if (snap.txns.get(app).exists(_ >= b)) return snap.version
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    require(changes.columns.contains(deleteCol),
-      s"TxLog: applyChangesMor needs the delete flag column '$deleteCol'")
-    val srcTypes = changes.schema.fields
-      .map(fl => fl.name -> fl.dataType).toMap
-    val missing = schema.fields.filterNot(fl =>
-      srcTypes.get(fl.name).contains(fl.dataType))
-    require(missing.isEmpty,
-      s"TxLog: applyChangesMor source must carry the table schema; " +
-        s"missing or mistyped: ${missing.map(_.name).mkString(", ")}")
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"TxLog: applyChangesMor key '$k' is not a table column"))
-    // materialized once, lineage truncated, for the same reason as
-    // applyCowChanges: the shape agg, dup guard, key envelope, matched
-    // semi-join and image staging all consume (and would otherwise
-    // each re-plan) the touched-key-sized directive relation
-    val src = checkpointed(changes.select((schema.fieldNames.map(col) :+
-      col(deleteCol).cast("boolean").as(deleteCol)).toSeq: _*))
-    try {
-    // one directive-sized pass answers empty-batch, insert count (the
-    // image staging is PARTITIONED BY IT below — a 1k-directive
-    // follower batch must write one image file, not one per shuffle
-    // partition, or continuous trickle batches become small-files
-    // debt), the ambiguity check, AND the key envelope that
-    // stats-prunes the candidates (formerly three separate actions)
-    val shape = described(spark, "apply-shape") {
-      val aggs = Seq(count(lit(1)).as("_graft_nkeys"),
-        max(col("_graft_n")).as("_graft_maxn"),
-        sum(col("_graft_ins")).as("nIns")) ++
-        keyCols.flatMap(k =>
-          Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))
-      src.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("_graft_n"),
-          sum(when(col(deleteCol), 0L).otherwise(1L)).as("_graft_ins"))
-        .agg(aggs.head, aggs.tail: _*)
-        .head()
+      txn: Option[(String, Long)] = None): Long =
+    locateKeyed(spark, dir, changes, keyCols, deleteCol, "applyChangesMor",
+        txn, group = false) { at =>
+      val snap = at.snap
+      // image staging is partitioned by the insert count — a
+      // 1k-directive follower batch must write one image file, not one
+      // per shuffle partition, or continuous trickle batches become
+      // small-files debt
+      val imageParts = math.min(32L, at.nIns / ImageFileRows + 1).toInt
+      val inserts = at.inserts.repartition(imageParts)
+      // matched LIVE rows' physical positions (readSnapshotTagged has
+      // already subtracted standing vectors, so a replayed or repeated
+      // key never double-counts into the new vector)
+      val dv =
+        if (at.touched.isEmpty) None
+        else stageDv(spark, dir, snap,
+          readSnapshotTagged(spark, dir, snap.copy(files = at.keepFiles))
+            .join(at.srcKeys, keyCols, "left_semi")
+            .select(col(TagFile), col(TagIdx)), at.touched)
+      dv match {
+        case None =>
+          // nothing matched: a pure-insert batch (or an all-no-op
+          // delete batch). Stage inserts only; no vector, no touched
+          // files — an insert-only merge commit. An all-no-op delete
+          // batch still advances a supplied marker (metadata-only)
+          if (at.nIns == 0L)
+            txn.fold(snap.version)(commitTxnAdvance(spark, dir, _))
+          else {
+            val (added, _) = stageData(spark, dir, inserts,
+              (inheritStats(Nil, statsCols, snap) ++
+                snap.identity.keys).distinct, snap.mapping,
+              partCols = snap.partitionCols)
+            commitStaged(spark, dir, "merge", added, Nil,
+              removeAll = false, snap.schemaJson, txn,
+              identityOut = if (snap.identity.isEmpty) None
+                else Some(identityAfter(snap.identity, added, snap.phys)),
+              expectIdentity =
+                snap.identity.map { case (c, s) => c -> s.high },
+              conflictIfAdded = Some(at.guard))
+          }
+        case Some((dvPath, entries, expect)) =>
+          val (added, _) =
+            if (at.nIns == 0L) (Seq.empty[TxFile], 0L)
+            else stageData(spark, dir, inserts,
+              (inheritStats(entries, statsCols, snap) ++
+                snap.identity.keys).distinct, snap.mapping,
+              partCols = snap.partitionCols)
+          try commitStaged(spark, dir, "update-dv",
+            entries ++ added, entries.map(_.path),
+            removeAll = false, snap.schemaJson, txn,
+            ownsAdded = false, expectDv = expect, minReader = Some(2),
+            identityOut = if (snap.identity.isEmpty) None
+              else Some(identityAfter(snap.identity, added, snap.phys)),
+            expectIdentity =
+              snap.identity.map { case (c, s) => c -> s.high },
+            conflictIfAdded = Some(at.guard))
+          catch { case e: Throwable =>
+            fs(spark, new Path(dir)).delete(new Path(dir, dvPath), true)
+            if (added.nonEmpty) deleteStaged(spark, dir, added)
+            throw e
+          }
+      }
     }
-    if (shape.getAs[Long]("_graft_nkeys") == 0L)
-      return txn.fold(snap.version)(commitTxnAdvance(spark, dir, _))
-    val nIns = Option(shape.getAs[Long]("nIns")).getOrElse(0L)
-    require(shape.getAs[Long]("_graft_maxn") <= 1L,
-      "TxLog: applyChangesMor has several directives for one key " +
-        "(ambiguous, refused) — collapse to the last change per key first")
-
-    val cands = pruneByKeyBounds(spark, snap, snap.files, keyCols, shape)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    val imageParts = math.min(32L, nIns / ImageFileRows + 1).toInt
-    val inserts = src.filter(!col(deleteCol))
-      .select(schema.fieldNames.map(col).toSeq: _*)
-      .repartition(imageParts)
-    enforceConstraints(spark, dir, inserts)
-    enforceGenerated(snap, inserts)
-    // matched LIVE rows' physical positions (readSnapshotTagged has
-    // already subtracted standing vectors, so a replayed or repeated
-    // key never double-counts into the new vector)
-    val matched =
-      if (cands.isEmpty) None
-      else Some(readSnapshotTagged(spark, dir, snap.copy(files = cands))
-        .join(srcKeys, keyCols, "left_semi")
-        .select(col(TagFile), col(TagIdx)))
-    matched.flatMap(stageDv(spark, dir, snap, _)) match {
-      case None =>
-        // nothing matched: a pure-insert batch (or an all-no-op
-        // delete batch). Stage inserts only; no vector, no touched
-        // files — an insert-only merge commit. An all-no-op delete
-        // batch still advances a supplied marker (metadata-only)
-        if (nIns == 0L)
-          return txn.fold(snap.version)(commitTxnAdvance(spark, dir, _))
-        val (added, _) = stageData(spark, dir, inserts,
-          (inheritStats(Nil, statsCols, snap) ++
-            snap.identity.keys).distinct, snap.mapping,
-          partCols = snap.partitionCols)
-        commitStaged(spark, dir, "merge", added, Nil,
-          removeAll = false, snap.schemaJson, txn,
-          identityOut = if (snap.identity.isEmpty) None
-            else Some(identityAfter(snap.identity, added, snap.phys)),
-          expectIdentity =
-            snap.identity.map { case (c, s) => c -> s.high })
-      case Some((dvPath, entries, expect)) =>
-        val (added, _) =
-          if (nIns == 0L) (Seq.empty[TxFile], 0L)
-          else stageData(spark, dir, inserts,
-            (inheritStats(entries, statsCols, snap) ++
-              snap.identity.keys).distinct, snap.mapping,
-            partCols = snap.partitionCols)
-        try commitStaged(spark, dir, "update-dv",
-          entries ++ added, entries.map(_.path),
-          removeAll = false, snap.schemaJson, txn,
-          ownsAdded = false, expectDv = expect, minReader = Some(2),
-          identityOut = if (snap.identity.isEmpty) None
-            else Some(identityAfter(snap.identity, added, snap.phys)),
-          expectIdentity =
-            snap.identity.map { case (c, s) => c -> s.high })
-        catch { case e: Throwable =>
-          fs(spark, new Path(dir)).delete(new Path(dir, dvPath), true)
-          if (added.nonEmpty) deleteStaged(spark, dir, added)
-          throw e
-        }
-    }
-    } finally releaseCheckpoint(src)
-  }
 
   /** Exactly-once CDC-APPLY sink: materialize a FOLLOWER table from a
     * change-feed stream (`readStream.format("txlog")

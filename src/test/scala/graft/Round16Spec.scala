@@ -351,6 +351,52 @@ class Round16Spec extends SparkSpec {
       statsCols = Seq("k")) }
     TxLog.delete(s, dir, col("k") < 50)
     assert(TxLog.read(s, dir).filter(col("k") < 50).count() == 0)
+
+    // keyed applies, copy-on-write and merge-on-read, carry the same
+    // key-envelope guard: a racer appending a directive key would be
+    // duplicated (or a deleted row resurrected) by the commit
+    def dataFiles(): Set[String] = {
+      def walk(f: java.io.File): Seq[String] =
+        if (f.getName == TxLog.LogDir) Nil
+        else if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+        else Seq(f.getPath).filter(_.endsWith(".parquet"))
+      walk(new java.io.File(dir)).toSet
+    }
+    def livePaths() = TxLog.snapshot(s, dir).files
+      .map(f => new java.io.File(dir, f.path).getPath).toSet
+    def directives(upd: Range, del: Int, ins: Int) =
+      rows(upd).withColumn("v", -col("v")).withColumn("del", lit(false))
+        .unionByName(rows(del to del).withColumn("del", lit(true)))
+        .unionByName(rows(ins to ins).withColumn("del", lit(false)))
+    Seq[(String, Int, DataFrame => Long)](
+      ("applyChanges", 60,
+        d => TxLog.applyChanges(s, dir, d, Seq("k"), "del")),
+      ("applyChangesMor", 80,
+        d => TxLog.applyChangesMor(s, dir, d, Seq("k"), "del"))
+    ).foreach { case (name, lo, apply) =>
+      val ins = lo * 5
+      val d = directives(lo until lo + 2, lo + 5, ins)
+      val (files0, live0) = (dataFiles(), livePaths())
+      interleave { TxLog.commitAppend(s, dir, rows(ins until ins + 1),
+        statsCols = Seq("k")) }
+      intercept[java.util.ConcurrentModificationException](apply(d))
+      // nothing staged survives the refusal: no image, rewrite or vector
+      val racer = livePaths() -- live0
+      assert(racer.size == 1, s"$name: $racer")
+      assert(dataFiles() == files0 ++ racer, s"$name left files behind")
+      assert(TxLog.read(s, dir).filter(col("k") === lo && col("v") < 0)
+        .count() == 0, name)
+      // a disjoint racer commutes: the retry commits over it
+      interleave { TxLog.commitAppend(s, dir,
+        rows(ins + 1000 until ins + 1001), statsCols = Seq("k")) }
+      apply(d)
+      val out = TxLog.read(s, dir)
+      assert(out.filter(col("k") === ins).count() == 1, name)
+      assert(out.filter(col("k") === lo + 5).count() == 0, name)
+      assert(out.filter(col("k") === lo).select("v").as[Long].head() == -lo,
+        name)
+      assert(out.filter(col("k") === ins + 1000).count() == 1, name)
+    }
   }
 
   test("replaceWhere vs scoped OPTIMIZE on overlapping envelopes: loser refuses, no lost slice") {

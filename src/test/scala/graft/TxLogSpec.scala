@@ -342,8 +342,14 @@ class TxLogSpec extends SparkSpec {
     val root = tmp("medtx").toString
     val p = new MedallionPipeline(spark, root, useTxLog = true)
     p.write(DataZone.Bronze, "pts", df(1, 2), LoadType.Full)
+    val fullFiles = TxLog.snapshot(spark, p.path(DataZone.Bronze, "pts"))
+      .files.map(_.path)
     p.write(DataZone.Bronze, "pts", df(3), LoadType.Append)
     assert(idSet(p.read(DataZone.Bronze, "pts")) == Set(1L, 2L, 3L))
+    // a change-feed follower created before the merge
+    val scd = tmp("medtxscd").toString + "/h"
+    graft.sources.Scd2.create(spark, p.path(DataZone.Bronze, "pts"), scd,
+      Seq("id"))
     // merge upserts by id: row 3 replaced, row 4 added
     val s = spark
     import s.implicits._
@@ -353,6 +359,27 @@ class TxLogSpec extends SparkSpec {
     assert(idSet(merged) == Set(1L, 2L, 3L, 4L))
     assert(merged.filter(col("id") === 3).select("name").head.getString(0)
       == "NEW")
+    // a keyed merge commit, not a whole-table overwrite: the files
+    // holding no incoming key survive by path, and the follower reads
+    // the commit through the change feed
+    val hist = p.history(DataZone.Bronze, "pts")
+    assert(hist.filter(col("version") === 2).select("op").head.getString(0)
+      == "merge")
+    val live = TxLog.snapshot(spark, p.path(DataZone.Bronze, "pts"))
+      .files.map(_.path).toSet
+    assert(fullFiles.nonEmpty && fullFiles.forall(live.contains))
+    graft.sources.Scd2.refresh(spark, scd)
+    val current = TxLog.read(spark, scd)
+      .filter(col(graft.sources.Scd2.IsCurrent))
+    assert(idSet(current) == Set(1L, 2L, 3L, 4L))
+    assert(current.filter(col("id") === 3).select("name").head.getString(0)
+      == "NEW")
+    // duplicate incoming keys are refused (Delta's multiple-matches
+    // contract), nothing committed
+    intercept[IllegalArgumentException] {
+      p.write(DataZone.Bronze, "pts",
+        Seq((1L, "a"), (1L, "b")).toDF("id", "name"), LoadType.Merge)
+    }
     // incremental: only unseen ids append
     p.write(DataZone.Bronze, "pts", df(4, 5), LoadType.Incremental)
     assert(idSet(p.read(DataZone.Bronze, "pts")) == Set(1L, 2L, 3L, 4L, 5L))
@@ -1011,6 +1038,19 @@ class TxLogSpec extends SparkSpec {
       Seq((5000L, "n5000")).toDF("id", "name"), Seq("id"))
     val delta = TxLog.changesSince(spark, dir, preInsert)
     assert(idSet(delta) == Set(5000L))
+
+    // an empty source commits nothing; with a txn it advances only the
+    // marker (no file added or removed)
+    val head = TxLog.snapshot(spark, dir)
+    val empty = source.limit(0)
+    assert(TxLog.merge(spark, dir, empty, Seq("id")) == head.version)
+    assert(TxLog.snapshot(spark, dir).version == head.version)
+    val marked = TxLog.merge(spark, dir, empty, Seq("id"),
+      txn = Some(("m", 7L)))
+    val after = TxLog.snapshot(spark, dir)
+    assert(marked == head.version + 1 && after.version == marked)
+    assert(after.txns.get("m").contains(7L))
+    assert(after.files == head.files)
   }
 
   test("skipping bounds extract only sound conjunctive constraints") {
@@ -1923,22 +1963,25 @@ class TxLogSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val sc = spark.sparkContext
+    // (label, SQL execution id) per job: one query can launch several
+    // jobs under adaptive execution
     val labels = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
+      new java.util.ArrayList[(String, String)]())
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        labels.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")); ()
+        def prop(k: String) = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        labels.add(prop("spark.job.description") ->
+          prop("spark.sql.execution.id")); ()
       }
     }
-    def jobsOf(op: => Unit): Seq[String] = {
+    def jobsOf(op: => Unit): Seq[(String, String)] = {
       org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
       labels.clear()
       op
       org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
-      labels.toArray.map(_.toString).toSeq
+      labels.toArray.map(_.asInstanceOf[(String, String)]).toSeq
     }
     val dir = tmp("txjobs").toString
     val pdir = tmp("txjobsp").toString
@@ -1960,11 +2003,19 @@ class TxLogSpec extends SparkSpec {
           statsCols = Seq("id"))),
         "partitioned append" -> (() => TxLog.commitAppend(spark, pdir,
           kv(10, 30), statsCols = Seq("id"))))
-      ops.foreach { case (name, op) =>
-        val jobs = jobsOf(op())
-        assert(!jobs.contains("txlog:stage-stats"), s"$name: $jobs")
-        assert(jobs.contains("txlog:stage-write"), s"$name: $jobs")
+      val jobsByOp = ops.map { case (name, op) => name -> jobsOf(op()) }
+      jobsByOp.foreach { case (name, jobs) =>
+        val ls = jobs.map(_._1)
+        assert(!ls.contains("txlog:stage-stats"), s"$name: $ls")
+        assert(ls.contains("txlog:stage-write"), s"$name: $ls")
       }
+      // merge shares applyChanges' locate step: ONE shape query answers
+      // the duplicate guard and the key envelope
+      val mergeJobs = jobsByOp.toMap.apply("merge")
+      val shapeQueries = mergeJobs.collect {
+        case ("txlog:apply-shape", id) => id }.distinct
+      assert(shapeQueries.size == 1 && shapeQueries.head.nonEmpty, mergeJobs)
+      assert(!mergeJobs.exists(_._1 == "txlog:key-envelope"), mergeJobs)
     } finally sc.removeSparkListener(listener)
     assert(TxLog.read(spark, dir).count() == 70)
     assert(TxLog.read(spark, pdir).count() == 30)
