@@ -261,6 +261,12 @@ object GraftFunctions {
     (FunctionIdentifier("hamming64"),
       new ExpressionInfo(classOf[Hamming64].getName, "hamming64"),
       (args: Seq[Expression]) => Hamming64(args(0), args(1))),
+    (FunctionIdentifier("minhash_md5"),
+      new ExpressionInfo(classOf[MinhashMd5].getName, "minhash_md5"),
+      (args: Seq[Expression]) => MinhashMd5(args(0), args(1))),
+    (FunctionIdentifier("repetition_stats"),
+      new ExpressionInfo(classOf[RepetitionStats].getName, "repetition_stats"),
+      (args: Seq[Expression]) => RepetitionStats(args.head)),
     (FunctionIdentifier("bpe_count"),
       new ExpressionInfo(classOf[BpeCount].getName, "bpe_count"),
       (args: Seq[Expression]) => BpeCount(args(0), args(1))),

@@ -67,10 +67,12 @@ object Decontaminate {
       idCol: String, textCol: String, tau: Double,
       minhashK: Int = 16, bands: Int = 4,
       maxBucket: Long = Dedup.DefaultMaxBucket): DataFrame = {
-    val shT = Dedup.shingles(train, idCol, textCol)
-    val shB = Dedup.shingles(benchmark, idCol, textCol)
-    nearDupPairs(shT, Dedup.bandedBuckets(shT, minhashK, bands),
-      shB, Dedup.bandedBuckets(shB, minhashK, bands), tau, maxBucket)
+    val setsT = Dedup.shingleSets(train, idCol, textCol)
+    val setsB = Dedup.shingleSets(benchmark, idCol, textCol)
+    nearDupPairs(Dedup.exploded(setsT),
+      Dedup.bandedBuckets(setsT, minhashK, bands),
+      Dedup.exploded(setsB), Dedup.bandedBuckets(setsB, minhashK, bands),
+      tau, maxBucket)
   }
 
   /** [[nearDupReport]]'s core over pre-derived relations: per-side

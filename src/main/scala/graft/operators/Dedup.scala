@@ -13,13 +13,21 @@ import graft.functions.GraftFunctions
   *
   * Scale design:
   *  - exact: one hash-partitioned groupBy on the content hash.
-  *  - n-gram Jaccard / MinHash-LSH: O(n·shingles) explode + equi-join on
-  *    the shingle/band key instead of the O(n²) compare; the band hash
-  *    is the shuffle key; cap/salt oversized buckets
-  *    ([[Skew.capBuckets]]) under stop-shingle skew.
+  *  - n-gram Jaccard: O(n·shingles) explode + equi-join on the shingle
+  *    key instead of the O(n²) compare; stop-shingle buckets are capped
+  *    ([[Skew.capBuckets]]).
+  *  - MinHash-LSH: per-document values stay in the document's row —
+  *    the shingle set ([[shingleSets]]), its codegen'd md5 signature
+  *    (`minhash_md5`) and band keys are one narrow projection; the band
+  *    hash is the only shuffle key of candidate generation (oversized
+  *    buckets capped), and candidates verify by intersecting the two
+  *    documents' sets. No shingle row is ever shuffled.
   *  - SimHash: codegen'd 64-bit signature + banded hamming candidates.
   *  - embedding: exact all-pairs for verification; banded hyperplane
   *    LSH ([[Similarity.dedupEmbeddingLsh]]) is the production path.
+  *
+  * Per-row contract: document ids are unique. A repeated id is not
+  * merged into one document — each row is its own document.
   */
 object Dedup {
 
@@ -36,17 +44,18 @@ object Dedup {
       .groupBy(col("content_hash"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keeper_id"))
 
-  /** Distinct word-n-gram shingles per document: (doc_id, s). Typed
+  /** Each document's distinct word-n-gram shingle set, in first-seen
+    * order: (doc_id, sh array<string>). Null text and documents with
+    * fewer than `n` words emit no row, so every set is non-empty. Typed
     * flatMap — compiled sliding window, ~3× faster than the interpreted
-    * higher-order-function path, byte-identical output. */
-  def shingles(docs: DataFrame, idCol: String, textCol: String,
+    * higher-order-function path. */
+  def shingleSets(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    // the shingle explosion + downstream md5 MinHash banks are the
-    // expensive per-row work of the whole dedup family; spread a
-    // single-split input over the cores first (no-op at real scan
-    // parallelism — Skew.spread)
+    // tokenizing and md5-signing the sets are the expensive per-row
+    // work of the whole dedup family; spread a single-split input over
+    // the cores first (no-op at real scan parallelism — Skew.spread)
     Skew.spread(
       docs
         .select(col(idCol).cast("long").as("doc_id"),
@@ -59,11 +68,21 @@ object Dedup {
         // trailing empties kept (limit -1)
         val w = text.trim.toLowerCase.split(" ", -1)
         if (w.length < n) Iterator.empty
-        else w.sliding(n).map(_.mkString(" "))
-          .toArray.distinct.iterator.map(sh => (id, sh))
+        else Iterator.single((id, w.sliding(n).map(_.mkString(" "))
+          .toArray.distinct))
       }
-      .toDF("doc_id", "s")
+      .toDF("doc_id", "sh")
   }
+
+  /** Distinct word-n-gram shingles per document: (doc_id, s) — the
+    * [[shingleSets]] exploded, one row per shingle. */
+  def shingles(docs: DataFrame, idCol: String, textCol: String,
+      n: Int = 3): DataFrame =
+    exploded(shingleSets(docs, idCol, textCol, n))
+
+  /** A (doc_id, sh) set relation as (doc_id, s) shingle rows. */
+  private[graft] def exploded(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), explode(col("sh")).as("s"))
 
   /** Default stop-shingle/band-bucket cap: far above any real similarity
     * bucket, small enough that one degenerate key can't produce an
@@ -104,29 +123,23 @@ object Dedup {
         col("n_b"), col("jaccard"))
   }
 
-  /** MinHash-LSH near-dup pairs: md5-based MinHash signatures (min over
-    * fixed-width lowercase hex = min over the hash value), banded bucket
-    * keys, bucket equi-join for candidates, exact-Jaccard verification
-    * of candidates only. Output: (id_a, id_b, jaccard).
-    *
-    * Band buckets larger than `maxBucket` are dropped before the
-    * candidate join ([[Skew.capBuckets]]): a bucket that size is a
-    * degenerate band (near-constant signature), and its O(b²) pairs
-    * would dominate the whole job at scale. */
-  /** Banded MinHash bucket keys for a shingle relation: md5-based
-    * minhash signature → per-band bucket hash, exploded to
-    * (doc_id, band, bh). Shared by [[minhashLsh]] (self-join dedup) and
-    * [[Decontaminate.nearDupReport]] (cross-corpus join); callers apply
-    * their own bucket cap. */
-  private[graft] def bandedBuckets(sh: DataFrame, minhashK: Int,
+  /** Banded MinHash bucket keys for a [[shingleSets]] relation, one
+    * narrow projection: the codegen'd `minhash_md5` signature →
+    * per-band bucket hash, stacked to (doc_id, band, bh). A band key
+    * is md5 over its signature values as 16-char lowercase hex, exactly
+    * `md5(concat(min(substring(md5(concat('i:', s)), 1, 16)), …))` over
+    * the exploded shingles. Shared by [[minhashLsh]] (self-join dedup)
+    * and [[Decontaminate.nearDupReport]] (cross-corpus join); callers
+    * apply their own bucket cap. */
+  private[graft] def bandedBuckets(sets: DataFrame, minhashK: Int,
       bands: Int): DataFrame = {
+    GraftFunctions.register(sets.sparkSession)
     val rowsPerBand = minhashK / bands
-    val minhashCols = (0 until minhashK).map(k =>
-      min(substring(md5(concat(lit(s"$k:"), col("s"))), 1, 16)).as(s"h$k"))
-    val sig = sh.groupBy(col("doc_id"))
-      .agg(minhashCols.head, minhashCols.tail: _*)
+    val sig = sets.select(col("doc_id"),
+      call_function("minhash_md5", col("sh"), lit(minhashK)).as("sig"))
     val bandCols = (0 until bands).map { b =>
-      val rows = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
+      val rows = (0 until rowsPerBand).map(r =>
+        lpad(lower(hex(col("sig").getItem(b * rowsPerBand + r))), 16, "0"))
       md5(concat(rows: _*)).as(s"band$b")
     }
     sig.select(col("doc_id") +: bandCols: _*)
@@ -135,21 +148,30 @@ object Dedup {
           .map(b => s"$b, band$b").mkString(", ")}) as (band, bh)"""))
   }
 
+  /** MinHash-LSH near-dup pairs: md5-based MinHash signatures, banded
+    * bucket keys ([[bandedBuckets]]), bucket equi-join for candidates,
+    * exact-Jaccard verification of candidates only. Output:
+    * (id_a, id_b, jaccard).
+    *
+    * Band buckets larger than `maxBucket` are dropped before the
+    * candidate join ([[Skew.capBuckets]]): a bucket that size is a
+    * degenerate band (near-constant signature), and its O(b²) pairs
+    * would dominate the whole job at scale. */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, minhashK: Int = 16, bands: Int = 4,
       maxBucket: Long = DefaultMaxBucket): DataFrame =
     // not persisted — same recompute-beats-cache tradeoff as ngramJaccard
-    minhashLshShingles(shingles(docs, idCol, textCol), tau, minhashK,
+    minhashLshSets(shingleSets(docs, idCol, textCol), tau, minhashK,
       bands, maxBucket)
 
   /** [[minhashLsh]] over an already-derived (possibly checkpointed)
-    * shingle relation — lets [[incrementalCleanIndexed]] reuse ONE
-    * materialized shingle set across the cross-corpus and in-batch
-    * stages instead of re-exploding per consumer. */
-  private[graft] def minhashLshShingles(sh: DataFrame,
+    * [[shingleSets]] relation — lets [[incrementalCleanIndexed]] reuse
+    * ONE materialized set relation across the cross-corpus and
+    * in-batch stages. */
+  private[graft] def minhashLshSets(sets: DataFrame,
       tau: Double, minhashK: Int, bands: Int,
       maxBucket: Long): DataFrame = {
-    val exploded = Skew.capBuckets(bandedBuckets(sh, minhashK, bands),
+    val exploded = Skew.capBuckets(bandedBuckets(sets, minhashK, bands),
       Seq(col("band"), col("bh")), maxBucket)
     val candidates = exploded.as("a")
       .join(exploded.as("b"),
@@ -162,17 +184,12 @@ object Dedup {
     // exists to avoid. The candidate set is data-dependent (near-dup
     // density), so no forced broadcast: AQE broadcasts it when its
     // runtime size genuinely fits, falls back to shuffle join otherwise.
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = candidates
-      .join(sh.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(sh.as("sb"),
-        col("id_b") === col("sb.doc_id") && col("sa.s") === col("sb.s"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    val withA = sizes.select(col("doc_id").as("id_a"), col("n").as("n_a"))
-      .join(inter, "id_a")
-    sizes.select(col("doc_id").as("id_b"), col("n").as("n_b"))
-      .join(withA, "id_b")
+    def side(x: String): DataFrame =
+      sets.select(col("doc_id").as(s"id_$x"), col("sh").as(s"sh_$x"))
+    candidates.join(side("a"), "id_a").join(side("b"), "id_b")
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).as("n_inter"),
+        size(col("sh_a")).as("n_a"), size(col("sh_b")).as("n_b"))
       .withColumn("jaccard", col("n_inter").cast("double") /
         (col("n_a") + col("n_b") - col("n_inter")))
       .filter(col("jaccard") >= tau)
@@ -182,10 +199,10 @@ object Dedup {
   /** Incremental (batch-vs-corpus) dedup — the daily-ingest shape
     * (round-7): dedup an ARRIVING batch against an existing corpus and
     * against itself, without any corpus-wide recompute. The corpus
-    * contributes only its content-hash set and its banded MinHash
-    * bucket keys — both one narrow scan + map-side-combined
-    * aggregation (in production, the persisted dedup index a corpus
-    * store maintains); nothing corpus-sized is ever re-clustered,
+    * contributes only its content-hash set (one narrow scan +
+    * map-side-combined aggregation) and its banded MinHash bucket keys
+    * (one narrow projection) — in production, the persisted dedup index
+    * a corpus store maintains; nothing corpus-sized is ever re-clustered,
     * re-paired, or shuffled against itself. Batch-sized work is the
     * only quadratic-risk surface, and it runs under the same capped
     * bucket joins as [[minhashLsh]].
@@ -219,7 +236,7 @@ object Dedup {
     * [[incrementalCleanIndexed]] takes them from here, never from the
     * caller. In production these three are parquet tables a corpus
     * store maintains alongside the data — [[buildIndex]] derives them
-    * (two scans + two map-side-combined aggregations),
+    * (two scans, one map-side-combined aggregation),
     * [[saveIndex]]/[[loadIndex]] persist them bucketed by their join
     * keys, and [[incrementalCleanIndexed]] probes them so DAILY INGEST
     * never pays a corpus-sized recomputation. The shingle relation is
@@ -233,12 +250,12 @@ object Dedup {
     * batch ingest truly corpus-recompute-free across sessions. */
   def buildIndex(corpus: DataFrame, idCol: String, textCol: String,
       minhashK: Int = 16, bands: Int = 4): DedupIndex = {
-    val sh = shingles(corpus, idCol, textCol)
+    val sets = shingleSets(corpus, idCol, textCol)
     DedupIndex(
       hashes = corpus.select(md5(normalized(col(textCol))).as("content_hash"))
         .distinct(),
-      shingles = sh,
-      buckets = bandedBuckets(sh, minhashK, bands),
+      shingles = exploded(sets),
+      buckets = bandedBuckets(sets, minhashK, bands),
       minhashK = minhashK, bands = bands)
   }
 
@@ -296,9 +313,6 @@ object Dedup {
       bands = meta.getAs[Int]("bands"))
   }
 
-  /** [[incrementalClean]] against a prebuilt (typically persisted)
-    * [[DedupIndex]] — the ingest-cost-is-batch-sized form. MinHash
-    * parameters come from the index itself ([[DedupIndex]]). */
   /** The exact stage of [[incrementalCleanIndexed]]: the batch rows
     * whose content hash is corpus-unknown, deduplicated within the
     * batch (min id per hash). Exposed private[graft] so the plan
@@ -322,10 +336,13 @@ object Dedup {
       .drop("_graft_h", "_graft_rn")
   }
 
+  /** [[incrementalClean]] against a prebuilt (typically persisted)
+    * [[DedupIndex]] — the ingest-cost-is-batch-sized form. MinHash
+    * parameters come from the index itself ([[DedupIndex]]). */
   def incrementalCleanIndexed(index: DedupIndex, batch: DataFrame,
       idCol: String, textCol: String, tau: Double,
       maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    // the exact-stage survivors feed FOUR consumers (their shingles,
+    // the exact-stage survivors feed FOUR consumers (their shingle sets,
     // the in-batch LSH, and both final anti-joins) — without a
     // checkpoint each consumer re-runs the anti-join against the
     // corpus hash relation, the one corpus-sized input of this stage.
@@ -336,14 +353,16 @@ object Dedup {
     // plan, not from execution.)
     val exactSurv =
       exactSurvivors(index, batch, idCol, textCol).localCheckpoint(true)
-    val shBatch = shingles(exactSurv, idCol, textCol).localCheckpoint(true)
+    // the batch's shingle sets, materialized once for both near stages
+    val setsBatch =
+      shingleSets(exactSurv, idCol, textCol).localCheckpoint(true)
     val crossLosers = Decontaminate
-      .nearDupPairs(shBatch,
-        bandedBuckets(shBatch, index.minhashK, index.bands),
+      .nearDupPairs(exploded(setsBatch),
+        bandedBuckets(setsBatch, index.minhashK, index.bands),
         index.shingles, index.buckets, tau, maxBucket)
       .select(col("train_id").as(idCol)).distinct()
     val comp = components(
-      minhashLshShingles(shBatch, tau, index.minhashK,
+      minhashLshSets(setsBatch, tau, index.minhashK,
         index.bands, maxBucket), "id_a", "id_b")
     val selfLosers = comp.filter(col("node") =!= col("component"))
       .select(col("node").as(idCol))
@@ -395,7 +414,10 @@ object Dedup {
     * `onRound` (round index, labels changed) observer is for scale
     * diagnostics — when set, convergence is detected by a count of the
     * changed labels (the number the observer needs) instead of the
-    * slightly cheaper `isEmpty` probe; semantics are identical. */
+    * slightly cheaper `isEmpty` probe; semantics are identical.
+    *
+    * Its Spark jobs are labelled `dedup:components-{edges,count,collect,
+    * round}` ([[graft.JobLabels]]). */
   def components(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25,
       onRound: Option[(Int, Long) => Unit] = None): DataFrame = {
@@ -404,14 +426,20 @@ object Dedup {
     // verify) pair pipeline TWICE, once per union branch; exploding
     // each pair into both directions keeps a single evaluation
     // (measured: the pair pipeline dominates the first checkpoint)
+    val session = pairs.sparkSession
+    // every job this operator launches is labelled dedup:components-*
+    def labelled[A](phase: String)(f: => A): A =
+      graft.JobLabels.described(session, "dedup", s"components-$phase")(f)
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val undirected = edges
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
-      .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      .distinct()
-      .localCheckpoint(true)
+    val undirected = labelled("edges") {
+      edges
+        .select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
+        .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
+        .distinct()
+        .localCheckpoint(true)
+    }
     // SMALL-GRAPH fast path: below `spark.graft.components.localMaxEdges`
     // distinct directed edges (default 2M ≈ 32 MB of longs — the same
     // bounded-collect class as a broadcast hash relation), a driver
@@ -422,7 +450,6 @@ object Dedup {
     // propagation below stays the path for integral graphs past the
     // bound, for non-integral id types, and whenever the caller asked
     // for per-round diagnostics (`onRound`).
-    val session = pairs.sparkSession
     val localMax = session.conf
       .get("spark.graft.components.localMaxEdges", "2000000").toLong
     val integralIds = undirected.schema.fields.head.dataType match {
@@ -432,11 +459,13 @@ object Dedup {
       case _ => false
     }
     if (onRound.isEmpty && integralIds && localMax > 0 &&
-        undirected.count() <= localMax) {
+        labelled("count")(undirected.count()) <= localMax) {
       val idType = undirected.schema.fields.head.dataType
-      val edgeRows = undirected
-        .select(col("src").cast("long"), col("dst").cast("long"))
-        .collect()
+      val edgeRows = labelled("collect") {
+        undirected
+          .select(col("src").cast("long"), col("dst").cast("long"))
+          .collect()
+      }
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -464,9 +493,11 @@ object Dedup {
         .select(col("node").cast(idType).as("node"),
           col("component").cast(idType).as("component"))
     }
-    var labels = undirected.select(col("src").as("node")).distinct()
-      .withColumn("component", col("node"))
-      .localCheckpoint(true)
+    var labels = labelled("round") {
+      undirected.select(col("src").as("node")).distinct()
+        .withColumn("component", col("node"))
+        .localCheckpoint(true)
+    }
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -492,19 +523,22 @@ object Dedup {
       // edge join above.
       val jump = labels
         .select(col("node").as("_jn"), col("component").as("_jc"))
-      val updated = withNeighbor
-        .join(jump, withNeighbor("component") === col("_jn"), "left")
-        .select(withNeighbor("node"),
-          least(withNeighbor("component"),
-            coalesce(col("_jc"), withNeighbor("component")))
-            .as("component"),
-          col("_old"))
-        .localCheckpoint(true)
+      val updated = labelled("round") {
+        withNeighbor
+          .join(jump, withNeighbor("component") === col("_jn"), "left")
+          .select(withNeighbor("node"),
+            least(withNeighbor("component"),
+              coalesce(col("_jc"), withNeighbor("component")))
+              .as("component"),
+            col("_old"))
+          .localCheckpoint(true)
+      }
       val changedDf = updated.filter(col("component") =!= col("_old"))
       converged = onRound match {
         case Some(cb) =>
-          val changed = changedDf.count(); cb(i, changed); changed == 0L
-        case None => changedDf.isEmpty
+          val changed = labelled("round")(changedDf.count())
+          cb(i, changed); changed == 0L
+        case None => labelled("round")(changedDf.isEmpty)
       }
       // `updated` is materialized — the previous round's blocks are dead
       release(labels)

@@ -10,6 +10,8 @@ import graft.functions.GraftFunctions
   * `graft.queries.TextQueries` bindings apply these to the testdata.
   * Every operator except topTerms is a narrow projection (no shuffle):
   * at 100 TB they run at scan speed inside whole-stage codegen.
+  * Per-row contract: document ids are unique — each row is scored as
+  * its own document, a repeated id is not merged.
   */
 object TextOps {
 
@@ -156,44 +158,44 @@ object TextOps {
     * duplication measures a Gopher-style quality filter needs: token
     * diversity and the dominance of the most frequent token/bigram.
     * Boilerplate, scraped navigation, and generation loops all show up
-    * as low distinct_ratio or high top-fraction. Two explode→aggregate
-    * passes (unigrams, bigrams), both combiner-friendly on doc_id —
-    * state per doc is O(distinct terms), shuffle is the aggregated
-    * per-doc row. Output: (doc_id, n_tokens, n_distinct, distinct_ratio,
-    * top_token_tf, top_token_frac, n_bigrams, top_bigram_tf,
-    * top_bigram_frac). */
+    * as low distinct_ratio or high top-fraction. One narrow projection:
+    * the codegen'd `repetition_stats` kernel counts each document's
+    * unigrams (non-empty tokens) and bigrams (every adjacent token
+    * pair) inside its row. A document with null text or no non-empty
+    * token emits no row. Output: (doc_id, n_tokens, n_distinct,
+    * distinct_ratio, top_token_tf, top_token_frac, n_bigrams,
+    * top_bigram_tf, top_bigram_frac). */
   def repetition(docs: DataFrame, idCol: String, textCol: String)
-      : DataFrame = {
-    val base = prepared(docs, idCol, textCol).withColumn("toks", tokens)
-    val uni = base
-      .select(col("doc_id"), explode(col("toks")).as("t"))
-      .filter(col("t") =!= "")
-      .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).as("n_tokens"),
-        count(lit(1)).as("n_distinct"),
-        max(col("tf")).as("top_token_tf"))
-    val bi = base
-      .select(col("doc_id"),
-        explode(when(size(col("toks")) >= 2, expr(
-          """transform(sequence(1, size(toks) - 1),
-             i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"""))
-          .otherwise(array().cast("array<string>"))).as("b"))
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("bf"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("bf")).as("n_bigrams"), max(col("bf")).as("top_bigram_tf"))
-    uni.join(bi, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
-        (col("n_distinct").cast("double") / col("n_tokens"))
+      : DataFrame =
+    withRepetition(docs, idCol, textCol).drop("text")
+
+  /** `prepared` rows with [[repetition]]'s signals, dropping the rows
+    * that have none; `text` stays available to the caller's
+    * projection. */
+  private def withRepetition(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    GraftFunctions.register(docs.sparkSession)
+    def r(field: String): Column = col(s"_rep.$field")
+    prepared(docs, idCol, textCol)
+      // a text has a non-empty token iff it is not null and not all
+      // spaces — exactly the rows whose repetition_stats is non-null.
+      // Filtering on the kernel's result instead would evaluate it
+      // twice: the optimizer pushes the predicate below the projection
+      // with the kernel call substituted in.
+      .filter(length(trim(col("text"))) > 0)
+      .select(col("doc_id"), col("text"),
+        call_function("repetition_stats", tokens).as("_rep"))
+      .select(col("doc_id"), col("text"),
+        r("n_tokens").as("n_tokens"), r("n_distinct").as("n_distinct"),
+        (r("n_distinct").cast("double") / r("n_tokens"))
           .as("distinct_ratio"),
-        col("top_token_tf"),
-        (col("top_token_tf").cast("double") / col("n_tokens"))
+        r("top_token_tf").as("top_token_tf"),
+        (r("top_token_tf").cast("double") / r("n_tokens"))
           .as("top_token_frac"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("top_bigram_tf"), lit(0L)).as("top_bigram_tf"),
-        (coalesce(col("top_bigram_tf"), lit(0L)).cast("double") /
-          greatest(coalesce(col("n_bigrams"), lit(0L)), lit(1L)))
-          .as("top_bigram_frac"))
+        r("n_bigrams").as("n_bigrams"),
+        r("top_bigram_tf").as("top_bigram_tf"),
+        (r("top_bigram_tf").cast("double") /
+          greatest(r("n_bigrams"), lit(1L))).as("top_bigram_frac"))
   }
 
   /** Gopher-style keep/drop decision (round-3 addition, §2c) — the
@@ -202,17 +204,14 @@ object TextOps {
     * token-diversity floor, and repetition ceilings, each a named flag
     * so the drop reason is auditable. Output: (doc_id, signals…, keep
     * 0/1, drop_reasons — ';'-joined failed-rule names, '' when kept).
-    * One repetition pass joined with a narrow word-length projection. */
+    * One narrow projection: [[repetition]]'s signals and the mean word
+    * length come from the same row. */
   def gopherFilter(docs: DataFrame, idCol: String, textCol: String,
       minTokens: Long = 30L, maxTokens: Long = 50000L,
       minDistinctRatio: Double = 0.2, maxTopTokenFrac: Double = 0.2,
       maxTopBigramFrac: Double = 0.2,
       minAvgWordLen: Double = 3.0, maxAvgWordLen: Double = 10.0)
       : DataFrame = {
-    val awl = prepared(docs, idCol, textCol)
-      .select(col("doc_id"),
-        (length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("double") /
-          size(tokens)).as("avg_word_len"))
     val flags = Seq(
       ("n_tokens", col("n_tokens").between(minTokens, maxTokens)),
       ("avg_word_len",
@@ -223,8 +222,10 @@ object TextOps {
     val reasons = concat(flags.map { case (name, ok) =>
       when(!ok, s"$name;").otherwise("")
     }: _*)
-    repetition(docs, idCol, textCol).join(awl, "doc_id")
-      .select(col("doc_id"), col("n_tokens"), col("avg_word_len"),
+    withRepetition(docs, idCol, textCol)
+      .select(col("doc_id"), col("n_tokens"),
+        (length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("double") /
+          size(tokens)).as("avg_word_len"),
         col("distinct_ratio"), col("top_token_frac"),
         col("top_bigram_frac"))
       .withColumn("keep",

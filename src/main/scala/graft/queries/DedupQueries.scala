@@ -11,10 +11,12 @@ import graft.operators.{Dedup, Similarity}
   *
   *  - exact: one hash-partitioned groupBy on the content hash (map-side
   *    partial agg) — the only shuffle.
-  *  - n-gram Jaccard / MinHash-LSH: O(n·shingles) explode + equi-join on
-  *    the shingle/band key instead of the O(n²) all-pairs compare; at
-  *    100 TB the band hash is the shuffle key and oversized buckets
+  *  - n-gram Jaccard: O(n·shingles) explode + equi-join on the shingle
+  *    key instead of the O(n²) all-pairs compare; oversized buckets
   *    (stop-shingle skew) are the thing to salt/cap.
+  *  - MinHash-LSH: signature and band keys are computed in each
+  *    document's row; at 100 TB the band hash is the only shuffle key
+  *    and candidates verify by intersecting the two shingle sets.
   *  - SimHash: per-row 64-bit signature via a codegen'd native
   *    expression, then banded hamming candidate pairs.
   *  - embedding cosine: exact all-pairs at verification scale; the

@@ -92,16 +92,12 @@ object TxLog {
           s"got a ${p.nodeName} plan")
     }
 
-  /** Label the Spark jobs `f` launches (guide §1.5) so profilers and
-    * the UI attribute commit-machinery phases; restores the caller's
-    * description (thread-local) on exit. Zero data-path effect. */
+  /** Label the Spark jobs `f` launches `txlog:label` (guide §1.5) so
+    * profilers and the UI attribute commit-machinery phases
+    * ([[graft.JobLabels]]). */
   private[graft] def described[A](spark: SparkSession, label: String)
-      (f: => A): A = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"txlog:$label")
-    try f finally sc.setJobDescription(prev)
-  }
+      (f: => A): A =
+    graft.JobLabels.described(spark, "txlog", label)(f)
 
   /** Write a full-state checkpoint every this-many commits. */
   val CheckpointInterval = 10

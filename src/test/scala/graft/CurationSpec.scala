@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Decontaminate, Pii, Sampling, TextOps}
@@ -91,6 +92,87 @@ class CurationSpec extends SparkSpec {
       reasons2.contains("top_token_frac;") &&
       reasons2.contains("top_bigram_frac;"), reasons2)
     assert(out(3L).getAs[String]("drop_reasons").contains("n_tokens;"))
+  }
+
+  /** Documents covering the tokenizer's edge cases: double internal
+    * spaces, leading/trailing spaces, a single token, "", whitespace
+    * only, null, mixed-case unicode and repeated bigrams. */
+  private def repetitionEdgeDocs = Seq[(Long, String)](
+    (1L, "a  b   c a  b"),
+    (2L, "  leading and trailing  "),
+    (3L, "single"),
+    (4L, ""),
+    (5L, "   "),
+    (6L, null),
+    (7L, "Straße STRASSE straße Ünïcödé ünïcödé 日本 日本"),
+    (8L, "to be or not to be to be or not to be"),
+    (9L, "x x x y z w"),
+    (10L, " "),
+    (11L, "Mixed CASE mixed case MIXED")).toDF("doc_id", "text")
+
+  /** The explode → groupBy(doc, term) → groupBy(doc) form of
+    * [[TextOps.repetition]], the reference its kernel must equal. */
+  private def repetitionByAggregation(docs: DataFrame): DataFrame = {
+    val base = docs.select(col("doc_id"),
+      split(lower(trim(col("text"))), " ").as("toks"))
+    val uni = base
+      .select(col("doc_id"), explode(col("toks")).as("t"))
+      .filter(col("t") =!= "")
+      .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("tf")).as("n_tokens"), count(lit(1)).as("n_distinct"),
+        max(col("tf")).as("top_token_tf"))
+    val bi = base
+      .select(col("doc_id"),
+        explode(when(size(col("toks")) >= 2, expr(
+          """transform(sequence(1, size(toks) - 1),
+             i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"""))
+          .otherwise(array().cast("array<string>"))).as("b"))
+      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("bf"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("bf")).as("n_bigrams"), max(col("bf")).as("top_bigram_tf"))
+    uni.join(bi, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
+        (col("n_distinct").cast("double") / col("n_tokens"))
+          .as("distinct_ratio"),
+        col("top_token_tf"),
+        (col("top_token_tf").cast("double") / col("n_tokens"))
+          .as("top_token_frac"),
+        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        coalesce(col("top_bigram_tf"), lit(0L)).as("top_bigram_tf"),
+        (coalesce(col("top_bigram_tf"), lit(0L)).cast("double") /
+          greatest(coalesce(col("n_bigrams"), lit(0L)), lit(1L)))
+          .as("top_bigram_frac"))
+  }
+
+  test("repetition kernel equals the explode/aggregate formula on edge cases") {
+    val docs = repetitionEdgeDocs
+    val reference = repetitionByAggregation(docs)
+    val expected = reference.collect().toSet
+    val got = TextOps.repetition(docs, "doc_id", "text")
+    assert(got.schema.map(f => f.name -> f.dataType) ==
+      reference.schema.map(f => f.name -> f.dataType))
+    assert(got.collect().toSet == expected)
+    // "", whitespace-only and null texts have no non-empty token: no row
+    assert(expected.map(_.getLong(0)) == Set(1L, 2L, 3L, 7L, 8L, 9L, 11L))
+    val dd = expected.find(_.getLong(0) == 1L).get
+    // "a  b   c a  b" splits into 9 raw tokens: 5 non-empty, and 8
+    // adjacent pairs ("a ", " b", …) all count as bigrams
+    assert(dd.getAs[Long]("n_tokens") == 5L && dd.getAs[Long]("n_bigrams") == 8L)
+  }
+
+  test("gopherFilter reads its word lengths from the repetition row") {
+    val docs = repetitionEdgeDocs
+    val awl = docs.select(col("doc_id"),
+      (length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("double") /
+        size(split(lower(trim(col("text"))), " "))).as("avg_word_len"))
+    val expected = repetitionByAggregation(docs).join(awl, "doc_id")
+      .select("doc_id", "n_tokens", "avg_word_len", "distinct_ratio",
+        "top_token_frac", "top_bigram_frac").collect().toSet
+    val got = TextOps.gopherFilter(docs, "doc_id", "text")
+      .select("doc_id", "n_tokens", "avg_word_len", "distinct_ratio",
+        "top_token_frac", "top_bigram_frac").collect().toSet
+    assert(got == expected)
   }
 
   test("weighted bernoulli is deterministic and monotone in weight") {

@@ -60,11 +60,22 @@ class PlanAuditSpec extends SparkSpec {
 
   test("narrow text operators read one scan with zero shuffles") {
     Seq("text_stats", "text_quality_score", "text_lang_id",
-      "text_fingerprint", "sample_bernoulli").foreach { q =>
+      "text_fingerprint", "text_repetition", "text_gopher_filter",
+      "sample_bernoulli").foreach { q =>
       val p = plan(q)
       assert(count(p, "Exchange hashpartitioning") == 0, s"$q:\n$p")
       assert(count(p, "FileScan parquet") == 1, s"$q:\n$p")
     }
+  }
+
+  test("dedup_minhash_lsh signs documents in their rows: no shingle shuffle") {
+    // signatures come from the per-document minhash_md5 projection and
+    // candidates verify by set intersection — no string-min aggregate
+    // over shingle rows, no exchange keyed on the shingle column
+    val p = plan("dedup_minhash_lsh")
+    assert(!p.contains("SortAggregate"), p)
+    assert(count(p, "Exchange hashpartitioning\\(s#") == 0, p)
+    assert(p.contains("minhash_md5"), p)
   }
 
   test("exact profiling plans no Expand (the multi-distinct trap)") {

@@ -171,6 +171,135 @@ class TextDedupSpec extends SparkSpec {
       .count() == 0)
   }
 
+  /** Seeded corpus for the MinHash kernel checks: unicode, repeated
+    * words, one-shingle docs (whose signature values are single md5
+    * prefixes — half of them have the top bit set), short docs with
+    * no shingle, and a null text. */
+  private def minhashCorpus = {
+    val r = new java.util.SplittableRandom(42)
+    val vocab = Seq("the", "data", "lake", "Über", "straße", "naïve",
+      "日本語", "текст", "ελληνικά", "emoji😀", "repeat", "repeat", "x")
+    val docs = (1L to 120L).map { i =>
+      val n = (i % 4) match {
+        case 0 => 3                  // exactly one shingle
+        case 1 => 2                  // no shingle at all
+        case _ => 4 + r.nextInt(40)
+      }
+      (i, Seq.fill(n)(vocab(r.nextInt(vocab.size))).mkString(" "))
+    } :+ ((999L, null: String))
+    docs.toDF("doc_id", "text")
+  }
+
+  test("minhash_md5 equals min(substring(md5('i:' || s), 1, 16)) as unsigned hex") {
+    GraftFunctions.register(spark)
+    val k = 16
+    val docs = minhashCorpus
+    val sh = graft.operators.Dedup.shingles(docs, "doc_id", "text")
+    val perShingle = sh.select(col("doc_id") +: (0 until k).map(i =>
+      substring(md5(concat(lit(s"$i:"), col("s"))), 1, 16).as(s"h$i")): _*)
+    val reference = perShingle.groupBy("doc_id")
+      .agg(min("h0").as("h0"), (1 until k).map(i => min(s"h$i").as(s"h$i")): _*)
+      .collect().map(r => r.getLong(0) -> (1 to k).map(r.getString)).toMap
+    // a signed minimum would fail: some (doc, i) mixes top-bit-set and
+    // top-bit-clear hashes whose unsigned minimum is top-bit clear
+    val topDigit = (0 until k).flatMap(i => Seq(
+      max(col(s"h$i").substr(1, 1)).as(s"hi$i"),
+      min(col(s"h$i").substr(1, 1)).as(s"lo$i")))
+    val mixed = perShingle.groupBy("doc_id")
+      .agg(topDigit.head, topDigit.tail: _*)
+      .filter((0 until k).map(i =>
+        col(s"hi$i") >= "8" && col(s"lo$i") < "8").reduce(_ || _))
+    assert(mixed.count() > 0)
+    assert(reference.values.flatten.exists(_.head >= '8'))
+    def kernel(): Map[Long, Seq[String]] = graft.operators.Dedup
+      .shingleSets(docs, "doc_id", "text")
+      .select(col("doc_id"), call_function("minhash_md5", col("sh"), lit(k))
+        .as("sig"))
+      .collect().map(r => r.getLong(0) ->
+        r.getSeq[Long](1).map(v => f"$v%016x")).toMap
+    assert(reference.size > 60)
+    assert(kernel() == reference)
+    // the interpreted path (no codegen) computes the same signature
+    val conf = spark.conf
+    conf.set("spark.sql.codegen.wholeStage", "false")
+    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try assert(kernel() == reference)
+    finally {
+      conf.unset("spark.sql.codegen.wholeStage")
+      conf.unset("spark.sql.codegen.factoryMode")
+    }
+    // no shingle, no signature
+    val empty = Seq(Seq.empty[String], Seq[String](null)).toDF("sh")
+      .select(call_function("minhash_md5", col("sh"), lit(k))).collect()
+    assert(empty.forall(_.isNullAt(0)))
+  }
+
+  test("bandedBuckets equals the band keys of the string-min signature") {
+    val docs = minhashCorpus
+    val (k, bands) = (16, 4)
+    val sh = graft.operators.Dedup.shingles(docs, "doc_id", "text")
+    val sig = sh.groupBy(col("doc_id")).agg(
+      min(substring(md5(concat(lit("0:"), col("s"))), 1, 16)).as("h0"),
+      (1 until k).map(i =>
+        min(substring(md5(concat(lit(s"$i:"), col("s"))), 1, 16)).as(s"h$i")): _*)
+    val reference = sig.select(col("doc_id") +: (0 until bands).map { b =>
+      md5(concat((0 until k / bands).map(r =>
+        col(s"h${b * (k / bands) + r}")): _*)).as(s"band$b")
+    }: _*).collect().flatMap(r =>
+      (0 until bands).map(b => (r.getLong(0), b, r.getString(b + 1)))).toSet
+    val kernel = graft.operators.Dedup
+      .bandedBuckets(graft.operators.Dedup
+        .shingleSets(docs, "doc_id", "text"), k, bands)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+    assert(reference.size > 200)
+    assert(kernel == reference)
+  }
+
+  test("components labels every job it launches dedup:components-*") {
+    val sc = spark.sparkContext
+    val labels = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        labels.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")); ()
+      }
+    }
+    def jobsOf(op: => Unit): Seq[String] = {
+      org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
+      labels.clear()
+      op
+      org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
+      labels.toArray.map(_.asInstanceOf[String]).toSeq
+    }
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L), (7L, 9L), (9L, 8L))
+      .toDF("id_a", "id_b")
+    sc.setJobDescription("caller")
+    sc.addSparkListener(listener)
+    try {
+      val fast = jobsOf(graft.operators.Dedup.release(
+        graft.operators.Dedup.components(pairs, "id_a", "id_b")))
+      assert(Seq("edges", "count", "collect")
+        .forall(p => fast.contains(s"dedup:components-$p")), fast)
+      assert(fast.forall(_.startsWith("dedup:components-")), fast)
+      spark.conf.set("spark.graft.components.localMaxEdges", "0")
+      val dist =
+        try jobsOf(graft.operators.Dedup.release(
+          graft.operators.Dedup.components(pairs, "id_a", "id_b")))
+        finally spark.conf.unset("spark.graft.components.localMaxEdges")
+      assert(dist.contains("dedup:components-edges") &&
+        dist.contains("dedup:components-round"), dist)
+      assert(dist.forall(_.startsWith("dedup:components-")), dist)
+      // the caller's own description is restored
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
+  }
+
   test("components clusters a chain and separates disjoint groups") {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L), (7L, 9L), (9L, 8L))
       .toDF("id_a", "id_b")
