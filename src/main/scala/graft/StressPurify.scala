@@ -19,7 +19,7 @@ import graft.sources.{TxLog, TxLogBatch}
   *     exactly the partition through the TxFileIndex;
   *  3. a merge-on-read DELETE leaving standing vectors — the
   *     DV-bearing table must STILL plan a static BroadcastHashJoin
-  *     against a big fact (AQE off), via TxLogDvRelation's exact
+  *     against a big fact (AQE off), via the TxFileIndex's exact
   *     dv-adjusted statistics;
   *  4. `maintain` under the dv-ratio trigger — must fold the vectors
   *     AND keep the partitioned presentation (purify mode).

@@ -13,38 +13,29 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.TxLog.{TxFile, TxSnapshot}
 
-/** DV-AWARE SCANNING on the [[TxFileIndex]] leg — the last
-  * presentation split retired (reference merge-on-read semantics:
-  * data_quality has no storage layer; the shape re-derives Delta's
-  * DV-in-scan against public Spark APIs).
+/** Deletion vectors as a SCAN FILTER — the `dv-filter` strategy of
+  * [[TxLog.liveScans]], the one place a logged read subtracts its
+  * vectors (reference merge-on-read semantics: data_quality has no
+  * storage layer; the shape re-derives Delta's DV-in-scan against
+  * public Spark APIs).
   *
-  * Before this, a file with a standing deletion vector left the
-  * FileIndex presentation entirely: the split-union read kept clean
-  * files vectorized but routed the dv-bearing slice through a V1
-  * row-scan relation (no whole-stage codegen, no DPP, no plan-time
-  * restriction) plus an anti-join, and every read of a mixed snapshot
-  * paid a constant two-scan driver overhead. A heavy merge-on-read
-  * workload LIVES between DML and maintenance, so that state is the
-  * one to optimize.
-  *
-  * The Spark-first shape: dv-bearing files stay ON the [[TxFileIndex]]
-  * and the vector is applied as a codegen'd row filter over the
-  * scan's own parquet metadata —
-  * `NOT dv_deleted(_metadata.file_path, _metadata.row_index)` —
-  * against a BROADCAST of per-file sorted row-index arrays. One
-  * vectorized FileScan for the whole table, static + dynamic
-  * partition pruning on every file, the filter fused into the scan's
-  * whole-stage-codegen span, and the vector lookup is a pointer
-  * compare (per-batch memo) + binary search per row.
+  * The vector applies as a codegen'd row filter over the scan's own
+  * parquet metadata — `NOT dv_deleted(_metadata.file_path,
+  * _metadata.row_index)` — against a BROADCAST of per-file sorted
+  * row-index arrays. One scan for the whole table: on the
+  * [[TxFileIndex]] leaf that is one vectorized FileScan with static +
+  * dynamic partition pruning on every file, the filter fused into its
+  * whole-stage-codegen span; the explicit-path tagged read (DML
+  * probes, change-feed pre-images) gets the same filter instead of a
+  * per-query broadcast anti-join. The lookup is a pointer compare
+  * (per-batch memo) + binary search per row.
   *
   * Scale bound: the broadcast is DELETED-ROW-count sized, never table
-  * sized, and [[DvIndex.maxRows]] (default 4M pairs ≈ 32 MB of longs,
-  * the same figure as the anti-join's broadcast bound) gates the
-  * path from COMMIT METADATA alone (`dvRows` sums — no vector is
-  * read to decide). Past the bound the split-union read stays in
-  * place — and `TxLog.maintain`'s 10% dv-ratio trigger purifies long
-  * before 4M rows on any real table. `spark.graft.dvIndexRead=false`
-  * restores the split-union everywhere (bit-exactness A/B hatch). */
+  * sized. `TxLog.DvBroadcastRows` (4M pairs ≈ 32 MB of longs) gates
+  * it from COMMIT METADATA alone (`dvRows` sums — no vector is read
+  * to decide); past it the scan anti-joins the vector relation
+  * instead (`dv-antijoin`), and `TxLog.maintain`'s 10% dv-ratio
+  * trigger purifies long before 4M rows on any real table. */
 private[graft] final class DvArrays(
     m: java.util.HashMap[String, Array[Long]]) extends Serializable {
   /** Sorted deleted row indexes for a scanned file path, or null. */
@@ -128,17 +119,6 @@ private[graft] case class DvDeleted(filePath: Expression,
 
 private[graft] object DvIndex {
 
-  /** Session kill-switch for the dv-on-index presentation (default
-    * on). Off → dv-bearing snapshots keep the split-union read. */
-  def enabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.dvIndexRead", "true").toBoolean
-
-  /** Max TOTAL deleted rows (summed `dvRows`, commit metadata) the
-    * index leg will broadcast — past it, fall back to the split-union
-    * anti-join read. Mirrors the anti-join's own broadcast bound. */
-  def maxRows(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.dv.indexMaxRows", "4000000").toLong
-
   /** Loaded-vector cache: one broadcast per (table dir, exact
     * file→vector assignment). Vector files are immutable once
     * written, so entries never go stale; a restricted sub-snapshot
@@ -157,10 +137,10 @@ private[graft] object DvIndex {
   /** The snapshot's deletion vectors as a broadcast of per-file
     * sorted row-index arrays, keyed by the QUALIFIED path string the
     * scan's `_metadata.file_path` carries. Pair semantics match the
-    * split-union anti-join exactly: a (file, row) pair from ANY
-    * vector relation the dv-bearing files reference deletes that row
-    * of that file — superseded vectors may hold stale pairs for files
-    * whose entry moved on; those keys are simply never scanned. */
+    * `dv-antijoin` form exactly: a (file, row) pair from ANY vector
+    * relation the dv-bearing files reference deletes that row of that
+    * file — superseded vectors may hold stale pairs for files whose
+    * entry moved on; those keys are simply never scanned. */
   def broadcastFor(spark: SparkSession, dir: String, snap: TxSnapshot,
       dvFiles: Seq[TxFile]): Broadcast[DvArrays] = {
     val key = cacheKey(dir, dvFiles)
@@ -189,9 +169,9 @@ private[graft] object DvIndex {
       dvFiles: Seq[TxFile]): Broadcast[DvArrays] = {
     val dvPaths = dvFiles.flatMap(_.dv).distinct
       .map(p => TxLog.resolveData(dir, p))
-    // deleted-row-count sized, gated by maxRows BEFORE this read —
-    // group to per-file sorted arrays on the executors, collect the
-    // compact form
+    // deleted-row-count sized, gated by DvBroadcastRows BEFORE this
+    // read — group to per-file sorted arrays on the executors,
+    // collect the compact form
     val grouped = spark.read.parquet(dvPaths: _*)
       .groupBy(col("file"))
       .agg(sort_array(collect_list(col("row_index"))).as("idxs"))

@@ -1,17 +1,18 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias,
-  AttributeReference, BoundReference, Cast, Expression, GetStructField,
-  Literal, Not, Predicate, And => CAnd}
+  AttributeReference, BoundReference, Cast, Expression, Literal,
+  NamedExpression, Predicate, And => CAnd}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project,
-  Filter => LFilter}
+  Union}
 import org.apache.spark.sql.execution.datasources.{DataSourceStrategy,
   FileFormat, FileIndex, HadoopFsRelation, LogicalRelation,
   PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -55,14 +56,14 @@ import graft.sources.TxLog.{TxFile, TxSnapshot}
   *    boundary is gone).
   *
   * Eligibility (checked by [[TxFileIndex.build]]): every live file
-  * must be free of deletion vectors and carry recorded `bytes`;
-  * a partitioned table additionally needs every partition value
-  * exactly recoverable from stats (min = max with zero nulls, or the
-  * all-null / empty-file degenerate). Ineligible snapshots keep the
-  * V1 read path — merge-on-read vectors genuinely need the
-  * anti-join subtraction plan. Column mapping is fine: the index
-  * serves PHYSICAL parquet names and [[TxFileRelation]] projects
-  * back to logical ones.
+  * must carry recorded `bytes`; a partitioned table additionally
+  * needs every partition value exactly recoverable from stats (min =
+  * max with zero nulls, or the all-null / empty-file degenerate).
+  * Ineligible snapshots keep the V1 read path. Deletion vectors do
+  * not make a snapshot ineligible: [[TxFileRelation.planFor]]
+  * subtracts them in the scan ([[TxLog.liveScans]]). Column mapping
+  * is fine: the index serves PHYSICAL parquet names and
+  * [[TxFileRelation]] projects back to logical ones.
   *
   * Immutability: the index answers for ONE snapshot (dir, version,
   * file list) — concurrent commits cannot tear a scan, and equality
@@ -225,17 +226,14 @@ private[graft] object TxFileIndex {
   }
 
   /** The file-index presentation of a snapshot, or None when the
-    * snapshot needs the V1 plan (missing byte sizes, partition values
-    * not exactly recoverable — or deletion vectors unless the caller
-    * passes `allowDv = true`, which ONLY [[TxFileRelation.planFor]]
-    * may do because it is the one that applies the vectors as a scan
-    * filter; any other caller reading through a bare dv-bearing index
-    * would silently resurrect deleted rows). */
+    * snapshot needs the V1 plan (no files, missing byte sizes,
+    * partition values not exactly recoverable). The index lists files
+    * only: a bare index over vectored files would resurrect their
+    * deleted rows, so every read goes through
+    * [[TxFileRelation.planFor]], which subtracts them. */
   def build(spark: SparkSession, dir: String,
-      snap: TxSnapshot, allowDv: Boolean = false): Option[TxFileIndex] = {
-    if (snap.files.isEmpty) return None
-    if (snap.files.exists(f =>
-        (f.dv.isDefined && !allowDv) || f.bytes.isEmpty))
+      snap: TxSnapshot): Option[TxFileIndex] = {
+    if (snap.files.isEmpty || snap.files.exists(_.bytes.isEmpty))
       return None
     val schema =
       DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
@@ -295,30 +293,22 @@ private[graft] object TxFileIndex {
   * The relation serves PHYSICAL parquet names (data columns first,
   * partition columns appended — Spark's `HadoopFsRelation` contract);
   * the projection restores logical names and declared column order,
-  * so callers see exactly the table schema. */
+  * so callers see exactly the table schema. Deletion vectors subtract
+  * in the scan through [[TxLog.liveScans]]: a row filter under its
+  * bound, an anti-joined second `TxFileIndex` leg past it. */
 private[graft] object TxFileRelation {
-
-  /** Session kill-switch: `spark.graft.fileIndexRead=false` restores
-    * the V1 read plan everywhere (escape hatch, default on). */
-  def enabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.fileIndexRead", "true").toBoolean
 
   def planFor(spark: SparkSession, dir: String,
       snap: TxSnapshot): Option[LogicalPlan] = {
-    if (!enabled(spark)) return None
-    // DV-bearing snapshots stay on the index when the session allows
-    // it and the vectors fit the broadcast bound (decided from commit
-    // metadata — dvRows sums — before any vector is read); otherwise
-    // the caller falls back to the split-union / V1 read
-    val dvFiles = snap.files.filter(_.dv.isDefined)
-    if (dvFiles.nonEmpty && (!DvIndex.enabled(spark) ||
-        dvFiles.map(_.dvRows).sum > DvIndex.maxRows(spark)))
-      return None
-    TxFileIndex.build(spark, dir, snap,
-      allowDv = dvFiles.nonEmpty).flatMap { idx =>
-      val schema =
-        DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-      val phys = TxLog.physSchema(schema, snap.mapping)
+    val schema =
+      DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val phys = TxLog.physSchema(schema, snap.mapping)
+    // vectors subtract over the parquet `_metadata` struct, which a
+    // (pathological) physical column of that name shadows — refuse
+    // the presentation rather than resurrect deleted rows
+    if (snap.files.exists(_.dv.isDefined) &&
+        phys.fieldNames.contains(FileFormat.METADATA_NAME)) return None
+    TxFileIndex.build(spark, dir, snap).map { whole =>
       // nullability RELAXES at the relation (what DataSource's own
       // resolveRelation does via asNullable): an evolved column may
       // be absent from pre-evolution files, where the reader fills
@@ -326,53 +316,29 @@ private[graft] object TxFileRelation {
       // reader refuse the file instead
       def relaxed(s: StructType): StructType =
         StructType(s.fields.map(_.copy(nullable = true)))
-      val dataFields = phys.fields.filterNot(f =>
-        idx.partitionSchema.fieldNames.contains(f.name))
-      val rel = HadoopFsRelation(idx, relaxed(idx.partitionSchema),
-        relaxed(StructType(dataFields)), None, new ParquetFileFormat,
-        Map.empty[String, String])(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-      val lr = LogicalRelation(rel)
-      // deletion vectors apply as a SCAN-LEVEL row filter over the
-      // parquet metadata columns — the one vectorized FileScan keeps
-      // every file (static + dynamic partition pruning included), and
-      // the filter fuses into its whole-stage-codegen span. See
-      // [[DvIndex]]. A (pathological) physical column named
-      // `_metadata` shadows the metadata struct → no filter hook →
-      // refuse the presentation rather than resurrect deleted rows.
-      val scanned: Option[LogicalPlan] =
-        if (dvFiles.isEmpty) Some(lr)
-        else {
-          val lrMeta = lr.withMetadataColumns()
-            .asInstanceOf[LogicalRelation]
-          lrMeta.output.find(_.name == FileFormat.METADATA_NAME)
-            .collect {
-              case m if m.dataType.isInstanceOf[StructType] &&
-                  m.dataType.asInstanceOf[StructType].fieldNames
-                    .contains("file_path") &&
-                  m.dataType.asInstanceOf[StructType].fieldNames
-                    .contains("row_index") =>
-                val st = m.dataType.asInstanceOf[StructType]
-                def fld(n: String) =
-                  GetStructField(m, st.fieldIndex(n), Some(n))
-                LFilter(Not(DvDeleted(fld("file_path"),
-                  fld("row_index"),
-                  DvIndex.broadcastFor(spark, dir, snap, dvFiles))),
-                  lrMeta)
-            }
-        }
-      scanned.map { src =>
-        val byPhys = lr.output.map(a => a.name -> a).toMap
-        val proj: Seq[org.apache.spark.sql.catalyst.expressions
-          .NamedExpression] = schema.fields.toSeq.map { fl =>
+      val dataSchema = relaxed(StructType(phys.fields.filterNot(f =>
+        whole.partitionSchema.fieldNames.contains(f.name))))
+      // a leg over a subset (the dv-antijoin split) is an index of its
+      // own: same layout, so it builds whenever the whole snapshot did
+      def scan(files: Seq[TxFile]): DataFrame = {
+        val idx =
+          if (files.size == snap.files.size) whole
+          else TxFileIndex.build(spark, dir, snap.copy(files = files)).get
+        PlanBridge.fromPlan(spark, LogicalRelation(HadoopFsRelation(idx,
+          relaxed(idx.partitionSchema), dataSchema, None,
+          new ParquetFileFormat, Map.empty[String, String])(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])))
+      }
+      val legs = TxLog.liveScans(spark, dir, snap, scan).map { leg =>
+        val p = leg.queryExecution.analyzed
+        val byPhys = p.output.map(a => a.name -> a).toMap
+        val proj: Seq[NamedExpression] = schema.fields.toSeq.map { fl =>
           val a = byPhys(snap.phys(fl.name))
           if (a.name == fl.name) a else Alias(a, fl.name)()
         }
-        // the dv form always projects — `_metadata` must not leak
-        // into the table's user-facing schema
-        if (dvFiles.isEmpty && proj == lr.output) lr
-        else Project(proj, src)
+        if (proj == p.output) p else Project(proj, p)
       }
+      if (legs.size == 1) legs.head else Union(legs)
     }
   }
 }

@@ -865,6 +865,14 @@ object TxLog {
     added
   }
 
+  /** The U+0001-joined canonical (cast-to-string) form of a row's
+    * partition values — the key [[stageBodyPartitioned]]'s per-value
+    * fan-out maps look up. Mirrors the per-file stat strings, so a
+    * map built from commit metadata binds the same rows. */
+  private def valueKeyExpr(partCols: Seq[String]): Column =
+    concat_ws("\u0001", partCols.map(c =>
+      coalesce(col(c).cast("string"), lit("\u0000null"))): _*)
+
   /** Partition-PURE staging for PARTITIONED tables (round-18): the
     * batch writes `partitionBy(partCols)` into the stage dir — every
     * staged file holds exactly ONE partition-value tuple — and the
@@ -885,14 +893,6 @@ object TxLog {
     * may repeat across partition dirs within one stage (same task
     * number, different dir), so [[writeStaged]] keys files by their
     * dir-relative path. */
-  /** The U+0001-joined canonical (cast-to-string) form of a row's
-    * partition values — the key [[stageBodyPartitioned]]'s per-value
-    * fan-out maps look up. Mirrors the per-file stat strings, so a
-    * map built from commit metadata binds the same rows. */
-  private def valueKeyExpr(partCols: Seq[String]): Column =
-    concat_ws("\u0001", partCols.map(c =>
-      coalesce(col(c).cast("string"), lit("\u0000null"))): _*)
-
   private def stageBodyPartitioned(spark: SparkSession, dir: String,
       df: DataFrame, statsCols: Seq[String], stageDir: Path,
       f: FileSystem, dtypes: Map[String, String],
@@ -4280,10 +4280,10 @@ object TxLog {
   private[graft] val TagFile = "__graft_file"
   private[graft] val TagIdx = "__graft_ridx"
 
-  /** Broadcast the deletion-vector relation into the anti-join below
-    * this many deleted rows; past it, fall back to a shuffled
-    * anti-join (and schedule a [[compact]] — a vector this large has
-    * outlived merge-on-read). */
+  /** Summed `dvRows` up to which a scan subtracts its vectors as a
+    * row filter over broadcast per-file arrays ([[DvIndex]], ≈ 32 MB
+    * of longs at the bound); past it the scan anti-joins the vector
+    * relation ([[liveScans]]). Also sizes [[stageDv]]'s file count. */
   private val DvBroadcastRows = 4L * 1000 * 1000
 
   /** Target rows per staged image file in [[applyChangesMor]] — the
@@ -4299,11 +4299,6 @@ object TxLog {
     else StructType(schema.fields.map(fl =>
       fl.copy(name = mapping.getOrElse(fl.name, fl.name))))
 
-  /** Raw tagged scan of explicit file paths: the table columns plus
-    * `(TagFile, TagIdx)` = (file name, row position in the file) from
-    * the parquet `_metadata` struct — the row's PHYSICAL identity,
-    * which is what deletion vectors address. No vector is applied.
-    * Scans under PHYSICAL column names, returns LOGICAL ones. */
   /** Percent-decode a fragment of `_metadata.file_path` back to the
     * RAW on-disk name (what directory listings — and therefore the
     * log — record). `url_decode` alone would also turn a literal '+'
@@ -4335,131 +4330,147 @@ object TxLog {
       lit(null)).otherwise(pathDecode(pathDecode(seg))).cast(dt)
   }
 
-  /** Read snapshot files under the LOGICAL schema, injecting
-    * path-encoded partition values for hive-layout entries
-    * ([[convertInPlace]] on a partitioned dataset). Nested entries
-    * (path contains a directory) read WITHOUT the partition columns
-    * and recover them from the file path; flat entries — every
-    * post-registration write — carry them as ordinary data. One scan
-    * per leg, a no-op for unpartitioned tables. */
-  private def readFilesTagged(spark: SparkSession, dir: String,
-      schema: StructType, paths: Seq[String],
-      mapping: Map[String, String] = Map.empty,
-      partCols: Seq[String] = Nil): DataFrame = {
-    require(!schema.fieldNames.contains(TagFile) &&
-      !schema.fieldNames.contains(TagIdx),
-      s"TxLog: table columns collide with reserved names $TagFile/$TagIdx")
-    val tagged = StructType(schema.fields ++ Seq(
-      StructField(TagFile, StringType, nullable = true),
-      StructField(TagIdx, LongType, nullable = true)))
-    if (paths.isEmpty)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), tagged)
-    // file identity: flat tables key by BASE name (unique — staged
-    // writes name by UUID); a path-partitioned registration may
-    // legitimately repeat base names across partition dirs, so those
-    // tables key by DIR-RELATIVE path instead (flat files' relative
-    // path IS their base name, so the two identities coincide there).
-    // The relative path is the file's LAST depth+1 segments —
-    // anchored from the right, so URI-scheme normalization
-    // differences between the driver's view of `dir` and the
-    // scanner's `_metadata.file_path` can never shift it
-    def leg(ps: Seq[String], inject: Seq[String]): DataFrame = {
-      val physS = physSchema(schema, mapping)
-      val readS = StructType(physS.fields.filterNot(f =>
-        inject.contains(f.name)))
-      val raw = spark.read.schema(readS)
-        .parquet(ps.map(p => resolveData(dir, p)): _*)
-      val withParts = inject.foldLeft(raw)((d, pp) =>
-        d.withColumn(pp, pathPartValue(pp, physS(pp).dataType)))
-      val tagExpr =
-        if (inject.isEmpty) col("_metadata.file_name")
-        else pathDecode(regexp_extract(col("_metadata.file_path"),
-          "/((?:[^/]+/){" + inject.size + "}[^/]+)$", 1))
-      withParts.select(schema.fields.map(fl =>
-        col(mapping.getOrElse(fl.name, fl.name)).as(fl.name)).toSeq ++
-        Seq(tagExpr.as(TagFile),
-          col("_metadata.row_index").as(TagIdx)): _*)
-    }
-    if (partCols.isEmpty) leg(paths, Nil)
-    else {
-      val (nested, flat) = paths.partition(_.contains('/'))
-      val legs = Seq(
-        if (nested.nonEmpty) Some(leg(nested, partCols)) else None,
-        if (flat.nonEmpty) Some(leg(flat, Nil)) else None).flatten
-      legs.reduce(_.unionByName(_))
+  /** The vector key ([[fileKey]]) of each scanned row's file, from the
+    * scan's own `_metadata`: the base name for files at the table
+    * root, the decoded dir-relative path for files `depth` partition
+    * dirs below it. The relative path is the file's LAST depth+1
+    * segments — anchored from the right, so URI-scheme normalization
+    * differences between the driver's view of `dir` and the
+    * scanner's `_metadata.file_path` can never shift it. */
+  private def fileKeyExpr(depth: Int): Column =
+    if (depth == 0) col("_metadata.file_name")
+    else pathDecode(regexp_extract(col("_metadata.file_path"),
+      "/((?:[^/]+/){" + depth + "}[^/]+)$", 1))
+
+  /** How many partition dirs an entry sits below the table root:
+    * nested (hive-layout, [[convertInPlace]]) entries of a
+    * path-partitioned table sit one per partition column, every other
+    * entry at the root. */
+  private def keyDepth(snap: TxSnapshot, f: TxFile): Int =
+    if (snap.partitionCols.isEmpty || !f.path.contains('/')) 0
+    else snap.partitionCols.size
+
+  private lazy val log =
+    org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
+
+  /** The ONE deletion-vector subtraction of a logged scan. Both scan
+    * leaves call it — [[TxFileRelation.planFor]]'s [[TxFileIndex]]
+    * relation and [[readSnapshotTagged]]'s explicit-path read — so
+    * the filter-vs-anti-join choice exists only here, keyed on the
+    * summed `dvRows` of `snap` (commit metadata: no vector is read to
+    * decide). `scan(files)` reads `files` as ONE file relation that
+    * still exposes the parquet `_metadata` struct; the result is the
+    * live legs, each still exposing it, for the caller to project
+    * and union:
+    *  - no vectors: one scan;
+    *  - at most [[DvBroadcastRows]] deleted rows (`dv-filter`): one
+    *    scan under `NOT dv_deleted(_metadata.file_path,
+    *    _metadata.row_index)` against the cached [[DvIndex]] arrays —
+    *    no join, no exchange, the filter fused into the scan's
+    *    codegen span;
+    *  - past it (`dv-antijoin`): the clean files scan join-free, and
+    *    the vectored files' scan (one per [[keyDepth]]) left-anti-
+    *    joins the vector relation on ([[fileKeyExpr]], `row_index`).
+    * Both forms apply the same pairs: a (file, row) pair from ANY
+    * vector relation the vectored files reference deletes that row
+    * of that file. One INFO line per plan names the strategy. */
+  private[sources] def liveScans(spark: SparkSession, dir: String,
+      snap: TxSnapshot, scan: Seq[TxFile] => DataFrame): Seq[DataFrame] = {
+    val (dvFiles, clean) = snap.files.partition(_.dv.isDefined)
+    if (dvFiles.isEmpty) return Seq(scan(snap.files))
+    val dvRows = dvFiles.map(_.dvRows).sum
+    val asFilter = dvRows <= DvBroadcastRows
+    log.info(s"txlog $dir@v${snap.version}: " +
+      s"${if (asFilter) "dv-filter" else "dv-antijoin"} " +
+      s"vectoredFiles=${dvFiles.size} deletedRows=$dvRows")
+    if (asFilter) {
+      val dv = DvIndex.broadcastFor(spark, dir, snap, dvFiles)
+      Seq(scan(snap.files).filter(!PlanBridge.column(DvDeleted(
+        PlanBridge.expression(col("_metadata.file_path")),
+        PlanBridge.expression(col("_metadata.row_index")), dv))))
+    } else {
+      val vectors = spark.read.parquet(dvFiles.flatMap(_.dv).distinct
+        .map(p => resolveData(dir, p)): _*)
+      val vectored = dvFiles.groupBy(keyDepth(snap, _)).toSeq
+        .sortBy(_._1).map { case (depth, fs) =>
+          val keyed = scan(fs).withColumn(TagFile, fileKeyExpr(depth))
+            .withColumn(TagIdx, col("_metadata.row_index"))
+          keyed.join(vectors, keyed(TagFile) === vectors("file") &&
+            keyed(TagIdx) === vectors("row_index"), "left_anti")
+            .drop(TagFile, TagIdx)
+        }
+      (if (clean.isEmpty) Nil else Seq(scan(clean))) ++ vectored
     }
   }
 
-  /** The union of the snapshot's referenced deletion vectors as a
-    * `(file, row_index)` relation — deleted-row-count sized, NOT
-    * table sized. */
-  private def dvRelation(spark: SparkSession, dir: String,
-      files: Seq[TxFile]): Option[DataFrame] = {
-    val dvs = files.flatMap(_.dv).distinct
-    if (dvs.isEmpty) None
-    else Some(spark.read.parquet(dvs.map(p => resolveData(dir, p)): _*))
-  }
-
-  /** Snapshot read with physical row identity: table columns +
-    * `(TagFile, TagIdx)`, deletion vectors ALREADY SUBTRACTED. Files
-    * without a vector scan clean (no join on that branch); only the
-    * dv-bearing sliver pays the anti-join, against a broadcast of the
-    * (deleted-rows-sized) vector relation. */
+  /** Snapshot read with physical row identity: the table columns
+    * under their LOGICAL names plus `(TagFile, TagIdx)` = (the file's
+    * vector key, the row's position in the file) from the parquet
+    * `_metadata` struct — what deletion vectors address — with the
+    * snapshot's vectors already subtracted ([[liveScans]]). Scans
+    * under PHYSICAL column names. Nested (hive-layout) entries read
+    * WITHOUT the partition columns and recover them from the file
+    * path; root entries — every post-registration write — carry them
+    * as ordinary data. One scan per layout. */
   private def readSnapshotTagged(spark: SparkSession, dir: String,
       snap: TxSnapshot): DataFrame = {
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val (dvFiles, clean) = snap.files.partition(_.dv.isDefined)
-    val cleanDf =
-      readFilesTagged(spark, dir, schema, clean.map(_.path), snap.mapping,
-        snap.partitionCols)
-    if (dvFiles.isEmpty) return cleanDf
-    val dvDf0 = dvRelation(spark, dir, dvFiles).get
-    val dvDf =
-      if (dvFiles.map(_.dvRows).sum <= DvBroadcastRows) broadcast(dvDf0)
-      else dvDf0
-    val scanned =
-      readFilesTagged(spark, dir, schema, dvFiles.map(_.path), snap.mapping,
-        snap.partitionCols)
-    val live = scanned.join(dvDf,
-      scanned(TagFile) === dvDf("file") &&
-        scanned(TagIdx) === dvDf("row_index"), "left_anti")
-    cleanDf.unionByName(live)
+    require(!schema.fieldNames.contains(TagFile) &&
+      !schema.fieldNames.contains(TagIdx),
+      s"TxLog: table columns collide with reserved names $TagFile/$TagIdx")
+    if (snap.files.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(schema.fields ++ Seq(
+          StructField(TagFile, StringType, nullable = true),
+          StructField(TagIdx, LongType, nullable = true))))
+    val physS = physSchema(schema, snap.mapping)
+    snap.files.groupBy(keyDepth(snap, _)).toSeq.sortBy(-_._1).flatMap {
+      case (depth, files) =>
+        val inject = if (depth == 0) Nil else snap.partitionCols
+        val readS = StructType(physS.fields.filterNot(f =>
+          inject.contains(f.name)))
+        def scan(fs: Seq[TxFile]): DataFrame = spark.read.schema(readS)
+          .parquet(fs.map(f => resolveData(dir, f.path)): _*)
+        liveScans(spark, dir, snap.copy(files = files), scan).map { live =>
+          inject.foldLeft(live)((d, pp) =>
+            d.withColumn(pp, pathPartValue(pp, physS(pp).dataType)))
+            .select(schema.fields.map(fl =>
+              col(snap.phys(fl.name)).as(fl.name)).toSeq ++
+              Seq(fileKeyExpr(depth).as(TagFile),
+                col("_metadata.row_index").as(TagIdx)): _*)
+        }
+    }.reduce(_.unionByName(_))
   }
 
+  /** [[readSnapshotTagged]] of explicit file paths, no vector applied
+    * — committed adds and removes as they sit on disk. */
+  private def readFilesTagged(spark: SparkSession, dir: String,
+      schema: StructType, paths: Seq[String],
+      mapping: Map[String, String] = Map.empty,
+      partCols: Seq[String] = Nil): DataFrame =
+    readSnapshotTagged(spark, dir, TxSnapshot(-1L, schema.json,
+      paths.map(TxFile(_, 0L)), Map.empty, mapping = mapping,
+      partitionCols = partCols))
+
   private[graft] def readSnapshot(spark: SparkSession, dir: String,
-      snap: TxSnapshot): DataFrame = {
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    // planner-visible presentation first: an eligible snapshot (no
-    // deletion vectors, recorded bytes, recoverable partition values)
-    // reads through [[TxFileIndex]] — exact sizeInBytes for static
-    // broadcast planning, stats-in-log file skipping applied to
-    // pushed filters at scan time, native (dynamic) partition
-    // pruning, vectorized parquet under whole-stage codegen. The
-    // branches below remain the fallback plan (vectors need the
-    // anti-join subtraction; legacy entries may lack bytes).
-    val viaIndex =
-      if (snap.files.isEmpty) None
-      else TxFileRelation.planFor(spark, dir, snap)
-    if (viaIndex.isDefined)
-      return org.apache.spark.sql.graft.PlanBridge.fromPlan(
-        spark, viaIndex.get)
-    if (snap.files.isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), schema)
-    else if (snap.files.forall(_.dv.isEmpty) &&
-        snap.partitionCols.isEmpty) {
-      val raw = spark.read.schema(physSchema(schema, snap.mapping))
-        .parquet(snap.files.map(a => resolveData(dir, a.path)): _*)
-      if (snap.mapping.isEmpty) raw
-      else raw.select(schema.fields.map(fl =>
-        col(snap.phys(fl.name)).as(fl.name)).toSeq: _*)
-    } else if (snap.files.forall(_.dv.isEmpty))
-      readFilesTagged(spark, dir, schema, snap.files.map(_.path),
-        snap.mapping, snap.partitionCols).drop(TagFile, TagIdx)
-    else
-      readSnapshotTagged(spark, dir, snap).drop(TagFile, TagIdx)
-  }
+      snap: TxSnapshot): DataFrame =
+    // the planner-visible presentation first: exact sizeInBytes for
+    // static broadcast planning, stats-in-log file skipping at scan
+    // time, native (dynamic) partition pruning, vectorized parquet
+    // under whole-stage codegen, vectors subtracted in the scan
+    // ([[liveScans]]). The index refuses only structurally (no files,
+    // missing bytes, unrecoverable partition values, a column
+    // shadowing `_metadata`); those snapshots read their explicit
+    // paths instead.
+    TxFileRelation.planFor(spark, dir, snap)
+      .map(PlanBridge.fromPlan(spark, _))
+      .getOrElse {
+        if (snap.files.exists(_.dv.isDefined))
+          readSnapshotTagged(spark, dir, snap).drop(TagFile, TagIdx)
+        else readAdded(spark, dir, snap.files,
+          DataType.fromJson(snap.schemaJson).asInstanceOf[StructType],
+          snap.mapping, snap.partitionCols)
+      }
 
   /** Snapshot-isolated read at `asOf` (default: head). The file list
     * and schema come from one log version — concurrent commits cannot

@@ -59,6 +59,35 @@ private[graft] object TxLogBatch {
   private[graft] val lastScan =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
 
+  /** The V1 relations' one scan body: prune files from the pinned
+    * snapshot, read through the one true read path
+    * ([[TxLog.readSnapshot]]: vectors subtract, mapping projects),
+    * re-apply the pushed intervals, project `columns`. The re-apply
+    * sits INSIDE the inner plan because the relation boundary hides
+    * the engine's post-scan filter from the inner parquet read —
+    * without it the kept files would scan whole, with it parquet
+    * row-group/page skipping applies. Safe to weaken (>=/<= supersets
+    * of strict bounds): the engine still evaluates every original
+    * filter row-exactly above. Null membership is exact per row, so
+    * those re-apply verbatim. */
+  private[sources] def scanRdd(spark: SparkSession, dir: String,
+      snap: TxLog.TxSnapshot,
+      preds: Seq[(String, Option[Any], Option[Any])],
+      nullPreds: Seq[(String, Boolean)], columns: Seq[String]): RDD[Row] = {
+    val kept = TxLog.prunedSnapshotFiles(spark, snap, preds, nullPreds)
+    lastScan.set(kept.map(_.path))
+    val df = TxLog.readSnapshot(spark, dir, snap.copy(files = kept))
+    val cond = (preds.flatMap { case (c, lo, hi) =>
+      lo.map(v => col(c) >= lit(v)).toSeq ++
+        hi.map(v => col(c) <= lit(v)).toSeq
+    } ++ nullPreds.map { case (c, wantNull) =>
+      if (wantNull) col(c).isNull else col(c).isNotNull
+    }).reduceOption(_ && _)
+    val filtered = cond.fold(df)(df.filter)
+    filtered.select(columns.map(col): _*)
+      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
+  }
+
   private[graft] def tableDir(options: Map[String, String]): String =
     options.get("path").getOrElse(throw new IllegalArgumentException(
       "txlog batch source needs a table directory: .load(<dir>) or " +
@@ -438,20 +467,17 @@ private[graft] class TxLogBatchScan(dir: String, asOf: Long,
 }
 
 /** The stats-bearing V1 presentation of a snapshot the
-  * [[TxFileIndex]] REFUSES (standing deletion vectors — the
-  * merge-on-read steady state; missing byte sizes). Why it exists:
-  * the DSv2 fallback wraps [[TxLogBatchScan]] in Spark's
-  * `V1ScanWrapper` at the LOGICAL level, and the wrapper forwards no
-  * statistics — so a DV-bearing logged dim used to present
-  * `defaultSizeInBytes` and a 100 TB fact joined against it planned a
-  * sort-merge, paying the probe side's full shuffle write before AQE
-  * could convert. [[GraftTxLogReadRule]] swaps the v2 relation for a
-  * `LogicalRelation` over THIS relation instead: `sizeInBytes` is the
-  * live files' recorded bytes scaled by each file's live-row share
-  * ((rows − dvRows)/rows — the vector hides rows the read will
-  * subtract), so static broadcast planning works through the whole
-  * merge-on-read lifecycle, not just after OPTIMIZE folds the
-  * vectors away.
+  * [[TxFileIndex]] REFUSES (missing byte sizes, partition values not
+  * recoverable from stats). Why it exists: the DSv2 fallback wraps
+  * [[TxLogBatchScan]] in Spark's `V1ScanWrapper` at the LOGICAL
+  * level, and the wrapper forwards no statistics — so such a logged
+  * dim would present `defaultSizeInBytes` and a 100 TB fact joined
+  * against it would plan a sort-merge, paying the probe side's full
+  * shuffle write before AQE could convert. [[GraftTxLogReadRule]]
+  * swaps the v2 relation for a `LogicalRelation` over THIS relation
+  * instead: `sizeInBytes` is the live files' recorded bytes scaled by
+  * each file's live-row share ((rows − dvRows)/rows — the vector
+  * hides rows the read will subtract).
   *
   * [[PrunedFilteredScan]] (not bare TableScan) keeps the other two
   * scan-time legs: pushed filters run the SAME stats-in-log file
@@ -459,8 +485,8 @@ private[graft] class TxLogBatchScan(dir: String, asOf: Long,
   * projection. Any recorded byte size missing → degrade to the
   * engine default (a too-small guess could wrongly broadcast a huge
   * table); the data path is unconditionally correct either way. */
-private[graft] class TxLogDvRelation(ctx: SQLContext, dir: String,
-    asOf: Long, snap: TxLog.TxSnapshot, tableSchema: StructType)
+private[graft] class TxLogV1Relation(ctx: SQLContext, dir: String,
+    snap: TxLog.TxSnapshot, tableSchema: StructType)
     extends BaseRelation with PrunedFilteredScan {
 
   override def sqlContext: SQLContext = ctx
@@ -477,33 +503,15 @@ private[graft] class TxLogDvRelation(ctx: SQLContext, dir: String,
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    val spark = ctx.sparkSession
     val pushed = filters.filter(TxLogBatch.prunable).toSeq
-    val preds = TxLogBatch.intervals(pushed)
-    val nullPreds = TxLogBatch.nullPreds(pushed)
-    val kept = TxLog.prunedSnapshotFiles(spark, snap, preds, nullPreds)
-    TxLogBatch.lastScan.set(kept.map(_.path))
-    val df = TxLog.readSnapshot(spark, dir, snap.copy(files = kept))
-    // re-apply the pushed intervals inside the inner plan (same
-    // rationale as TxLogBatchRelation: the relation boundary hides
-    // the engine's post-scan filter from the inner parquet read)
-    val cond = (preds.flatMap { case (c, lo, hi) =>
-      lo.map(v => col(c) >= lit(v)).toSeq ++
-        hi.map(v => col(c) <= lit(v)).toSeq
-    } ++ nullPreds.map { case (c, wantNull) =>
-      if (wantNull) col(c).isNull else col(c).isNotNull
-    }).reduceOption(_ && _)
-    val filtered = cond.fold(df)(df.filter)
-    val projected =
-      if (requiredColumns.isEmpty) filtered.select()
-      else filtered.select(requiredColumns.map(col).toSeq: _*)
-    projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
+    TxLogBatch.scanRdd(ctx.sparkSession, dir, snap,
+      TxLogBatch.intervals(pushed), TxLogBatch.nullPreds(pushed),
+      requiredColumns.toSeq)
   }
 }
 
-/** Execution leg: prune files from the pinned snapshot, read through
-  * the one true read path (vectors subtract, mapping projects),
-  * project the required columns. */
+/** Execution leg of the DSv2 scan: the pinned snapshot through
+  * [[TxLogBatch.scanRdd]]. */
 private[graft] class TxLogBatchRelation(ctx: SQLContext, dir: String,
     asOf: Long, required: StructType,
     preds: Seq[(String, Option[Any], Option[Any])],
@@ -521,27 +529,7 @@ private[graft] class TxLogBatchRelation(ctx: SQLContext, dir: String,
 
   override def buildScan(): RDD[Row] = {
     val spark = ctx.sparkSession
-    val snap = TxLog.snapshot(spark, dir, Some(asOf))
-    val kept = TxLog.prunedSnapshotFiles(spark, snap, preds, nullPreds)
-    TxLogBatch.lastScan.set(kept.map(_.path))
-    val df = TxLog.readSnapshot(spark, dir, snap.copy(files = kept))
-    // re-apply the pushed intervals INSIDE the inner plan: the V1Scan
-    // boundary hides the engine's post-scan filter from the inner
-    // parquet read, so without this the kept files would scan whole —
-    // with it, parquet row-group/page skipping applies. Safe to
-    // weaken (>=/<= supersets of strict bounds): the engine still
-    // evaluates every original filter row-exactly above. Null
-    // membership is exact per row, so those re-apply verbatim.
-    val cond = (preds.flatMap { case (c, lo, hi) =>
-      lo.map(v => col(c) >= lit(v)).toSeq ++
-        hi.map(v => col(c) <= lit(v)).toSeq
-    } ++ nullPreds.map { case (c, wantNull) =>
-      if (wantNull) col(c).isNull else col(c).isNotNull
-    }).reduceOption(_ && _)
-    val filtered = cond.fold(df)(df.filter)
-    val projected =
-      if (required.isEmpty) filtered.select()
-      else filtered.select(required.fieldNames.map(col).toSeq: _*)
-    projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
+    TxLogBatch.scanRdd(spark, dir, TxLog.snapshot(spark, dir, Some(asOf)),
+      preds, nullPreds, required.fieldNames.toSeq)
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
 import org.apache.spark.sql.catalyst.expressions.{Alias, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable,
   Filter => LFilter, LogicalPlan, MergeIntoTable, Project, UpdateTable}
@@ -30,8 +31,10 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * v2 write commands hold their target out-of-children so a
   * transform never touches it. Subquery plans are rewritten too —
   * an `IN (SELECT …)` over a logged dim becomes a join against the
-  * indexed read. Ineligible snapshots (deletion vectors, missing
-  * bytes) and disabled sessions fall through untouched. */
+  * indexed read. Snapshots with deletion vectors stay on the index
+  * (the vectors subtract in its scan, [[TxLog.liveScans]]); only
+  * snapshots it refuses structurally (missing bytes, unrecoverable
+  * partition values) get the V1 [[TxLogV1Relation]]. */
 class GraftTxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
@@ -42,7 +45,6 @@ class GraftTxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case d: DeleteFromTable => d
     case u: UpdateTable => u
     case m: MergeIntoTable => m
-    case _ if !TxFileRelation.enabled(spark) => plan
     case _ =>
       plan.transformUpWithSubqueries {
         case r: DataSourceV2Relation => rewrite(r).getOrElse(r)
@@ -57,63 +59,42 @@ class GraftTxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
         val snap = t.resolvedSnap.filter(_.version == t.asOf)
           .getOrElse(TxLog.snapshot(spark, t.dir, Some(t.asOf)))
         // attach the table identity + LOG-DERIVED statistics to every
-        // relation. The identity keeps `spark.catalog.refreshTable`
-        // working (it does `lr.catalogTable.get` on catalog-resolved
-        // plans); the stats REPLACE any stale ANALYZE'd catalog copy
-        // with exact commit-metadata values (rowCount + per-column
-        // hulls), which is what `spark.sql.cbo.enabled` join
-        // reordering reads — see [[TxLogStats]]. The TxFileIndex
-        // relation serves PHYSICAL names, the DV relation logical.
-        def indexPlan(sub: TxLog.TxSnapshot): Option[LogicalPlan] =
-          TxFileRelation.planFor(spark, t.dir, sub).map(_.transform {
-            case lr: LogicalRelation =>
-              lr.copy(catalogTable = Some(t.v1Table.copy(
-                stats = TxLogStats.catalogStats(sub, physNames = true))))
-          })
-        def dvPlan(sub: TxLog.TxSnapshot): LogicalPlan = {
-          val schema = org.apache.spark.sql.types.DataType
-            .fromJson(sub.schemaJson)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-          LogicalRelation(new TxLogDvRelation(
-            spark.sqlContext, t.dir, t.asOf, sub, schema)).transform {
-            case lr: LogicalRelation =>
-              lr.copy(catalogTable = Some(t.v1Table.copy(
-                stats = TxLogStats.catalogStats(sub, physNames = false))))
-          }
-        }
-        // snapshots the index REFUSES get the stats-bearing V1
-        // relation instead of the stat-less V1ScanWrapper — and when
-        // the refusal is DELETION VECTORS specifically, the refusal
-        // is kept to the dv-bearing SLICE: clean files stay on the
-        // TxFileIndex presentation (vectorized scan, static+dynamic
-        // partition pruning, plan-time restriction) and only the
-        // vectored files ride the row-scan leg, unioned. A
-        // merge-on-read DELETE touching one partition of a 100 TB
-        // fact therefore costs the indexed presentation of THAT
-        // slice, not the whole table's (see [[TxLogDvRelation]]).
-        val inner0: Option[LogicalPlan] = indexPlan(snap).orElse {
-          if (snap.files.isEmpty) None
-          else {
-            val (dvFiles, cleanFiles) =
-              snap.files.partition(_.dv.isDefined)
-            val split =
-              if (dvFiles.isEmpty || cleanFiles.isEmpty) None
-              else indexPlan(snap.copy(files = cleanFiles)).map { cp =>
-                // Union binds by POSITION: project the dv leg into
-                // the index leg's exact output order (both serve the
-                // declared logical schema, but declared order is the
-                // contract, not a coincidence to rely on)
-                val dp0 = dvPlan(snap.copy(files = dvFiles))
-                val byName = dp0.output.map(a => a.name -> a).toMap
-                val dp = Project(
-                  cp.output.map(o => byName(o.name)), dp0)
-                org.apache.spark.sql.catalyst.plans.logical
-                  .Union(Seq(cp, dp))
+        // table relation. The identity keeps `spark.catalog
+        // .refreshTable` working (it does `lr.catalogTable.get` on
+        // catalog-resolved plans); the stats REPLACE any stale
+        // ANALYZE'd catalog copy with exact commit-metadata values
+        // (rowCount + per-column hulls), which is what
+        // `spark.sql.cbo.enabled` join reordering reads — see
+        // [[TxLogStats]]. Each TxFileIndex leg carries its own files'
+        // stats under PHYSICAL names; the V1 relation serves logical
+        // ones. A vector relation in the plan is not the table.
+        def withTable(lr: LogicalRelation,
+            stats: Option[CatalogStatistics]): LogicalRelation =
+          lr.copy(catalogTable = Some(t.v1Table.copy(stats = stats)))
+        val inner: Option[LogicalPlan] =
+          TxFileRelation.planFor(spark, t.dir, snap).map(_.transform {
+            case lr: LogicalRelation => lr.relation match {
+              case h: HadoopFsRelation => h.location match {
+                case idx: TxFileIndex => withTable(lr, idx.catalogStats)
+                case _ => lr
               }
-            split.orElse(Some(dvPlan(snap)))
+              case _ => lr
+            }
+          }).orElse {
+            // snapshots the index REFUSES (structurally) get the
+            // stats-bearing V1 relation instead of the stat-less
+            // V1ScanWrapper
+            if (snap.files.isEmpty) None
+            else {
+              val schema = org.apache.spark.sql.types.DataType
+                .fromJson(snap.schemaJson)
+                .asInstanceOf[org.apache.spark.sql.types.StructType]
+              Some(withTable(LogicalRelation(new TxLogV1Relation(
+                spark.sqlContext, t.dir, snap, schema)),
+                TxLogStats.catalogStats(snap, physNames = false)))
+            }
           }
-        }
-        inner0.map { inner =>
+        inner.map { inner =>
           val byName = inner.output.map(a => a.name -> a).toMap
           // preserve the analyzed relation's attribute identities:
           // everything above references the v2 output's ExprIds

@@ -141,7 +141,7 @@ private[graft] object TxLogStats {
   /** The snapshot's catalog statistics. `physNames = true` keys the
     * column stats by PHYSICAL parquet name (what the [[TxFileIndex]]
     * relation's output carries); `false` keys by logical name (the
-    * [[TxLogDvRelation]] presentation). Returns None when any live
+    * [[TxLogV1Relation]] presentation). Returns None when any live
     * file misses its byte size — a too-small sizeInBytes could
     * wrongly broadcast a huge table, so absence reports nothing. */
   def catalogStats(snap: TxSnapshot,
@@ -166,7 +166,7 @@ private[graft] object TxLogStats {
   }
 
   /** The ONE DV-scaled live-byte formula — shared by [[catalogStats]]
-    * and `TxLogDvRelation.sizeInBytes` so the two presentations can
+    * and `TxLogV1Relation.sizeInBytes` so the two presentations can
     * never silently diverge on a future tweak. Each file's recorded
     * bytes are scaled by its live-row share ((rows − dvRows)/rows —
     * rows a vector hides never reach the plan), clamped to ≥1 per

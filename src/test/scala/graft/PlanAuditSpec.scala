@@ -457,7 +457,7 @@ class PlanAuditSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("deletion vectors: dv-free reads plan join-free; dv sliver anti-joins broadcast") {
+  test("deletion vectors: reads and DML probes subtract them with a join-free filter") {
     import org.apache.spark.sql.functions.col
     val s2 = spark
     import s2.implicits._
@@ -481,19 +481,35 @@ class PlanAuditSpec extends SparkSpec {
     assert(count(p, "Exchange") == 0, p)
     assert(count(p, "FileScan parquet") == 1, p)
     assert(p.contains("dvdeleted"), p)
-    // the split-union FALLBACK (sessions without the dv-index leg):
-    // the vector subtracts via ONE broadcast anti-join and only the
-    // dv-bearing sliver pays it — clean files scan join-free beside
-    spark.conf.set("spark.graft.dvIndexRead", "false")
-    try {
-      val pf = graft.sources.TxLog.read(spark, dir)
-        .queryExecution.executedPlan.toString
-      assert(count(pf, "LeftAnti") == 1, pf)
-      assert(count(pf, "BroadcastExchange") == 1, pf)
-      assert(count(pf, "Exchange hashpartitioning") == 0, pf)
-      // 3 scans: clean files, dv-bearing file, the vector relation
-      assert(count(pf, "FileScan parquet") == 3, pf)
-    } finally spark.conf.unset("spark.graft.dvIndexRead")
+    // a DML probe on a table that already has vectors reads through
+    // the explicit-path tagged scan: the same scan filter, no
+    // anti-join in ANY plan the delete runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = {
+        plans.add(qe.executedPlan.toString)
+        ()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (_, logged) = try infoLines("graft.sources.TxLog") {
+      graft.sources.TxLog.deleteMor(spark, dir, col("id") === 6)
+      org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(
+        spark.sparkContext, 30000)
+    } finally spark.listenerManager.unregister(listener)
+    // the path decision is visible in the log
+    assert(logged.exists(_.contains("dv-filter vectoredFiles=1")), logged)
+    val ran = plans.toArray.map(_.toString).toSeq
+    assert(ran.nonEmpty, "listener saw no plan")
+    assert(ran.forall(count(_, "LeftAnti") == 0),
+      ran.filter(_.contains("LeftAnti")).mkString("\n"))
+    assert(ran.exists(_.contains("dvdeleted")), ran.mkString("\n"))
+    assert(graft.sources.TxLog.read(spark, dir).count() == 398)
   }
 
   test("3-way logged join reorders under CBO from log-derived stats") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{TxFileIndex, TxLog, TxLogBatch}
 
-/** Round-19 pins: statistics on the DV-bearing (V1-fallback) read
+/** Round-19 pins: statistics on the DV-bearing read
   * path, purify compaction (OPTIMIZE that keeps the partitioned
   * planner presentation), mapping-aware partition columns (rename
   * survives), and the round's advisory fixes (COPY INTO shrink
@@ -75,81 +75,12 @@ class Round19Spec extends SparkSpec {
       .queryExecution.optimizedPlan.stats.sizeInBytes
     assert(half < full,
       s"DV-adjusted size ($half) should shrink below pre-DV ($full)")
-    // rowCount flows under CBO: the clean leg's index presentation
-    // and the dv leg's relation each report exact counts, and the
-    // Union sums them (cbo.enabled picks the visitor that propagates
-    // rowCount through Union; planStats alone only exposes leaves)
+    // rowCount flows under CBO: the index presentation reports the
+    // exact live count (planStats alone only exposes leaves)
     withConf("spark.sql.cbo.enabled" -> "true") {
       val rc = spark.read.format("txlog").load(dir)
         .queryExecution.optimizedPlan.stats.rowCount
       assert(rc.contains(BigInt(500)), s"exact rowCount lost: $rc")
-    }
-  }
-
-  test("DV on one partition: clean files keep the indexed presentation (split union)") {
-    // since round 20 the DEFAULT dv read stays on the index (one
-    // FileScan, Round20Spec); this pins the retained FALLBACK —
-    // sessions without the dv-index leg (or past its broadcast
-    // bound) still get the split-union shape, not a full V1 demotion
-    withConf("spark.graft.dvIndexRead" -> "false") {
-    val s = spark
-    import s.implicits._
-    val dir = tmp("r19split").toString + "/t"
-    (0 until 300).map(i => (i.toLong, i.toLong * 10,
-      Seq("en", "fr", "de")(i % 3))).toDF("k", "v", "lang")
-      .write.partitionBy("lang").parquet(dir)
-    TxLog.convertInPlace(s, dir, statsCols = Seq("k"))
-    // MoR delete confined to ONE partition: only its file grows a
-    // vector; the other partitions' files stay clean
-    TxLog.deleteMor(s, dir, col("lang") === "fr" && col("k") % 2 === 0L)
-    val snap = TxLog.snapshot(s, dir)
-    assert(snap.files.count(_.dv.isDefined) < snap.files.size,
-      "test premise: some files must stay clean")
-    val t = s.read.format("txlog").load(dir)
-    // correct MoR result through the split plan
-    assert(t.count() == 250)
-    assert(t.filter(col("lang") === "fr").count() == 50)
-    assert(t.filter(col("lang") === "en").count() == 100)
-    // the plan is a UNION: clean files on the vectorized FileScan
-    // (index leg), only the dv slice on the row-scan leg
-    val p = t.queryExecution.executedPlan.toString
-    assert(p.contains("FileScan parquet"),
-      s"clean files lost the indexed presentation:\n$p")
-    assert(p.contains("TxLogDvRelation"),
-      s"dv slice missing its row-scan leg:\n$p")
-    // statistics stay exact through the union → a mixed dim still
-    // broadcasts statically
-    withConf("spark.sql.adaptive.enabled" -> "false") {
-      val fact = payload(5000).select(col("k"), col("v").as("fv"))
-      val j = s.read.format("txlog").load(dir)
-        .select("k").join(fact, "k").agg(sum("fv"))
-      val jp = j.queryExecution.executedPlan.toString
-      assert(jp.contains("BroadcastHashJoin") &&
-        !jp.contains("SortMergeJoin"),
-        s"mixed dv/clean dim did not broadcast statically:\n$jp")
-    }
-    // parity with the V1 read path
-    val v1 = withConf("spark.graft.fileIndexRead" -> "false") {
-      s.read.format("txlog").load(dir).orderBy("k")
-        .collect().map(_.toString).toSeq
-    }
-    assert(t.orderBy("k").collect().map(_.toString).toSeq == v1,
-      "split union read diverged from the V1 read")
-    // the clean leg keeps native DPP: a selective file-backed dim
-    // filter runtime-prunes the indexed slice's partitions
-    val dimDir = tmp("r19splitdim").toString + "/dim"
-    TxLog.commitOverwrite(s, dimDir,
-      Seq(("en", 1), ("de", 2), ("xx", 3)).toDF("lang", "keep"),
-      statsCols = Seq("keep"))
-    val dpp = s.read.format("txlog").load(dir)
-      .join(s.read.format("txlog").load(dimDir)
-        .filter(col("keep") === 1), "lang")
-      .agg(sum("v"))
-    assert(dpp.queryExecution.executedPlan.toString.toLowerCase
-      .contains("dynamicpruning"),
-      "split union lost DPP on the clean leg")
-    assert(dpp.collect().head.getLong(0) ==
-      (0 until 300).filter(_ % 3 == 0).map(_.toLong * 10).sum)
     }
   }
 

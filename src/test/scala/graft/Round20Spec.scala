@@ -124,10 +124,10 @@ class Round20Spec extends SparkSpec {
       snap.files.exists(_.dv.isEmpty), "test premise: mixed dv/clean")
     val t = s.read.format("txlog").load(dir)
     // ONE leg: the whole table on the vectorized FileScan, the
-    // vector applied as a scan filter — no TxLogDvRelation, no Union
+    // vector applied as a scan filter — no TxLogV1Relation, no Union
     val p = t.queryExecution.executedPlan.toString
     assert(p.contains("FileScan parquet"), s"lost the FileScan:\n$p")
-    assert(!p.contains("TxLogDvRelation") && !p.contains("Union"),
+    assert(!p.contains("TxLogV1Relation") && !p.contains("Union"),
       s"dv read still splits:\n$p")
     // the `*(n)` prefixes are WholeStageCodegen spans — the dv filter
     // must sit INSIDE one, fused with the scan's ColumnarToRow
@@ -142,18 +142,13 @@ class Round20Spec extends SparkSpec {
     val plannedFr = TxLogBatch.lastScan.get()
     assert(plannedFr.nonEmpty && plannedFr.forall(_.contains("lang=fr")),
       s"partition pruning lost on the dv presentation: $plannedFr")
-    // bit-identical to BOTH fallbacks
-    val viaIndex = t.orderBy("k").collect().map(_.toString).toSeq
-    val viaSplit = withConf("spark.graft.dvIndexRead" -> "false") {
-      s.read.format("txlog").load(dir).orderBy("k")
-        .collect().map(_.toString).toSeq
-    }
-    val viaV1 = withConf("spark.graft.fileIndexRead" -> "false") {
-      s.read.format("txlog").load(dir).orderBy("k")
-        .collect().map(_.toString).toSeq
-    }
-    assert(viaIndex == viaSplit, "dv-index read diverged from split-union")
-    assert(viaIndex == viaV1, "dv-index read diverged from the V1 read")
+    // exactly the written rows minus the deleted ones
+    val got = t.select("k", "v", "lang").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    val expected = (0 until 300)
+      .filterNot(i => i % 3 == 1 && i % 2 == 0)
+      .map(i => (i.toLong, i.toLong * 10, Seq("en", "fr", "de")(i % 3)))
+    assert(got == expected, "dv-index read diverged from the model")
     // a dv-bearing dim still broadcasts STATICALLY (exact live bytes)
     withConf("spark.sql.adaptive.enabled" -> "false") {
       val fact = (0 until 5000).map(i => (i.toLong, i.toLong))
@@ -184,6 +179,13 @@ class Round20Spec extends SparkSpec {
     assert(dpp.collect().head.getLong(0) ==
       (0 until 300).filter(i => i % 3 == 1 && i % 2 == 1)
         .map(_.toLong * 10).sum)
+    // and DPP onto a CLEAN partition of the same scan
+    val dppEn = s.read.format("txlog").load(dir)
+      .join(s.read.format("txlog").load(dimDir)
+        .filter(col("keep") === 2), "lang")
+      .agg(sum("v"))
+    assert(dppEn.collect().head.getLong(0) ==
+      (0 until 300).filter(_ % 3 == 2).map(_.toLong * 10).sum)
   }
 
   test("dv-index read survives vector accumulation and respects its bound") {
@@ -198,20 +200,15 @@ class Round20Spec extends SparkSpec {
     TxLog.deleteMor(s, dir, col("lang") === "en" && col("k") < 30L)
     val t = s.read.format("txlog").load(dir)
     val p = t.queryExecution.executedPlan.toString
-    assert(!p.contains("TxLogDvRelation"),
-      s"accumulated vectors fell off the index leg:\n$p")
-    val expected = 300 - (0 until 30).count(_ % 3 == 1) -
-      (0 until 30).count(_ % 3 == 0)
-    assert(t.count() == expected)
-    // past the broadcast bound the split-union fallback takes over —
-    // same results, two legs
-    withConf("spark.graft.dv.indexMaxRows" -> "1") {
-      val tb = s.read.format("txlog").load(dir)
-      assert(tb.queryExecution.executedPlan.toString
-        .contains("TxLogDvRelation"),
-        "over-bound dv read must fall back to the split-union")
-      assert(tb.count() == expected)
-    }
+    // under the bound the vectors stay a scan filter: no anti-join
+    // (the past-bound anti-join leg is pinned in TxLogSpec)
+    assert(p.contains("dvdeleted") && !p.contains("LeftAnti") &&
+      !p.contains("TxLogV1Relation"),
+      s"accumulated vectors fell off the filtered index scan:\n$p")
+    val expected = (0 until 300).filterNot(i =>
+      i < 30 && (i % 3 == 1 || i % 3 == 0)).map(_.toLong)
+    assert(t.select("k").orderBy("k").collect().map(_.getLong(0)).toSeq ==
+      expected)
   }
 
   test("dv-index read keys files correctly under hive-escaped partition values") {
@@ -229,18 +226,27 @@ class Round20Spec extends SparkSpec {
     assert(TxLog.snapshot(s, dir).files.exists(_.dv.isDefined))
     val t = s.read.format("txlog").load(dir)
     assert(!t.queryExecution.executedPlan.toString
-      .contains("TxLogDvRelation"),
+      .contains("TxLogV1Relation"),
       "escaped-partition dv read fell off the index leg")
     assert(t.count() == 80)
     assert(t.filter(col("lang") === "00:00").count() == 40)
     assert(t.filter(col("lang") === "50%").count() == 40)
-    // parity with the V1 read
-    val v1 = withConf("spark.graft.fileIndexRead" -> "false") {
-      s.read.format("txlog").load(dir).orderBy("k")
-        .collect().map(_.toString).toSeq
-    }
-    assert(t.orderBy("k").collect().map(_.toString).toSeq == v1,
-      "escaped-partition dv-index read diverged from the V1 read")
+    def model(deleted: Int): Seq[(Long, String)] =
+      (deleted until 100).map(i =>
+        (i.toLong, if (i % 2 == 0) "00:00" else "50%"))
+    def rows(): Seq[(Long, String)] =
+      s.read.format("txlog").load(dir).select("k", "lang").orderBy("k")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rows() == model(20),
+      "escaped-partition dv-index read diverged from the model")
+    // the DML probe reads through the explicit-path tagged scan: an
+    // OVERLAPPING delete must match only rows still live there — if
+    // that scan mis-keyed its vectors, k < 20 would re-match and the
+    // summed dvRows would exceed the distinct deleted rows
+    TxLog.deleteMor(s, dir, col("k") < 30L)
+    assert(TxLog.snapshot(s, dir).files.map(_.dvRows).sum == 30L,
+      "tagged scan re-deleted already-deleted rows (vector key miss)")
+    assert(rows() == model(30))
   }
 
   // ---- byte-based purify sizing --------------------------------------
@@ -369,15 +375,17 @@ class Round20Spec extends SparkSpec {
       s"zordered purify lost stats pruning: ${planned.size}/${en.size}")
   }
 
-  test("dv parity fuzz: accumulated random MoR deletes read identical on all three paths") {
+  test("dv fuzz: accumulated random MoR deletes read exactly the model's live rows") {
     val s = spark
     import s.implicits._
     val dir = tmp("r20dvfuzz").toString + "/t"
-    (0 until 2000).map(i => (i.toLong, i.toLong * 3,
-      Seq("en", "fr", "de", "pt")(i % 4))).toDF("k", "v", "lang")
+    def lang(i: Int): String = Seq("en", "fr", "de", "pt")(i % 4)
+    (0 until 2000).map(i => (i.toLong, i.toLong * 3, lang(i)))
+      .toDF("k", "v", "lang")
       .write.partitionBy("lang").parquet(dir)
     TxLog.convertInPlace(s, dir, statsCols = Seq("k"))
     val rnd = new scala.util.Random(20)
+    var live = (0 until 2000).toSet
     (1 to 4).foreach { round =>
       val m = 2 + rnd.nextInt(7)
       val r = rnd.nextInt(m)
@@ -385,29 +393,24 @@ class Round20Spec extends SparkSpec {
         1 + rnd.nextInt(3))
       TxLog.deleteMor(s, dir,
         col("k") % m === r.toLong && col("lang").isin(langs: _*))
-      def readAll(confs: (String, String)*): Seq[String] =
-        withConf(confs: _*) {
-          s.read.format("txlog").load(dir).orderBy("k")
-            .collect().map(_.toString).toSeq
-        }
-      val idx = readAll()
-      val split = readAll("spark.graft.dvIndexRead" -> "false")
-      val v1 = readAll("spark.graft.fileIndexRead" -> "false")
-      assert(idx == split, s"round $round: dv-index != split-union")
-      assert(idx == v1, s"round $round: dv-index != V1")
+      live = live.filterNot(i => i % m == r && langs.contains(lang(i)))
+      val got = s.read.format("txlog").load(dir).select("k", "v", "lang")
+        .orderBy("k").collect()
+        .map(row => (row.getLong(0), row.getLong(1), row.getString(2)))
+        .toSeq
+      val expected = live.toSeq.sorted
+        .map(i => (i.toLong, i.toLong * 3, lang(i)))
+      assert(got == expected, s"round $round: dv read != model")
+      // the summed vector sizes count each deleted row once
+      assert(TxLog.snapshot(s, dir).files.map(_.dvRows).sum ==
+        2000 - live.size, s"round $round: dvRows double-counted")
       // and a filtered aggregate agrees too (exercises pruning +
       // the filter interplay)
-      val a = withConf() {
-        s.read.format("txlog").load(dir)
-          .filter(col("lang").isin("en", "fr")).agg(sum("v"))
-          .collect().head.getLong(0)
-      }
-      val b = withConf("spark.graft.fileIndexRead" -> "false") {
-        s.read.format("txlog").load(dir)
-          .filter(col("lang").isin("en", "fr")).agg(sum("v"))
-          .collect().head.getLong(0)
-      }
-      assert(a == b, s"round $round: filtered aggregate diverged")
+      val a = s.read.format("txlog").load(dir)
+        .filter(col("lang").isin("en", "fr")).agg(sum("v"))
+        .collect().head.getLong(0)
+      assert(a == live.toSeq.filter(i => Set("en", "fr")(lang(i)))
+        .map(_.toLong * 3).sum, s"round $round: filtered aggregate diverged")
     }
   }
 
@@ -428,7 +431,7 @@ class Round20Spec extends SparkSpec {
     TxLog.deleteMor(s, dir, col("locale") === "en" && col("k") < 30L)
     val t = s.read.format("txlog").load(dir)
     assert(!t.queryExecution.executedPlan.toString
-      .contains("TxLogDvRelation"),
+      .contains("TxLogV1Relation"),
       "dv+mapping read fell off the index leg")
     assert(t.columns.toSeq == Seq("k", "value", "locale"))
     val delFr = (0 until 60).count(_ % 3 == 1)

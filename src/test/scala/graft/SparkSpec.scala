@@ -24,4 +24,34 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
+
+  /** `body`'s result and the messages the named logger logs at INFO
+    * or above while it runs (the session itself logs at WARN). */
+  def infoLines[T](logger: String)(body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("infoLines", null, null, true,
+        Array.empty[Property]) {
+      override def append(e: LogEvent): Unit = {
+        lines.add(e.getMessage.getFormattedMessage)
+        ()
+      }
+    }
+    app.start()
+    val lg = LogManager.getLogger(logger).asInstanceOf[Logger]
+    val prev = lg.getLevel
+    lg.addAppender(app)
+    lg.setLevel(Level.INFO)
+    try {
+      val r = body
+      (r, lines.toArray.map(_.toString).toSeq)
+    } finally {
+      lg.removeAppender(app)
+      lg.setLevel(prev)
+      app.stop()
+    }
+  }
 }

@@ -1365,6 +1365,55 @@ class TxLogSpec extends SparkSpec {
     assert(idSet(TxLog.read(spark, dir2)) == Set(2L, 3L))
   }
 
+  test("deleteMor past the vector filter bound: reads anti-join a second TxFileIndex leg") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import graft.sources.TxFileIndex
+    val s = spark
+    val dir = tmp("dvbound").toString + "/t"
+    // partition a is ONE file holding more rows than the 4M-row
+    // filter bound (so a DML probe of that file is past it too),
+    // partition b stays clean
+    val aRows = 4100000L
+    s.range(aRows).select(col("id").as("k"), lit("a").as("p"))
+      .unionByName(s.range(aRows, aRows + 1000L)
+        .select(col("id").as("k"), lit("b").as("p")))
+      .repartition(1).write.partitionBy("p").parquet(dir)
+    TxLog.convertInPlace(s, dir, statsCols = Seq("k"))
+    TxLog.deleteMor(s, dir, col("k") < 4050000L)
+    val snap = TxLog.snapshot(s, dir)
+    assert(snap.files.map(_.dvRows).sum == 4050000L)
+    assert(snap.files.filter(_.dv.isDefined).forall(_.path.startsWith("p=a/")))
+    val (t, logged) = infoLines("graft.sources.TxLog") {
+      s.read.format("txlog").load(dir)
+    }
+    assert(logged.exists(_.contains(
+      "dv-antijoin vectoredFiles=1 deletedRows=4050000")), logged)
+    val p = t.queryExecution.executedPlan.toString
+    // both table legs are TxFileIndex FileScans; only the vectored
+    // one anti-joins the vector relation
+    assert("LeftAnti".r.findAllIn(p).size == 1, p)
+    assert("TxFileIndex".r.findAllIn(p).size == 2, p)
+    assert(!p.contains("RowDataSourceScan") &&
+      !p.contains("TxLogV1Relation") && !p.contains("dvdeleted"), p)
+    assert(t.count() == 51000L)
+    assert(t.filter(col("p") === "a").count() == 50000L)
+    // a filter on the clean partition prunes every leg to its files
+    val qb = t.filter(col("p") === "b")
+    assert(qb.count() == 1000L)
+    val listed = qb.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec
+          if f.relation.location.isInstanceOf[TxFileIndex] =>
+        f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
+          .flatMap(_.files.map(_.getPath.toString))
+    }.flatten
+    assert(listed.nonEmpty && listed.forall(_.contains("/p=b/")), listed)
+    // an overlapping delete matches only rows the anti-joined scan
+    // still serves: the summed vectors grow by the new rows alone
+    TxLog.deleteMor(s, dir, col("k") >= 4040000L && col("k") < 4060000L)
+    assert(TxLog.snapshot(s, dir).files.map(_.dvRows).sum == 4060000L)
+    assert(s.read.format("txlog").load(dir).count() == 41000L)
+  }
+
   test("updateMor: old positions vectored, images appended, one commit") {
     val s = spark
     import s.implicits._

@@ -260,7 +260,7 @@ ROWS = [
      "restriction) | sources/TxLog.scala", "api"),
     # round 19
     (239, "Round19Spec (DV-bearing reads: static broadcast + exact "
-     "rows) | sources/TxLogBatch.scala (TxLogDvRelation)", "api"),
+     "rows) | sources/TxLogBatch.scala (TxLogV1Relation)", "api"),
     (240, "Round19Spec (purify compaction; SQL OPTIMIZE default + "
      "FLATTEN) | sources/TxLog.scala (compact purify)", "api"),
     (241, "Round19Spec (mapping-aware partition columns: rename keeps "
