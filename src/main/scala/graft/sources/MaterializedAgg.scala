@@ -347,15 +347,8 @@ object MaterializedAgg {
     val env = TxLog.described(spark, "mv-envelope") {
       touched.agg(envAggs.head, envAggs.tail: _*).head()
     }
-    def bounds(lo: String, hi: String): Seq[(String, Any, Any)] =
-      keys.flatMap { k =>
-        (Option(env.getAs[Any](s"${lo}$k")), Option(env.getAs[Any](s"${hi}$k"))) match {
-          case (Some(l), Some(h)) => Some((k, l, h))
-          case _ => None
-        }
-      }
-    val touchedBounds = bounds("_lo_", "_hi_")
-    val retractBounds = bounds("_rlo_", "_rhi_")
+    val touchedBounds = TxLog.envelopeIntervals(env, keys)
+    val retractBounds = TxLog.envelopeIntervals(env, keys, "_rlo_", "_rhi_")
     // with `others`, every touched key must recompute (arbitrary
     // aggregates don't fold); the recompute scan is then bounded by
     // the full touched envelope instead of the retracted one

@@ -327,13 +327,7 @@ object Scd2 {
         val env = TxLog.described(spark, "scd2-envelope") {
           firsts.agg(envAggs.head, envAggs.tail: _*).head()
         }
-        val bounds = keys.flatMap { k =>
-          (Option(env.getAs[Any](s"_lo_$k")),
-            Option(env.getAs[Any](s"_hi_$k"))) match {
-            case (Some(l), Some(h)) => Some((k, l, h))
-            case _ => None
-          }
-        }
+        val bounds = TxLog.envelopeIntervals(env, keys)
         // the touched keys' history sliver: consumed by the stale
         // check and the closure batch — touched-key-sized
         val hist = TxLog.checkpointed(

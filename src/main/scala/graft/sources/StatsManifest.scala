@@ -28,8 +28,10 @@ import org.apache.spark.sql.types._
   * file out), the same cost class as Delta's write-time stats. Min/max
   * are stored as canonical strings + the column's dtype; pruning
   * parses them back with the dtype's own ordering (numerics as
-  * BigDecimal, date/timestamp/string lexical — Spark's cast-to-string
-  * forms are order-preserving for these types).
+  * BigDecimal, date/timestamp/string by UTF-8 bytes — Spark's
+  * cast-to-string forms are order-preserving for these types, except
+  * timestamps across a daylight-saving fall-back, whose repeated local
+  * hour renders two instants alike).
   *
   * Safety: pruning is CONSERVATIVE — a data file missing from the
   * manifest (e.g. appended after the last [[write]]) is always kept, a
@@ -160,9 +162,6 @@ object StatsManifest {
     out.result()
   }
 
-  /** True when a [min_s, max_s] file range can intersect [lo, hi] under
-    * the column's dtype ordering; null bounds keep the file. Shared
-    * with [[TxLog.readPruned]] (stats-in-log skipping). */
   /** Compare two canonical cast-to-string stat values under the
     * column dtype's ordering. Shared by intersection (pruning) and
     * containment ([[TxLog.countWhere]]'s metadata-only counting). */
@@ -186,28 +185,50 @@ object StatsManifest {
       if (ra != 0 || rb != 0) Integer.compare(ra, rb)
       else BigDecimal(a).compare(BigDecimal(b))
     }
-    else a.compareTo(b) // string/date/timestamp cast-to-string forms
+    // string/date/timestamp cast-to-string forms, in Spark's own string
+    // order (UTF-8 bytes): UTF-16 `String.compareTo` sorts an astral
+    // character (a surrogate pair) below U+E000-U+FFFF and would prune
+    // files holding matches
+    else org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
   }
 
+  /** True when a [min_s, max_s] file range can intersect [lo, hi] under
+    * the column's dtype ordering; null bounds keep the file. Shared
+    * with [[TxLog.countWhere]]'s exclusion judge. */
   private[sources] def intersects(dtype: String, minS: String, maxS: String,
       lo: String, hi: String): Boolean = {
     if (minS == null || maxS == null) return true
     !(cmpStat(dtype, maxS, lo) < 0 || cmpStat(dtype, minS, hi) > 0)
   }
 
-  /** Canonicalize probe bounds through the SAME cast the stats took
-    * (a one-row local job — constant-folded, no scan). Shared by both
-    * pruning paths (this manifest and [[TxLog.readPruned]]) so bound
-    * handling can never diverge between them. */
+  /** Canonicalize one probe bound through the SAME cast chain the stats
+    * took, `Cast(Cast(Literal(v), dtype), StringType)` in the session
+    * time zone, evaluated ON THE DRIVER against the empty row — no
+    * Spark job. None when `v` does not cast to `dtype` (a null result
+    * or a refused cast): such a bound constrains nothing. Shared by
+    * every stats pruner (this manifest, [[TxLog.prunedSnapshotFiles]],
+    * [[TxLog.countWhere]]) so bound handling can never diverge. */
+  private[sources] def canonicalBound(spark: SparkSession, dtype: String,
+      v: Any): Option[String] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    scala.util.Try(Cast(Cast(Literal(v), DataType.fromDDL(dtype), tz),
+      StringType, tz).eval(InternalRow.empty)).toOption
+      .flatMap(Option(_)).map(_.toString)
+  }
+
+  /** Both bounds of an interval through [[canonicalBound]], refusing
+    * a bound that does not cast (callers that must judge containment
+    * cannot treat it as unbounded). */
   private[sources] def canonicalBounds(spark: SparkSession, dtype: String,
       lo: Any, hi: Any): (String, String) = {
-    val bounds = spark.range(1)
-      .select(lit(lo).cast(dtype).cast("string"),
-        lit(hi).cast(dtype).cast("string")).head()
-    val (loS, hiS) = (bounds.getString(0), bounds.getString(1))
-    require(loS != null && hiS != null,
+    val (loS, hiS) =
+      (canonicalBound(spark, dtype, lo), canonicalBound(spark, dtype, hi))
+    require(loS.isDefined && hiS.isDefined,
       s"stats pruning: bounds ($lo, $hi) do not cast to $dtype")
-    (loS, hiS)
+    (loS.get, hiS.get)
   }
 
   /** The file list a `colName BETWEEN lo AND hi` scan needs: manifest

@@ -1849,7 +1849,8 @@ object TxLog {
       case Some(pred) =>
         val schema =
           DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-        pruneForPredicate(spark, schema, snap.files, pred, snap.mapping)
+        prunedSnapshotFiles(spark, snap, skippingBounds(spark, schema, pred)
+          .toSeq.map { case (c, (lo, hi)) => (c, lo, hi) })
     }
     // a scoped OPTIMIZE whose predicate matches no files is a no-op —
     // never an empty commit. (An UNscoped compact always rewrites:
@@ -3069,66 +3070,42 @@ object TxLog {
     }
   }
 
-  /** `files` restricted to those whose recorded stats can hold a row
-    * matching `pred` (via [[skippingBounds]]); files without stats for
-    * a constrained column always pass. */
-  private def pruneForPredicate(spark: SparkSession, schema: StructType,
-      files: Seq[TxFile],
-      pred: org.apache.spark.sql.Column,
-      mapping: Map[String, String] = Map.empty): Seq[TxFile] =
-    skippingBounds(spark, schema, pred)
-      .map { case (c, b) => (mapping.getOrElse(c, c), b) } // stats: phys
-      .foldLeft(files) { case (kept, (c, (lo, hi))) =>
-      kept.flatMap(_.stats.get(c)).headOption.map(_.dtype) match {
-        case None => kept
-        case Some(dt) =>
-          def side(v: Any): String = spark.range(1)
-            .select(lit(v).cast(dt).cast("string")).head().getString(0)
-          val loS = lo.map(side)
-          val hiS = hi.map(side)
-          if (loS.exists(_ == null) || hiS.exists(_ == null)) kept
-          else kept.filter(_.stats.get(c).forall(st =>
-            StatsManifest.intersects(st.dtype, st.min.orNull, st.max.orNull,
-              loS.getOrElse(st.min.orNull), hiS.getOrElse(st.max.orNull))))
+  /** What [[locatePredicate]] found for one predicate DML, handed to
+    * its staging: `touched` each file key holding a live row matching
+    * the predicate → its count of such rows, `keepFiles` those files'
+    * entries, and `guard` the predicate's `conflictIfAdded` check. */
+  private final case class PredicateLocate(snap: TxSnapshot,
+      touched: Map[String, Long], keepFiles: Seq[TxFile],
+      guard: Seq[TxFile] => Seq[String])
+
+  /** The locate step of every predicate DML ([[delete]],
+    * [[replaceWhere]], [[update]], [[deleteMor]], [[updateMor]]) — the
+    * twin of [[locateKeyed]]: stats-prune `snap`'s files by the
+    * predicate's [[skippingBounds]] through [[prunedSnapshotFiles]],
+    * then ONE labelled `touched-probe` over the candidates' LIVE rows
+    * (the tagged read subtracts standing vectors, so already-deleted
+    * rows touch nothing) counts the matches per file — exact,
+    * file-count-sized on the driver. The guard, given the head's files
+    * at claim time, names the files this read missed whose recorded
+    * stats can intersect the predicate (files without stats stay
+    * conservatively conflicting) — driver-side, metadata-only. */
+  private def locatePredicate(spark: SparkSession, dir: String,
+      snap: TxSnapshot, pred: Column): PredicateLocate = {
+    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val intervals = skippingBounds(spark, schema, pred).toSeq
+      .map { case (c, (lo, hi)) => (c, lo, hi) }
+    val cands = prunedSnapshotFiles(spark, snap, intervals)
+    val touched =
+      if (cands.isEmpty) Map.empty[String, Long]
+      else described(spark, "touched-probe") {
+        rowsPerFile(readSnapshotTagged(spark, dir, snap.copy(files = cands))
+          .filter(pred))
       }
-    }
-
-  /** Conflict-guard closure for [[commitStaged]]'s `conflictIfAdded`:
-    * given the head's files at claim time, the dir-relative paths of
-    * files this operation's read missed (not in its snapshot) whose
-    * recorded stats can intersect `pred` — files without stats stay
-    * conservatively conflicting. Driver-side, metadata-only. */
-  private def addedMatchGuard(spark: SparkSession, snap: TxSnapshot,
-      schema: StructType, pred: org.apache.spark.sql.Column)
-      : Seq[TxFile] => Seq[String] = {
     val seen = snap.files.map(_.path).toSet
-    files => {
-      val fresh = files.filterNot(f => seen.contains(f.path))
-      if (fresh.isEmpty) Nil
-      else pruneForPredicate(spark, schema, fresh, pred, snap.mapping)
-        .map(_.path)
-    }
-  }
-
-  /** The candidate files that actually contain rows matching `pred`:
-    * stats-prune first, then one scan of just the candidates keeping
-    * `input_file_name` — exact, file-count-sized on the driver. */
-  private def touchedFiles(spark: SparkSession, dir: String,
-      snap: TxSnapshot, pred: org.apache.spark.sql.Column): Seq[String] = {
-    val schema =
-      DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val cands =
-      pruneForPredicate(spark, schema, snap.files, pred, snap.mapping)
-    if (cands.isEmpty) return Nil
-    // tagged read: already-deleted (dv'd) rows can't re-touch a file,
-    // and the file identity comes from `_metadata`, which survives
-    // the dv anti-join (input_file_name would not)
-    val touched = described(spark, "touched-probe") {
-      readSnapshotTagged(spark, dir, snap.copy(files = cands))
-        .filter(pred)
-        .select(col(TagFile)).distinct().collect()
-    }.map(_.getString(0))
-    touched.toSeq.sorted
+    PredicateLocate(snap, touched,
+      snap.files.filter(f => touched.contains(fileKey(snap, f))),
+      files => prunedSnapshotFiles(spark, snap.copy(files =
+        files.filterNot(f => seen.contains(f.path))), intervals).map(_.path))
   }
 
   /** Inherit skip-stats across a rewrite: the union of columns any
@@ -3169,12 +3146,9 @@ object TxLog {
   def delete(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
       statsCols: Seq[String] = Nil): Long = {
-    val snap = snapshot(spark, dir)
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val touched = touchedFiles(spark, dir, snap, pred)
-    if (touched.isEmpty) return snap.version
-    val tSet = touched.toSet
-    val keepFiles = snap.files.filter(f => tSet.contains(fileKey(snap, f)))
+    val at = locatePredicate(spark, dir, snapshot(spark, dir), pred)
+    val (snap, keepFiles) = (at.snap, at.keepFiles)
+    if (keepFiles.isEmpty) return snap.version
     val kept = readSnapshot(spark, dir, snap.copy(files = keepFiles))
       .filter(!pred.eqNullSafe(true))
     val (added, _) = stageData(spark, dir, kept,
@@ -3186,7 +3160,7 @@ object TxLog {
     commitStaged(spark, dir, "delete", added, keepFiles.map(_.path),
       removeAll = false, snap.schemaJson, None,
       expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-      conflictIfAdded = Some(addedMatchGuard(spark, snap, schema, pred)))
+      conflictIfAdded = Some(at.guard))
   }
 
   /** Atomic partial overwrite (Delta's `replaceWhere`): ONE commit
@@ -3221,9 +3195,9 @@ object TxLog {
         "predicate — the replaced slice must contain its replacement")
     enforceConstraints(spark, dir, src)
     enforceGenerated(snap, src)
-    val touched = touchedFiles(spark, dir, snap, pred)
-    val tSet = touched.toSet
-    val keepFiles = snap.files.filter(f => tSet.contains(fileKey(snap, f)))
+    // nothing matched still stages: the batch inserts into an empty slice
+    val at = locatePredicate(spark, dir, snap, pred)
+    val keepFiles = at.keepFiles
     val survivors =
       if (keepFiles.isEmpty) src
       else readSnapshot(spark, dir, snap.copy(files = keepFiles))
@@ -3239,7 +3213,7 @@ object TxLog {
       identityOut = if (snap.identity.isEmpty) None
         else Some(identityAfter(snap.identity, added, snap.phys)),
       expectIdentity = snap.identity.map { case (c, s) => c -> s.high },
-      conflictIfAdded = Some(addedMatchGuard(spark, snap, schema, pred)))
+      conflictIfAdded = Some(at.guard))
   }
 
   /** Refuse assignments (an UPDATE's SET map, a MERGE clause's
@@ -3282,30 +3256,13 @@ object TxLog {
     require(!schema.fieldNames.contains("_graft_upd"),
       "TxLog: table columns collide with reserved name _graft_upd")
     checkAssignments(snap, schema, set, "UPDATE")
-    // generated columns whose source columns this UPDATE touches
-    // recompute on the updated rows (the Delta contract)
-    val regen = snap.generated.filter { case (_, e) =>
-      exprRefs(spark, e).exists(set.contains) }
-    val touched = touchedFiles(spark, dir, snap, pred)
-    if (touched.isEmpty) return snap.version
-    val tSet = touched.toSet
-    val keepFiles = snap.files.filter(f => tSet.contains(fileKey(snap, f)))
-    val marked = readSnapshot(spark, dir, snap.copy(files = keepFiles))
-      .withColumn("_graft_upd", pred.eqNullSafe(true))
-    val updated = marked.select((schema.fields.map { fl =>
-      set.get(fl.name) match {
-        case Some(e) =>
-          when(col("_graft_upd"), e.cast(fl.dataType))
-            .otherwise(col(fl.name)).as(fl.name)
-        case None => col(fl.name)
-      }
-    } :+ col("_graft_upd")).toSeq: _*)
-    val rewritten = regen.toSeq.sortBy(_._1).foldLeft(updated) {
-      case (d, (c, e)) =>
-        val dt = schema(c).dataType
-        d.withColumn(c, when(col("_graft_upd"),
-          expr(e).cast(dt)).otherwise(col(c)))
-    }.drop("_graft_upd")
+    val at = locatePredicate(spark, dir, snap, pred)
+    val keepFiles = at.keepFiles
+    if (keepFiles.isEmpty) return snap.version
+    val rewritten = updatedImage(spark, snap, schema,
+      readSnapshot(spark, dir, snap.copy(files = keepFiles))
+        .withColumn("_graft_upd", pred.eqNullSafe(true)),
+      set, Some("_graft_upd"))
     enforceConstraints(spark, dir, rewritten)
     val (added, _) = stageData(spark, dir, rewritten,
       inheritStats(keepFiles, statsCols, snap), snap.mapping,
@@ -3313,7 +3270,31 @@ object TxLog {
     commitStaged(spark, dir, "update", added, keepFiles.map(_.path),
       removeAll = false, snap.schemaJson, None,
       expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-      conflictIfAdded = Some(addedMatchGuard(spark, snap, schema, pred)))
+      conflictIfAdded = Some(at.guard))
+  }
+
+  /** The UPDATE image of `rows`: each `set` value (cast back to its
+    * column's declared type — an UPDATE never mutates the schema) and
+    * each generated column reading a set column (recomputed from the
+    * updated values, the Delta contract) replace the old value — on
+    * every row, or with `marker` only where that boolean column holds
+    * (the marker is dropped from the result). Shared by [[update]]
+    * (marker: the predicate, evaluated on the OLD values) and
+    * [[updateMor]] (every matched row is updated). */
+  private def updatedImage(spark: SparkSession, snap: TxSnapshot,
+      schema: StructType, rows: DataFrame, set: Map[String, Column],
+      marker: Option[String]): DataFrame = {
+    val regen = snap.generated.filter { case (_, e) =>
+      exprRefs(spark, e).exists(set.contains) }
+    def image(c: String, e: Column): Column = {
+      val v = e.cast(schema(c).dataType)
+      marker.fold(v)(m => when(col(m), v).otherwise(col(c))).as(c)
+    }
+    val updated = rows.select((schema.fieldNames.map(c =>
+      set.get(c).fold(col(c))(image(c, _))) ++ marker.map(col)).toSeq: _*)
+    regen.toSeq.sortBy(_._1).foldLeft(updated) { case (d, (c, e)) =>
+      d.withColumn(c, image(c, expr(e)))
+    }.drop(marker.toSeq: _*)
   }
 
   // ---- merge-on-read DML (deletion vectors) ------------------------
@@ -3331,13 +3312,11 @@ object TxLog {
     * with the touched files' existing vectors, and build the updated
     * file entries. `matched` must be `(TagFile, TagIdx)` pairs of
     * LIVE rows (already-deleted rows excluded by the tagged read) and
-    * `newCnt` their [[rowsPerFile]]. Returns None when nothing
-    * matched; otherwise (vector path, the re-added entries, the dv
-    * pointers to pin at commit). */
+    * `newCnt` their [[rowsPerFile]] (non-empty). Returns (vector path,
+    * the re-added entries, the dv pointers to pin at commit). */
   private def stageDv(spark: SparkSession, dir: String, snap: TxSnapshot,
       matched: DataFrame, newCnt: Map[String, Long])
-      : Option[(String, Seq[TxFile], Map[String, Option[String]])] = {
-    if (newCnt.isEmpty) return None
+      : (String, Seq[TxFile], Map[String, Option[String]]) = {
     val byPath = snap.files.map(f => fileKey(snap, f) -> f).toMap
     val touched = newCnt.keys.toSeq.sorted
     val pairs = matched.select(col(TagFile).as("file"),
@@ -3361,8 +3340,7 @@ object TxLog {
     }
     // pin by ENTRY PATH (what commitStaged compares against the head);
     // `touched` holds bare names, which differ for cloned entries
-    Some((dvPath, entries,
-      touched.map(p => byPath(p).path -> byPath(p).dv).toMap))
+    (dvPath, entries, touched.map(p => byPath(p).path -> byPath(p).dv).toMap)
   }
 
   /** Merge-on-read DELETE (Delta's deletion-vector delete): the
@@ -3384,26 +3362,19 @@ object TxLog {
     * files and appends commute. */
   def deleteMor(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column): Long = {
-    val snap = snapshot(spark, dir)
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val cands =
-      pruneForPredicate(spark, schema, snap.files, pred, snap.mapping)
-    if (cands.isEmpty) return snap.version
-    val matched = readSnapshotTagged(spark, dir, snap.copy(files = cands))
-      .filter(pred)
-      .select(col(TagFile), col(TagIdx))
-    stageDv(spark, dir, snap, matched, rowsPerFile(matched)) match {
-      case None => snap.version
-      case Some((dvPath, entries, expect)) =>
-        try commitStaged(spark, dir, "delete-dv", entries,
-          entries.map(_.path), removeAll = false, snap.schemaJson, None,
-          ownsAdded = false, expectDv = expect, minReader = Some(2),
-          conflictIfAdded =
-            Some(addedMatchGuard(spark, snap, schema, pred)))
-        catch { case e: Throwable =>
-          fs(spark, new Path(dir)).delete(new Path(dir, dvPath), true)
-          throw e
-        }
+    val at = locatePredicate(spark, dir, snapshot(spark, dir), pred)
+    val snap = at.snap
+    if (at.touched.isEmpty) return snap.version
+    val (dvPath, entries, expect) = stageDv(spark, dir, snap,
+      readSnapshotTagged(spark, dir, snap.copy(files = at.keepFiles))
+        .filter(pred).select(col(TagFile), col(TagIdx)), at.touched)
+    try commitStaged(spark, dir, "delete-dv", entries,
+      entries.map(_.path), removeAll = false, snap.schemaJson, None,
+      ownsAdded = false, expectDv = expect, minReader = Some(2),
+      conflictIfAdded = Some(at.guard))
+    catch { case e: Throwable =>
+      fs(spark, new Path(dir)).delete(new Path(dir, dvPath), true)
+      throw e
     }
   }
 
@@ -3421,71 +3392,28 @@ object TxLog {
     val snap = snapshot(spark, dir)
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     checkAssignments(snap, schema, set, "UPDATE")
-    val regen = snap.generated.filter { case (_, e) =>
-      exprRefs(spark, e).exists(set.contains) }
-    val cands =
-      pruneForPredicate(spark, schema, snap.files, pred, snap.mapping)
-    if (cands.isEmpty) return snap.version
+    val at = locatePredicate(spark, dir, snap, pred)
+    if (at.touched.isEmpty) return snap.version
     val matchedRows = readSnapshotTagged(spark, dir,
-      snap.copy(files = cands)).filter(pred).cache()
+      snap.copy(files = at.keepFiles)).filter(pred).cache()
     try {
-      val updated0 = matchedRows.select(schema.fields.map { fl =>
-        set.get(fl.name) match {
-          case Some(e) => e.cast(fl.dataType).as(fl.name)
-          case None => col(fl.name)
-        }
-      }.toSeq: _*)
-      // every image row IS an updated row: recompute touched
-      // expressions unconditionally
-      val updated = regen.toSeq.sortBy(_._1).foldLeft(updated0) {
-        case (d, (c, e)) =>
-          d.withColumn(c, expr(e).cast(schema(c).dataType))
-      }
+      val updated = updatedImage(spark, snap, schema, matchedRows, set, None)
       enforceConstraints(spark, dir, updated)
-      val matched = matchedRows.select(col(TagFile), col(TagIdx))
-      stageDv(spark, dir, snap, matched, rowsPerFile(matched)) match {
-        case None => snap.version
-        case Some((dvPath, entries, expect)) =>
-          val touchedEntries = entries
-          val (added, _) = stageData(spark, dir, updated,
-            inheritStats(touchedEntries, statsCols, snap), snap.mapping,
-            partCols = snap.partitionCols)
-          try commitStaged(spark, dir, "update-dv",
-            touchedEntries ++ added, touchedEntries.map(_.path),
-            removeAll = false, snap.schemaJson, None,
-            ownsAdded = false, expectDv = expect, minReader = Some(2),
-            conflictIfAdded =
-              Some(addedMatchGuard(spark, snap, schema, pred)))
-          catch { case e: Throwable =>
-            fs(spark, new Path(dir)).delete(new Path(dir, dvPath), true)
-            deleteStaged(spark, dir, added)
-            throw e
-          }
+      val (dvPath, entries, expect) = stageDv(spark, dir, snap,
+        matchedRows.select(col(TagFile), col(TagIdx)), at.touched)
+      val (added, _) = stageData(spark, dir, updated,
+        inheritStats(entries, statsCols, snap), snap.mapping,
+        partCols = snap.partitionCols)
+      try commitStaged(spark, dir, "update-dv", entries ++ added,
+        entries.map(_.path), removeAll = false, snap.schemaJson, None,
+        ownsAdded = false, expectDv = expect, minReader = Some(2),
+        conflictIfAdded = Some(at.guard))
+      catch { case e: Throwable =>
+        fs(spark, new Path(dir)).delete(new Path(dir, dvPath), true)
+        deleteStaged(spark, dir, added)
+        throw e
       }
     } finally matchedRows.unpersist()
-  }
-
-  /** Stats-prune `files` to those whose per-file key bounds intersect
-    * the key envelope in `keyBounds` (`_lo_<k>` / `_hi_<k>` fields, as
-    * [[locateKeyed]]'s `apply-shape` row carries them) — driver-side,
-    * no table scan. */
-  private def pruneByKeyBounds(spark: SparkSession, snap: TxSnapshot,
-      files: Seq[TxFile], keyCols: Seq[String], keyBounds: Row)
-      : Seq[TxFile] = {
-    keyCols.foldLeft(files) { case (kept, k) =>
-      val pk = snap.phys(k) // stats are keyed by physical name
-      val lo = keyBounds.getAs[Any](s"_lo_$k")
-      val hi = keyBounds.getAs[Any](s"_hi_$k")
-      if (lo == null || hi == null) kept
-      else kept.flatMap(_.stats.get(pk)).headOption.map(_.dtype) match {
-        case None => kept
-        case Some(dt) =>
-          val (loS, hiS) = StatsManifest.canonicalBounds(spark, dt, lo, hi)
-          kept.filter(_.stats.get(pk).forall(st =>
-            StatsManifest.intersects(st.dtype, st.min.orNull,
-              st.max.orNull, loS, hiS)))
-      }
-    }
   }
 
   /** MERGE INTO (upsert): [[applyChanges]] with no deletes. For each
@@ -4035,7 +3963,9 @@ object TxLog {
         .select(schema.fieldNames.map(col).toSeq: _*)
       enforceGenerated(snap, inserts)
       enforceConstraints(spark, dir, inserts)
-      val cands = pruneByKeyBounds(spark, snap, snap.files, keyCols, shape)
+      val keyIntervals = envelopeIntervals(shape, keyCols)
+        .map { case (k, lo, hi) => (k, Option(lo), Option(hi)) }
+      val cands = prunedSnapshotFiles(spark, snap, keyIntervals)
       val srcKeys = src.select(keyCols.map(col): _*).distinct()
       val touched =
         if (cands.isEmpty) Map.empty[String, Long]
@@ -4051,8 +3981,8 @@ object TxLog {
       stage(KeyedApply(snap, srcKeys, inserts,
         shape.getAs[Long]("_graft_nins"), touched,
         snap.files.filter(f => touched.contains(fileKey(snap, f))),
-        files => pruneByKeyBounds(spark, snap,
-          files.filterNot(f => seen.contains(f.path)), keyCols, shape)
+        files => prunedSnapshotFiles(spark, snap.copy(files =
+          files.filterNot(f => seen.contains(f.path))), keyIntervals)
           .map(_.path)))
     } finally releaseCheckpoint(src)
   }
@@ -4122,10 +4052,10 @@ object TxLog {
       // key never double-counts into the new vector)
       val dv =
         if (at.touched.isEmpty) None
-        else stageDv(spark, dir, snap,
+        else Some(stageDv(spark, dir, snap,
           readSnapshotTagged(spark, dir, snap.copy(files = at.keepFiles))
             .join(at.srcKeys, keyCols, "left_semi")
-            .select(col(TagFile), col(TagIdx)), at.touched)
+            .select(col(TagFile), col(TagIdx)), at.touched))
       dv match {
         case None =>
           // nothing matched: a pure-insert batch (or an all-no-op
@@ -4511,11 +4441,25 @@ object TxLog {
     readSnapshot(spark, dir, snap.copy(files = kept))
   }
 
-  /** The pruning core shared by [[readPrunedAll]] and the batch
-    * "txlog" DataSource's filter pushdown: the snapshot's files
-    * restricted to those whose recorded range can intersect every
-    * interval. A missing side is unbounded (`col >= lo` is
-    * `(c, Some(lo), None)`). Driver-side, metadata-only. */
+  /** THE stats-interval file filter — the only code that skips
+    * [[TxFile]]s by their recorded ranges: the snapshot's files
+    * restricted to those whose range can intersect every `(col, lo,
+    * hi)` interval (logical column names; a missing side is unbounded,
+    * so `col >= lo` is `(c, Some(lo), None)`) and pass every null
+    * predicate. Driver-side, metadata-only, no Spark job: each bound
+    * canonicalizes through [[StatsManifest.canonicalBound]], and a
+    * bound that does not cast constrains nothing (pruning only ever
+    * skips, so keeping every file stays correct). Callers derive their
+    * intervals three ways:
+    *  - predicate callers ([[locatePredicate]] for the five predicate
+    *    DML verbs and their conflict guard, `compact(where)`) from
+    *    [[skippingBounds]];
+    *  - keyed callers ([[locateKeyed]] and its guard, the Scd2 and
+    *    MaterializedAgg follower reads) from an envelope row through
+    *    [[envelopeIntervals]];
+    *  - reads ([[readPrunedAll]], `mergeInto`'s source envelope) and
+    *    pushdown ([[TxFileIndex]], [[TxLogBatch]]) from
+    *    `TxLogBatch.intervals`-shaped intervals. */
   private[graft] def prunedSnapshotFiles(spark: SparkSession,
       snap: TxSnapshot, preds: Seq[(String, Option[Any], Option[Any])],
       nullPreds: Seq[(String, Boolean)] = Nil): Seq[TxFile] = {
@@ -4525,10 +4469,9 @@ object TxLog {
         case None => files // no live file carries stats for this column
         case Some(dt) =>
           // canonicalize each present side through the same cast the
-          // stats took; an absent side never excludes
-          def canon(v: Option[Any]): Option[String] = v.map { x =>
-            StatsManifest.canonicalBounds(spark, dt, x, x)._1
-          }
+          // stats took; an absent or uncastable side never excludes
+          def canon(v: Option[Any]): Option[String] =
+            v.flatMap(StatsManifest.canonicalBound(spark, dt, _))
           val (loS, hiS) = (canon(lo), canon(hi))
           files.filter(f => f.stats.get(c).forall { st =>
             (st.min.orNull, st.max.orNull) match {
@@ -4557,6 +4500,21 @@ object TxLog {
       })
     }
   }
+
+  /** The `(key, lo, hi)` intervals an envelope row carries in its
+    * `<lo><k>` / `<hi><k>` fields (the `_lo_<k>` / `_hi_<k>` of
+    * [[locateKeyed]]'s `apply-shape` row by default), for the keys
+    * with both bounds non-null — an all-null key has no envelope and
+    * prunes nothing. Callers that read pruned only when EVERY key is
+    * bounded compare the size against `keys`. */
+  private[graft] def envelopeIntervals(env: Row, keys: Seq[String],
+      lo: String = "_lo_", hi: String = "_hi_"): Seq[(String, Any, Any)] =
+    keys.flatMap { k =>
+      (Option(env.getAs[Any](lo + k)), Option(env.getAs[Any](hi + k))) match {
+        case (Some(l), Some(h)) => Some((k, l, h))
+        case _ => None
+      }
+    }
 
   /** Metadata-first COUNT (the Delta metadata-only-aggregate shape):
     * the exact number of rows satisfying every `(col, lo, hi)`

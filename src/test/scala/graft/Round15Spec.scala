@@ -202,6 +202,117 @@ class Round15Spec extends SparkSpec {
     assert(out == viaApi)
   }
 
+  test("prunedSnapshotFiles keeps exactly the intersecting files, and every file with a match") {
+    import java.sql.{Date, Timestamp}
+    import java.time.Instant
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.types._
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val schema = StructType(Seq(
+        StructField("i", IntegerType), StructField("l", LongType),
+        StructField("d", DecimalType(10, 2)), StructField("dt", DateType),
+        StructField("ts", TimestampType), StructField("s", StringType),
+        StructField("x", DoubleType), StructField("n", IntegerType),
+        StructField("r", IntegerType)))
+      def ts(utc: String) = Timestamp.from(Instant.parse(utc))
+      def dec(v: String) = new java.math.BigDecimal(v)
+      def day(v: String) = Date.valueOf(v)
+      // one file per batch, found again by its `i` range. In the LA
+      // zone file 0 ends just before the spring-forward gap (2024-03-10
+      // 02:00 PST), file 1 starts just after it, file 2 spans the
+      // repeated fall-back hour (2024-11-03 01:00-02:00). "Ａ" (U+FF21)
+      // sorts BEFORE the astral "😀" in Spark's byte order but AFTER it
+      // in UTF-16 code units. Column n is all-null; r gets renamed.
+      val batches = Seq(
+        Seq(Row(1, 10L, dec("1.25"), day("2024-01-01"),
+          ts("2024-03-09T20:00:00Z"), "apple", Double.NegativeInfinity,
+          null, 100),
+          Row(5, 20L, dec("3.50"), day("2024-01-31"),
+            ts("2024-03-10T09:59:59Z"), "banana", 1.5, null, 150)),
+        Seq(Row(10, 5000000000L, dec("10.00"), day("2024-02-01"),
+          ts("2024-03-10T10:00:00Z"), "Ärger", 2.0, null, 200),
+          Row(15, 6000000000L, dec("20.75"), day("2024-02-29"),
+            ts("2024-03-11T00:00:00Z"), "éclair", Double.NaN, null, 250)),
+        Seq(Row(20, -7L, dec("-5.00"), day("2024-11-01"),
+          ts("2024-11-03T07:30:00Z"), "中文", 3.0, null, 300),
+          Row(25, -3L, dec("0.00"), day("2024-11-03"),
+            ts("2024-11-03T10:30:00Z"), "Ａ", Double.PositiveInfinity,
+            null, 350)),
+        Seq(Row(30, 0L, dec("99.99"), day("2025-01-01"),
+          ts("2025-01-01T08:00:00Z"), "😀", 0.0, null, 400)),
+        // stats stripped below: a file without stats
+        Seq(Row(40, 1L, dec("1.00"), day("2023-01-01"),
+          ts("2023-01-01T00:00:00Z"), "zzz", 9.0, 4, 500)))
+      val dir = tmp("r15prune").toString
+      def df(rows: Seq[Row]) = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), schema)
+      TxLog.commitOverwrite(spark, dir, df(batches.head),
+        statsCols = schema.fieldNames.toSeq)
+      batches.tail.foreach(b => TxLog.commitAppend(spark, dir, df(b),
+        statsCols = schema.fieldNames.toSeq))
+      TxLog.renameColumn(spark, dir, "r", "r2")
+      val head = TxLog.snapshot(spark, dir)
+      val idx = head.files.map(f =>
+        f.path -> Seq(1, 10, 20, 30, 40).indexOf(f.stats("i").min.get.toInt))
+        .toMap
+      val snap = head.copy(files = head.files.map(f =>
+        if (idx(f.path) == 4) f.copy(stats = Map.empty) else f))
+      assert(snap.files.size == 5 && idx.values.toSet == (0 to 4).toSet)
+      // non-ANSI: a bound that does not cast compares as null (no row)
+      def scanMatches(pred: Column): Set[Int] = {
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try snap.files.map(f =>
+          TxLog.readSnapshot(spark, dir, snap.copy(files = Seq(f)))
+            .filter(pred).select(lit(idx(f.path)).as("k")))
+          .reduce(_ union _).distinct().collect().map(_.getInt(0)).toSet
+        finally spark.conf.unset("spark.sql.ansi.enabled")
+      }
+      val all = Set(0, 1, 2, 3, 4)
+      val cases = Seq[(Seq[(String, Option[Any], Option[Any])],
+          Seq[(String, Boolean)], Set[Int])](
+        (Seq(("i", Some(6), Some(12))), Nil, Set(1, 4)),
+        (Seq(("l", Some(5000000000L), None)), Nil, Set(1, 4)),
+        (Seq(("l", None, Some(-5))), Nil, Set(2, 4)), // int probe, bigint stats
+        (Seq(("d", Some(BigDecimal("3.5")), Some(BigDecimal("10")))), Nil,
+          Set(0, 1, 4)),
+        (Seq(("dt", Some(day("2024-02-01")), Some(day("2024-02-29")))), Nil,
+          Set(1, 4)),
+        (Seq(("ts", Some(ts("2024-03-10T10:00:00Z")), None)), Nil,
+          Set(1, 2, 3, 4)),
+        (Seq(("ts", None, Some(ts("2024-03-10T09:59:59Z")))), Nil, Set(0, 4)),
+        // 01:30 PDT and 01:30 PST render alike: file 2 is kept, no row
+        (Seq(("ts", Some(ts("2024-11-03T08:30:00Z")),
+          Some(ts("2024-11-03T09:30:00Z")))), Nil, Set(2, 4)),
+        (Seq(("s", Some("Ａ"), None)), Nil, Set(2, 3, 4)),
+        (Seq(("s", Some("Ä"), Some("éclair"))), Nil, Set(1, 4)),
+        (Seq(("x", Some(2.5), None)), Nil, Set(1, 2, 4)), // NaN >= 2.5
+        (Seq(("x", None, Some(Double.NegativeInfinity))), Nil, Set(0, 4)),
+        (Seq(("x", Some(Double.NaN), None)), Nil, Set(1, 4)),
+        (Seq(("n", Some(1), None)), Nil, all), // all-null: no range
+        (Nil, Seq(("n", false)), Set(4)),
+        (Nil, Seq(("n", true)), all),
+        (Seq(("r2", Some(240), Some(310))), Nil, Set(1, 2, 4)), // mapped
+        (Seq(("i", Some("abc"), None)), Nil, all), // uncastable: no bound
+        (Seq(("i", Some("abc"), Some(4))), Nil, Set(0, 4)))
+      cases.foreach { case (preds, nullPreds, want) =>
+        val kept = TxLog.prunedSnapshotFiles(spark, snap, preds, nullPreds)
+          .map(f => idx(f.path)).toSet
+        assert(kept == want, s"$preds $nullPreds")
+        if (kept != all) {
+          val pred = (preds.flatMap { case (c, lo, hi) =>
+            lo.map(col(c) >= lit(_)).toSeq ++ hi.map(col(c) <= lit(_)).toSeq
+          } ++ nullPreds.map { case (c, isNull) =>
+            if (isNull) col(c).isNull else col(c).isNotNull
+          }).reduce(_ && _)
+          val hits = scanMatches(pred)
+          assert(hits.subsetOf(kept), s"$preds $nullPreds: rows in $hits")
+        }
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
   test("batch txlog source: versionAsOf and timestampAsOf time travel") {
     val s = spark
     import s.implicits._

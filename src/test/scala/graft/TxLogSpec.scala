@@ -2012,26 +2012,32 @@ class TxLogSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val sc = spark.sparkContext
-    // (label, SQL execution id) per job: one query can launch several
-    // jobs under adaptive execution
+    // (label, SQL execution id, call site) per job: one query can
+    // launch several jobs under adaptive execution
     val labels = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[(String, String)]())
+      new java.util.ArrayList[(String, String, String)]())
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(js.properties)
           .flatMap(p => Option(p.getProperty(k))).getOrElse("")
-        labels.add(prop("spark.job.description") ->
-          prop("spark.sql.execution.id")); ()
+        labels.add((prop("spark.job.description"),
+          prop("spark.sql.execution.id"),
+          js.stageInfos.map(_.details).mkString("\n"))); ()
       }
     }
-    def jobsOf(op: => Unit): Seq[(String, String)] = {
+    def jobsOf(op: => Unit): Seq[(String, String, String)] = {
       org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
       labels.clear()
       op
       org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
-      labels.toArray.map(_.asInstanceOf[(String, String)]).toSeq
+      labels.toArray.map(_.asInstanceOf[(String, String, String)]).toSeq
     }
+    // stats pruning and its bound casts run on the driver: no job may
+    // come from them
+    def pruningJobs(jobs: Seq[(String, String, String)]) =
+      jobs.filter(j => Seq("canonicalBound", "prunedSnapshotFiles")
+        .exists(j._3.contains))
     val dir = tmp("txjobs").toString
     val pdir = tmp("txjobsp").toString
     def kv(lo: Long, hi: Long) = (lo until hi).map(i =>
@@ -2062,9 +2068,47 @@ class TxLogSpec extends SparkSpec {
       // the duplicate guard and the key envelope
       val mergeJobs = jobsByOp.toMap.apply("merge")
       val shapeQueries = mergeJobs.collect {
-        case ("txlog:apply-shape", id) => id }.distinct
+        case ("txlog:apply-shape", id, _) => id }.distinct
       assert(shapeQueries.size == 1 && shapeQueries.head.nonEmpty, mergeJobs)
       assert(!mergeJobs.exists(_._1 == "txlog:key-envelope"), mergeJobs)
+      jobsByOp.foreach { case (name, jobs) =>
+        assert(pruningJobs(jobs).isEmpty, s"$name: ${pruningJobs(jobs)}") }
+      // pruning a read: metadata only
+      val pruned = jobsOf(TxLog.readPrunedAll(spark, dir, Seq(("id", 10L, 20L))))
+      assert(pruned.isEmpty, pruned)
+      // a range-filtered read of a partitioned logged table plans
+      // without a job (the file index prunes once per partition value)
+      val ranged = spark.read.format("txlog").load(pdir).filter(col("id") > 5L)
+      val planning = jobsOf(ranged.queryExecution.executedPlan)
+      assert(planning.isEmpty, planning)
+      assert(ranged.count() == 24)
+
+      // the five predicate verbs: ONE labelled touched-probe query each,
+      // and no more jobs than when each bound cast was a job of its own
+      // (the counts measured then)
+      val vdir = tmp("txjobsv").toString
+      TxLog.commitOverwrite(spark, vdir, kv(0, 40).repartitionByRange(4, $"id"),
+        statsCols = Seq("id"))
+      // countWhere over files the interval fully contains: metadata only
+      val counted = jobsOf(assert(TxLog.countWhere(spark, vdir,
+        Seq(("id", 0L, 39L))) == 40))
+      assert(counted.isEmpty, counted)
+      val verbs = Seq[(String, Int, () => Unit)](
+        ("delete", 4, () => TxLog.delete(spark, vdir, $"id" >= 36L)),
+        ("replaceWhere", 6, () => TxLog.replaceWhere(spark, vdir, kv(30, 33),
+          $"id" >= 30L && $"id" < 33L)),
+        ("update", 5, () => TxLog.update(spark, vdir, $"id" === 25L,
+          Map("name" -> lit("u")))),
+        ("deleteMor", 5, () => TxLog.deleteMor(spark, vdir, $"id" <= 3L)),
+        ("updateMor", 8, () => TxLog.updateMor(spark, vdir, $"id" === 12L,
+          Map("name" -> lit("v")))))
+      verbs.foreach { case (name, maxJobs, op) =>
+        val jobs = jobsOf(op())
+        val probes = jobs.collect { case ("txlog:touched-probe", id, _) => id }
+        assert(probes.distinct.size == 1 && probes.head.nonEmpty, s"$name: $jobs")
+        assert(pruningJobs(jobs).isEmpty, s"$name: ${pruningJobs(jobs)}")
+        assert(jobs.size <= maxJobs, s"$name: ${jobs.size} jobs")
+      }
     } finally sc.removeSparkListener(listener)
     assert(TxLog.read(spark, dir).count() == 70)
     assert(TxLog.read(spark, pdir).count() == 30)
