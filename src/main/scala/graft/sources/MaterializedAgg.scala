@@ -246,8 +246,8 @@ object MaterializedAgg {
     // span's row-level diff (one union + diff-aggregate pipeline per
     // DML commit), and directivesFor reads them more than once —
     // materialize them ONCE with lineage truncated (TxLog.checkpointed;
-    // measured 30× recompute on StressMv's scattered-delete trickle
-    // before caching, and with a plain persist every action still
+    // PLANS.md round 14 records a 30× recompute on a scattered-delete
+    // trickle before caching, and with a plain persist every action still
     // re-planned the span-sized tree). The directives need no
     // checkpoint of their own: applyChanges / applyChangesMor
     // materialize their input once before any action.

@@ -240,8 +240,12 @@ object Scd2 {
     * commit version). At most one directive per (key, seq) —
     * ambiguity refuses like [[TxLog.applyChanges]]; a directive at or before
     * a touched key's latest recorded `valid_from` refuses
-    * (out-of-order). Cost shape: one window + one aggregate over the
-    * DIRECTIVE relation, one stats-pruned read of the touched keys'
+    * (out-of-order). Checks run in order: an empty batch only
+    * advances the txn marker, then the duplicate refusal, then the
+    * out-of-order one.
+    * Cost shape: one window + two per-key aggregates over the
+    * DIRECTIVE relation (the `scd2-envelope` guard action and the
+    * firsts), one stats-pruned read of the touched keys'
     * history sliver, and one [[TxLog.applyChanges]] commit keyed
     * (keys…, valid_from) that rewrites only files holding a touched
     * key's current segment — or, with `mor = true`, retires the
@@ -270,9 +274,9 @@ object Scd2 {
       s"Scd2: directives lack column(s) ${missing.mkString(", ")}")
     val keys = spec.keys
 
-    // directive-sized, consumed by four actions (dup guard, window
-    // segments, per-key firsts, the apply batch) — materialize once,
-    // lineage truncated
+    // directive-sized, consumed by the per-key summary, the window
+    // segments, the per-key firsts and the apply batch — materialize
+    // once, lineage truncated
     val d = TxLog.described(spark, "scd2-directives-materialize") {
       TxLog.checkpointed(changes.select(payload.map(c =>
         col(c).cast(scdT(c)).as(c)) ++ Seq(
@@ -280,13 +284,36 @@ object Scd2 {
         col(deleteCol).cast("boolean").as("_scd2_del")): _*))
     }
     try {
+      // ONE action over a per-key aggregate answers all three guards
+      // before any history work: the key count (a span that nets to
+      // zero directives), the duplicate-(key, seq) count — a key is
+      // ambiguous iff it holds more directives than distinct seq
+      // values, with a null-seq group counting as one more distinct
+      // value (countDistinct skips nulls) — and the key envelope that
+      // prunes the history read
+      val perKey = d.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("_scd2_n"),
+          countDistinct(col("_scd2_seq")).as("_scd2_nseq"),
+          max(col("_scd2_seq").isNull.cast("long")).as("_scd2_nullseq"))
+      val summary = TxLog.described(spark, "scd2-envelope") {
+        perKey.agg(count(lit(1)).as("_scd2_keys"),
+          (count(when(col("_scd2_n") >
+            col("_scd2_nseq") + col("_scd2_nullseq"), 1)).as("_scd2_dups")
+            +: keys.flatMap(k =>
+              Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))): _*)
+          .head()
+      }
       // a span that nets to zero directives (compaction-only source
       // commits, net-zero rewrites) must still advance the watermark
       // marker — metadata-only — or every later refresh re-reads the
       // same span; skip the history scan outright
-      if (d.isEmpty)
+      if (summary.getLong(0) == 0L)
         return txn.fold(snap.version)(
           TxLog.commitTxnAdvance(spark, scdDir, _))
+      require(summary.getLong(1) == 0L,
+        s"Scd2: duplicate directive for one (${keys.mkString(", ")}, " +
+          "seq) — at most one change per key per sequence value")
+      val bounds = TxLog.envelopeIntervals(summary, keys)
       // per key, version order decides the segments in one window
       // over the DIRECTIVE relation: each upsert opens a segment,
       // closed by the key's next directive (delete or upsert)
@@ -298,80 +325,52 @@ object Scd2 {
           col("_scd2_seq").as(ValidFrom),
           col("_scd2_next").as(ValidTo),
           col("_scd2_next").isNull.as(IsCurrent)): _*)
-
-      // ONE per-key aggregate carries the first directive version
-      // (closes the standing current segment), the duplicate-(key,
-      // seq) ambiguity guard, and the pruning envelope — formerly a
-      // separate directive-sized dup-check action (guide §1.2)
-      val firsts = TxLog.checkpointed(d.groupBy(keys.map(col): _*)
-        .agg(min(col("_scd2_seq")).as("_scd2_first"),
-          count(lit(1)).as("_scd2_n"),
-          countDistinct(col("_scd2_seq")).as("_scd2_nseq"),
-          sum(when(col("_scd2_seq").isNull, 1L).otherwise(0L))
-            .as("_scd2_nullseq")))
+      // each key's first directive version closes its standing
+      // current segment
+      val firsts = d.groupBy(keys.map(col): _*)
+        .agg(min(col("_scd2_seq")).as("_scd2_first"))
+      // the touched keys' history sliver: consumed by the stale
+      // check and the closure batch — touched-key-sized
+      val hist = TxLog.checkpointed(
+        (if (bounds.size == keys.size)
+          TxLog.readPrunedAll(spark, scdDir, bounds)
+        else TxLog.read(spark, scdDir))
+          .join(firsts, keys, "inner"))
       try {
-        // dup iff a key holds more directives than distinct seq
-        // values — countDistinct skips nulls, so a null-seq group
-        // counts as one extra distinct value (exactly the old
-        // per-(key, seq) groupBy's null-group semantics)
-        val dupSeq = TxLog.described(spark, "scd2-dup-check") {
-          firsts.filter(col("_scd2_n") > col("_scd2_nseq") +
-            when(col("_scd2_nullseq") > 0L, 1L).otherwise(0L))
-            .limit(1).count()
+        // append-forward guard over the touched keys' WHOLE history
+        // sliver (current and closed): a directive at or before any
+        // recorded valid_from would silently rewrite history
+        val stale = TxLog.described(spark, "scd2-stale-check") {
+          hist
+            .filter(col("_scd2_first") <= col(ValidFrom))
+            .select((keys.map(col) :+ col(ValidFrom) :+
+              col("_scd2_first")): _*).limit(1).collect()
         }
-        require(dupSeq == 0,
-          s"Scd2: duplicate directive for one (${keys.mkString(", ")}, " +
-            "seq) — at most one change per key per sequence value")
-        val envAggs = keys.flatMap(k =>
-          Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))
-        val env = TxLog.described(spark, "scd2-envelope") {
-          firsts.agg(envAggs.head, envAggs.tail: _*).head()
-        }
-        val bounds = TxLog.envelopeIntervals(env, keys)
-        // the touched keys' history sliver: consumed by the stale
-        // check and the closure batch — touched-key-sized
-        val hist = TxLog.checkpointed(
-          (if (bounds.size == keys.size)
-            TxLog.readPrunedAll(spark, scdDir, bounds)
-          else TxLog.read(spark, scdDir))
-            .join(firsts.select((keys :+ "_scd2_first").map(col): _*),
-              keys, "inner"))
-        try {
-          // append-forward guard over the touched keys' WHOLE history
-          // sliver (current and closed): a directive at or before any
-          // recorded valid_from would silently rewrite history
-          val stale = TxLog.described(spark, "scd2-stale-check") {
-            hist
-              .filter(col("_scd2_first") <= col(ValidFrom))
-              .select((keys.map(col) :+ col(ValidFrom) :+
-                col("_scd2_first")): _*).limit(1).collect()
-          }
-          require(stale.isEmpty, {
-            val r = stale.head
-            s"Scd2: out-of-order directive — key (${keys.zipWithIndex
-              .map { case (k, i) => s"$k=${r.get(i)}" }.mkString(", ")}) " +
-              s"already holds a segment from version ${r.get(keys.size)} " +
-              s">= directive seq ${r.get(keys.size + 1)}; history is " +
-              "append-forward per key"
-          })
-          val closures = hist.filter(col(IsCurrent))
-            .select(payload.map(col) ++ Seq(
-              col(ValidFrom),
-              col("_scd2_first").as(ValidTo),
-              lit(false).as(IsCurrent)): _*)
+        require(stale.isEmpty, {
+          val r = stale.head
+          s"Scd2: out-of-order directive — key (${keys.zipWithIndex
+            .map { case (k, i) => s"$k=${r.get(i)}" }.mkString(", ")}) " +
+            s"already holds a segment from version ${r.get(keys.size)} " +
+            s">= directive seq ${r.get(keys.size + 1)}; history is " +
+            "append-forward per key"
+        })
+        val closures = hist.filter(col(IsCurrent))
+          .select(payload.map(col) ++ Seq(
+            col(ValidFrom),
+            col("_scd2_first").as(ValidTo),
+            lit(false).as(IsCurrent)): _*)
 
-          val batch = closures.unionByName(segments)
-            .withColumn("_scd2_batch_del", lit(false))
-          if (mor)
-            TxLog.applyChangesMor(spark, scdDir, batch,
-              keys :+ ValidFrom, "_scd2_batch_del",
-              statsCols = keys :+ ValidFrom, txn = txn)
-          else
-            TxLog.applyChanges(spark, scdDir, batch,
-              keys :+ ValidFrom, "_scd2_batch_del",
-              statsCols = keys :+ ValidFrom, txn = txn)
-        } finally TxLog.releaseCheckpoint(hist)
-      } finally TxLog.releaseCheckpoint(firsts)
+        val batch = closures.unionByName(segments)
+          .withColumn("_scd2_batch_del", lit(false))
+        if (mor)
+          TxLog.applyChangesMor(spark, scdDir, batch,
+            keys :+ ValidFrom, "_scd2_batch_del",
+            statsCols = keys :+ ValidFrom, txn = txn)
+        else
+          TxLog.applyChanges(spark, scdDir, batch,
+            keys :+ ValidFrom, "_scd2_batch_del",
+            statsCols = keys :+ ValidFrom, txn = txn)
+      } finally TxLog.releaseCheckpoint(hist)
     } finally TxLog.releaseCheckpoint(d)
   }
 

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,8 +32,8 @@ import org.apache.spark.sql.types._
   * parses them back with the dtype's own ordering (numerics as
   * BigDecimal, date/timestamp/string by UTF-8 bytes — Spark's
   * cast-to-string forms are order-preserving for these types, except
-  * timestamps across a daylight-saving fall-back, whose repeated local
-  * hour renders two instants alike).
+  * timestamps, rendered in the session zone: probe bounds on them
+  * widen by the full zone-offset span first, see [[canonicalBound]]).
   *
   * Safety: pruning is CONSERVATIVE — a data file missing from the
   * manifest (e.g. appended after the last [[write]]) is always kept, a
@@ -194,51 +196,85 @@ object StatsManifest {
   }
 
   /** True when a [min_s, max_s] file range can intersect [lo, hi] under
-    * the column's dtype ordering; null bounds keep the file. Shared
+    * the column's dtype ordering; null stats keep the file, and a
+    * missing bound (None) excludes nothing. Shared
     * with [[TxLog.countWhere]]'s exclusion judge. */
   private[sources] def intersects(dtype: String, minS: String, maxS: String,
-      lo: String, hi: String): Boolean = {
+      lo: Option[String], hi: Option[String]): Boolean = {
     if (minS == null || maxS == null) return true
-    !(cmpStat(dtype, maxS, lo) < 0 || cmpStat(dtype, minS, hi) > 0)
+    !(lo.exists(cmpStat(dtype, maxS, _) < 0) ||
+      hi.exists(cmpStat(dtype, minS, _) > 0))
   }
+
+  /** How far [[canonicalBound]] moves a `timestamp` bound outward:
+    * 36 h, the full span of `java.time.ZoneOffset`'s ±18:00 range.
+    * Timestamp stats are session-zone LOCAL strings ordered by bytes —
+    * wrong across a daylight-saving fall-back (the repeated hour renders
+    * two instants alike, and later instants below earlier ones) and
+    * between stats written under one zone and probed under another.
+    * A local rendering is its instant plus an offset within ±18 h, so
+    * a bound widened by 36 h before rendering compares soundly against
+    * stats rendered in any zone. */
+  private val TimestampSlackMicros = 36L * 3600 * 1000 * 1000
 
   /** Canonicalize one probe bound through the SAME cast chain the stats
     * took, `Cast(Cast(Literal(v), dtype), StringType)` in the session
     * time zone, evaluated ON THE DRIVER against the empty row — no
-    * Spark job. None when `v` does not cast to `dtype` (a null result
-    * or a refused cast): such a bound constrains nothing. Shared by
-    * every stats pruner (this manifest, [[TxLog.prunedSnapshotFiles]],
+    * Spark job. A `timestamp` bound first moves outward (down for the
+    * lower bound, up for the `upper` one) by [[TimestampSlackMicros]];
+    * `timestamp_ntz` stats are zone-free and are not widened. None
+    * when `v` does not cast to `dtype` (a null result or a refused
+    * cast), or when the widened timestamp leaves the four-digit-year
+    * form: such a bound constrains nothing. Shared by every stats
+    * pruner (this manifest, [[TxLog.prunedSnapshotFiles]],
     * [[TxLog.countWhere]]) so bound handling can never diverge. */
   private[sources] def canonicalBound(spark: SparkSession, dtype: String,
-      v: Any): Option[String] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-    scala.util.Try(Cast(Cast(Literal(v), DataType.fromDDL(dtype), tz),
-      StringType, tz).eval(InternalRow.empty)).toOption
-      .flatMap(Option(_)).map(_.toString)
+      v: Any, upper: Boolean): Option[String] = {
+    val dt = DataType.fromDDL(dtype)
+    castBound(spark, dt, v).flatMap(renderBound(spark, dt, _, upper))
   }
 
   /** Both bounds of an interval through [[canonicalBound]], refusing
     * a bound that does not cast (callers that must judge containment
-    * cannot treat it as unbounded). */
+    * cannot treat it as unbounded); a timestamp side that widens past
+    * the four-digit years comes back None, unbounded. */
   private[sources] def canonicalBounds(spark: SparkSession, dtype: String,
-      lo: Any, hi: Any): (String, String) = {
-    val (loS, hiS) =
-      (canonicalBound(spark, dtype, lo), canonicalBound(spark, dtype, hi))
-    require(loS.isDefined && hiS.isDefined,
-      s"stats pruning: bounds ($lo, $hi) do not cast to $dtype")
-    (loS.get, hiS.get)
+      lo: Any, hi: Any): (Option[String], Option[String]) = {
+    val dt = DataType.fromDDL(dtype)
+    (castBound(spark, dt, lo), castBound(spark, dt, hi)) match {
+      case (Some(l), Some(h)) => (renderBound(spark, dt, l, upper = false),
+        renderBound(spark, dt, h, upper = true))
+      case _ => throw new IllegalArgumentException(
+        s"stats pruning: bounds ($lo, $hi) do not cast to $dtype")
+    }
   }
 
-  /** The file list a `colName BETWEEN lo AND hi` scan needs: manifest
-    * files whose range intersects, plus (conservatively) every data
-    * file the manifest doesn't cover. Returns (kept, total). */
-  def pruneFiles(spark: SparkSession, dataPath: String, colName: String,
-      lo: Any, hi: Any): (Seq[String], Int) = {
-    val all = dataFiles(spark, dataPath)
-    (pruneAgainstManifest(spark, dataPath, all,
-      Seq((colName, lo, hi))), all.size)
+  private def sessionTz(spark: SparkSession) =
+    Some(spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** `v` cast to `dt` (Catalyst's internal form) in the session zone;
+    * None for a null result or a refused cast. */
+  private def castBound(spark: SparkSession, dt: DataType, v: Any)
+      : Option[Any] =
+    scala.util.Try(Cast(Literal(v), dt, sessionTz(spark))
+      .eval(InternalRow.empty)).toOption.flatMap(Option(_))
+
+  /** The stats' string form of a cast bound, widened outward first
+    * when `dt` is `timestamp`. */
+  private def renderBound(spark: SparkSession, dt: DataType, c: Any,
+      upper: Boolean): Option[String] = {
+    def render(x: Any) = Cast(Literal(x, dt), StringType, sessionTz(spark))
+      .eval(InternalRow.empty).toString
+    if (dt != TimestampType) Some(render(c))
+    else {
+      val micros = c.asInstanceOf[Long]
+      val s = render(if (upper) micros + TimestampSlackMicros
+        else micros - TimestampSlackMicros)
+      // a year past 9999 renders as "+10000-…", which would sort below
+      // every four-digit year
+      if (s.length > 4 && s.take(4).forall(_.isDigit) && s(4) == '-') Some(s)
+      else None
+    }
   }
 
   /** Compound skipping over the manifest: `files` restricted to those

@@ -1400,24 +1400,26 @@ object TxLog {
         b.toSeq
       }
       val dirStrs = subdirs.map(d => f.makeQualified(d).toString).toSeq
-      val listed = spark.sparkContext
-        .parallelize(dirStrs, math.min(dirStrs.length, 256))
-        .flatMap { d =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confMap.foreach { case (k, v) => conf.set(k, v) }
-          val p = new Path(d)
-          val fsx = p.getFileSystem(conf)
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(String, Long)] // (absolute path, bytes)
-          val it = fsx.listFiles(p, true)
-          while (it.hasNext) {
-            val st = it.next()
-            if (st.isFile)
-              out += ((fsx.makeQualified(st.getPath).toString,
-                st.getLen))
-          }
-          out
-        }.collect()
+      val listed = described(spark, "convert-list") {
+        spark.sparkContext
+          .parallelize(dirStrs, math.min(dirStrs.length, 256))
+          .flatMap { d =>
+            val conf = new org.apache.hadoop.conf.Configuration(false)
+            confMap.foreach { case (k, v) => conf.set(k, v) }
+            val p = new Path(d)
+            val fsx = p.getFileSystem(conf)
+            val out = scala.collection.mutable.ArrayBuffer
+              .empty[(String, Long)] // (absolute path, bytes)
+            val it = fsx.listFiles(p, true)
+            while (it.hasNext) {
+              val st = it.next()
+              if (st.isFile)
+                out += ((fsx.makeQualified(st.getPath).toString,
+                  st.getLen))
+            }
+            out
+          }.collect()
+      }
       listed.foreach { case (abs, len) =>
         val rel = relOfAbs(abs)
         val hidden = rel.split('/').exists(sg =>
@@ -3491,9 +3493,8 @@ object TxLog {
       cond: Option[Column] = None) extends MergeClause
 
   /** Top-level directory count above which [[convertInPlace]] lists
-    * the tree in a distributed job instead of one driver iterator.
-    * Mutable for stress parity tests only. */
-  private[graft] var ConvertListDirsThreshold = 64
+    * the tree in a distributed job instead of one driver iterator. */
+  private val ConvertListDirsThreshold = 64
 
   /** TEST-ONLY deterministic interleave hook — see commitStaged. */
   private[graft] val testBeforeClaim =
@@ -4470,9 +4471,9 @@ object TxLog {
         case Some(dt) =>
           // canonicalize each present side through the same cast the
           // stats took; an absent or uncastable side never excludes
-          def canon(v: Option[Any]): Option[String] =
-            v.flatMap(StatsManifest.canonicalBound(spark, dt, _))
-          val (loS, hiS) = (canon(lo), canon(hi))
+          def canon(v: Option[Any], upper: Boolean): Option[String] =
+            v.flatMap(StatsManifest.canonicalBound(spark, dt, _, upper))
+          val (loS, hiS) = (canon(lo, upper = false), canon(hi, upper = true))
           files.filter(f => f.stats.get(c).forall { st =>
             (st.min.orNull, st.max.orNull) match {
               case (null, _) | (_, null) => true // conservative
@@ -4569,8 +4570,11 @@ object TxLog {
             if (!StatsManifest.intersects(dt, st.min.get, st.max.get,
                 loS, hiS))
               return Excluded
-            if (!(StatsManifest.cmpStat(dt, st.min.get, loS) >= 0 &&
-                StatsManifest.cmpStat(dt, st.max.get, hiS) <= 0 &&
+            // widened timestamp bounds only ever exclude: a timestamp
+            // file is never counted as contained, it scans
+            if (!(dt != "timestamp" &&
+                loS.exists(StatsManifest.cmpStat(dt, st.min.get, _) >= 0) &&
+                hiS.exists(StatsManifest.cmpStat(dt, st.max.get, _) <= 0) &&
                 st.nulls.contains(0L)))
               contained = false
           case Some(st) if st.min.isEmpty && st.max.isEmpty =>
@@ -4633,8 +4637,11 @@ object TxLog {
     val dtypes = cols.map(c => c -> fields(c).catalogString).toMap
     // stats cover a column when both bounds are recorded, or when the
     // recorded state is "all null" (min and max both absent) — the
-    // file then contributes nothing, which is exact
-    def covered(f: TxFile, c: String): Boolean =
+    // file then contributes nothing, which is exact. Timestamp stats
+    // never cover: they are session-zone local strings, whose order
+    // and parse-back are ambiguous across a daylight-saving fall-back
+    val zoned = cols.filter(c => dtypes(c) == "timestamp").toSet
+    def covered(f: TxFile, c: String): Boolean = !zoned(c) &&
       f.stats.get(snap.phys(c)).exists(st =>
         (st.min.isDefined && st.max.isDefined) ||
           (st.min.isEmpty && st.max.isEmpty))
@@ -4652,27 +4659,25 @@ object TxLog {
       }.toMap
     // one column-pruned pass over the sliver; extrema come back in
     // the SAME canonical cast-to-string forms the stats use, so the
-    // two sources fold under one comparator
-    val scanned: Map[String, (Option[String], Option[String])] =
-      if (toScan.isEmpty) Map.empty
-      else {
-        val row = readSnapshot(spark, dir, snap.copy(files = toScan))
-          .select(cols.flatMap(c => Seq(
-            min(col(c)).cast("string").as(s"_min_$c"),
-            max(col(c)).cast("string").as(s"_max_$c"))): _*)
-          .head()
-        cols.map(c => c -> (Option(row.getAs[String](s"_min_$c")),
-          Option(row.getAs[String](s"_max_$c")))).toMap
-      }
+    // two sources fold under one comparator. A timestamp column scans
+    // every file and keeps its extrema as values, never as strings.
+    val scanned: Option[Row] =
+      if (toScan.isEmpty) None
+      else Some(readSnapshot(spark, dir, snap.copy(files = toScan))
+        .select(cols.flatMap { c =>
+          def str(e: org.apache.spark.sql.Column) =
+            if (zoned(c)) e else e.cast("string")
+          Seq(str(min(col(c))).as(s"_min_$c"), str(max(col(c))).as(s"_max_$c"))
+        }: _*).head())
     val out = cols.flatMap { c =>
-      def pick(takeMin: Boolean): Option[String] =
-        Seq(metaBounds(c), scanned.getOrElse(c, (None, None)))
-          .map(b => if (takeMin) b._1 else b._2)
-          .flatten.reduceOption(better(dtypes(c), takeMin))
-      def asCol(v: Option[String]): org.apache.spark.sql.Column =
-        v.map(s => lit(s).cast(fields(c))).getOrElse(lit(null).cast(fields(c)))
-      Seq(asCol(pick(takeMin = true)).as(s"min_$c"),
-        asCol(pick(takeMin = false)).as(s"max_$c"))
+      def ext(takeMin: Boolean) = if (takeMin) s"_min_$c" else s"_max_$c"
+      def pick(takeMin: Boolean): Any =
+        if (zoned(c)) scanned.map(_.getAs[Any](ext(takeMin))).orNull
+        else (Seq(if (takeMin) metaBounds(c)._1 else metaBounds(c)._2) ++
+            scanned.map(r => Option(r.getAs[String](ext(takeMin)))))
+          .flatten.reduceOption(better(dtypes(c), takeMin)).orNull
+      Seq(lit(pick(takeMin = true)).cast(fields(c)).as(s"min_$c"),
+        lit(pick(takeMin = false)).cast(fields(c)).as(s"max_$c"))
     }
     (spark.range(1).select(out: _*), toScan.map(_.path))
   }

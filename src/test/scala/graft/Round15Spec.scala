@@ -279,9 +279,14 @@ class Round15Spec extends SparkSpec {
           Set(0, 1, 4)),
         (Seq(("dt", Some(day("2024-02-01")), Some(day("2024-02-29")))), Nil,
           Set(1, 4)),
-        (Seq(("ts", Some(ts("2024-03-10T10:00:00Z")), None)), Nil,
+        // timestamp bounds widen 36 h outward (any zone offset pair):
+        // the gap's neighbours stay, files past the slack prune
+        (Seq(("ts", Some(ts("2024-03-10T10:00:00Z")), None)), Nil, all),
+        (Seq(("ts", None, Some(ts("2024-03-10T09:59:59Z")))), Nil,
+          Set(0, 1, 4)),
+        (Seq(("ts", Some(ts("2024-03-12T00:00:00Z")), None)), Nil,
           Set(1, 2, 3, 4)),
-        (Seq(("ts", None, Some(ts("2024-03-10T09:59:59Z")))), Nil, Set(0, 4)),
+        (Seq(("ts", None, Some(ts("2024-03-08T12:00:00Z")))), Nil, Set(0, 4)),
         // 01:30 PDT and 01:30 PST render alike: file 2 is kept, no row
         (Seq(("ts", Some(ts("2024-11-03T08:30:00Z")),
           Some(ts("2024-11-03T09:30:00Z")))), Nil, Set(2, 4)),
@@ -311,6 +316,75 @@ class Round15Spec extends SparkSpec {
         }
       }
     } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
+  /** Run `body` with the session time zone set to `zone`. */
+  private def inZone[T](zone: String)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try body finally spark.conf.set("spark.sql.session.timeZone", prev)
+  }
+
+  /** A logged table, one file per batch, with stats on `ts`. */
+  private def tsTable(prefix: String, batches: Seq[String]*): String = {
+    import java.sql.Timestamp
+    import java.time.Instant
+    val s = spark
+    import s.implicits._
+    val dir = tmp(prefix).toString
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val df = b.map(u => Timestamp.from(Instant.parse(u))).toDF("ts")
+        .repartition(1)
+      if (i == 0) TxLog.commitOverwrite(spark, dir, df, statsCols = Seq("ts"))
+      else TxLog.commitAppend(spark, dir, df, statsCols = Seq("ts"))
+    }
+    dir
+  }
+
+  test("timestamp stats pruning keeps a match across the fall-back hour and across session zones") {
+    import java.sql.Timestamp
+    import java.time.Instant
+    def at(u: String) = Timestamp.from(Instant.parse(u))
+    // widened 36 h upward, this bound passes year 9999: unbounded
+    val end = at("9999-12-31T23:59:59Z")
+    // 09:10Z is 01:10 PST and records max "2024-11-03 01:10:00"; the
+    // bound 08:50Z is 01:50 PDT and renders "2024-11-03 01:50:00"
+    inZone("America/Los_Angeles") {
+      val dir = tsTable("r15tsdst", Seq("2024-11-03T09:10:00Z"))
+      val bound = at("2024-11-03T08:50:00Z")
+      assert(TxLog.read(spark, dir).filter(col("ts") >= bound).count() == 1)
+      assert(TxLog.countWhere(spark, dir, Seq(("ts", bound, end))) == 1)
+    }
+    // stats rendered under UTC ("2024-06-01 12:00:00"), probed under
+    // UTC+14, where the bound 11:00Z renders "2024-06-02 01:00:00"
+    val dir = inZone("UTC")(tsTable("r15tszone", Seq("2024-06-01T12:00:00Z")))
+    inZone("Pacific/Kiritimati") {
+      val bound = at("2024-06-01T11:00:00Z")
+      assert(TxLog.read(spark, dir).filter(col("ts") >= bound).count() == 1)
+      assert(TxLog.countWhere(spark, dir, Seq(("ts", bound, end))) == 1)
+      // a bound past the slack still prunes the file
+      val late = at("2024-06-03T12:00:01Z")
+      assert(TxLog.countWhereDetailed(spark, dir, Seq(("ts", late, end)),
+        None) == ((0L, Nil)))
+    }
+  }
+
+  test("minMax answers a timestamp column by scanning: the true latest instant across the fall-back hour") {
+    import java.sql.Timestamp
+    import java.time.Instant
+    inZone("America/Los_Angeles") {
+      // 08:30Z is 01:30 PDT, 09:10Z is 01:10 PST: the later instant
+      // has the smaller local string
+      val dir = tsTable("r15tsmm", Seq("2024-11-03T08:30:00Z"),
+        Seq("2024-11-03T09:10:00Z"))
+      val (mm, scanned) = TxLog.minMaxDetailed(spark, dir, Seq("ts"), None)
+      val r = mm.head()
+      assert(r.getTimestamp(0).toInstant ==
+        Instant.parse("2024-11-03T08:30:00Z"))
+      assert(r.getTimestamp(1).toInstant ==
+        Instant.parse("2024-11-03T09:10:00Z"))
+      assert(scanned.size == 2)
+    }
   }
 
   test("batch txlog source: versionAsOf and timestampAsOf time travel") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -55,6 +57,92 @@ class Round16Spec extends SparkSpec {
       Seq(("part", Some("00:00:00"), Some("00:00:00"))))
     assert(kept.nonEmpty && kept.size < snap.files.size,
       s"partition predicate kept ${kept.size} of ${snap.files.size}")
+  }
+
+  /** A hive tree of `dirs` top-level `part=` directories, one data
+    * file each: one hive-escaped value (`a:b`), one with a space, the
+    * rest plain. Spark's own write leaves `_SUCCESS` and `.crc` files;
+    * a top-level and a nested `_tmp` directory each hold a copy of a
+    * data file that must never register. */
+  private def convertTree(dirs: Int): String = {
+    val s = spark
+    import s.implicits._
+    val root = tmp("r16walk").toString + "/t"
+    val values = Seq("a:b", "has space") ++ (2 until dirs).map(i => f"p$i%02d")
+    values.zipWithIndex
+      .flatMap { case (v, i) => Seq((i * 10L, v), (i * 10L + 7, v)) }
+      .toDF("k", "part").repartition(1)
+      .write.partitionBy("part").parquet(root)
+    val base = java.nio.file.Paths.get(root)
+    val aFile = Files.list(base.resolve("part=p02")).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    for (junk <- Seq(base.resolve("_tmp"), base.resolve("part=p02/_tmp"))) {
+      Files.createDirectories(junk)
+      Files.copy(aFile, junk.resolve("leftover.parquet"))
+    }
+    root
+  }
+
+  /** Register the tree and check it against an independent listing:
+    * every non-hidden file (java.nio walk) registers with its bytes,
+    * its row count, and k/part stats read from the file itself; the
+    * logged read returns what Spark's own parquet read returns.
+    * Returns the job descriptions the convert launched. */
+  private def convertAndCheck(root: String): Seq[String] = {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val base = java.nio.file.Paths.get(root)
+    val onDisk = Files.walk(base).iterator().asScala
+      .filter(Files.isRegularFile(_)).map(base.relativize(_))
+      .filterNot(_.iterator().asScala.map(_.toString)
+        .exists(sg => sg.startsWith("_") || sg.startsWith(".")))
+      .map(rel => rel.toString -> Files.size(base.resolve(rel))).toMap
+    val (_, jobs) = jobDescriptions(
+      TxLog.convertInPlace(s, root, statsCols = Seq("k")))
+    val snap = TxLog.snapshot(s, root)
+    assert(snap.partitionCols == Seq("part"))
+    assert(snap.files.map(_.path).sorted == onDisk.keys.toSeq.sorted)
+    snap.files.foreach { f =>
+      val ks = s.read.parquet(base.resolve(f.path).toString)
+        .select($"k").as[Long].collect()
+      val value = ExternalCatalogUtils.unescapePathName(
+        f.path.split('/').head.stripPrefix("part="))
+      assert(f.bytes.contains(onDisk(f.path)), f.path)
+      assert(f.rows == ks.length, f.path)
+      assert(f.stats("k").min.contains(ks.min.toString) &&
+        f.stats("k").max.contains(ks.max.toString), f.path)
+      assert(f.stats("part").min.contains(value) &&
+        f.stats("part").max.contains(value), f.path)
+    }
+    def rowsOf(df: DataFrame) =
+      df.select($"k", $"part").as[(Long, String)].collect().sorted.toSeq
+    assert(rowsOf(TxLog.read(s, root)) == rowsOf(s.read.parquet(root)))
+    jobs
+  }
+
+  test("convertInPlace: the distributed and the driver listing register every non-hidden file") {
+    import org.apache.commons.io.FileUtils
+    // 65 top-level directories take the distributed walk, 3 the driver
+    // walk; a data file at the root makes the layout ragged, so both
+    // walks must see it and refuse
+    for ((dirs, distributed) <- Seq((65, true), (3, false))) {
+      val root = convertTree(dirs)
+      val stray = java.nio.file.Paths.get(root, "stray.parquet")
+      Files.copy(java.nio.file.Paths.get(root, "_tmp", "leftover.parquet"),
+        stray)
+      val e = intercept[IllegalArgumentException] {
+        TxLog.convertInPlace(spark, root, statsCols = Seq("k"))
+      }
+      assert(e.getMessage.contains("inconsistent partition layout"),
+        e.getMessage)
+      assert(!TxLog.isLogged(spark, root))
+      Files.delete(stray)
+      val jobs = convertAndCheck(root)
+      assert(jobs.contains("txlog:convert-list") == distributed,
+        s"$dirs dirs: $jobs")
+      FileUtils.deleteDirectory(new java.io.File(root).getParentFile)
+    }
   }
 
   // ---- ErrorIfExists / Ignore over plain pre-existing data ----------

@@ -450,7 +450,7 @@ class Round18Spec extends SparkSpec {
       Seq.empty[(Int, Int, Long)].toDF("writer", "seq", "r"))
     val commits = 4
     // writer 0 = a REAL second JVM (own SparkSession, same log dir)
-    val childProc = StressMultiWriter.forkChild(dir, 0, commits)
+    val childProc = MultiWriterChild.forkChild(dir, 0, commits)
     try {
       // wait until the child's first commit lands so the in-process
       // writer genuinely overlaps the remaining ones
@@ -461,7 +461,7 @@ class Round18Spec extends SparkSpec {
         "child process never committed")
       // writer 1 = this JVM, racing the child's claim loop
       (0 until commits).foreach { seq =>
-        val batch = (0 until StressMultiWriter.RowsPerCommit)
+        val batch = (0 until MultiWriterChild.RowsPerCommit)
           .map(r => (1, seq, r.toLong)).toDF("writer", "seq", "r")
         TxLog.commitAppend(s, dir, batch)
       }
@@ -470,7 +470,7 @@ class Round18Spec extends SparkSpec {
       assert(childProc.exitValue() == 0,
         s"child exited ${childProc.exitValue()}")
     } finally if (childProc.isAlive) childProc.destroyForcibly()
-    val errs = StressMultiWriter.check(s, dir, writers = 2,
+    val errs = MultiWriterChild.check(s, dir, writers = 2,
       commits = commits)
     assert(errs.isEmpty, errs.mkString("; "))
   }

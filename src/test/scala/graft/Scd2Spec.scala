@@ -262,6 +262,34 @@ class Scd2Spec extends SparkSpec {
     assert(e3.getMessage.contains("not unique"))
   }
 
+  test("scd2: a null-seq group counts as one distinct seq; the guards run as one scd2-envelope action") {
+    val src = tmp("scd2null").toString
+    val scd = tmp("scd2nullh").toString + "/t"
+    TxLog.commitOverwrite(spark, src, rows((1L, 10L), (2L, 20L)))
+    Scd2.create(spark, src, scd, keys = Seq("id"))
+    val s = spark
+    import s.implicits._
+    def directives(t: (Long, Long, Option[Long])*) =
+      t.toSeq.toDF("id", "v", "seq").withColumn("del", lit(false))
+
+    // two null-seq directives for one key are ambiguous
+    val e = intercept[IllegalArgumentException] {
+      Scd2.applyDirectives(spark, scd,
+        directives((1L, 11L, None), (1L, 12L, None)), "del", "seq")
+    }
+    assert(e.getMessage.contains("duplicate directive"))
+
+    // one null-seq and one valued directive are two distinct seq
+    // values: not a duplicate, and the guards answer in ONE labelled
+    // action — no separate dup-check job
+    val (_, jobs) = jobDescriptions(Scd2.applyDirectives(spark, scd,
+      directives((1L, 11L, None), (1L, 12L, Some(5L))), "del", "seq"))
+    assert(jobs.contains("txlog:scd2-envelope"), jobs)
+    assert(!jobs.contains("txlog:scd2-dup-check"), jobs)
+    assert(payloadSet(Scd2.current(spark, scd)) ==
+      Set((1L, 12L), (2L, 20L)))
+  }
+
   test("scd2: directive plan is keyed — no cartesian, window partitioned by key; snapshotAt prunes append-only refresh files") {
     val src = tmp("scd2plan").toString
     val scd = tmp("scd2planh").toString + "/t"

@@ -54,4 +54,27 @@ abstract class SparkSpec extends AnyFunSuite {
       app.stop()
     }
   }
+
+  /** `body`'s result and the description (`prefix:label`, or "") of
+    * every Spark job it launched. */
+  def jobDescriptions[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+        ()
+      }
+    }
+    org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
+      (r, seen.toArray.map(_.toString).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }

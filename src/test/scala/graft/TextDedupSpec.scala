@@ -257,27 +257,10 @@ class TextDedupSpec extends SparkSpec {
 
   test("components labels every job it launches dedup:components-*") {
     val sc = spark.sparkContext
-    val labels = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        labels.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")); ()
-      }
-    }
-    def jobsOf(op: => Unit): Seq[String] = {
-      org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
-      labels.clear()
-      op
-      org.apache.spark.GraftSparkAccess.waitUntilListenerBusEmpty(sc, 30000)
-      labels.toArray.map(_.asInstanceOf[String]).toSeq
-    }
+    def jobsOf(op: => Unit): Seq[String] = jobDescriptions(op)._2
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L), (7L, 9L), (9L, 8L))
       .toDF("id_a", "id_b")
     sc.setJobDescription("caller")
-    sc.addSparkListener(listener)
     try {
       val fast = jobsOf(graft.operators.Dedup.release(
         graft.operators.Dedup.components(pairs, "id_a", "id_b")))
@@ -294,10 +277,7 @@ class TextDedupSpec extends SparkSpec {
       assert(dist.forall(_.startsWith("dedup:components-")), dist)
       // the caller's own description is restored
       assert(sc.getLocalProperty("spark.job.description") == "caller")
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.setJobDescription(null)
-    }
+    } finally sc.setJobDescription(null)
   }
 
   test("components clusters a chain and separates disjoint groups") {

@@ -66,7 +66,7 @@ ROWS = [
     (62, "pii_scan", "hash"), (63, "sample_weighted", "hash"),
     (64, "q23_cube", "hash"),
     (65, ("dedup_clusters", "dedup_dropdups"), "shared"),
-    (66, "StressDedup -> PLANS.md round 3", "plans"),
+    (66, "sf1 dedup scale run -> PLANS.md round 3", "plans"),
     (67, "q24_pivot", "hash"), (68, "q25_setops", "hash"),
     (69, "q26_funnel", "hash"), (70, "q27_histogram", "hash"),
     (71, "q28_retention", "hash"), (72, "sample_split", "hash"),
@@ -132,7 +132,7 @@ ROWS = [
      "api"),
     (151, "TxLogSpec + Round9Spec (compound skipping) | sources/TxLog.scala",
      "api"),
-    (152, "BandingSpec + StressBanding | operators/Banding.scala", "api"),
+    (152, "BandingSpec | operators/Banding.scala", "api"),
     (153, "q40_percentile_global", "hash"),
     (154, "q41_approx_percentile", "rows"),
     (155, "txn_dml", "hash"),
@@ -201,7 +201,7 @@ ROWS = [
           "api"),
     (197, "Round14Spec (restoreAt + followAggregate) | "
           "sources/TxLog.scala, etl/Medallion.scala", "api"),
-    (198, "Round14Spec + StressMv (MV refresh cost shape) | "
+    (198, "Round14Spec (MV refresh cost shape) | "
           "sources/MaterializedAgg.scala", "api"),
     (199, "txn_stats_agg", "hash"),
     (200, "mv_general", "hash"),
@@ -225,7 +225,8 @@ ROWS = [
      "api"),
     (216, "Round16Spec (partitionBy create) | sources/TxLogStreamSource.scala",
      "api"),
-    (217, "StressConvert parity (PLANS.md round 16)", "plans"),
+    (217, "convertInPlace listing parity -> PLANS.md round 16",
+     "plans"),
     (218, "ann_ivf_seeded", "hash"),
     (219, "Round16Spec (advisory fixes) | sources/TxLog.scala", "api"),
     (220, "Round16Spec (CTAS + time travel) | sources/GraftCatalog.scala",
@@ -252,8 +253,8 @@ ROWS = [
     (234, "media_near_dup_seeded", "hash"),
     (235, "Round18Spec (TBLPROPERTIES/DESCRIBE EXTENDED from the log) "
      "| sources/TxLogDdl.scala", "api"),
-    (236, "StressMultiWriter + Round18Spec (cross-process race) "
-     "| StressMultiWriter.scala", "api"),
+    (236, "Round18Spec (cross-process race) | MultiWriterChild.scala",
+     "api"),
     (237, "Round18Spec (COPY INTO length marker + NULL pad; "
      "EXISTS_DEFAULT drop) | sources/TxLog.scala", "api"),
     (238, "Round18Spec (partition-pure appends + plan-time stats "
