@@ -240,9 +240,11 @@ object Scd2 {
     * commit version). At most one directive per (key, seq) —
     * ambiguity refuses like [[TxLog.applyChanges]]; a directive at or before
     * a touched key's latest recorded `valid_from` refuses
-    * (out-of-order). Checks run in order: an empty batch only
-    * advances the txn marker, then the duplicate refusal, then the
-    * out-of-order one.
+    * (out-of-order). A null seq sorts before every version: next to
+    * a valued directive of its key it is superseded and writes no
+    * segment; a key with only null-seq directives refuses. Checks run
+    * in order: an empty batch only advances the txn marker, then the
+    * duplicate refusal, the null-seq one, then the out-of-order one.
     * Cost shape: one window + two per-key aggregates over the
     * DIRECTIVE relation (the `scd2-envelope` guard action and the
     * firsts), one stats-pruned read of the touched keys'
@@ -284,13 +286,14 @@ object Scd2 {
         col(deleteCol).cast("boolean").as("_scd2_del")): _*))
     }
     try {
-      // ONE action over a per-key aggregate answers all three guards
+      // ONE action over a per-key aggregate answers all the guards
       // before any history work: the key count (a span that nets to
       // zero directives), the duplicate-(key, seq) count — a key is
       // ambiguous iff it holds more directives than distinct seq
       // values, with a null-seq group counting as one more distinct
-      // value (countDistinct skips nulls) — and the key envelope that
-      // prunes the history read
+      // value (countDistinct skips nulls) — one key whose directives
+      // are ALL null-seq (no version to open a segment at), and the
+      // key envelope that prunes the history read
       val perKey = d.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("_scd2_n"),
           countDistinct(col("_scd2_seq")).as("_scd2_nseq"),
@@ -299,6 +302,8 @@ object Scd2 {
         perKey.agg(count(lit(1)).as("_scd2_keys"),
           (count(when(col("_scd2_n") >
             col("_scd2_nseq") + col("_scd2_nullseq"), 1)).as("_scd2_dups")
+            +: min(when(col("_scd2_nseq") === 0L,
+              struct(keys.map(col): _*))).as("_scd2_nullkey")
             +: keys.flatMap(k =>
               Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))): _*)
           .head()
@@ -313,14 +318,24 @@ object Scd2 {
       require(summary.getLong(1) == 0L,
         s"Scd2: duplicate directive for one (${keys.mkString(", ")}, " +
           "seq) — at most one change per key per sequence value")
+      require(summary.isNullAt(2), {
+        val k = summary.getStruct(2)
+        s"Scd2: key (${keys.zipWithIndex.map { case (c, i) =>
+          s"$c=${k.get(i)}" }.mkString(", ")}) has only null-seq " +
+          "directives — no version to open or close a segment at"
+      })
       val bounds = TxLog.envelopeIntervals(summary, keys)
       // per key, version order decides the segments in one window
       // over the DIRECTIVE relation: each upsert opens a segment,
-      // closed by the key's next directive (delete or upsert)
+      // closed by the key's next directive (delete or upsert). A
+      // null-seq directive sorts first and its key also holds a valued
+      // one (refused above otherwise), which supersedes it before any
+      // version — it opens no segment
       val w = Window.partitionBy(keys.map(col): _*)
         .orderBy(col("_scd2_seq"))
       val ordered = d.withColumn("_scd2_next", lead("_scd2_seq", 1).over(w))
-      val segments = ordered.filter(!col("_scd2_del"))
+      val segments = ordered
+        .filter(!col("_scd2_del") && col("_scd2_seq").isNotNull)
         .select(payload.map(col) ++ Seq(
           col("_scd2_seq").as(ValidFrom),
           col("_scd2_next").as(ValidTo),

@@ -1076,12 +1076,6 @@ object TxLog {
       maxRecordsPerFile)
   }
 
-  private def deleteStaged(spark: SparkSession, dir: String,
-      added: Seq[TxFile]): Unit = {
-    val f = fs(spark, new Path(dir))
-    added.foreach(a => f.delete(new Path(dir, a.path), false))
-  }
-
   private def schemaKey(schemaJson: String): Seq[(String, DataType)] =
     DataType.fromJson(schemaJson).asInstanceOf[StructType]
       .fields.map(f => (f.name, f.dataType)).toSeq
@@ -1090,13 +1084,18 @@ object TxLog {
     * private[graft] so tests can interleave writers deterministically.
     * `removeAll = true` → overwrite semantics (re-resolves the remove
     * set against the fresh head on every attempt); explicit `remove` →
-    * compact semantics (conflicts if a concurrent commit removed any). */
+    * compact semantics (conflicts if a concurrent commit removed any).
+    * `staged` names, dir-relative, what the caller wrote for this
+    * commit alone (data files, vector relation dirs): every exit that
+    * does not commit — a replayed `txn`, a conflict, a throw — deletes
+    * exactly those. [[restore]] re-registers existing files and stages
+    * none. */
   private[graft] def commitStaged(spark: SparkSession, dir: String,
       op: String, added: Seq[TxFile], remove: Seq[String],
       removeAll: Boolean, schemaJson: String,
       txn: Option[(String, Long)],
       mergeSchema: Boolean = false,
-      ownsAdded: Boolean = true,
+      staged: Seq[String],
       expectDv: Map[String, Option[String]] = Map.empty,
       ddlState: Option[(Map[String, String], Seq[String])] = None,
       freshPhys: Map[String, String] = Map.empty,
@@ -1109,11 +1108,13 @@ object TxLog {
       constraintsOut: Option[Map[String, String]] = None,
       conflictIfAdded: Option[Seq[TxFile] => Seq[String]] = None,
       txnsMulti: Seq[(String, Long)] = Nil): Long = {
-    // `ownsAdded = false`: the added files are PRE-EXISTING table data
-    // ([[restore]] re-registers an old snapshot's files) — abort paths
-    // must never delete them
-    def abortCleanup(): Unit =
-      if (ownsAdded) deleteStaged(spark, dir, added)
+    def abortCleanup(): Unit = {
+      val d = fs(spark, new Path(dir))
+      staged.foreach(p => d.delete(new Path(dir, p), true))
+    }
+    val f = fs(spark, logPath(dir))
+    var landed = false
+    try {
     // test-only interleave point: lets a suite commit CONCURRENT work
     // deterministically between a DML's read phase and its claim
     // (cleared before it runs, so the hook's own commits never
@@ -1122,16 +1123,16 @@ object TxLog {
       val h = testBeforeClaim.get()
       if (h.isDefined) { testBeforeClaim.set(None); h.get.apply() }
     }
-    val f = fs(spark, logPath(dir))
     var attempt = 0
     while (true) {
       val base =
         if (isLogged(spark, dir)) Some(snapshot(spark, dir)) else None
-      for ((app, b) <- txn; bs <- base)
-        if (bs.txns.get(app).exists(_ >= b)) {
-          abortCleanup() // replayed batch: no-op
-          return bs.version
-        }
+      val replayed = base.filter(bs => txn.exists { case (app, b) =>
+        bs.txns.get(app).exists(_ >= b) })
+      if (replayed.isDefined) { // replayed batch: no-op
+        abortCleanup()
+        return replayed.get.version
+      }
       // COPY INTO marker conflict: a CONCURRENT commit already
       // recorded one of this batch's source files — committing would
       // duplicate its rows. Refuse loudly; a rerun re-filters against
@@ -1155,7 +1156,6 @@ object TxLog {
                   yield m != h).getOrElse(false)) => app
         }
         if (dup.nonEmpty) {
-          abortCleanup()
           throw new java.util.ConcurrentModificationException(
             "TxLog: source file(s) already copied by a concurrent " +
               s"commit: ${dup.take(3).mkString(", ")} — rerun COPY " +
@@ -1172,7 +1172,6 @@ object TxLog {
       for (fn <- conflictIfAdded; bs <- base) {
         val hit = fn(bs.files)
         if (hit.nonEmpty) {
-          abortCleanup()
           throw new java.util.ConcurrentModificationException(
             "TxLog: file(s) intersecting this operation's read " +
               "predicate were added by a concurrent commit: " +
@@ -1188,7 +1187,6 @@ object TxLog {
       if (op == "append") base.foreach { bs =>
         if (schemaKey(bs.schemaJson) != schemaKey(schemaJson)) {
           if (!mergeSchema) {
-            abortCleanup()
             throw new IllegalArgumentException(
               s"TxLog: append schema does not match table schema at $dir" +
                 " (pass mergeSchema = true to widen)")
@@ -1200,7 +1198,6 @@ object TxLog {
           val conflicts = newT.fields.filter(fl =>
             baseM.get(fl.name).exists(_ != fl.dataType))
           if (conflicts.nonEmpty) {
-            abortCleanup()
             throw new IllegalArgumentException(
               s"TxLog: mergeSchema cannot change column types: " +
                 conflicts.map(_.name).mkString(", "))
@@ -1214,7 +1211,6 @@ object TxLog {
           stagedFields.foreach { sf =>
             val dropped = newFields.filter(fl => sf.contains(fl.name))
             if (dropped.nonEmpty) {
-              abortCleanup()
               throw new java.util.ConcurrentModificationException(
                 s"TxLog: column(s) ${dropped.map(_.name).mkString(", ")} " +
                   "dropped by a concurrent commit")
@@ -1228,7 +1224,6 @@ object TxLog {
             reserved.contains(phys) && !freshPhys.contains(fl.name)
           }
           if (clash.nonEmpty) {
-            abortCleanup()
             throw new java.util.ConcurrentModificationException(
               s"TxLog: physical name(s) ${clash.map(_.name).mkString(", ")} " +
                 "reserved by a concurrent schema change")
@@ -1248,7 +1243,6 @@ object TxLog {
         val live = base.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
         val gone = remove.filterNot(live)
         if (gone.nonEmpty) {
-          abortCleanup()
           throw new java.util.ConcurrentModificationException(
             s"TxLog: files removed by a concurrent commit: " +
               gone.take(3).mkString(", "))
@@ -1266,7 +1260,6 @@ object TxLog {
           case (p, d) if cur.get(p).exists(_ != d) => p
         }
         if (moved.nonEmpty) {
-          abortCleanup()
           throw new java.util.ConcurrentModificationException(
             s"TxLog: deletion vector changed by a concurrent commit " +
               s"on: ${moved.take(3).mkString(", ")}")
@@ -1287,7 +1280,6 @@ object TxLog {
           case (c, h) if cur.get(c).flatMap(_.high) != h => c
         }
         if (moved.nonEmpty) {
-          abortCleanup()
           throw new java.util.ConcurrentModificationException(
             s"TxLog: identity watermark for ${moved.mkString(", ")} " +
               "moved by a concurrent commit — regenerate and retry")
@@ -1317,18 +1309,18 @@ object TxLog {
             identity = identityOut, generated = generatedOut,
             defaults = defaultsOut, txnsMulti = txnsMulti,
             ts = nextCommitTs(f, dir, v)))) {
+        landed = true
         if (v > 0 && v % CheckpointInterval == 0)
           writeCheckpoint(spark, dir, v)
         return v
       }
       attempt += 1 // lost the slot: rebase on the new head and retry
-      if (attempt >= MaxAttempts) {
-        abortCleanup()
+      if (attempt >= MaxAttempts)
         throw new java.io.IOException(
           s"TxLog: gave up after $MaxAttempts contended commit attempts")
-      }
     }
     throw new IllegalStateException("unreachable")
+    } catch { case e: Throwable if !landed => abortCleanup(); throw e }
   }
 
   /** Register a pre-existing PLAIN-parquet dataset's files in a new
@@ -1593,7 +1585,8 @@ object TxLog {
     // under identity physical names, so any column mapping (and its
     // retired-name reservations) resets with the schema
     commitStaged(spark, dir, "overwrite", added, Nil, removeAll = true,
-      schemaJson, txn, ddlState = Some((Map.empty, Nil)),
+      schemaJson, txn, staged = added.map(_.path),
+      ddlState = Some((Map.empty, Nil)),
       identityOut = if (idMap.isEmpty) None
         else Some(identityAfter(idMap, added, c => c)),
       expectIdentity = expectId,
@@ -1679,7 +1672,7 @@ object TxLog {
         // presentation (static+dynamic pruning) alive across appends
         partCols = snap0.map(_.partitionCols).getOrElse(Nil))
     commitStaged(spark, dir, "append", added, Nil, removeAll = false,
-      schemaJson, txn, mergeSchema,
+      schemaJson, txn, mergeSchema, staged = added.map(_.path),
       freshPhys = freshPhys, stagedFields = baseFields,
       identityOut = if (idMap.isEmpty) None
         else Some(identityAfter(idMap, added,
@@ -1987,7 +1980,7 @@ object TxLog {
     // pointer, or a concurrent merge-on-read DML (same paths stay
     // live) would be silently materialized away
     commitStaged(spark, dir, "compact", added, scope.map(_.path),
-      removeAll = false, schemaJson, None,
+      removeAll = false, schemaJson, None, staged = added.map(_.path),
       expectDv = scope.map(f => f.path -> f.dv).toMap)
   }
 
@@ -2984,19 +2977,20 @@ object TxLog {
       newMapping, newRetired, snap.version)
   }
 
-  // ---- Row-level mutations (copy-on-write) -------------------------
+  // ---- Row-level mutations -----------------------------------------
   //
   // The Delta DML surface (DELETE / UPDATE / MERGE INTO) on the same
-  // commit protocol: find the files that actually hold affected rows
-  // (stats-in-log pruning first, then an exact match scan), rewrite
-  // ONLY those files, and commit (remove = touched, add = rewrites) —
-  // untouched files survive by path, so a predicate that hits one
-  // day's files rewrites one day's files no matter how large the
-  // table is. Isolation is write-serializable (Delta's default): a
-  // concurrent commit that removed one of the touched files conflicts
-  // (ConcurrentModificationException → caller retries on the new
-  // snapshot); a concurrent APPEND commutes, so rows appended while a
-  // DELETE runs are not deleted even if they match its predicate.
+  // commit protocol. Every verb is locate → build rows → stage:
+  // [[locatePredicate]] or [[locateKeyed]] find the files that
+  // actually hold affected rows (stats-in-log pruning first, then an
+  // exact match probe), the verb builds what replaces them, and
+  // [[stageTouched]] either rewrites ONLY those files (copy-on-write)
+  // or retires the rows through a deletion vector (merge-on-read) in
+  // one commit — untouched files survive by path. Isolation is
+  // write-serializable (Delta's default): a concurrent commit that
+  // removed or re-vectored a touched file, or added one the read
+  // could have matched, conflicts (ConcurrentModificationException →
+  // the caller retries on the new snapshot).
 
   /** Conservative per-column [lo, hi] constraints implied by a
     * predicate, for stats-in-log file skipping: the predicate is
@@ -3072,13 +3066,21 @@ object TxLog {
     }
   }
 
-  /** What [[locatePredicate]] found for one predicate DML, handed to
-    * its staging: `touched` each file key holding a live row matching
-    * the predicate → its count of such rows, `keepFiles` those files'
-    * entries, and `guard` the predicate's `conflictIfAdded` check. */
-  private final case class PredicateLocate(snap: TxSnapshot,
+  /** What a DML verb's locate step found, handed to [[stageTouched]]:
+    * `touched` each file key holding a live matched row → its count of
+    * such rows ([[mergeInto]] finds its files without counting and
+    * passes none), `keepFiles` those files' entries, and `guard` the
+    * read's `conflictIfAdded` check. */
+  private final case class Located(snap: TxSnapshot,
       touched: Map[String, Long], keepFiles: Seq[TxFile],
-      guard: Seq[TxFile] => Seq[String])
+      guard: Seq[TxFile] => Seq[String]) {
+    /** The touched files' live rows. */
+    def live(spark: SparkSession, dir: String): DataFrame =
+      readSnapshot(spark, dir, snap.copy(files = keepFiles))
+    /** [[live]] tagged with each row's (`TagFile`, `TagIdx`) position. */
+    def tagged(spark: SparkSession, dir: String): DataFrame =
+      readSnapshotTagged(spark, dir, snap.copy(files = keepFiles))
+  }
 
   /** The locate step of every predicate DML ([[delete]],
     * [[replaceWhere]], [[update]], [[deleteMor]], [[updateMor]]) — the
@@ -3092,7 +3094,7 @@ object TxLog {
     * stats can intersect the predicate (files without stats stay
     * conservatively conflicting) — driver-side, metadata-only. */
   private def locatePredicate(spark: SparkSession, dir: String,
-      snap: TxSnapshot, pred: Column): PredicateLocate = {
+      snap: TxSnapshot, pred: Column): Located = {
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     val intervals = skippingBounds(spark, schema, pred).toSeq
       .map { case (c, (lo, hi)) => (c, lo, hi) }
@@ -3104,7 +3106,7 @@ object TxLog {
           .filter(pred))
       }
     val seen = snap.files.map(_.path).toSet
-    PredicateLocate(snap, touched,
+    Located(snap, touched,
       snap.files.filter(f => touched.contains(fileKey(snap, f))),
       files => prunedSnapshotFiles(spark, snap.copy(files =
         files.filterNot(f => seen.contains(f.path))), intervals).map(_.path))
@@ -3140,41 +3142,103 @@ object TxLog {
     (statsCols ++ inheritStats(files, Nil, snap).filter(present)).distinct
   }
 
+  /** The ONE stage-and-commit step of every DML verb: the verb located
+    * `at` and built its rows; this step writes them and commits `op`.
+    *  - copy-on-write (`retire` None): `rows` are the touched files'
+    *    rewritten contents plus any new rows, and the commit swaps the
+    *    touched files for them;
+    *  - merge-on-read (`retire` the verb's matched rows from
+    *    [[Located.tagged]], which has already subtracted standing
+    *    vectors, so a repeated key never double-counts): ONE
+    *    vector relation (`stage-dv`) holds their positions merged with
+    *    the touched files' standing vectors, the touched entries re-add
+    *    pointing at it (generation-2 readers), and `rows` holds only
+    *    the new rows (update images, inserts).
+    * Both pin the touched files' vector pointers and refuse files a
+    * concurrent commit added inside the read (`at.guard`). `identity`:
+    * the verb stages caller-supplied rows, so the identity columns are
+    * statted and their watermark advances under a pin. No touched file
+    * and no rows commits no data (a supplied `txn` still advances,
+    * metadata-only); every file and vector staged here is deleted on
+    * any exit that does not commit. Logs one INFO line: the op, the
+    * path taken, the touched files and matched rows. */
+  private def stageTouched(spark: SparkSession, dir: String, at: Located,
+      op: String, rows: Option[DataFrame], retire: Option[DataFrame],
+      statsCols: Seq[String], txn: Option[(String, Long)],
+      identity: Boolean): Long = {
+    val Located(snap, touched, keepFiles, guard) = at
+    if (keepFiles.isEmpty && rows.isEmpty)
+      return txn.fold(snap.version)(commitTxnAdvance(spark, dir, _))
+    val byKey = keepFiles.map(f => fileKey(snap, f) -> f).sortBy(_._1)
+    val dvPath = retire.filter(_ => keepFiles.nonEmpty)
+      .map(_ => s"$DvDir/${UUID.randomUUID().toString.take(12)}")
+    log.info(s"txlog $dir@v${snap.version}: $op " +
+      s"${if (dvPath.isDefined) "vectors" else "rewrite"} " +
+      s"files=${keepFiles.size} matched=" +
+      (if (touched.isEmpty && keepFiles.nonEmpty) "?" else touched.values.sum))
+    val added = try {
+      for (p <- dvPath; matched <- retire) {
+        val keys = byKey.map(_._1)
+        val pairs = matched.select(col(TagFile).as("file"),
+          col(TagIdx).as("row_index"))
+        val oldDvs = byKey.flatMap(_._2.dv).distinct
+        val merged =
+          if (oldDvs.isEmpty) pairs
+          else pairs.unionByName(
+            spark.read.parquet(oldDvs.map(resolveData(dir, _)): _*)
+              .filter(col("file").isInCollection(keys)))
+        // metadata-known output size → file count; one file until
+        // vectors grow to millions of pairs
+        val total = touched.values.sum + keepFiles.map(_.dvRows).sum
+        described(spark, "stage-dv") {
+          merged.repartition(math.min(32L, total / DvBroadcastRows + 1).toInt)
+            .write.parquet(s"$dir/$p")
+        }
+      }
+      rows.fold(Seq.empty[TxFile])(stageData(spark, dir, _,
+        (inheritStats(keepFiles, statsCols, snap) ++
+          (if (identity) snap.identity.keys else Nil)).distinct,
+        snap.mapping, partCols = snap.partitionCols)._1)
+    } catch { case e: Throwable =>
+      dvPath.foreach(p => fs(spark, new Path(dir)).delete(new Path(dir, p), true))
+      throw e
+    }
+    val entries = dvPath.toSeq.flatMap(p => byKey.map { case (k, f) =>
+      f.copy(dv = Some(p), dvRows = f.dvRows + touched(k)) })
+    commitStaged(spark, dir, op, entries ++ added, keepFiles.map(_.path),
+      removeAll = false, snap.schemaJson, txn,
+      staged = dvPath.toSeq ++ added.map(_.path),
+      expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
+      minReader = dvPath.map(_ => 2),
+      identityOut =
+        if (!identity || snap.identity.isEmpty) None
+        else Some(identityAfter(snap.identity, added, snap.phys)),
+      expectIdentity =
+        if (identity) snap.identity.map { case (c, s) => c -> s.high }
+        else Map.empty,
+      conflictIfAdded = Some(guard))
+  }
+
   /** Row-level DELETE (Delta's `DELETE FROM t WHERE …`): remove the
     * rows where `pred` is TRUE (null- and false-rows survive, SQL
     * semantics) by rewriting only the files that hold matching rows.
-    * Returns the committed version — or the CURRENT version unchanged
-    * when nothing matched (no empty commit). */
+    * Nothing matched commits nothing. */
   def delete(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
       statsCols: Seq[String] = Nil): Long = {
     val at = locatePredicate(spark, dir, snapshot(spark, dir), pred)
-    val (snap, keepFiles) = (at.snap, at.keepFiles)
-    if (keepFiles.isEmpty) return snap.version
-    val kept = readSnapshot(spark, dir, snap.copy(files = keepFiles))
-      .filter(!pred.eqNullSafe(true))
-    val (added, _) = stageData(spark, dir, kept,
-      inheritStats(keepFiles, statsCols, snap), snap.mapping,
-      partCols = snap.partitionCols)
-    // pin the touched files' vector pointers: a concurrent
-    // merge-on-read DML keeps the path LIVE while changing its rows —
-    // liveness alone would let this rewrite silently undo it
-    commitStaged(spark, dir, "delete", added, keepFiles.map(_.path),
-      removeAll = false, snap.schemaJson, None,
-      expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-      conflictIfAdded = Some(at.guard))
+    stageTouched(spark, dir, at, "delete",
+      Option.when(at.keepFiles.nonEmpty)(
+        at.live(spark, dir).filter(!pred.eqNullSafe(true))),
+      retire = None, statsCols, None, identity = false)
   }
 
   /** Atomic partial overwrite (Delta's `replaceWhere`): ONE commit
     * that deletes every row matching `pred` and inserts `df` in its
-    * place — the idempotent re-load of a partition/date slice
-    * ("rewrite yesterday") without ever exposing a state where the
-    * slice is missing or doubled. Every incoming row must satisfy
-    * `pred` (Delta's constraint — rows outside the slice would make
-    * the operation non-idempotent and silently co-mingle), validated
+    * place — the idempotent re-load of a partition/date slice. Every
+    * incoming row must satisfy `pred` (Delta's constraint), validated
     * BEFORE anything stages. Cost: the files actually holding
-    * matching rows rewrite (stats-pruned + exact-scan, like DELETE)
-    * plus the new batch stages; untouched files survive by path.
+    * matching rows rewrite, plus the new batch stages.
     * Also reachable through the DataSource:
     * `df.write.format("txlog").mode("overwrite")
     * .option("replaceWhere", "<sql>")`. */
@@ -3199,23 +3263,11 @@ object TxLog {
     enforceGenerated(snap, src)
     // nothing matched still stages: the batch inserts into an empty slice
     val at = locatePredicate(spark, dir, snap, pred)
-    val keepFiles = at.keepFiles
-    val survivors =
-      if (keepFiles.isEmpty) src
-      else readSnapshot(spark, dir, snap.copy(files = keepFiles))
-        .filter(!pred.eqNullSafe(true))
-        .unionByName(src)
-    val (added, _) = stageData(spark, dir, survivors,
-      (inheritStats(keepFiles, statsCols, snap) ++
-        snap.identity.keys).distinct, snap.mapping,
-      partCols = snap.partitionCols)
-    commitStaged(spark, dir, "merge", added, keepFiles.map(_.path),
-      removeAll = false, snap.schemaJson, None,
-      expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-      identityOut = if (snap.identity.isEmpty) None
-        else Some(identityAfter(snap.identity, added, snap.phys)),
-      expectIdentity = snap.identity.map { case (c, s) => c -> s.high },
-      conflictIfAdded = Some(at.guard))
+    stageTouched(spark, dir, at, "merge", Some(
+      if (at.keepFiles.isEmpty) src
+      else at.live(spark, dir).filter(!pred.eqNullSafe(true))
+        .unionByName(src)),
+      retire = None, statsCols, None, identity = true)
   }
 
   /** Refuse assignments (an UPDATE's SET map, a MERGE clause's
@@ -3241,11 +3293,9 @@ object TxLog {
   }
 
   /** Row-level UPDATE (Delta's `UPDATE t SET … WHERE …`): rows where
-    * `pred` is TRUE get each `set` expression (cast back to the
-    * column's declared type — an UPDATE never mutates the schema);
-    * all other rows and all untouched files survive byte-identical.
-    * Returns the committed version, or the current version when
-    * nothing matched. */
+    * `pred` is TRUE get each `set` expression ([[updatedImage]]) in a
+    * rewrite of the files holding them; all other rows and all
+    * untouched files survive byte-identical. */
   def update(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
@@ -3259,20 +3309,13 @@ object TxLog {
       "TxLog: table columns collide with reserved name _graft_upd")
     checkAssignments(snap, schema, set, "UPDATE")
     val at = locatePredicate(spark, dir, snap, pred)
-    val keepFiles = at.keepFiles
-    if (keepFiles.isEmpty) return snap.version
-    val rewritten = updatedImage(spark, snap, schema,
-      readSnapshot(spark, dir, snap.copy(files = keepFiles))
+    val rewritten = Option.when(at.keepFiles.nonEmpty)(updatedImage(spark,
+      snap, schema, at.live(spark, dir)
         .withColumn("_graft_upd", pred.eqNullSafe(true)),
-      set, Some("_graft_upd"))
-    enforceConstraints(spark, dir, rewritten)
-    val (added, _) = stageData(spark, dir, rewritten,
-      inheritStats(keepFiles, statsCols, snap), snap.mapping,
-      partCols = snap.partitionCols)
-    commitStaged(spark, dir, "update", added, keepFiles.map(_.path),
-      removeAll = false, snap.schemaJson, None,
-      expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-      conflictIfAdded = Some(at.guard))
+      set, Some("_graft_upd")))
+    rewritten.foreach(enforceConstraints(spark, dir, _))
+    stageTouched(spark, dir, at, "update", rewritten, retire = None,
+      statsCols, None, identity = false)
   }
 
   /** The UPDATE image of `rows`: each `set` value (cast back to its
@@ -3310,83 +3353,27 @@ object TxLog {
     tagged.groupBy(TagFile).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  /** Stage ONE vector relation covering this DML's matches merged
-    * with the touched files' existing vectors, and build the updated
-    * file entries. `matched` must be `(TagFile, TagIdx)` pairs of
-    * LIVE rows (already-deleted rows excluded by the tagged read) and
-    * `newCnt` their [[rowsPerFile]] (non-empty). Returns (vector path,
-    * the re-added entries, the dv pointers to pin at commit). */
-  private def stageDv(spark: SparkSession, dir: String, snap: TxSnapshot,
-      matched: DataFrame, newCnt: Map[String, Long])
-      : (String, Seq[TxFile], Map[String, Option[String]]) = {
-    val byPath = snap.files.map(f => fileKey(snap, f) -> f).toMap
-    val touched = newCnt.keys.toSeq.sorted
-    val pairs = matched.select(col(TagFile).as("file"),
-      col(TagIdx).as("row_index"))
-    val oldDvs = touched.flatMap(p => byPath(p).dv).distinct
-    val merged =
-      if (oldDvs.isEmpty) pairs
-      else pairs.unionByName(
-        spark.read.parquet(oldDvs.map(p => resolveData(dir, p)): _*)
-          .filter(col("file").isInCollection(touched)))
-    // metadata-known output size → file count; one file until vectors
-    // grow to millions of pairs
-    val total = newCnt.values.sum +
-      touched.map(p => byPath(p).dvRows).sum
-    val parts = math.min(32L, total / DvBroadcastRows + 1).toInt
-    val dvPath = s"$DvDir/${UUID.randomUUID().toString.take(12)}"
-    merged.repartition(parts).write.parquet(s"$dir/$dvPath")
-    val entries = touched.map { p =>
-      val f = byPath(p)
-      f.copy(dv = Some(dvPath), dvRows = f.dvRows + newCnt(p))
-    }
-    // pin by ENTRY PATH (what commitStaged compares against the head);
-    // `touched` holds bare names, which differ for cloned entries
-    (dvPath, entries, touched.map(p => byPath(p).path -> byPath(p).dv).toMap)
-  }
-
-  /** Merge-on-read DELETE (Delta's deletion-vector delete): the
-    * matched rows' (file, row position) pairs are recorded in a
-    * vector relation and SUBTRACTED on read — no data file is
-    * rewritten, so delete cost scales with the MATCHED ROWS, not the
-    * size of the files that hold them (CoW [[delete]] rewrites a
-    * whole file to drop one row; at 1 GB files and point deletes
-    * that is a 10⁹× write amplification this path removes). The
-    * commit re-adds each touched file entry with the new vector
-    * pointer; stats stay as written (now upper bounds — pruning
-    * remains conservative, and [[countWhere]] scans dv-bearing
-    * files instead of trusting their logged row count). [[compact]]
-    * materializes vectors away; [[vacuum]] collects superseded
-    * vector relations. Concurrency: write-serializable — the commit
-    * pins each touched file's vector pointer, so two merge-on-read
-    * DMLs racing on the same FILE conflict (CoW's liveness check
-    * cannot see same-path vector moves), while DMLs on disjoint
-    * files and appends commute. */
+  /** Merge-on-read DELETE (Delta's deletion-vector delete): [[delete]]'s
+    * semantics, but the matched rows' positions join a deletion vector
+    * SUBTRACTED on read and no data file is rewritten — delete cost
+    * scales with the MATCHED ROWS, not the size of the files holding
+    * them (a point delete in a 1 GB file writes one vector pair, not
+    * the file). Stats stay as written (upper bounds: pruning stays
+    * conservative, [[countWhere]] scans vectored files). [[compact]]
+    * materializes vectors away; [[vacuum]] collects superseded ones. */
   def deleteMor(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column): Long = {
     val at = locatePredicate(spark, dir, snapshot(spark, dir), pred)
-    val snap = at.snap
-    if (at.touched.isEmpty) return snap.version
-    val (dvPath, entries, expect) = stageDv(spark, dir, snap,
-      readSnapshotTagged(spark, dir, snap.copy(files = at.keepFiles))
-        .filter(pred).select(col(TagFile), col(TagIdx)), at.touched)
-    try commitStaged(spark, dir, "delete-dv", entries,
-      entries.map(_.path), removeAll = false, snap.schemaJson, None,
-      ownsAdded = false, expectDv = expect, minReader = Some(2),
-      conflictIfAdded = Some(at.guard))
-    catch { case e: Throwable =>
-      fs(spark, new Path(dir)).delete(new Path(dir, dvPath), true)
-      throw e
-    }
+    stageTouched(spark, dir, at, "delete-dv", rows = None,
+      retire = Some(at.tagged(spark, dir).filter(pred)), Nil, None,
+      identity = false)
   }
 
-  /** Merge-on-read UPDATE: the matched rows' positions join the
-    * touched files' deletion vectors and their UPDATED images are
-    * appended as new files — one commit, no touched file rewritten
-    * (Delta's DV update shape). Write cost scales with the matched
-    * rows (vector pairs + updated images), not the touched files'
-    * size. CHECK constraints validate the updated images before
-    * anything is staged. */
+  /** Merge-on-read UPDATE (Delta's DV update shape): the matched rows'
+    * positions join the touched files' deletion vectors and their
+    * UPDATED images append as new files. Write cost scales with the
+    * matched rows (vector pairs + images), not the touched files'
+    * size. CHECK constraints validate the images before staging. */
   def updateMor(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
@@ -3395,27 +3382,14 @@ object TxLog {
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     checkAssignments(snap, schema, set, "UPDATE")
     val at = locatePredicate(spark, dir, snap, pred)
-    if (at.touched.isEmpty) return snap.version
-    val matchedRows = readSnapshotTagged(spark, dir,
-      snap.copy(files = at.keepFiles)).filter(pred).cache()
+    val matched = at.tagged(spark, dir).filter(pred).cache()
     try {
-      val updated = updatedImage(spark, snap, schema, matchedRows, set, None)
-      enforceConstraints(spark, dir, updated)
-      val (dvPath, entries, expect) = stageDv(spark, dir, snap,
-        matchedRows.select(col(TagFile), col(TagIdx)), at.touched)
-      val (added, _) = stageData(spark, dir, updated,
-        inheritStats(entries, statsCols, snap), snap.mapping,
-        partCols = snap.partitionCols)
-      try commitStaged(spark, dir, "update-dv", entries ++ added,
-        entries.map(_.path), removeAll = false, snap.schemaJson, None,
-        ownsAdded = false, expectDv = expect, minReader = Some(2),
-        conflictIfAdded = Some(at.guard))
-      catch { case e: Throwable =>
-        fs(spark, new Path(dir)).delete(new Path(dir, dvPath), true)
-        deleteStaged(spark, dir, added)
-        throw e
-      }
-    } finally matchedRows.unpersist()
+      val updated = Option.when(at.keepFiles.nonEmpty)(
+        updatedImage(spark, snap, schema, matched, set, None))
+      updated.foreach(enforceConstraints(spark, dir, _))
+      stageTouched(spark, dir, at, "update-dv", updated, Some(matched),
+        statsCols, None, identity = false)
+    } finally matched.unpersist()
   }
 
   /** MERGE INTO (upsert): [[applyChanges]] with no deletes. For each
@@ -3429,10 +3403,7 @@ object TxLog {
     * matching a source key is replaced by that ONE source row
     * (primary-key upsert semantics). Only files holding matched keys
     * are rewritten and inserts ride in the same staged write: ONE
-    * `merge` commit, guarded against concurrent appends inside the
-    * source's key envelope. An empty source is a no-op (with `txn`,
-    * a metadata-only marker advance); a replayed `txn` returns the
-    * current version. */
+    * `merge` commit. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keyCols: Seq[String], statsCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long =
@@ -3448,13 +3419,10 @@ object TxLog {
     * case). At most one directive per key (ambiguity refused);
     * `txn` gives exactly-once under streaming replay.
     *
-    * Cost shape ([[locateKeyed]]): candidates stats-prune by the
-    * directive keys' envelope, only files actually holding a directive
-    * key rewrite, survivors anti-join on the (directive-sized) key
-    * relation. CHECK constraints validate the INSERTED rows only
-    * (survivors were already valid; deletes add nothing). A concurrent
-    * append of a file intersecting the key envelope refuses the commit
-    * (`ConcurrentModificationException`). */
+    * Cost shape ([[locateKeyed]]): only files actually holding a
+    * directive key rewrite, survivors anti-join on the
+    * (directive-sized) key relation. CHECK constraints validate the
+    * INSERTED rows only (survivors were already valid). */
   def applyChanges(spark: SparkSession, dir: String, changes: DataFrame,
       keyCols: Seq[String], deleteCol: String,
       statsCols: Seq[String] = Nil,
@@ -3830,22 +3798,9 @@ object TxLog {
       case (Some(a), Some(b)) => Some(a.unionByName(b))
       case (a, b) => a.orElse(b)
     }
-    stagedDf match {
-      case None => snap.version
-      case Some(df) =>
-        enforceConstraints(spark, dir, df)
-        val (added, _) = stageData(spark, dir, df,
-          (inheritStats(keepFiles, statsCols, snap) ++
-            snap.identity.keys).distinct, snap.mapping,
-          partCols = snap.partitionCols)
-        commitStaged(spark, dir, op, added, keepFiles.map(_.path),
-          removeAll = false, snap.schemaJson, None,
-          expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-          identityOut = if (snap.identity.isEmpty) None
-            else Some(identityAfter(snap.identity, added, snap.phys)),
-          expectIdentity = snap.identity.map { case (c, s) => c -> s.high },
-          conflictIfAdded = Some(addedGuard))
-    }
+    stagedDf.foreach(enforceConstraints(spark, dir, _))
+    stageTouched(spark, dir, Located(snap, Map.empty, keepFiles, addedGuard),
+      op, stagedDf, retire = None, statsCols, None, identity = true)
     } finally releaseCheckpoint(srcData)
   }
 
@@ -3867,14 +3822,12 @@ object TxLog {
       txn, group = true, op = "applyChanges")
 
   /** What [[locateKeyed]] found for one keyed apply, handed to its
-    * staging body: `srcKeys` the distinct directive keys, `inserts`
-    * the flag-false directives projected to the table schema (`nIns`
-    * of them), `touched` each file key holding a live row of a
-    * directive key → its count of such rows, `keepFiles` those files'
-    * entries, and `guard` the key-envelope `conflictIfAdded` check. */
-  private final case class KeyedApply(snap: TxSnapshot, srcKeys: DataFrame,
-      inserts: DataFrame, nIns: Long, touched: Map[String, Long],
-      keepFiles: Seq[TxFile], guard: Seq[TxFile] => Seq[String])
+    * staging body: `at` the files holding a live row of a directive
+    * key (guarded by the key envelope), `srcKeys` the distinct
+    * directive keys, and `inserts` the flag-false directives projected
+    * to the table schema (`nIns` of them). */
+  private final case class KeyedApply(at: Located, srcKeys: DataFrame,
+      inserts: DataFrame, nIns: Long)
 
   /** The locate step of every keyed apply ([[merge]], [[applyChanges]],
     * [[applyGroupChanges]], [[applyChangesMor]]): validate `changes`
@@ -3979,127 +3932,53 @@ object TxLog {
       // hold a directive key: committing would duplicate the key or
       // resurrect a deleted row
       val seen = snap.files.map(_.path).toSet
-      stage(KeyedApply(snap, srcKeys, inserts,
-        shape.getAs[Long]("_graft_nins"), touched,
+      stage(KeyedApply(Located(snap, touched,
         snap.files.filter(f => touched.contains(fileKey(snap, f))),
         files => prunedSnapshotFiles(spark, snap.copy(files =
           files.filterNot(f => seen.contains(f.path))), keyIntervals)
-          .map(_.path)))
+          .map(_.path)), srcKeys, inserts, shape.getAs[Long]("_graft_nins")))
     } finally releaseCheckpoint(src)
   }
 
-  /** The copy-on-write staging body of [[merge]] / [[applyChanges]] /
-    * [[applyGroupChanges]]: rewrite the touched files without their
+  /** The copy-on-write body of [[merge]] / [[applyChanges]] /
+    * [[applyGroupChanges]]: the touched files rewrite without their
     * directive keys' rows, plus the inserts — ONE `merge` commit. */
   private def applyCowChanges(spark: SparkSession, dir: String,
       changes: DataFrame, keyCols: Seq[String], deleteCol: String,
       statsCols: Seq[String], txn: Option[(String, Long)],
       group: Boolean, op: String): Long =
     locateKeyed(spark, dir, changes, keyCols, deleteCol, op, txn,
-        group) { at =>
-      val snap = at.snap
-      val keepFiles = at.keepFiles
-      val survivors =
-        if (keepFiles.isEmpty) at.inserts
-        else readSnapshot(spark, dir, snap.copy(files = keepFiles))
-          .join(at.srcKeys, keyCols, "left_anti")
-          .unionByName(at.inserts)
-      val (added, _) = stageData(spark, dir, survivors,
-        (inheritStats(keepFiles, statsCols, snap) ++
-          snap.identity.keys).distinct, snap.mapping,
-        partCols = snap.partitionCols)
-      commitStaged(spark, dir, "merge", added, keepFiles.map(_.path),
-        removeAll = false, snap.schemaJson, txn,
-        expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-        // BY DEFAULT identity (ALWAYS was refused by the locate step):
-        // the staged stats absorb any explicit ids the source carried
-        // past the watermark
-        identityOut = if (snap.identity.isEmpty) None
-          else Some(identityAfter(snap.identity, added, snap.phys)),
-        expectIdentity = snap.identity.map { case (c, s) => c -> s.high },
-        conflictIfAdded = Some(at.guard))
+        group) { k =>
+      stageTouched(spark, dir, k.at, "merge",
+        if (k.at.keepFiles.isEmpty) Option.when(k.nIns > 0L)(k.inserts)
+        else Some(k.at.live(spark, dir).join(k.srcKeys, keyCols, "left_anti")
+          .unionByName(k.inserts)),
+        retire = None, statsCols, txn, identity = true)
     }
 
   /** Merge-on-read CDC APPLY: same directive semantics as
-    * [[applyChanges]], but matched target rows are retired through a
-    * DELETION VECTOR instead of rewriting every touched file — the
-    * directives' replacement images and inserts append as new files,
-    * one `update-dv` commit. With scattered keys at scale this is the
-    * difference between write cost ∝ matched rows (vector pairs +
-    * images) and write cost ∝ touched-file bytes per batch — a
-    * follower applying a trickle of updates against a 100 TB table
-    * must not rewrite a file per touched key per micro-batch.
-    * [[compact]] materializes the vectors away on schedule; the same
-    * pin-by-vector-pointer concurrency contract as [[deleteMor]] /
-    * [[updateMor]] applies, plus the key-envelope guard against
-    * concurrent appends of [[applyChanges]]. A batch that matches
-    * nothing commits as an insert-only merge (no vector, no minReader
-    * bump). */
+    * [[applyChanges]], but matched target rows retire through a
+    * DELETION VECTOR and the replacement images and inserts append as
+    * new files — one `update-dv` commit, write cost ∝ matched rows
+    * rather than touched-file bytes (the follower trickle case).
+    * [[compact]] folds the vectors away. A batch that matches nothing
+    * commits as an insert-only `merge` (no vector, no minReader bump). */
   def applyChangesMor(spark: SparkSession, dir: String, changes: DataFrame,
       keyCols: Seq[String], deleteCol: String,
       statsCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long =
     locateKeyed(spark, dir, changes, keyCols, deleteCol, "applyChangesMor",
-        txn, group = false) { at =>
-      val snap = at.snap
+        txn, group = false) { k =>
       // image staging is partitioned by the insert count — a
       // 1k-directive follower batch must write one image file, not one
       // per shuffle partition, or continuous trickle batches become
       // small-files debt
-      val imageParts = math.min(32L, at.nIns / ImageFileRows + 1).toInt
-      val inserts = at.inserts.repartition(imageParts)
-      // matched LIVE rows' physical positions (readSnapshotTagged has
-      // already subtracted standing vectors, so a replayed or repeated
-      // key never double-counts into the new vector)
-      val dv =
-        if (at.touched.isEmpty) None
-        else Some(stageDv(spark, dir, snap,
-          readSnapshotTagged(spark, dir, snap.copy(files = at.keepFiles))
-            .join(at.srcKeys, keyCols, "left_semi")
-            .select(col(TagFile), col(TagIdx)), at.touched))
-      dv match {
-        case None =>
-          // nothing matched: a pure-insert batch (or an all-no-op
-          // delete batch). Stage inserts only; no vector, no touched
-          // files — an insert-only merge commit. An all-no-op delete
-          // batch still advances a supplied marker (metadata-only)
-          if (at.nIns == 0L)
-            txn.fold(snap.version)(commitTxnAdvance(spark, dir, _))
-          else {
-            val (added, _) = stageData(spark, dir, inserts,
-              (inheritStats(Nil, statsCols, snap) ++
-                snap.identity.keys).distinct, snap.mapping,
-              partCols = snap.partitionCols)
-            commitStaged(spark, dir, "merge", added, Nil,
-              removeAll = false, snap.schemaJson, txn,
-              identityOut = if (snap.identity.isEmpty) None
-                else Some(identityAfter(snap.identity, added, snap.phys)),
-              expectIdentity =
-                snap.identity.map { case (c, s) => c -> s.high },
-              conflictIfAdded = Some(at.guard))
-          }
-        case Some((dvPath, entries, expect)) =>
-          val (added, _) =
-            if (at.nIns == 0L) (Seq.empty[TxFile], 0L)
-            else stageData(spark, dir, inserts,
-              (inheritStats(entries, statsCols, snap) ++
-                snap.identity.keys).distinct, snap.mapping,
-              partCols = snap.partitionCols)
-          try commitStaged(spark, dir, "update-dv",
-            entries ++ added, entries.map(_.path),
-            removeAll = false, snap.schemaJson, txn,
-            ownsAdded = false, expectDv = expect, minReader = Some(2),
-            identityOut = if (snap.identity.isEmpty) None
-              else Some(identityAfter(snap.identity, added, snap.phys)),
-            expectIdentity =
-              snap.identity.map { case (c, s) => c -> s.high },
-            conflictIfAdded = Some(at.guard))
-          catch { case e: Throwable =>
-            fs(spark, new Path(dir)).delete(new Path(dir, dvPath), true)
-            if (added.nonEmpty) deleteStaged(spark, dir, added)
-            throw e
-          }
-      }
+      val imageParts = math.min(32L, k.nIns / ImageFileRows + 1).toInt
+      stageTouched(spark, dir, k.at,
+        if (k.at.keepFiles.isEmpty) "merge" else "update-dv",
+        Option.when(k.nIns > 0L)(k.inserts.repartition(imageParts)),
+        Some(k.at.tagged(spark, dir).join(k.srcKeys, keyCols, "left_semi")),
+        statsCols, txn, identity = true)
     }
 
   /** Exactly-once CDC-APPLY sink: materialize a FOLLOWER table from a
@@ -4214,7 +4093,7 @@ object TxLog {
   /** Summed `dvRows` up to which a scan subtracts its vectors as a
     * row filter over broadcast per-file arrays ([[DvIndex]], ≈ 32 MB
     * of longs at the bound); past it the scan anti-joins the vector
-    * relation ([[liveScans]]). Also sizes [[stageDv]]'s file count. */
+    * relation ([[liveScans]]). Also sizes [[stageTouched]]'s vector file count. */
   private val DvBroadcastRows = 4L * 1000 * 1000
 
   /** Target rows per staged image file in [[applyChangesMor]] — the
@@ -5303,7 +5182,7 @@ object TxLog {
         .reduceOption((a: Long, b: Long) => math.max(a, b)))
     }
     commitStaged(spark, dir, "overwrite", snap.files, Nil,
-      removeAll = true, snap.schemaJson, None, ownsAdded = false,
+      removeAll = true, snap.schemaJson, None, staged = Nil,
       ddlState = Some((snap.mapping, snap.retired)),
       identityOut = Some(identityBack),
       // a concurrent append advancing a watermark between the head

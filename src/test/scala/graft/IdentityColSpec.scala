@@ -169,6 +169,7 @@ class IdentityColSpec extends SparkSpec {
     val e = intercept[java.util.ConcurrentModificationException] {
       TxLog.commitStaged(spark, dir, "append", staged, Nil,
         removeAll = false, TxLog.snapshot(spark, dir).schemaJson, None,
+        staged = staged.map(_.path),
         identityOut = Some(Map("id" -> IdentitySpec(1L, 1L, Some(999L)))),
         expectIdentity = Map("id" -> stale))
     }

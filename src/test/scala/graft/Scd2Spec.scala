@@ -288,6 +288,22 @@ class Scd2Spec extends SparkSpec {
     assert(!jobs.contains("txlog:scd2-dup-check"), jobs)
     assert(payloadSet(Scd2.current(spark, scd)) ==
       Set((1L, 12L), (2L, 20L)))
+    // the valued directive supersedes the null-seq one: it writes no
+    // segment, so every history row opens at a version
+    val history = TxLog.read(spark, scd)
+    assert(history.filter(col(Scd2.ValidFrom).isNull).count() == 0L,
+      history.collect().mkString(", "))
+
+    // a key whose directives are ALL null-seq has no version to open
+    // a segment at: refused by name, history unchanged
+    val before = history.collect().map(_.toString).toSet
+    val e2 = intercept[IllegalArgumentException] {
+      Scd2.applyDirectives(spark, scd,
+        directives((2L, 21L, None), (1L, 13L, Some(6L))), "del", "seq")
+    }
+    assert(e2.getMessage.contains("id=2") &&
+      e2.getMessage.contains("only null-seq"), e2.getMessage)
+    assert(TxLog.read(spark, scd).collect().map(_.toString).toSet == before)
   }
 
   test("scd2: directive plan is keyed — no cartesian, window partitioned by key; snapshotAt prunes append-only refresh files") {

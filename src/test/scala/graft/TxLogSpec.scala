@@ -104,7 +104,8 @@ class TxLogSpec extends SparkSpec {
     val (added, schemaJson) = TxLog.stageData(spark, dir, df(1, 2, 3))
     intercept[java.util.ConcurrentModificationException] {
       TxLog.commitStaged(spark, dir, "compact", added,
-        snap.files.map(_.path), removeAll = false, schemaJson, None)
+        snap.files.map(_.path), removeAll = false, schemaJson, None,
+        staged = added.map(_.path))
     }
     // conflict must not corrupt the winner's state
     assert(idSet(TxLog.read(spark, dir)) == Set(9L))
@@ -1469,14 +1470,14 @@ class TxLogSpec extends SparkSpec {
       TxLog.commitStaged(spark, dir, "delete-dv",
         Seq(f0.copy(dv = Some("_graft_dv/bogus"), dvRows = 1)),
         Seq(f0.path), removeAll = false, stale.schemaJson, None,
-        ownsAdded = false, expectDv = Map(f0.path -> f0.dv))
+        staged = Nil, expectDv = Map(f0.path -> f0.dv))
     }
     // same hazard for copy-on-write paths reading the file: a stale
     // compact/delete/update/merge must not materialize A away
     intercept[java.util.ConcurrentModificationException] {
       TxLog.commitStaged(spark, dir, "compact",
         Seq(f0), Seq(f0.path), removeAll = false, stale.schemaJson,
-        None, ownsAdded = false,
+        None, staged = Nil,
         expectDv = stale.files.map(fl => fl.path -> fl.dv).toMap)
     }
     // disjoint-file MoR deletes commute (fresh snapshots, no conflict)
