@@ -36,6 +36,11 @@ import org.json4s.jackson.JsonMethods
   *    (`ConcurrentModificationException`); an overwrite re-targets
   *    whatever files the fresh head holds (write-serializable
   *    last-replace-wins, Delta's default isolation for replaces).
+  *    A metadata commit (properties, constraints, defaults, identity,
+  *    generated columns, txn markers) re-runs its checks against the
+  *    fresh head and recomputes its full new value from it; one that
+  *    validated the table's rows refuses when a concurrent commit
+  *    added files, and schema DDL refuses on any lost claim.
   *  - **Idempotent txn markers**: a commit may carry (appId, batchId);
   *    a batchId ≤ the last recorded for that appId is silently skipped
   *    — exactly-once sinks for Structured Streaming's replayed
@@ -232,6 +237,82 @@ object TxLog {
     def phys(logical: String): String = mapping.getOrElse(logical, logical)
     /** Physical names no new column may claim. */
     def reservedPhys: Set[String] = mapping.values.toSet ++ retired
+  }
+
+  /** The table-metadata fields one commit records, each optional:
+    * `None` leaves the field as the previous version had it, `Some`
+    * (an empty map too) replaces it whole — replay is last-write-wins
+    * per field, except `minReader`, which only ever rises. A
+    * checkpoint records the same fields for the whole snapshot (only
+    * the non-empty ones). [[Meta.fields]] is the one renderer and
+    * [[Meta.parse]] the one parser, for commits and checkpoints
+    * alike. */
+  private[graft] final case class Meta(
+      schemaJson: Option[String] = None,
+      mapping: Option[Map[String, String]] = None,
+      retired: Option[Seq[String]] = None,
+      minReader: Option[Int] = None,
+      constraints: Option[Map[String, String]] = None,
+      identity: Option[Map[String, IdentitySpec]] = None,
+      generated: Option[Map[String, String]] = None,
+      partitionCols: Option[Seq[String]] = None,
+      defaults: Option[Map[String, String]] = None,
+      properties: Option[Map[String, String]] = None) {
+    /** The set fields as JSON, in `order` (commits and checkpoints
+      * each keep the field order they have always been written in). */
+    def fields(order: Seq[String]): List[JField] = {
+      val set = Map[String, Option[JValue]](
+        "schemaJson" -> schemaJson.map(JString(_)),
+        "mapping" -> mapping.map(m => m: JValue),
+        "retired" -> retired.map(r => r: JValue),
+        "minReader" -> minReader.map(m => m: JValue),
+        "constraints" -> constraints.map(m => m: JValue),
+        "identity" -> identity.map(identityJson),
+        "generated" -> generated.map(m => m: JValue),
+        "partitionCols" -> partitionCols.map(p => p: JValue),
+        "defaults" -> defaults.map(m => m: JValue),
+        "properties" -> properties.map(m => m: JValue))
+      order.flatMap(k => set(k).map(JField(k, _))).toList
+    }
+  }
+
+  private[graft] object Meta {
+    val CommitOrder = Seq("schemaJson", "minReader", "mapping", "retired",
+      "constraints", "identity", "generated", "partitionCols", "defaults",
+      "properties")
+    /** A checkpoint writes its schema ahead of the file list itself. */
+    val CheckpointOrder = Seq("constraints", "mapping", "retired",
+      "identity", "generated", "partitionCols", "defaults", "properties",
+      "minReader")
+
+    /** The schema plus every non-empty field of `s` (what a checkpoint
+      * records). */
+    def of(s: TxSnapshot): Meta =
+      Meta(Some(s.schemaJson), Some(s.mapping).filter(_.nonEmpty),
+        Some(s.retired).filter(_.nonEmpty), Some(s.minReader).filter(_ > 1),
+        Some(s.constraints).filter(_.nonEmpty),
+        Some(s.identity).filter(_.nonEmpty),
+        Some(s.generated).filter(_.nonEmpty),
+        Some(s.partitionCols).filter(_.nonEmpty),
+        Some(s.defaults).filter(_.nonEmpty),
+        Some(s.properties).filter(_.nonEmpty))
+
+    def parse(j: JValue): Meta = {
+      // json4s extracts an ABSENT map field as Some(empty map): match
+      // on presence, or every commit would reset the field
+      def opt[A: Manifest](k: String): Option[A] = j \ k match {
+        case JNothing => None
+        case jv => Some(jv.extract[A])
+      }
+      Meta(opt[String]("schemaJson"), opt[Map[String, String]]("mapping"),
+        opt[Seq[String]]("retired"), opt[Int]("minReader"),
+        opt[Map[String, String]]("constraints"),
+        opt[Map[String, IdentitySpec]]("identity"),
+        opt[Map[String, String]]("generated"),
+        opt[Seq[String]]("partitionCols"),
+        opt[Map[String, String]]("defaults"),
+        opt[Map[String, String]]("properties"))
+    }
   }
 
   private implicit val formats: Formats = DefaultFormats
@@ -454,40 +535,14 @@ object TxLog {
     }
 
   private def renderCommit(v: Long, op: String, added: Seq[TxFile],
-      removed: Seq[String], schemaJson: Option[String],
-      txn: Option[(String, Long)],
-      ddl: Option[(Map[String, String], Seq[String])] = None,
-      minReader: Option[Int] = None,
-      constraints: Option[Map[String, String]] = None,
-      identity: Option[Map[String, IdentitySpec]] = None,
-      generated: Option[Map[String, String]] = None,
-      partitionCols: Option[Seq[String]] = None,
-      defaults: Option[Map[String, String]] = None,
-      properties: Option[Map[String, String]] = None,
+      removed: Seq[String], meta: Meta, txn: Option[(String, Long)],
       txnsMulti: Seq[(String, Long)] = Nil,
       ts: Long = System.currentTimeMillis()): String = {
-    val base: JObject =
-      ("version" -> v) ~ ("op" -> op) ~ ("ts" -> ts) ~
-        ("add" -> filesJson(added)) ~ ("remove" -> removed)
-    val withSchema = schemaJson.fold(base)(s => base ~ ("schemaJson" -> s))
-    val withMr = minReader.fold(withSchema)(m =>
-      withSchema ~ ("minReader" -> m))
-    val withDdl = ddl.fold(withMr) { case (m, r) =>
-      withMr ~ ("mapping" -> m) ~ ("retired" -> r)
-    }
-    val withCons0 = constraints.fold(withDdl)(cs => withDdl ~ ("constraints" -> cs))
-    val withCons1 = identity.fold(withCons0)(im =>
-      withCons0 ~ ("identity" -> identityJson(im)))
-    val withCons2 = generated.fold(withCons1)(g =>
-      withCons1 ~ ("generated" -> g))
-    val withCons3 = partitionCols.fold(withCons2)(pc =>
-      withCons2 ~ ("partitionCols" -> pc))
-    val withCons4 = defaults.fold(withCons3)(d =>
-      withCons3 ~ ("defaults" -> d))
-    val withCons = properties.fold(withCons4)(p =>
-      withCons4 ~ ("properties" -> p))
-    val withTxn = txn.fold(withCons) { case (app, b) =>
-      withCons ~ ("txn" -> (("appId" -> app) ~ ("batchId" -> b)))
+    val files: JObject = ("version" -> v) ~ ("op" -> op) ~ ("ts" -> ts) ~
+      ("add" -> filesJson(added)) ~ ("remove" -> removed)
+    val base = JObject(files.obj ++ meta.fields(Meta.CommitOrder))
+    val withTxn = txn.fold(base) { case (app, b) =>
+      base ~ ("txn" -> (("appId" -> app) ~ ("batchId" -> b)))
     }
     // COPY INTO's per-source-file idempotency markers: one commit may
     // record MANY (appId, batchId) pairs (sorted for determinism)
@@ -529,55 +584,19 @@ object TxLog {
     })
 
   private def applyCommit(st: State, j: JValue): Unit = {
-    (j \ "schemaJson").extractOpt[String].foreach(st.schemaJson = _)
     (j \ "remove").extract[Seq[String]].foreach(st.files.remove)
     (j \ "add").extract[Seq[TxFile]].foreach(a => st.files(a.path) = a)
-    // a constraints commit carries the FULL new map (replay-simple).
-    // NB: extractOpt[Map] of an ABSENT field yields Some(empty map)
-    // in json4s — match on presence, or every ordinary commit would
-    // silently reset the constraints
-    (j \ "constraints") match {
-      case JNothing => ()
-      case jv => st.constraints = jv.extract[Map[String, String]]
-    }
-    // column mapping + retired physical names: same full-state,
-    // presence-matched replay as constraints
-    (j \ "mapping") match {
-      case JNothing => ()
-      case jv => st.mapping = jv.extract[Map[String, String]]
-    }
-    (j \ "retired") match {
-      case JNothing => ()
-      case jv => st.retired = jv.extract[Seq[String]]
-    }
-    (j \ "minReader").extractOpt[Int]
-      .foreach(m => st.minReader = math.max(st.minReader, m))
-    // identity columns: full-map, presence-matched replay like
-    // constraints/mapping
-    (j \ "identity") match {
-      case JNothing => ()
-      case jv => st.identity = jv.extract[Map[String, IdentitySpec]]
-    }
-    // generated columns (name -> SQL expr): same replay shape
-    (j \ "generated") match {
-      case JNothing => ()
-      case jv => st.generated = jv.extract[Map[String, String]]
-    }
-    // path-encoded partition columns (recorded once at registration)
-    (j \ "partitionCols") match {
-      case JNothing => ()
-      case jv => st.partitionCols = jv.extract[Seq[String]]
-    }
-    // column DEFAULT expressions: same full-map replay shape
-    (j \ "defaults") match {
-      case JNothing => ()
-      case jv => st.defaults = jv.extract[Map[String, String]]
-    }
-    // table properties (Delta's TBLPROPERTIES): full-map replay
-    (j \ "properties") match {
-      case JNothing => ()
-      case jv => st.properties = jv.extract[Map[String, String]]
-    }
+    val m = Meta.parse(j)
+    m.schemaJson.foreach(st.schemaJson = _)
+    m.mapping.foreach(st.mapping = _)
+    m.retired.foreach(st.retired = _)
+    m.minReader.foreach(r => st.minReader = math.max(st.minReader, r))
+    m.constraints.foreach(st.constraints = _)
+    m.identity.foreach(st.identity = _)
+    m.generated.foreach(st.generated = _)
+    m.partitionCols.foreach(st.partitionCols = _)
+    m.defaults.foreach(st.defaults = _)
+    m.properties.foreach(st.properties = _)
     // `copyintosz:` markers are byte-LENGTH fingerprints, NOT
     // monotonic batch ids — a source file can SHRINK, and max-replay
     // would pin the old larger length forever: upToDate's equality
@@ -621,45 +640,13 @@ object TxLog {
     val cp = cps.filter(_ <= target).lastOption
     val st = new State
     cp.foreach { v =>
+      // a checkpoint is one commit's metadata fields plus the full
+      // file list and txn markers
       val j = JsonMethods.parse(readText(f, checkpointFile(dir, v)))
-      st.schemaJson = (j \ "schemaJson").extract[String]
+      applyCommit(st, j)
       (j \ "files").extract[Seq[TxFile]].foreach(a => st.files(a.path) = a)
       (j \ "txns").extract[Map[String, Long]].foreach { case (k, b) =>
         st.txns(k) = b
-      }
-      (j \ "constraints") match { // same json4s absent-field quirk
-        case JNothing => ()
-        case jv => st.constraints = jv.extract[Map[String, String]]
-      }
-      (j \ "mapping") match {
-        case JNothing => ()
-        case jv => st.mapping = jv.extract[Map[String, String]]
-      }
-      (j \ "retired") match {
-        case JNothing => ()
-        case jv => st.retired = jv.extract[Seq[String]]
-      }
-      (j \ "minReader").extractOpt[Int]
-        .foreach(m => st.minReader = math.max(st.minReader, m))
-      (j \ "identity") match {
-        case JNothing => ()
-        case jv => st.identity = jv.extract[Map[String, IdentitySpec]]
-      }
-      (j \ "generated") match {
-        case JNothing => ()
-        case jv => st.generated = jv.extract[Map[String, String]]
-      }
-      (j \ "partitionCols") match {
-        case JNothing => ()
-        case jv => st.partitionCols = jv.extract[Seq[String]]
-      }
-      (j \ "defaults") match {
-        case JNothing => ()
-        case jv => st.defaults = jv.extract[Map[String, String]]
-      }
-      (j \ "properties") match {
-        case JNothing => ()
-        case jv => st.properties = jv.extract[Map[String, String]]
       }
     }
     val needed = (cp.getOrElse(-1L) + 1) to target
@@ -683,38 +670,12 @@ object TxLog {
   private def writeCheckpoint(spark: SparkSession, dir: String,
       v: Long): Unit = {
     val snap = snapshot(spark, dir, Some(v))
-    val base: JObject =
-      ("version" -> v) ~ ("schemaJson" -> snap.schemaJson) ~
-        ("files" -> filesJson(snap.files)) ~
-        ("txns" -> JObject(snap.txns.toList.sortBy(_._1)
-          .map { case (k, b) => JField(k, JLong(b)) }))
-    val withCons =
-      if (snap.constraints.isEmpty) base
-      else base ~ ("constraints" -> snap.constraints)
-    val withMap =
-      if (snap.mapping.isEmpty) withCons
-      else withCons ~ ("mapping" -> snap.mapping)
-    val withRet =
-      if (snap.retired.isEmpty) withMap
-      else withMap ~ ("retired" -> snap.retired)
-    val withId =
-      if (snap.identity.isEmpty) withRet
-      else withRet ~ ("identity" -> identityJson(snap.identity))
-    val withGen0 =
-      if (snap.generated.isEmpty) withId
-      else withId ~ ("generated" -> snap.generated)
-    val withGen1 =
-      if (snap.partitionCols.isEmpty) withGen0
-      else withGen0 ~ ("partitionCols" -> snap.partitionCols)
-    val withGen =
-      if (snap.defaults.isEmpty) withGen1
-      else withGen1 ~ ("defaults" -> snap.defaults)
-    val withProps =
-      if (snap.properties.isEmpty) withGen
-      else withGen ~ ("properties" -> snap.properties)
-    val j: JObject =
-      if (snap.minReader <= 1) withProps
-      else withProps ~ ("minReader" -> snap.minReader)
+    val j = JObject(JField("version", v) ::
+      JField("schemaJson", snap.schemaJson) ::
+      JField("files", filesJson(snap.files)) ::
+      JField("txns", JObject(snap.txns.toList.sortBy(_._1)
+        .map { case (k, b) => JField(k, JLong(b)) })) ::
+      Meta.of(snap).fields(Meta.CheckpointOrder))
     val p = checkpointFile(dir, v)
     val f = fs(spark, p)
     val content = JsonMethods.compact(JsonMethods.render(j)).getBytes(UTF_8)
@@ -1089,7 +1050,16 @@ object TxLog {
     * commit alone (data files, vector relation dirs): every exit that
     * does not commit — a replayed `txn`, a conflict, a throw — deletes
     * exactly those. [[restore]] re-registers existing files and stages
-    * none. */
+    * none.
+    *
+    * `meta` gives the commit's table-metadata fields ([[Meta]]). It is
+    * evaluated against the fresh head on every attempt (an empty
+    * snapshot when the commit creates the table), so a metadata verb —
+    * a commit with no files — re-runs its checks there and returns
+    * the new full value computed from that head: a lost claim rebases
+    * the change instead of writing a stale map over the winner's, and
+    * a check that no longer holds refuses it (by throwing). Data
+    * commits pass constant fields. */
   private[graft] def commitStaged(spark: SparkSession, dir: String,
       op: String, added: Seq[TxFile], remove: Seq[String],
       removeAll: Boolean, schemaJson: String,
@@ -1097,15 +1067,10 @@ object TxLog {
       mergeSchema: Boolean = false,
       staged: Seq[String],
       expectDv: Map[String, Option[String]] = Map.empty,
-      ddlState: Option[(Map[String, String], Seq[String])] = None,
       freshPhys: Map[String, String] = Map.empty,
       stagedFields: Option[Set[String]] = None,
-      minReader: Option[Int] = None,
-      identityOut: Option[Map[String, IdentitySpec]] = None,
+      meta: TxSnapshot => Meta = _ => Meta(),
       expectIdentity: Map[String, Option[Long]] = Map.empty,
-      generatedOut: Option[Map[String, String]] = None,
-      defaultsOut: Option[Map[String, String]] = None,
-      constraintsOut: Option[Map[String, String]] = None,
       conflictIfAdded: Option[Seq[TxFile] => Seq[String]] = None,
       txnsMulti: Seq[(String, Long)] = Nil): Long = {
     def abortCleanup(): Unit = {
@@ -1286,28 +1251,27 @@ object TxLog {
         }
       }
       val v = base.map(_.version + 1).getOrElse(0L)
+      val m = meta(base.getOrElse(TxSnapshot(-1L, schemaJson, Nil, Map.empty)))
       // schema is recorded when it (re)defines the table; appends
       // inherit, except a widening merge which records the new union
       val schemaOut =
-        if (removeAll || base.isEmpty) Some(schemaJson) else evolvedSchema
-      // column-mapping state rides the commit when the caller set it
-      // (rename/drop/restore/overwrite-reset) or a widening merge
-      // assigned fresh physical names
-      val ddlOut: Option[(Map[String, String], Seq[String])] =
-        ddlState.orElse(evolvedMapping.map(m =>
-          (m, base.map(_.retired).getOrElse(Nil))))
+        if (removeAll || base.isEmpty) Some(schemaJson)
+        else m.schemaJson.orElse(evolvedSchema)
       // declaring/advancing identity or generated columns requires
       // generation 4 readers
       val mrOut =
-        if (identityOut.exists(_.nonEmpty) ||
-            generatedOut.exists(_.nonEmpty))
-          Some(math.max(4, minReader.getOrElse(1)))
-        else minReader
+        if (m.identity.exists(_.nonEmpty) || m.generated.exists(_.nonEmpty))
+          Some(math.max(4, m.minReader.getOrElse(1)))
+        else m.minReader
+      // column-mapping state rides the commit when `meta` set it
+      // (rename/drop/restore/overwrite-reset) or a widening merge
+      // assigned fresh physical names
+      val out = m.copy(schemaJson = schemaOut, minReader = mrOut,
+        mapping = m.mapping.orElse(evolvedMapping),
+        retired = m.retired.orElse(evolvedMapping.map(_ =>
+          base.map(_.retired).getOrElse(Nil))))
       if (tryWrite(f, versionFile(dir, v),
-          renderCommit(v, op, added, removeNow, schemaOut, txn, ddlOut,
-            mrOut, constraints = constraintsOut,
-            identity = identityOut, generated = generatedOut,
-            defaults = defaultsOut, txnsMulti = txnsMulti,
+          renderCommit(v, op, added, removeNow, out, txn, txnsMulti,
             ts = nextCommitTs(f, dir, v)))) {
         landed = true
         if (v > 0 && v % CheckpointInterval == 0)
@@ -1492,10 +1456,10 @@ object TxLog {
     // the table now.
     val lf = fs(spark, logPath(dir))
     if (tryWrite(lf, versionFile(dir, 0L),
-        renderCommit(0L, "overwrite", added, Nil, Some(df.schema.json),
-          None,
-          minReader = Some(5).filter(_ => pcols.nonEmpty),
-          partitionCols = Some(pcols).filter(_.nonEmpty))))
+        renderCommit(0L, "overwrite", added, Nil,
+          Meta(Some(df.schema.json),
+            minReader = Some(5).filter(_ => pcols.nonEmpty),
+            partitionCols = Some(pcols).filter(_.nonEmpty)), None)))
       0L
     else snapshot(spark, dir).version
   }
@@ -1586,12 +1550,12 @@ object TxLog {
     // retired-name reservations) resets with the schema
     commitStaged(spark, dir, "overwrite", added, Nil, removeAll = true,
       schemaJson, txn, staged = added.map(_.path),
-      ddlState = Some((Map.empty, Nil)),
-      identityOut = if (idMap.isEmpty) None
-        else Some(identityAfter(idMap, added, c => c)),
-      expectIdentity = expectId,
-      generatedOut = Some(genMap).filter(_.nonEmpty),
-      defaultsOut = Some(defMap).filter(_.nonEmpty))
+      meta = _ => Meta(mapping = Some(Map.empty), retired = Some(Nil),
+        identity = Option.when(idMap.nonEmpty)(
+          identityAfter(idMap, added, c => c)),
+        generated = Some(genMap).filter(_.nonEmpty),
+        defaults = Some(defMap).filter(_.nonEmpty)),
+      expectIdentity = expectId)
   }
 
   /** Transactionally append `df`. Schema must match the table's —
@@ -1674,9 +1638,9 @@ object TxLog {
     commitStaged(spark, dir, "append", added, Nil, removeAll = false,
       schemaJson, txn, mergeSchema, staged = added.map(_.path),
       freshPhys = freshPhys, stagedFields = baseFields,
-      identityOut = if (idMap.isEmpty) None
-        else Some(identityAfter(idMap, added,
-          c => (mapping ++ freshPhys).getOrElse(c, c))),
+      meta = _ => Meta(identity = Option.when(idMap.nonEmpty)(
+        identityAfter(idMap, added,
+          c => (mapping ++ freshPhys).getOrElse(c, c)))),
       expectIdentity = expectId,
       txnsMulti = txnsMulti)
   }
@@ -2001,23 +1965,25 @@ object TxLog {
       name: String, exprStr: String): Long = {
     require(name.nonEmpty, "TxLog: constraint needs a name")
     val snap = snapshot(spark, dir)
-    val bad = read(spark, dir)
+    val bad = readSnapshot(spark, dir, snap)
       .filter(expr(exprStr).eqNullSafe(false)).limit(1).count()
     require(bad == 0,
       s"TxLog: cannot add constraint '$name' ($exprStr) — existing " +
         "rows violate it")
-    commitConstraints(spark, dir, snap.constraints + (name -> exprStr))
+    commitMeta(spark, dir, "constraints", snap, rowsChecked = true)(head =>
+      Meta(constraints = Some(head.constraints + (name -> exprStr))))
   }
 
   /** Drop a CHECK constraint by name (unknown names refuse — a typo'd
     * drop that silently "succeeds" leaves the constraint enforcing). */
   def dropCheckConstraint(spark: SparkSession, dir: String,
       name: String): Long = {
-    val snap = snapshot(spark, dir)
-    require(snap.constraints.contains(name),
-      s"TxLog: no constraint '$name' on $dir " +
-        s"(active: ${snap.constraints.keys.toSeq.sorted.mkString(", ")})")
-    commitConstraints(spark, dir, snap.constraints - name)
+    commitMeta(spark, dir, "constraints", snapshot(spark, dir)) { head =>
+      require(head.constraints.contains(name),
+        s"TxLog: no constraint '$name' on $dir " +
+          s"(active: ${head.constraints.keys.toSeq.sorted.mkString(", ")})")
+      Meta(constraints = Some(head.constraints - name))
+    }
   }
 
   /** Validate `df` against the table's active constraints — ONE scan
@@ -2040,29 +2006,21 @@ object TxLog {
         s"by the batch — nothing was written to $dir")
   }
 
-  /** The constraints commit: no files move, the full new map rides in
-    * its own log slot (lost claims rebase like any commit). */
-  private def commitConstraints(spark: SparkSession, dir: String,
-      all: Map[String, String]): Long = {
-    val f = fs(spark, logPath(dir))
-    var attempt = 0
-    while (attempt < MaxAttempts) {
-      val base = snapshot(spark, dir)
-      val v = base.version + 1
-      val j: JObject =
-        ("version" -> v) ~ ("op" -> "constraints") ~
-          ("add" -> JArray(Nil)) ~ ("remove" -> JArray(Nil)) ~
-          ("constraints" -> all)
-      if (tryWrite(f, versionFile(dir, v),
-          JsonMethods.compact(JsonMethods.render(j)))) {
-        if (v > 0 && v % CheckpointInterval == 0)
-          writeCheckpoint(spark, dir, v)
-        return v
-      }
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"TxLog: gave up after $MaxAttempts contended constraint commits")
+  /** A metadata commit — no file moves — through [[commitStaged]]:
+    * `next` re-runs the verb's checks against the head and returns the
+    * new full value computed from it, on every attempt. A lost claim
+    * therefore rebases the change; a check that no longer holds
+    * refuses it. `rowsChecked`: the verb validated the rows of `read`,
+    * so any file added since refuses with
+    * ConcurrentModificationException rather than land unchecked. */
+  private def commitMeta(spark: SparkSession, dir: String, op: String,
+      read: TxSnapshot, rowsChecked: Boolean = false,
+      txn: Option[(String, Long)] = None)(next: TxSnapshot => Meta): Long = {
+    val seen = read.files.map(_.path).toSet
+    commitStaged(spark, dir, op, Nil, Nil, removeAll = false,
+      read.schemaJson, txn, staged = Nil, meta = next,
+      conflictIfAdded = Option.when(rowsChecked)(
+        (files: Seq[TxFile]) => files.map(_.path).filterNot(seen)))
   }
 
   // ---- identity columns --------------------------------------------
@@ -2079,39 +2037,45 @@ object TxLog {
     * parameter is the creation-time dual. */
   def setIdentity(spark: SparkSession, dir: String, name: String,
       start: Long = 1L, step: Long = 1L, always: Boolean = true): Long = {
+    def check(head: TxSnapshot): Unit = {
+      val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+      require(schema.fieldNames.contains(name),
+        s"TxLog: identity column '$name' is not a table column")
+      require(schema(name).dataType ==
+        org.apache.spark.sql.types.LongType,
+        s"TxLog: identity column '$name' must be BIGINT, is " +
+          schema(name).dataType.simpleString)
+      require(!head.identity.contains(name),
+        s"TxLog: '$name' is already an identity column — dropIdentity " +
+          "first to redeclare")
+      require(!head.generated.contains(name),
+        s"TxLog: '$name' is expression-generated — a column cannot be " +
+          "both identity and generated")
+      require(!head.defaults.contains(name),
+        s"TxLog: '$name' carries a DEFAULT — a column cannot be both " +
+          "identity and defaulted")
+    }
     val snap = snapshot(spark, dir)
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    require(schema.fieldNames.contains(name),
-      s"TxLog: identity column '$name' is not a table column")
-    require(schema(name).dataType ==
-      org.apache.spark.sql.types.LongType,
-      s"TxLog: identity column '$name' must be BIGINT, is " +
-        schema(name).dataType.simpleString)
-    require(!snap.identity.contains(name),
-      s"TxLog: '$name' is already an identity column — dropIdentity " +
-        "first to redeclare")
-    require(!snap.generated.contains(name),
-      s"TxLog: '$name' is expression-generated — a column cannot be " +
-        "both identity and generated")
-    require(!snap.defaults.contains(name),
-      s"TxLog: '$name' carries a DEFAULT — a column cannot be both " +
-        "identity and defaulted")
-    val mm = minMax(spark, dir, Seq(name)).head()
+    check(snap)
+    val mm = minMax(spark, dir, Seq(name), Some(snap.version)).head()
     val hi =
       if (step > 0) Option(mm.getAs[Any](s"max_$name"))
       else Option(mm.getAs[Any](s"min_$name"))
-    commitIdentity(spark, dir, snap.identity +
-      (name -> IdentitySpec(start, step,
-        hi.map(_.asInstanceOf[Long]), always)))
+    val spec = IdentitySpec(start, step, hi.map(_.asInstanceOf[Long]), always)
+    commitMeta(spark, dir, "identity", snap, rowsChecked = true) { head =>
+      check(head)
+      Meta(identity = Some(head.identity + (name -> spec)))
+    }
   }
 
   /** Remove a column's identity property (the data column stays). */
   def dropIdentity(spark: SparkSession, dir: String,
       name: String): Long = {
-    val snap = snapshot(spark, dir)
-    require(snap.identity.contains(name),
-      s"TxLog: '$name' is not an identity column")
-    commitIdentity(spark, dir, snap.identity - name)
+    commitMeta(spark, dir, "identity", snapshot(spark, dir)) { head =>
+      require(head.identity.contains(name),
+        s"TxLog: '$name' is not an identity column")
+      Meta(identity = Some(head.identity - name))
+    }
   }
 
   /** Recompute every identity watermark from the LIVE data (Delta's
@@ -2125,39 +2089,17 @@ object TxLog {
     require(snap.identity.nonEmpty,
       s"TxLog: no identity columns declared on $dir")
     val cols = snap.identity.keys.toSeq.sorted
-    val mm = minMax(spark, dir, cols).head()
-    commitIdentity(spark, dir, snap.identity.map { case (c, s) =>
-      val obs =
-        if (s.step > 0) Option(mm.getAs[Any](s"max_$c"))
-        else Option(mm.getAs[Any](s"min_$c"))
-      c -> obs.fold(s)(v => s.absorb(v.asInstanceOf[Long]))
-    })
-  }
-
-  /** Metadata commit carrying the FULL new identity map (replay-
-    * simple, like constraints commits). */
-  private def commitIdentity(spark: SparkSession, dir: String,
-      all: Map[String, IdentitySpec]): Long = {
-    val f = fs(spark, logPath(dir))
-    var attempt = 0
-    while (attempt < MaxAttempts) {
-      val base = snapshot(spark, dir)
-      val v = base.version + 1
-      val j: JObject =
-        ("version" -> v) ~ ("op" -> "identity") ~
-          ("ts" -> nextCommitTs(f, dir, v)) ~
-          ("add" -> JArray(Nil)) ~ ("remove" -> JArray(Nil)) ~
-          ("identity" -> identityJson(all)) ~ ("minReader" -> 4)
-      if (tryWrite(f, versionFile(dir, v),
-          JsonMethods.compact(JsonMethods.render(j)))) {
-        if (v > 0 && v % CheckpointInterval == 0)
-          writeCheckpoint(spark, dir, v)
-        return v
-      }
-      attempt += 1
+    val mm = minMax(spark, dir, cols, Some(snap.version)).head()
+    val observed = snap.identity.flatMap { case (c, s) =>
+      Option(mm.getAs[Any](if (s.step > 0) s"max_$c" else s"min_$c"))
+        .map(v => c -> v.asInstanceOf[Long])
     }
-    throw new java.io.IOException(
-      s"TxLog: gave up after $MaxAttempts contended identity commits")
+    // the head's watermarks absorb what the read observed: a racer's
+    // ids stay issued
+    commitMeta(spark, dir, "identity", snap)(head =>
+      Meta(identity = Some(head.identity.map { case (c, s) =>
+        c -> observed.get(c).fold(s)(s.absorb)
+      })))
   }
 
   /** Metadata-only commit advancing a txn marker: the "this span was
@@ -2167,25 +2109,9 @@ object TxLog {
     * (correct results, unbounded repeated work). No files move; lost
     * claims re-check the marker and skip if a racer advanced it. */
   private[graft] def commitTxnAdvance(spark: SparkSession, dir: String,
-      txn: (String, Long)): Long = {
-    val f = fs(spark, logPath(dir))
-    var attempt = 0
-    while (attempt < MaxAttempts) {
-      val base = snapshot(spark, dir)
-      if (base.txns.get(txn._1).exists(_ >= txn._2)) return base.version
-      val v = base.version + 1
-      if (tryWrite(f, versionFile(dir, v),
-          renderCommit(v, "txn", Nil, Nil, None, Some(txn),
-            ts = nextCommitTs(f, dir, v)))) {
-        if (v > 0 && v % CheckpointInterval == 0)
-          writeCheckpoint(spark, dir, v)
-        return v
-      }
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"TxLog: gave up after $MaxAttempts contended marker commits")
-  }
+      txn: (String, Long)): Long =
+    commitMeta(spark, dir, "txn", snapshot(spark, dir), txn = Some(txn))(
+      _ => Meta())
 
   // ---- column DEFAULT values ----------------------------------------
 
@@ -2198,35 +2124,35 @@ object TxLog {
     * generation bump. The expression must not reference columns
     * (Delta's foldability rule) and must cast to the column's type. */
   def setDefault(spark: SparkSession, dir: String, name: String,
-      exprStr: String): Long = {
-    val snap = snapshot(spark, dir)
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    require(schema.fieldNames.contains(name),
-      s"TxLog: default column '$name' is not a table column")
-    require(!snap.identity.contains(name),
-      s"TxLog: '$name' is an identity column — its values generate")
-    require(!snap.generated.contains(name),
-      s"TxLog: '$name' is expression-generated — its values compute")
-    val refs = exprRefs(spark, exprStr)
-    require(refs.isEmpty,
-      s"TxLog: DEFAULT for '$name' references column(s) " +
-        s"${refs.mkString(", ")} — defaults must be literal-foldable " +
-        "(use a GENERATED column for derived values)")
-    // the expression must evaluate and cast to the declared type
-    val probe = spark.range(1)
-      .select(expr(exprStr).cast(schema(name).dataType)).head()
-    val _ = probe // any failure above refuses the declaration
-    commitDefaults(spark, dir, snap.defaults + (name -> exprStr))
-  }
+      exprStr: String): Long =
+    commitMeta(spark, dir, "defaults", snapshot(spark, dir)) { head =>
+      val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+      require(schema.fieldNames.contains(name),
+        s"TxLog: default column '$name' is not a table column")
+      require(!head.identity.contains(name),
+        s"TxLog: '$name' is an identity column — its values generate")
+      require(!head.generated.contains(name),
+        s"TxLog: '$name' is expression-generated — its values compute")
+      val refs = exprRefs(spark, exprStr)
+      require(refs.isEmpty,
+        s"TxLog: DEFAULT for '$name' references column(s) " +
+          s"${refs.mkString(", ")} — defaults must be literal-foldable " +
+          "(use a GENERATED column for derived values)")
+      // the expression must evaluate and cast to the declared type
+      val probe = spark.range(1)
+        .select(expr(exprStr).cast(schema(name).dataType)).head()
+      val _ = probe // any failure above refuses the declaration
+      Meta(defaults = Some(head.defaults + (name -> exprStr)))
+    }
 
   /** Remove a column's DEFAULT (the column stays). */
   def dropDefault(spark: SparkSession, dir: String,
-      name: String): Long = {
-    val snap = snapshot(spark, dir)
-    require(snap.defaults.contains(name),
-      s"TxLog: '$name' carries no DEFAULT")
-    commitDefaults(spark, dir, snap.defaults - name)
-  }
+      name: String): Long =
+    commitMeta(spark, dir, "defaults", snapshot(spark, dir)) { head =>
+      require(head.defaults.contains(name),
+        s"TxLog: '$name' carries no DEFAULT")
+      Meta(defaults = Some(head.defaults - name))
+    }
 
   /** Set (upsert) table PROPERTIES — Delta's `ALTER TABLE … SET
     * TBLPROPERTIES`: free-form (key → value) metadata carried in the
@@ -2240,8 +2166,8 @@ object TxLog {
       "one key = value pair")
     require(props.keys.forall(_.trim.nonEmpty),
       "TxLog: TBLPROPERTIES keys must be non-empty")
-    val snap = snapshot(spark, dir)
-    commitProperties(spark, dir, snap.properties ++ props)
+    commitMeta(spark, dir, "properties", snapshot(spark, dir))(head =>
+      Meta(properties = Some(head.properties ++ props)))
   }
 
   /** Remove table properties by key (Delta's `UNSET TBLPROPERTIES`).
@@ -2250,60 +2176,13 @@ object TxLog {
   def unsetTblProperties(spark: SparkSession, dir: String,
       keys: Seq[String]): Long = {
     require(keys.nonEmpty, "TxLog: UNSET TBLPROPERTIES needs keys")
-    val snap = snapshot(spark, dir)
-    val missing = keys.filterNot(snap.properties.contains)
-    require(missing.isEmpty,
-      s"TxLog: table $dir has no propert${
-        if (missing.size == 1) "y" else "ies"} ${missing.mkString(", ")}")
-    commitProperties(spark, dir, snap.properties -- keys)
-  }
-
-  private def commitProperties(spark: SparkSession, dir: String,
-      all: Map[String, String]): Long = {
-    val f = fs(spark, logPath(dir))
-    var attempt = 0
-    while (attempt < MaxAttempts) {
-      val base = snapshot(spark, dir)
-      val v = base.version + 1
-      val j: JObject =
-        ("version" -> v) ~ ("op" -> "properties") ~
-          ("ts" -> nextCommitTs(f, dir, v)) ~
-          ("add" -> JArray(Nil)) ~ ("remove" -> JArray(Nil)) ~
-          ("properties" -> all)
-      if (tryWrite(f, versionFile(dir, v),
-          JsonMethods.compact(JsonMethods.render(j)))) {
-        if (v > 0 && v % CheckpointInterval == 0)
-          writeCheckpoint(spark, dir, v)
-        return v
-      }
-      attempt += 1
+    commitMeta(spark, dir, "properties", snapshot(spark, dir)) { head =>
+      val missing = keys.filterNot(head.properties.contains)
+      require(missing.isEmpty,
+        s"TxLog: table $dir has no propert${
+          if (missing.size == 1) "y" else "ies"} ${missing.mkString(", ")}")
+      Meta(properties = Some(head.properties -- keys))
     }
-    throw new java.io.IOException(
-      s"TxLog: gave up after $MaxAttempts contended commit attempts")
-  }
-
-  private def commitDefaults(spark: SparkSession, dir: String,
-      all: Map[String, String]): Long = {
-    val f = fs(spark, logPath(dir))
-    var attempt = 0
-    while (attempt < MaxAttempts) {
-      val base = snapshot(spark, dir)
-      val v = base.version + 1
-      val j: JObject =
-        ("version" -> v) ~ ("op" -> "defaults") ~
-          ("ts" -> nextCommitTs(f, dir, v)) ~
-          ("add" -> JArray(Nil)) ~ ("remove" -> JArray(Nil)) ~
-          ("defaults" -> all)
-      if (tryWrite(f, versionFile(dir, v),
-          JsonMethods.compact(JsonMethods.render(j)))) {
-        if (v > 0 && v % CheckpointInterval == 0)
-          writeCheckpoint(spark, dir, v)
-        return v
-      }
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"TxLog: gave up after $MaxAttempts contended defaults commits")
   }
 
   /** Fill declared DEFAULTs for columns the batch omits (supplied
@@ -2362,55 +2241,35 @@ object TxLog {
     * DEFINES the column). */
   def setGenerated(spark: SparkSession, dir: String, name: String,
       exprStr: String): Long = {
+    def check(head: TxSnapshot): Unit = {
+      val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+      validateGeneratedDecl(spark, schema.fieldNames.toSet, name,
+        exprStr, head.generated, head.identity.keySet)
+      require(!head.defaults.contains(name),
+        s"TxLog: '$name' carries a DEFAULT — dropDefault first " +
+          "(a column cannot be both defaulted and generated)")
+    }
     val snap = snapshot(spark, dir)
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    validateGeneratedDecl(spark, schema.fieldNames.toSet, name,
-      exprStr, snap.generated, snap.identity.keySet)
-    require(!snap.defaults.contains(name),
-      s"TxLog: '$name' carries a DEFAULT — dropDefault first " +
-        "(a column cannot be both defaulted and generated)")
-    val bad = read(spark, dir)
+    check(snap)
+    val bad = readSnapshot(spark, dir, snap)
       .filter(!(col(name) <=> expr(exprStr))).limit(1).count()
     require(bad == 0L,
       s"TxLog: cannot declare '$name' GENERATED AS ($exprStr) — " +
         "existing rows diverge from the expression")
-    commitGenerated(spark, dir, snap.generated + (name -> exprStr))
+    commitMeta(spark, dir, "generated", snap, rowsChecked = true) { head =>
+      check(head)
+      Meta(generated = Some(head.generated + (name -> exprStr)))
+    }
   }
 
   /** Remove a column's generation expression (the column stays). */
   def dropGenerated(spark: SparkSession, dir: String,
-      name: String): Long = {
-    val snap = snapshot(spark, dir)
-    require(snap.generated.contains(name),
-      s"TxLog: '$name' is not a generated column")
-    commitGenerated(spark, dir, snap.generated - name)
-  }
-
-  /** Metadata commit carrying the FULL new generated map (replay-
-    * simple, like constraints/identity commits). */
-  private def commitGenerated(spark: SparkSession, dir: String,
-      all: Map[String, String]): Long = {
-    val f = fs(spark, logPath(dir))
-    var attempt = 0
-    while (attempt < MaxAttempts) {
-      val base = snapshot(spark, dir)
-      val v = base.version + 1
-      val j: JObject =
-        ("version" -> v) ~ ("op" -> "generated") ~
-          ("ts" -> nextCommitTs(f, dir, v)) ~
-          ("add" -> JArray(Nil)) ~ ("remove" -> JArray(Nil)) ~
-          ("generated" -> all) ~ ("minReader" -> 4)
-      if (tryWrite(f, versionFile(dir, v),
-          JsonMethods.compact(JsonMethods.render(j)))) {
-        if (v > 0 && v % CheckpointInterval == 0)
-          writeCheckpoint(spark, dir, v)
-        return v
-      }
-      attempt += 1
+      name: String): Long =
+    commitMeta(spark, dir, "generated", snapshot(spark, dir)) { head =>
+      require(head.generated.contains(name),
+        s"TxLog: '$name' is not a generated column")
+      Meta(generated = Some(head.generated - name))
     }
-    throw new java.io.IOException(
-      s"TxLog: gave up after $MaxAttempts contended generated commits")
-  }
 
   /** Apply generated-column semantics to a write batch: an ABSENT
     * generated column is COMPUTED here from its expression (cast to
@@ -2613,19 +2472,21 @@ object TxLog {
     // append data the source's constraints would have refused.
     val lf = fs(spark, logPath(targetDir))
     if (!tryWrite(lf, versionFile(targetDir, 0L),
-        renderCommit(0L, "clone", entries, Nil, Some(snap.schemaJson),
-          None, ddl = Some((snap.mapping, snap.retired)),
-          minReader = Some(math.max(2, snap.minReader)),
-          constraints = Some(snap.constraints).filter(_.nonEmpty),
-          identity = Some(snap.identity).filter(_.nonEmpty),
-          generated = Some(snap.generated).filter(_.nonEmpty),
-          defaults = Some(snap.defaults).filter(_.nonEmpty),
-          properties = Some(snap.properties).filter(_.nonEmpty))))
+        renderCommit(0L, "clone", entries, Nil,
+          cloneMeta(snap, Some(math.max(2, snap.minReader))), None)))
       throw new java.util.ConcurrentModificationException(
         s"TxLog: clone target $targetDir was concurrently created — " +
           "refusing to clobber it")
     0L
   }
+
+  /** A clone's v0 metadata: `snap`'s non-empty fields, its mapping and
+    * retired names even when empty, no partition columns (a clone
+    * holds flat files only); txn markers stay behind. */
+  private def cloneMeta(snap: TxSnapshot, minReader: Option[Int]): Meta =
+    Meta.of(snap).copy(mapping = Some(snap.mapping),
+      retired = Some(snap.retired), minReader = minReader,
+      partitionCols = None)
 
   /** DEEP CLONE (Delta's `CREATE TABLE … CLONE src`): like [[clone]]
     * but SELF-CONTAINED — every referenced data file (and deletion
@@ -2698,19 +2559,11 @@ object TxLog {
       path = nameOf(f.path), dv = f.dv.map(nameOf)))
     val lf = fs(spark, logPath(targetDir))
     if (!tryWrite(lf, versionFile(targetDir, 0L),
-        renderCommit(0L, "clone", entries, Nil, Some(snap.schemaJson),
-          None, ddl = Some((snap.mapping, snap.retired)),
-          minReader = Seq(
-            if (entries.exists(_.dv.isDefined)) 2 else 1,
-            if (snap.mapping.nonEmpty || snap.retired.nonEmpty) 3 else 1,
-            if (snap.identity.nonEmpty ||
-              snap.generated.nonEmpty) 4 else 1)
-            .max match { case 1 => None; case m => Some(m) },
-          constraints = Some(snap.constraints).filter(_.nonEmpty),
-          identity = Some(snap.identity).filter(_.nonEmpty),
-          generated = Some(snap.generated).filter(_.nonEmpty),
-          defaults = Some(snap.defaults).filter(_.nonEmpty),
-          properties = Some(snap.properties).filter(_.nonEmpty))))
+        renderCommit(0L, "clone", entries, Nil, cloneMeta(snap, Seq(
+          if (entries.exists(_.dv.isDefined)) 2 else 1,
+          if (snap.mapping.nonEmpty || snap.retired.nonEmpty) 3 else 1,
+          if (snap.identity.nonEmpty || snap.generated.nonEmpty) 4 else 1)
+          .max match { case 1 => None; case m => Some(m) }), None)))
       throw new java.util.ConcurrentModificationException(
         s"TxLog: clone target $targetDir was concurrently created — " +
           "refusing to clobber it")
@@ -2834,29 +2687,18 @@ object TxLog {
     }.toSet
 
   /** One metadata-only DDL commit: new logical schema + full mapping
-    * and retired list. Rebases like any commit; no files move. */
+    * and retired list, computed from `snap`. Schema DDL never rebases:
+    * a claim that finds any commit after `snap` refuses. */
   private def commitSchemaChange(spark: SparkSession, dir: String,
-      op: String, schemaJson: String, mapping: Map[String, String],
-      retired: Seq[String], expectVersion: Long,
-      minReader: Int = 3): Long = {
-    val f = fs(spark, logPath(dir))
-    val v = expectVersion + 1
-    val j: JObject =
-      ("version" -> v) ~ ("op" -> op) ~
-        ("add" -> JArray(Nil)) ~ ("remove" -> JArray(Nil)) ~
-        ("schemaJson" -> schemaJson) ~
-        ("mapping" -> mapping) ~ ("retired" -> retired) ~
-        ("minReader" -> minReader)
-    if (!tryWrite(f, versionFile(dir, v),
-        JsonMethods.compact(JsonMethods.render(j))))
-      // schema DDL races are rare and the state it was computed from
-      // is stale — refuse rather than silently rebase a schema edit
-      throw new java.util.ConcurrentModificationException(
-        s"TxLog: concurrent commit while altering schema of $dir — retry")
-    if (v > 0 && v % CheckpointInterval == 0)
-      writeCheckpoint(spark, dir, v)
-    v
-  }
+      op: String, snap: TxSnapshot, schemaJson: String,
+      mapping: Map[String, String], retired: Seq[String],
+      minReader: Int = 3): Long =
+    commitMeta(spark, dir, op, snap) { head =>
+      if (head.version != snap.version)
+        throw new java.util.ConcurrentModificationException(
+          s"TxLog: concurrent commit while altering schema of $dir — retry")
+      Meta(Some(schemaJson), Some(mapping), Some(retired), Some(minReader))
+    }
 
   /** ADD COLUMN without touching a single data file (Delta's
     * `ALTER TABLE … ADD COLUMN`): the logical schema widens in ONE
@@ -2886,8 +2728,8 @@ object TxLog {
     val newSchema = StructType(schema.fields :+
       StructField(name, dt, nullable = true))
     val newMapping = snap.mapping ++ fresh
-    commitSchemaChange(spark, dir, "add-column", newSchema.json,
-      newMapping, snap.retired, snap.version,
+    commitSchemaChange(spark, dir, "add-column", snap, newSchema.json,
+      newMapping, snap.retired,
       minReader = if (newMapping.nonEmpty) 3 else 1)
   }
 
@@ -2933,8 +2775,8 @@ object TxLog {
       if (fl.name == oldName) fl.copy(name = newName) else fl))
     val newMapping = (snap.mapping - oldName) +
       (newName -> snap.phys(oldName))
-    commitSchemaChange(spark, dir, "rename", newSchema.json,
-      newMapping, snap.retired, snap.version)
+    commitSchemaChange(spark, dir, "rename", snap, newSchema.json,
+      newMapping, snap.retired)
   }
 
   /** DROP COLUMN without touching a single data file: the column
@@ -2973,8 +2815,8 @@ object TxLog {
     val newSchema = StructType(schema.fields.filterNot(_.name == name))
     val newMapping = snap.mapping - name
     val newRetired = (snap.retired :+ snap.phys(name)).distinct
-    commitSchemaChange(spark, dir, "drop", newSchema.json,
-      newMapping, newRetired, snap.version)
+    commitSchemaChange(spark, dir, "drop", snap, newSchema.json,
+      newMapping, newRetired)
   }
 
   // ---- Row-level mutations -----------------------------------------
@@ -3158,7 +3000,7 @@ object TxLog {
     * concurrent commit added inside the read (`at.guard`). `identity`:
     * the verb stages caller-supplied rows, so the identity columns are
     * statted and their watermark advances under a pin. No touched file
-    * and no rows commits no data (a supplied `txn` still advances,
+    * and no staged row commits no data (a supplied `txn` still advances,
     * metadata-only); every file and vector staged here is deleted on
     * any exit that does not commit. Logs one INFO line: the op, the
     * path taken, the touched files and matched rows. */
@@ -3203,16 +3045,21 @@ object TxLog {
       dvPath.foreach(p => fs(spark, new Path(dir)).delete(new Path(dir, p), true))
       throw e
     }
+    if (keepFiles.isEmpty && added.forall(_.rows == 0L)) {
+      // an empty insert set over untouched files: nothing to commit
+      val d = fs(spark, new Path(dir))
+      added.foreach(a => d.delete(new Path(dir, a.path), true))
+      return txn.fold(snap.version)(commitTxnAdvance(spark, dir, _))
+    }
     val entries = dvPath.toSeq.flatMap(p => byKey.map { case (k, f) =>
       f.copy(dv = Some(p), dvRows = f.dvRows + touched(k)) })
     commitStaged(spark, dir, op, entries ++ added, keepFiles.map(_.path),
       removeAll = false, snap.schemaJson, txn,
       staged = dvPath.toSeq ++ added.map(_.path),
       expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-      minReader = dvPath.map(_ => 2),
-      identityOut =
-        if (!identity || snap.identity.isEmpty) None
-        else Some(identityAfter(snap.identity, added, snap.phys)),
+      meta = _ => Meta(minReader = dvPath.map(_ => 2),
+        identity = Option.when(identity && snap.identity.nonEmpty)(
+          identityAfter(snap.identity, added, snap.phys))),
       expectIdentity =
         if (identity) snap.identity.map { case (c, s) => c -> s.high }
         else Map.empty,
@@ -4681,8 +4528,12 @@ object TxLog {
     val f = fs(spark, logPath(dir))
     val added = span.flatMap { v =>
       val j = JsonMethods.parse(readText(f, versionFile(dir, v)))
+      val adds = (j \ "add").extract[Seq[TxFile]]
+      val removes = (j \ "remove").extract[Seq[String]]
       (j \ "op").extract[String] match {
-        case "append" => (j \ "add").extract[Seq[TxFile]]
+        // a commit that moves no file (metadata, txn marker) adds no rows
+        case _ if adds.isEmpty && removes.isEmpty => Nil
+        case "append" => adds
         case "compact" => Nil // rewrites, not new rows
         case "overwrite" | "clone" if v == 0 && sinceVersion < 0 =>
           // initial load — but a CLONE's v0 may register the source's
@@ -4691,21 +4542,17 @@ object TxLog {
           // Same contract as a dv commit inside the span: a vector
           // removes rows, so the delta is not expressible as
           // additions — refuse and re-seed from the snapshot.
-          val entries = (j \ "add").extract[Seq[TxFile]]
-          val withDv = entries.count(_.dv.isDefined)
+          val withDv = adds.count(_.dv.isDefined)
           require(withDv == 0,
             s"TxLog: commit $v registers $withDv file(s) with deletion " +
               "vectors (a vector removes rows) — the span's delta is " +
               "not expressible as additions; re-read the full snapshot")
-          entries
-        case "merge" if (j \ "remove").extract[Seq[String]].isEmpty =>
+          adds
+        case "merge" if removes.isEmpty =>
           // an insert-only merge removed nothing: its adds ARE the
           // delta; a merge that rewrote files falls through to refuse
-          (j \ "add").extract[Seq[TxFile]]
-        case "constraints" | "rename" | "drop" =>
-          Nil // metadata only, no rows
-        case op if dmlSkipped(op, v,
-            (j \ "remove").extract[Seq[String]].nonEmpty,
+          adds
+        case op if dmlSkipped(op, v, removes.nonEmpty,
             skipChangeCommits, ignoreDeletes) =>
           // skipped wholesale (the ONE policy predicate admission
           // control also budgets by): a CoW delete's adds are
@@ -4984,8 +4831,10 @@ object TxLog {
       val adds = (j \ "add").extract[Seq[TxFile]].map(_.path)
       val removes = (j \ "remove").extract[Seq[String]]
       val out: Seq[DataFrame] = (j \ "op").extract[String] match {
+        // a commit that moves no file (metadata, txn marker) changes no row
+        case _ if adds.isEmpty && removes.isEmpty => Nil
         case "append" => Seq(stamp(readFiles(adds, v), "insert", v))
-        case "compact" | "constraints" | "rename" | "drop" => Nil
+        case "compact" => Nil
         case "overwrite" | "clone" if v == 0 && sinceVersion < 0 =>
           val entries = (j \ "add").extract[Seq[TxFile]]
           if (entries.forall(_.dv.isEmpty))
@@ -5183,15 +5032,14 @@ object TxLog {
     }
     commitStaged(spark, dir, "overwrite", snap.files, Nil,
       removeAll = true, snap.schemaJson, None, staged = Nil,
-      ddlState = Some((snap.mapping, snap.retired)),
-      identityOut = Some(identityBack),
+      meta = _ => Meta(mapping = Some(snap.mapping),
+        retired = Some(snap.retired), identity = Some(identityBack),
+        generated = Some(snap.generated), defaults = Some(snap.defaults),
+        constraints = Some(snap.constraints)),
       // a concurrent append advancing a watermark between the head
       // read above and the claim must conflict (the carried high
       // would silently regress below the racer's issued ids)
-      expectIdentity = head.identity.map { case (c, s) => c -> s.high },
-      generatedOut = Some(snap.generated),
-      defaultsOut = Some(snap.defaults),
-      constraintsOut = Some(snap.constraints))
+      expectIdentity = head.identity.map { case (c, s) => c -> s.high })
   }
 
   /** [[restore]] by TIMESTAMP (Delta's `RESTORE … TIMESTAMP AS OF`):

@@ -170,7 +170,8 @@ class IdentityColSpec extends SparkSpec {
       TxLog.commitStaged(spark, dir, "append", staged, Nil,
         removeAll = false, TxLog.snapshot(spark, dir).schemaJson, None,
         staged = staged.map(_.path),
-        identityOut = Some(Map("id" -> IdentitySpec(1L, 1L, Some(999L)))),
+        meta = _ => TxLog.Meta(identity =
+          Some(Map("id" -> IdentitySpec(1L, 1L, Some(999L))))),
         expectIdentity = Map("id" -> stale))
     }
     assert(e.getMessage.contains("identity watermark"))
