@@ -11,16 +11,15 @@ import graft.lineage.LineageTracker
 import graft.quality.{DataZone, QualityValidator, Report, Rule}
 
 /** Medallion ETL (SURVEY.md §2.3) — distributed re-expression of the
-  * reference's HealthcareETLManager (/root/reference/src/etl/
-  * etl_manager.py). Zones are parquet directories instead of in-memory
-  * dict lists; every load type and transform is a DataFrame operation:
+  * reference's HealthcareETLManager (etl_manager.py). Zone datasets
+  * are logged tables ([[graft.sources.TxLog]]) instead of in-memory
+  * dict lists; every load type is one log commit:
   *
   *  - FULL        → overwrite           (etl_manager.py:452-453)
   *  - APPEND      → append              (etl_manager.py:454-455)
-  *  - MERGE       → key-precedence upsert via union + window; a
-  *                  logged dataset uses TxLog.merge
+  *  - MERGE       → keyed upsert, TxLog.merge
   *                                      (etl_manager.py:456-467)
-  *  - INCREMENTAL → insert-only-new via left-anti join
+  *  - INCREMENTAL → insert-only-new via left-anti join, then append
   *                                      (etl_manager.py:468-475)
   *
   * At 100 TB: MERGE/INCREMENTAL shuffle once on the merge key (AQE
@@ -157,37 +156,38 @@ final case class JobResult(
     errorMessage: Option[String] = None,
     startedAtMs: Long = 0L, completedAtMs: Long = 0L, durationMs: Long = 0L)
 
-/** Parquet-zone medallion pipeline with quality-gated promotion.
+/** Medallion pipeline with quality-gated promotion. Every zone
+  * dataset is a logged table ([[graft.sources.TxLog]]): snapshot-
+  * isolated reads, optimistic multi-writer commits, time travel, and
+  * exactly-once [[ingestStream]] (each micro-batch commits with a
+  * (jobId, batchId) txn marker, so a replayed batch is skipped instead
+  * of duplicating bronze rows). A zone directory without a log is
+  * outside data: [[read]] reads it as parquet, and the first write
+  * registers its files as log version 0 in place.
   *
   * @param root     warehouse directory; each zone is `root/<zone>/<dataset>`
   * @param lineage  when present, every job records a plan-derived
   *                 transformation step into the tracker
   *                 (etl_manager.py:313-320 `_track_lineage`)
-  * @param useTxLog opt-in ACID mode: zone datasets are written through
-  *                 [[graft.sources.TxLog]] (snapshot-isolated reads,
-  *                 optimistic multi-writer commits, time travel via
-  *                 `TxLog.read(asOf)`, and — the headline —
-  *                 exactly-once [[ingestStream]]: each micro-batch
-  *                 commits with a (jobId, batchId) txn marker, so a
-  *                 replayed batch is skipped instead of duplicating
-  *                 bronze rows). Datasets written before enabling the
-  *                 flag keep working: an unlogged dir reads/writes
-  *                 plain until its first logged write claims version 0.
-  * @param txStatsCols TxLog mode only: columns whose per-file min/max
-  *                 every logged write records in its commit
-  *                 (stats-in-log), powering [[readPruned]] file
-  *                 skipping without a directory manifest. Columns a
-  *                 given dataset lacks are skipped for that write.
+  * @param useTxLog must be true (the default): plain-parquet zones
+  *                 are gone, and `false` is refused
+  * @param txStatsCols columns whose per-file min/max every write
+  *                 records in its commit (stats-in-log), powering
+  *                 [[readPruned]] file skipping. Columns a given
+  *                 dataset lacks are skipped for that write.
   */
 class MedallionPipeline(spark: SparkSession, root: String,
     lineage: Option[LineageTracker] = None,
-    useTxLog: Boolean = false,
+    useTxLog: Boolean = true,
     txStatsCols: Seq[String] = Nil) {
 
   import graft.sources.TxLog
 
+  require(useTxLog, "MedallionPipeline: plain-parquet zones are gone — " +
+    "every zone dataset is a logged table; useTxLog = false is refused")
+
   private def logged(zone: DataZone.Value, dataset: String): Boolean =
-    useTxLog && TxLog.isLogged(spark, path(zone, dataset))
+    TxLog.isLogged(spark, path(zone, dataset))
 
   /** Named transform registry — etl_manager.py:162-205's
     * TransformSpec/register_transform. The six standard transforms come
@@ -239,33 +239,27 @@ class MedallionPipeline(spark: SparkSession, root: String,
     if (logged(zone, dataset)) TxLog.read(spark, path(zone, dataset))
     else spark.read.parquet(path(zone, dataset))
 
-  /** Time travel (TxLog mode only): the dataset as of log `version`. */
+  /** Time travel: the dataset as of log `version`. */
   def readAsOf(zone: DataZone.Value, dataset: String,
-      version: Long): DataFrame = {
-    require(logged(zone, dataset),
-      s"readAsOf needs a TxLog-backed dataset (useTxLog=true and a " +
-        s"logged write of $dataset)")
-    TxLog.read(spark, path(zone, dataset), Some(version))
-  }
+      version: Long): DataFrame =
+    TxLog.read(spark, requireLogged(zone, dataset, "readAsOf"),
+      Some(version))
 
-  /** Time travel by TIMESTAMP (TxLog mode only): the dataset as it
+  /** Time travel by TIMESTAMP: the dataset as it
     * stood at wall-clock `ts` millis — the latest version committed
     * at-or-before that time ([[TxLog.versionAt]]). */
   def readAt(zone: DataZone.Value, dataset: String, ts: Long): DataFrame =
     TxLog.readAt(spark, requireLogged(zone, dataset, "readAt"), ts)
 
-  /** The log version live at wall-clock `ts` (TxLog mode only) — for
+  /** The log version live at wall-clock `ts` — for
     * pinning a version-keyed consumer ([[changesSince]], [[restore]])
     * to a point in time. */
   def versionAt(zone: DataZone.Value, dataset: String, ts: Long): Long =
     TxLog.versionAt(spark, requireLogged(zone, dataset, "versionAt"), ts)
 
-  /** Commit history (TxLog mode only): one row per version. */
-  def history(zone: DataZone.Value, dataset: String): DataFrame = {
-    require(logged(zone, dataset),
-      s"history needs a TxLog-backed dataset")
-    TxLog.history(spark, path(zone, dataset))
-  }
+  /** Commit history: one row per version. */
+  def history(zone: DataZone.Value, dataset: String): DataFrame =
+    TxLog.history(spark, requireLogged(zone, dataset, "history"))
 
   private def requireLogged(zone: DataZone.Value, dataset: String,
       what: String): String = {
@@ -273,7 +267,7 @@ class MedallionPipeline(spark: SparkSession, root: String,
     path(zone, dataset)
   }
 
-  /** Undo to a prior version (TxLog mode only) — a NEW commit, no data
+  /** Undo to a prior version — a NEW commit, no data
     * copy, history preserved; refuses past [[vacuumTable]]'s retention. */
   def restore(zone: DataZone.Value, dataset: String, version: Long): Long =
     TxLog.restore(spark, requireLogged(zone, dataset, "restore"), version)
@@ -283,7 +277,7 @@ class MedallionPipeline(spark: SparkSession, root: String,
   def restoreAt(zone: DataZone.Value, dataset: String, ts: Long): Long =
     TxLog.restoreAt(spark, requireLogged(zone, dataset, "restoreAt"), ts)
 
-  /** Rows appended after `sinceVersion` (TxLog mode only) — the
+  /** Rows appended after `sinceVersion` — the
     * delta-sized incremental read for downstream re-processing. */
   def changesSince(zone: DataZone.Value, dataset: String,
       sinceVersion: Long): DataFrame =
@@ -314,7 +308,7 @@ class MedallionPipeline(spark: SparkSession, root: String,
     TxLog.countWhere(spark,
       requireLogged(zone, dataset, "countRows"), preds)
 
-  /** Row-level change feed after `sinceVersion` (TxLog mode only) —
+  /** Row-level change feed after `sinceVersion` —
     * [[TxLog.changeFeed]]: the insert/delete row diff that lets a
     * downstream copy follow this dataset THROUGH deletes, updates
     * and merges, where [[changesSince]] refuses. */
@@ -323,15 +317,19 @@ class MedallionPipeline(spark: SparkSession, root: String,
     TxLog.changeFeed(spark,
       requireLogged(zone, dataset, "changeFeed"), sinceVersion)
 
-  /** Row-level DELETE on a logged dataset (TxLog mode only): rows
-    * where `pred` is TRUE are removed by rewriting only the files
-    * that hold them ([[TxLog.delete]] — copy-on-write, stats-pruned).
-    * Returns the committed version (unchanged if nothing matched). */
+  /** The [[txStatsCols]] a write of `df` records. */
+  private def statsOf(df: DataFrame): Seq[String] =
+    txStatsCols.filter(df.columns.contains)
+
   private def statsColsOf(zone: DataZone.Value, dataset: String)
       : Seq[String] =
-    txStatsCols.filter(read(zone, dataset).columns.contains)
+    statsOf(read(zone, dataset))
 
-  /** `mor = true` switches to merge-on-read ([[TxLog.deleteMor]] —
+  /** Row-level DELETE on a logged dataset: rows
+    * where `pred` is TRUE are removed by rewriting only the files
+    * that hold them ([[TxLog.delete]] — copy-on-write, stats-pruned).
+    * Returns the committed version (unchanged if nothing matched).
+    * `mor = true` switches to merge-on-read ([[TxLog.deleteMor]] —
     * deletion vectors): no file is rewritten, cost scales with the
     * matched rows; schedule [[compactTable]] to materialize. */
   def deleteWhere(zone: DataZone.Value, dataset: String,
@@ -343,7 +341,7 @@ class MedallionPipeline(spark: SparkSession, root: String,
       TxLog.delete(spark, requireLogged(zone, dataset, "deleteWhere"),
         pred, statsColsOf(zone, dataset))
 
-  /** Row-level UPDATE on a logged dataset (TxLog mode only): rows
+  /** Row-level UPDATE on a logged dataset: rows
     * where `pred` is TRUE get each `set` expression; only the files
     * holding matched rows are rewritten ([[TxLog.update]]). With
     * `mor = true`, nothing is rewritten: old positions join the
@@ -358,7 +356,7 @@ class MedallionPipeline(spark: SparkSession, root: String,
       TxLog.update(spark, requireLogged(zone, dataset, "updateWhere"),
         pred, set, statsColsOf(zone, dataset))
 
-  /** MERGE INTO a logged dataset (TxLog mode only): source rows
+  /** MERGE INTO a logged dataset: source rows
     * replace target rows sharing `keyCols`, unmatched source rows
     * insert — one commit, only key-matching files rewritten
     * ([[TxLog.merge]]: `applyChanges` with no deletes; a source with
@@ -370,7 +368,7 @@ class MedallionPipeline(spark: SparkSession, root: String,
     TxLog.merge(spark, requireLogged(zone, dataset, "mergeInto"),
       source, keyCols, statsColsOf(zone, dataset))
 
-  /** RENAME COLUMN on a logged dataset (TxLog mode only) — one
+  /** RENAME COLUMN on a logged dataset — one
     * KB-sized metadata commit, no data file touched
     * ([[TxLog.renameColumn]]). */
   def renameColumn(zone: DataZone.Value, dataset: String,
@@ -378,7 +376,7 @@ class MedallionPipeline(spark: SparkSession, root: String,
     TxLog.renameColumn(spark,
       requireLogged(zone, dataset, "renameColumn"), oldName, newName)
 
-  /** DROP COLUMN on a logged dataset (TxLog mode only) — metadata
+  /** DROP COLUMN on a logged dataset — metadata
     * commit; old files keep the bytes, reads never see them, and the
     * name's physical column is retired against resurrection
     * ([[TxLog.dropColumn]]). */
@@ -421,7 +419,7 @@ class MedallionPipeline(spark: SparkSession, root: String,
       requireLogged(zone, dataset, "vacuumDryRunTable"),
       retainVersions, minAgeMs)
 
-  /** Reap data files no retained version references (TxLog mode only).
+  /** Reap data files no retained version references.
     * Returns files deleted. Time travel / restore older than the
     * retained span dies with the files. */
   def vacuumTable(zone: DataZone.Value, dataset: String,
@@ -429,14 +427,14 @@ class MedallionPipeline(spark: SparkSession, root: String,
     TxLog.vacuum(spark, requireLogged(zone, dataset, "vacuumTable"),
       retainVersions, minAgeMs)
 
-  /** Drop commit files below the latest eligible checkpoint (TxLog
-    * mode only). Returns log files removed. */
+  /** Drop commit files below the latest eligible checkpoint. Returns
+    * log files removed. */
   def truncateHistory(zone: DataZone.Value, dataset: String,
       retainVersions: Int = 0): Int =
     TxLog.truncateLog(spark,
       requireLogged(zone, dataset, "truncateHistory"), retainVersions)
 
-  /** EXACTLY-ONCE incremental zone promotion (TxLog mode only) — the
+  /** EXACTLY-ONCE incremental zone promotion — the
     * bronze→silver micro-batch pattern without a streaming runtime:
     * transform ONLY the rows the source zone gained since this job's
     * last run ([[TxLog.changesSince]]), then gate + append them to the
@@ -478,123 +476,70 @@ class MedallionPipeline(spark: SparkSession, root: String,
       enableQuarantine = true, txn = Some((jobId, head)))
   }
 
-  /** Record a per-file min/max stats manifest for a zone dataset —
-    * [[graft.sources.StatsManifest.write]] (round-9): call after any
-    * write/compact, typically on the columns the data was range-laid
-    * by. The manifest lives inside the dataset dir (ignored by plain
-    * reads, swapped atomically with the data by [[replace]]'s rename). */
-  def writeManifest(zone: DataZone.Value, dataset: String,
-      statsCols: Seq[String]): Unit = {
-    require(!logged(zone, dataset),
-      "StatsManifest skipping applies to rename-managed datasets; a " +
-        "TxLog-backed dataset's dir holds removed-but-unvacuumed files " +
-        "a directory-level manifest would wrongly include")
-    graft.sources.StatsManifest.write(spark, path(zone, dataset), statsCols)
-  }
-
-  /** Manifest-pruned read: only files whose [min, max] range can
-    * satisfy `colName BETWEEN lo AND hi` reach the scan planner —
-    * emulated Delta/Iceberg data skipping (SURVEY §6, third swap
-    * seam). Conservative: unknown files kept, missing manifest → full
-    * read. Callers still apply the predicate. */
+  /** Stats-pruned read: only files whose logged [min, max] range
+    * (recorded when [[txStatsCols]] covers the column) can satisfy
+    * `colName BETWEEN lo AND hi` reach the scan planner — Delta's data
+    * skipping. Conservative: files without stats are kept, and a
+    * directory without a log reads whole. Callers still apply the
+    * predicate. */
   def readPruned(zone: DataZone.Value, dataset: String, colName: String,
       lo: Any, hi: Any): DataFrame =
     readPrunedAll(zone, dataset, Seq((colName, lo, hi)))
 
   /** [[readPruned]] for a CONJUNCTION of intervals — `date BETWEEN …
     * AND region = …` prunes on both columns (an equality is the
-    * degenerate interval `(col, v, v)`). Routed to whichever stats
-    * substrate backs the dataset, like the single-column form. */
+    * degenerate interval `(col, v, v)`). */
   def readPrunedAll(zone: DataZone.Value, dataset: String,
       preds: Seq[(String, Any, Any)]): DataFrame =
     if (logged(zone, dataset))
-      // stats-in-log skipping: the snapshot's own per-file min/max
-      // (recorded when txStatsCols covers the column) prunes the list
       TxLog.readPrunedAll(spark, path(zone, dataset), preds)
-    else
-      graft.sources.StatsManifest.prunedReadAll(spark,
-        path(zone, dataset), preds)
+    else read(zone, dataset)
+
+  /** MIGRATION: a directory without a log (outside data, or written
+    * before zones were logged) is registered as log version 0 IN
+    * PLACE before the first write commits. Without this, an Append/
+    * Incremental would claim v0 with only the batch's files: reads
+    * would drop every pre-existing row and vacuum would delete the
+    * historical files as non-live. Returns whether the dataset is
+    * logged now. */
+  private def adopt(target: String): Boolean = {
+    if (!TxLog.isLogged(spark, target) && Files.exists(Paths.get(target)))
+      TxLog.convertInPlace(spark, target,
+        statsOf(spark.read.parquet(target)))
+    TxLog.isLogged(spark, target)
+  }
 
   /** Distributed _write_to_zone (etl_manager.py:441-475). `key` is the
     * upsert identity for MERGE/INCREMENTAL (reference: the `id` field).
     *
-    * In TxLog mode every branch lands as one log commit (snapshot
-    * isolation replaces the stage-and-swap rename); `txn` carries an
+    * Every branch lands as one log commit; `txn` carries an
     * idempotence marker through to the commit, making a replayed
     * streaming batch a no-op ([[ingestStream]]). MERGE into an
-    * existing logged dataset is [[TxLog.merge]]: only files holding an
+    * existing dataset is [[TxLog.merge]]: only files holding an
     * incoming key are rewritten, untouched files survive by path, and
     * the commit is a `merge` the change feed (and so Scd2 /
     * MaterializedAgg followers) can read. `df` must then carry the
     * dataset's schema and be unique on `key` — duplicate incoming keys
-    * are refused (Delta's multiple-matches contract). On plain parquet
-    * MERGE stays a whole-dataset union+window rewrite, where one of
-    * several incoming rows sharing a key wins arbitrarily.
+    * are refused (Delta's multiple-matches contract).
     */
   def write(zone: DataZone.Value, dataset: String, df: DataFrame,
       loadType: LoadType.Value, key: Seq[String] = Seq("id"),
       txn: Option[(String, Long)] = None): Unit = {
     val target = path(zone, dataset)
-    // plain-parquet MERGE: union+window upsert, existing rows lose to
-    // incoming on the same key (logged datasets use TxLog.merge)
-    def upsert(): DataFrame = {
-      val existing = read(zone, dataset).withColumn("_prec", lit(1))
-      val incoming = df.withColumn("_prec", lit(0))
-      val w = Window.partitionBy(key.map(col): _*).orderBy(col("_prec"))
-      existing.unionByName(incoming)
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1).drop("_prec", "_rn")
-    }
-    if (useTxLog) {
-      def sc(d: DataFrame) = txStatsCols.filter(d.columns.contains)
-      // MIGRATION: a dataset written before useTxLog was enabled is
-      // plain parquet — register its files as log version 0 IN PLACE
-      // before the first logged commit. Without this, an Append/
-      // Incremental would claim v0 with only the batch's files: logged
-      // reads would drop every pre-existing row and vacuum would
-      // delete the historical files as non-live.
-      if (!TxLog.isLogged(spark, target) &&
-          Files.exists(Paths.get(target)))
-        TxLog.convertInPlace(spark, target,
-          txStatsCols.filter(spark.read.parquet(target).columns.contains))
-      loadType match {
-        case LoadType.Full =>
-          TxLog.commitOverwrite(spark, target, df, sc(df))
-        case LoadType.Append =>
-          TxLog.commitAppend(spark, target, df, txn, sc(df))
-        case LoadType.Merge if !exists(zone, dataset) =>
-          TxLog.commitOverwrite(spark, target, df, sc(df))
-        case LoadType.Merge =>
-          TxLog.merge(spark, target, df, key, sc(df), txn)
-        case LoadType.Incremental if !exists(zone, dataset) =>
-          TxLog.commitOverwrite(spark, target, df, sc(df))
-        case LoadType.Incremental =>
-          val existingKeys = read(zone, dataset).select(key.map(col): _*)
-          val newRows = df.join(existingKeys, key, "left_anti")
-          TxLog.commitAppend(spark, target, newRows, txn, sc(newRows))
-      }
-      return
-    }
+    val existed = adopt(target)
     loadType match {
-      case LoadType.Full if exists(zone, dataset) =>
-        // stage-and-swap: a FULL load whose input plan READS this same
-        // path (in-place cleanse, self-promotion) must not overwrite the
-        // files mid-scan
-        replace(target, df)
       case LoadType.Full =>
-        df.write.mode(SaveMode.Overwrite).parquet(target)
+        TxLog.commitOverwrite(spark, target, df, statsOf(df))
       case LoadType.Append =>
-        df.write.mode(SaveMode.Append).parquet(target)
-      case LoadType.Merge if !exists(zone, dataset) =>
-        df.write.mode(SaveMode.Overwrite).parquet(target)
+        TxLog.commitAppend(spark, target, df, txn, statsOf(df))
+      case _ if !existed =>
+        TxLog.commitOverwrite(spark, target, df, statsOf(df))
       case LoadType.Merge =>
-        replace(target, upsert())
-      case LoadType.Incremental if !exists(zone, dataset) =>
-        df.write.mode(SaveMode.Overwrite).parquet(target)
+        TxLog.merge(spark, target, df, key, statsOf(df), txn)
       case LoadType.Incremental =>
         val existingKeys = read(zone, dataset).select(key.map(col): _*)
         val newRows = df.join(existingKeys, key, "left_anti")
-        newRows.write.mode(SaveMode.Append).parquet(target)
+        TxLog.commitAppend(spark, target, newRows, txn, statsOf(newRows))
     }
   }
 
@@ -628,20 +573,17 @@ class MedallionPipeline(spark: SparkSession, root: String,
     * `ceil(rows / rowsPerFile)` files. Streaming appends and
     * incremental loads accrete small files that tax the scan planner
     * (one task per file, footer reads dominate); periodic compaction is
-    * the standard lakehouse maintenance job. Returns the file count
-    * after compaction. */
+    * the standard lakehouse maintenance job. One remove+add commit:
+    * concurrent appends commute (rebase), and readers mid-scan keep
+    * their snapshot's files. Returns the file count after
+    * compaction. */
   def compact(zone: DataZone.Value, dataset: String,
       rowsPerFile: Long): Int = {
+    val dir = requireLogged(zone, dataset, "compact")
     val df = read(zone, dataset)
     val nFiles = math.max(1, math.ceil(
       df.count().toDouble / rowsPerFile).toInt)
-    if (logged(zone, dataset))
-      // one remove+add commit; concurrent appends commute (rebase),
-      // and readers mid-scan keep their snapshot's files
-      TxLog.compact(spark, path(zone, dataset), nFiles,
-        txStatsCols.filter(df.columns.contains))
-    else
-      replace(path(zone, dataset), df.repartition(nFiles))
+    TxLog.compact(spark, dir, nFiles, statsOf(df))
     nFiles
   }
 
@@ -650,58 +592,25 @@ class MedallionPipeline(spark: SparkSession, root: String,
     * planning time — the 100 TB layout for time-partitioned facts
     * (a day's query reads a day's files, not the table). Combine with
     * [[writeBucketed]] semantics by partitioning on the coarse
-    * time/tenant key and joining on the fine key. */
+    * time/tenant key and joining on the fine key. A new dataset is
+    * created partitioned through the txlog writer; an existing one
+    * with the same partition columns is overwritten as a new version
+    * (history kept). Any other layout is refused: the log fixes a
+    * table's layout at registration. */
   def writePartitioned(zone: DataZone.Value, dataset: String, df: DataFrame,
-      partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(path(zone, dataset))
-
-  /** Parquet has no atomic overwrite-while-reading: stage to a temp
-    * dir, then SWAP it into place with a directory rename — the data is
-    * written exactly once (a read-back-and-rewrite would double the
-    * most expensive part of a 100 TB overwrite). The crash window
-    * between delete and rename leaves the complete staging dir on disk
-    * for recovery; a table format's ACID replace is the real answer,
-    * the zone contract is the same. */
-  /** Recover from a crash inside [[replace]]'s swap window. A leftover
-    * `__staging` dir is adjudicated by its `_SUCCESS` marker (the
-    * committer writes it only on a completed job): complete staging →
-    * finish the swap (the staged data is the newer committed write,
-    * whether the crash hit before or after the target delete);
-    * incomplete staging → discard it (the old target, if present, was
-    * never touched). Idempotent; returns what happened:
-    * "none" (no staging dir), "completed", or "discarded". */
-  def recoverStaging(zone: DataZone.Value, dataset: String): String = {
+      partitionCols: Seq[String]): Unit = {
     val target = path(zone, dataset)
-    val targetPath = new org.apache.hadoop.fs.Path(target)
-    val staging = new org.apache.hadoop.fs.Path(target + "__staging")
-    val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(staging)) "none"
-    else if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))) {
-      fs.delete(targetPath, true)
-      if (!fs.rename(staging, targetPath))
-        throw new IllegalStateException(
-          s"staging recovery failed: rename $staging -> $target")
-      "completed"
-    } else {
-      fs.delete(staging, true)
-      "discarded"
+    if (!adopt(target))
+      df.write.format("txlog").partitionBy(partitionCols: _*)
+        .option("statsCols", statsOf(df).mkString(",")).save(target)
+    else {
+      val layout = TxLog.snapshot(spark, target).partitionCols
+      require(layout == partitionCols,
+        s"writePartitioned: $target is a logged table partitioned by " +
+          s"[${layout.mkString(", ")}]; refusing to re-lay it out by " +
+          s"[${partitionCols.mkString(", ")}]")
+      TxLog.commitOverwrite(spark, target, df, statsOf(df))
     }
-  }
-
-  private def replace(target: String, df: DataFrame): Unit = {
-    val targetPath = new org.apache.hadoop.fs.Path(target)
-    val staging = new org.apache.hadoop.fs.Path(target + "__staging")
-    val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the incoming plan may READ `target` — it must stay untouched
-    // until the staging write has fully succeeded
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    fs.delete(targetPath, true)
-    if (!fs.rename(staging, targetPath))
-      throw new IllegalStateException(
-        s"staging swap failed: rename $staging -> $target " +
-          s"(staged data preserved at $staging)")
   }
 
   /** Record the job's plan-derived lineage (etl_manager.py:313-320):
@@ -832,91 +741,33 @@ class MedallionPipeline(spark: SparkSession, root: String,
     * Per-batch artifacts (quarantine dirs, lineage runs) are keyed
     * `<jobId>_b<batchId>`.
     *
-    * Delivery: foreachBatch + the stream checkpoint replay a failed
-    * batch. With `useTxLog = false` a replayed APPEND duplicates rows
-    * in bronze (plain parquet has no txn) — pair with downstream dedup
-    * when exactly-once matters. With `useTxLog = true` delivery is
-    * EXACTLY-ONCE: each batch's bronze append commits with txn marker
-    * `(jobId, batchId)`, so a replayed batch is recognized by the log
-    * and skipped before any work (and even a race between two replays
-    * of the same batch collapses inside [[graft.sources.TxLog
-    * .commitAppend]]'s commit loop). Quarantine dirs are keyed
-    * `<jobId>_b<batchId>` + overwrite-mode, hence replay-idempotent
-    * either way. Small files accrete per batch; schedule [[compact]]
-    * as maintenance. */
+    * Delivery is EXACTLY-ONCE: foreachBatch + the stream checkpoint
+    * replay a failed batch, and each batch's bronze append commits
+    * with txn marker `(jobId, batchId)`, so a replayed batch is
+    * recognized by the log and skipped before any work (and even a
+    * race between two replays of the same batch collapses inside
+    * [[graft.sources.TxLog.commitAppend]]'s commit loop). Quarantine
+    * dirs are keyed `<jobId>_b<batchId>` + overwrite-mode, hence
+    * replay-idempotent. Small files accrete per batch; schedule
+    * [[compact]] as maintenance. */
   def ingestStream(stream: DataFrame, jobId: String, dataset: String,
       transforms: Seq[DataFrame => DataFrame] = Seq.empty,
       rules: Seq[Rule] = Seq.empty,
       key: Seq[String] = Seq("id"),
       checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream.outputMode("append")
-    val withCp =
-      checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
-    withCp.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val bronzeDir = path(DataZone.Bronze, dataset)
-      val replayed = useTxLog && TxLog.isLogged(spark, bronzeDir) &&
-        TxLog.snapshot(spark, bronzeDir).txns.get(jobId).exists(_ >= batchId)
-      if (!replayed)
-        gateAndWrite(s"${jobId}_b$batchId", dataset, batch, DataZone.Bronze,
-          LoadType.Append, transforms, rules, key, enableQuarantine = true,
-          txn = if (useTxLog) Some((jobId, batchId)) else None)
-      ()
-    }.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    gatedAppendStream(stream, jobId, dataset, DataZone.Bronze, transforms,
+      rules, key, checkpointDir)
 
-  /** CONTINUOUS zone promotion (TxLog mode only) — the streaming form
-    * of [[runIncrementalJob]]: the source zone's logged table becomes a
-    * Structured Streaming source ([[graft.sources.TxLogStreamProvider]]
-    * — offsets ARE log versions), and every micro-batch runs the same
-    * gate-and-write core into the target zone. Where runIncrementalJob
-    * must be SCHEDULED, this runs until stopped and picks up each
-    * source commit as it lands.
-    *
-    * Delivery is exactly-once end to end: the stream checkpoint replays
-    * an uncommitted span after restart, and the target append's txn
-    * marker `(jobId, batchId)` makes the replayed batch a recognized
-    * no-op before any work — the [[ingestStream]] contract, pointed at
-    * an arbitrary zone pair. Quarantine/lineage are keyed
-    * `<jobId>_b<batchId>` per batch. A source OVERWRITE fails the
-    * stream (its retractions are not expressible as additions);
-    * re-seed with a full [[runJob]] and a fresh checkpoint. */
-  def promoteStream(jobId: String, dataset: String,
-      sourceZone: DataZone.Value, targetZone: DataZone.Value,
-      transforms: Seq[DataFrame => DataFrame] = Seq.empty,
-      rules: Seq[Rule] = Seq.empty,
-      key: Seq[String] = Seq("id"),
-      checkpointDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Long] = None,
-      maxRowsPerTrigger: Option[Long] = None,
-      maxBytesPerTrigger: Option[Long] = None,
-      skipChangeCommits: Boolean = false,
-      ignoreDeletes: Boolean = false)
+  /** The exactly-once gate-and-append sink of [[ingestStream]] and
+    * [[promoteStream]]: each micro-batch runs [[gateAndWrite]] into
+    * `targetZone` under txn marker `(jobId, batchId)`, and a batch the
+    * target's log already records is skipped before any work. */
+  private def gatedAppendStream(stream: DataFrame, jobId: String,
+      dataset: String, targetZone: DataZone.Value,
+      transforms: Seq[DataFrame => DataFrame], rules: Seq[Rule],
+      key: Seq[String], checkpointDir: Option[String])
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(useTxLog, "promoteStream requires useTxLog = true: " +
-      "exactly-once needs the target log's txn marker")
-    val srcDir = requireLogged(sourceZone, dataset, "promoteStream")
-    // admission control: a catch-up after downtime (or the initial
-    // load of a large source) drains in budget-bounded micro-batches
-    // instead of one giant batch — exactly-once is unaffected (the
-    // txn marker recognizes each replayed slice independently).
-    // skipChangeCommits / ignoreDeletes opt an appends-only promotion
-    // into surviving upstream DML (corrections are NOT promoted —
-    // pair with followStream when the target must mirror them)
-    val reader0 = spark.readStream.format("txlog")
-    val reader1 = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n))
-    val reader2 = maxRowsPerTrigger.fold(reader1)(n =>
-      reader1.option("maxRowsPerTrigger", n))
-    val reader3 = maxBytesPerTrigger.fold(reader2)(n =>
-      reader2.option("maxBytesPerTrigger", n))
-    val reader4 =
-      if (skipChangeCommits) reader3.option("skipChangeCommits", "true")
-      else reader3
-    val reader =
-      if (ignoreDeletes) reader4.option("ignoreDeletes", "true")
-      else reader4
-    val stream = reader.load(srcDir)
     val writer = stream.writeStream.outputMode("append")
     val withCp =
       checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
@@ -930,6 +781,64 @@ class MedallionPipeline(spark: SparkSession, root: String,
           txn = Some((jobId, batchId)))
       ()
     }.start()
+  }
+
+  /** A txlog stream over the logged dataset `srcDir`, read by every
+    * stream method below: the admission caps bound catch-up batches
+    * (a catch-up after downtime, or the initial load of a large
+    * source, drains in budget-bounded micro-batches instead of one
+    * giant batch), and `opts` are the method's own source options. */
+  private def txlogStream(srcDir: String, maxFilesPerTrigger: Option[Long],
+      maxRowsPerTrigger: Option[Long], maxBytesPerTrigger: Option[Long],
+      opts: (String, String)*): DataFrame = {
+    val caps = Seq("maxFilesPerTrigger" -> maxFilesPerTrigger,
+      "maxRowsPerTrigger" -> maxRowsPerTrigger,
+      "maxBytesPerTrigger" -> maxBytesPerTrigger)
+      .collect { case (k, Some(n)) => k -> n.toString }
+    spark.readStream.format("txlog").options((caps ++ opts).toMap)
+      .load(srcDir)
+  }
+
+  /** CONTINUOUS zone promotion — the streaming form
+    * of [[runIncrementalJob]]: the source zone's logged table becomes a
+    * Structured Streaming source ([[graft.sources.TxLogStreamProvider]]
+    * — offsets ARE log versions), and every micro-batch runs the same
+    * gate-and-write core into the target zone. Where runIncrementalJob
+    * must be SCHEDULED, this runs until stopped and picks up each
+    * source commit as it lands.
+    *
+    * Delivery is exactly-once end to end: the stream checkpoint replays
+    * an uncommitted span after restart, and the target append's txn
+    * marker `(jobId, batchId)` makes the replayed batch a recognized
+    * no-op before any work — the [[ingestStream]] contract, pointed at
+    * an arbitrary zone pair; the admission caps slice a catch-up
+    * without affecting it (the marker recognizes each replayed slice
+    * independently). Quarantine/lineage are keyed
+    * `<jobId>_b<batchId>` per batch. A source OVERWRITE fails the
+    * stream (its retractions are not expressible as additions);
+    * re-seed with a full [[runJob]] and a fresh checkpoint.
+    * `skipChangeCommits` / `ignoreDeletes` opt an appends-only
+    * promotion into surviving upstream DML (corrections are NOT
+    * promoted — pair with followStream when the target must mirror
+    * them). */
+  def promoteStream(jobId: String, dataset: String,
+      sourceZone: DataZone.Value, targetZone: DataZone.Value,
+      transforms: Seq[DataFrame => DataFrame] = Seq.empty,
+      rules: Seq[Rule] = Seq.empty,
+      key: Seq[String] = Seq("id"),
+      checkpointDir: Option[String] = None,
+      maxFilesPerTrigger: Option[Long] = None,
+      maxRowsPerTrigger: Option[Long] = None,
+      maxBytesPerTrigger: Option[Long] = None,
+      skipChangeCommits: Boolean = false,
+      ignoreDeletes: Boolean = false)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val srcDir = requireLogged(sourceZone, dataset, "promoteStream")
+    val flags = Seq("skipChangeCommits" -> skipChangeCommits,
+      "ignoreDeletes" -> ignoreDeletes).collect { case (k, true) => k -> "true" }
+    gatedAppendStream(txlogStream(srcDir, maxFilesPerTrigger,
+        maxRowsPerTrigger, maxBytesPerTrigger, flags: _*),
+      jobId, dataset, targetZone, transforms, rules, key, checkpointDir)
   }
 
   /** CONTINUOUS follower (the CDC mirror `promoteStream` cannot be):
@@ -950,17 +859,9 @@ class MedallionPipeline(spark: SparkSession, root: String,
       maxBytesPerTrigger: Option[Long] = None,
       mor: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(useTxLog, "followStream requires useTxLog = true")
     val srcDir = requireLogged(sourceZone, dataset, "followStream")
-    val reader0 = spark.readStream.format("txlog")
-      .option("readChangeFeed", "true")
-    val reader1 = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n))
-    val reader2 = maxRowsPerTrigger.fold(reader1)(n =>
-      reader1.option("maxRowsPerTrigger", n))
-    val reader = maxBytesPerTrigger.fold(reader2)(n =>
-      reader2.option("maxBytesPerTrigger", n))
-    TxLog.changeFeedApplySink(reader.load(srcDir),
+    TxLog.changeFeedApplySink(txlogStream(srcDir, maxFilesPerTrigger,
+        maxRowsPerTrigger, maxBytesPerTrigger, "readChangeFeed" -> "true"),
       path(targetZone, dataset), key, jobId,
       checkpointDir.getOrElse(
         s"${path(targetZone, dataset)}/_graft_ckpt_$jobId"),
@@ -993,18 +894,11 @@ class MedallionPipeline(spark: SparkSession, root: String,
       maxRowsPerTrigger: Option[Long] = None,
       maxBytesPerTrigger: Option[Long] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(useTxLog, "followDerived requires useTxLog = true")
     val srcDir = requireLogged(sourceZone, dataset, "followDerived")
     val tgtDir = path(targetZone, derivedDataset)
-    val reader0 = spark.readStream.format("txlog")
-      .option("readChangeFeed", "true")
-    val reader1 = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n))
-    val reader2 = maxRowsPerTrigger.fold(reader1)(n =>
-      reader1.option("maxRowsPerTrigger", n))
-    val reader = maxBytesPerTrigger.fold(reader2)(n =>
-      reader2.option("maxBytesPerTrigger", n))
-    TxLog.changeFeedApplySink(reader.load(srcDir), tgtDir, key, jobId,
+    TxLog.changeFeedApplySink(txlogStream(srcDir, maxFilesPerTrigger,
+        maxRowsPerTrigger, maxBytesPerTrigger, "readChangeFeed" -> "true"),
+      tgtDir, key, jobId,
       checkpointDir.getOrElse(s"$tgtDir/_graft_ckpt_$jobId"),
       statsCols, transform = Some(transform), group = group)
   }
@@ -1032,7 +926,6 @@ class MedallionPipeline(spark: SparkSession, root: String,
       maxBytesPerTrigger: Option[Long] = None,
       mor: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(useTxLog, "followAggregate requires useTxLog = true")
     val srcDir = requireLogged(sourceZone, dataset, "followAggregate")
     val mvDir = path(targetZone, mvDataset)
     val w =
@@ -1040,20 +933,13 @@ class MedallionPipeline(spark: SparkSession, root: String,
         graft.sources.MaterializedAgg.create(spark, srcDir, mvDir,
           keys, sums, mins, maxs, avgs, others)
       else graft.sources.MaterializedAgg.watermark(spark, mvDir)
-    val reader0 = spark.readStream.format("txlog")
-      .option("readChangeFeed", "true")
-      // the view already aggregated everything up to its watermark —
-      // start the feed just above it (ignored by an established
-      // checkpoint, which resumes from its own offsets)
-      .option("startingVersion", w + 1)
-    val reader1 = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n))
-    val reader2 = maxRowsPerTrigger.fold(reader1)(n =>
-      reader1.option("maxRowsPerTrigger", n))
-    val reader = maxBytesPerTrigger.fold(reader2)(n =>
-      reader2.option("maxBytesPerTrigger", n))
-    graft.sources.MaterializedAgg.mvApplySink(reader.load(srcDir), mvDir,
-      checkpointDir.getOrElse(s"$mvDir/_graft_ckpt_$jobId"), mor = mor)
+    // the view already aggregated everything up to its watermark —
+    // start the feed just above it (ignored by an established
+    // checkpoint, which resumes from its own offsets)
+    graft.sources.MaterializedAgg.mvApplySink(txlogStream(srcDir,
+        maxFilesPerTrigger, maxRowsPerTrigger, maxBytesPerTrigger,
+        "readChangeFeed" -> "true", "startingVersion" -> (w + 1).toString),
+      mvDir, checkpointDir.getOrElse(s"$mvDir/_graft_ckpt_$jobId"), mor = mor)
   }
 
   /** Attach an SCD TYPE 2 history ([[graft.sources.Scd2]]) of a
@@ -1076,24 +962,17 @@ class MedallionPipeline(spark: SparkSession, root: String,
       maxBytesPerTrigger: Option[Long] = None,
       mor: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(useTxLog, "followScd2 requires useTxLog = true")
     val srcDir = requireLogged(sourceZone, dataset, "followScd2")
     val scdDir = path(targetZone, scdDataset)
     val w =
       if (!TxLog.isLogged(spark, scdDir))
         graft.sources.Scd2.create(spark, srcDir, scdDir, keys)
       else graft.sources.Scd2.watermark(spark, scdDir)
-    val reader0 = spark.readStream.format("txlog")
-      .option("readChangeFeed", "true")
-      .option("startingVersion", w + 1)
-    val reader1 = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n))
-    val reader2 = maxRowsPerTrigger.fold(reader1)(n =>
-      reader1.option("maxRowsPerTrigger", n))
-    val reader = maxBytesPerTrigger.fold(reader2)(n =>
-      reader2.option("maxBytesPerTrigger", n))
-    graft.sources.Scd2.scd2ApplySink(reader.load(srcDir), scdDir,
-      checkpointDir.getOrElse(s"$scdDir/_graft_ckpt_$jobId"), mor = mor)
+    graft.sources.Scd2.scd2ApplySink(txlogStream(srcDir,
+        maxFilesPerTrigger, maxRowsPerTrigger, maxBytesPerTrigger,
+        "readChangeFeed" -> "true", "startingVersion" -> (w + 1).toString),
+      scdDir, checkpointDir.getOrElse(s"$scdDir/_graft_ckpt_$jobId"),
+      mor = mor)
   }
 
   /** promote_zone (etl_manager.py:597-629) — FULL load to the next zone

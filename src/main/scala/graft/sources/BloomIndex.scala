@@ -32,12 +32,10 @@ import org.apache.spark.sql.functions._
   * Probing is DISTRIBUTED: the index relation is scanned with the
   * codegen'd `bloom_probe` expression (file-count-sized job), and
   * only the surviving file NAMES (not filters) reach the driver. At
-  * 10⁶ files the index is a few GB scanned in parallel — the same
-  * scaling story as the stats manifest, while collecting the
-  * filters to the driver would not scale.
+  * 10⁶ files the index is a few GB scanned in parallel, while
+  * collecting the filters to the driver would not scale.
   *
-  * Staleness contract (same as [[StatsManifest]]): the index is
-  * advisory. Files NOT in the index (appended or DML-rewritten after
+  * Staleness contract: the index is advisory. Files NOT in the index (appended or DML-rewritten after
   * the build) are conservatively KEPT; index rows for dead files are
   * ignored (the probe intersects with the LIVE file list). Rebuild
   * with [[write]] after maintenance to restore full pruning.

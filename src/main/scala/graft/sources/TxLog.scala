@@ -25,9 +25,7 @@ import org.json4s.jackson.JsonMethods
   *  - **Snapshot isolation**: a read resolves the file list from one
   *    log version; writers never mutate committed files (overwrite =
   *    new files + logical remove), so a long scan is never torn by a
-  *    concurrent write — unlike the staging-rename swap in
-  *    [[graft.etl.MedallionPipeline]], which has a documented
-  *    delete-before-rename crash window this log removes.
+  *    concurrent write and a crashed write leaves no partial state.
   *  - **Optimistic concurrency**: the next version number is claimed
   *    by `fs.create(…, overwrite = false)`; a loser re-reads the log
   *    and REBASES. Appends commute with anything (retry at the next
@@ -44,8 +42,8 @@ import org.json4s.jackson.JsonMethods
   *  - **Idempotent txn markers**: a commit may carry (appId, batchId);
   *    a batchId ≤ the last recorded for that appId is silently skipped
   *    — exactly-once sinks for Structured Streaming's replayed
-  *    micro-batches ([[exactlyOnceSink]]), closing the at-least-once
-  *    caveat documented on `MedallionPipeline.ingestStream`.
+  *    micro-batches ([[exactlyOnceSink]],
+  *    `MedallionPipeline.ingestStream`).
   *  - **Time travel**: [[read]] with `asOf = Some(v)` replays the log
   *    to version v; files stay on disk until [[vacuum]].
   *  - **Checkpoints**: every [[CheckpointInterval]] commits the full
@@ -703,7 +701,8 @@ object TxLog {
   /** Write `df`'s data into the dataset dir as immutable uniquely-named
     * parquet files WITHOUT touching the log: stage, move into place.
     * Each file's row count and `statsCols` stats (min/max — the
-    * [[readPruned]] skipping metadata — null count and KMV sketch) are
+    * [[readPruned]] skipping metadata — null count and KMV sketch; a
+    * partition-pure write adds the partition columns) are
     * collected by the write tasks while they write it, so staging is
     * one pass over the batch and the new files are never re-read. The
     * files are invisible until a commit references them. */
@@ -729,7 +728,6 @@ object TxLog {
       if (mapping.isEmpty) df
       else df.select(df.schema.fields.map(fl =>
         col(fl.name).as(mapping.getOrElse(fl.name, fl.name))).toSeq: _*)
-    val physStats = statsCols.map(c => mapping.getOrElse(c, c))
     val dtypes = physDf.schema.fields
       .map(fl => fl.name -> fl.dataType.catalogString).toMap
     val stageDir = new Path(dir, s"_graft_stage_${UUID.randomUUID()}")
@@ -754,6 +752,11 @@ object TxLog {
       else c)
     val physParts =
       if (physParts0.forall(physOfBatch.contains)) physParts0 else Nil
+    // a partitioned file always records its partition columns' stats:
+    // the file index recovers each file's partition values from them
+    // (a file without them would drop the table's partition filters)
+    val physStats =
+      (statsCols.map(c => mapping.getOrElse(c, c)) ++ physParts).distinct
     try {
       val added =
         if (physParts.isEmpty)
@@ -1295,11 +1298,11 @@ object TxLog {
     * The missing-migration failure mode this prevents: claiming v0
     * with only a new batch's files would make logged reads drop the
     * pre-existing rows and vacuum DELETE them as non-live. No-op
-    * (returns current head) if the dir is already logged. FLAT
-    * layouts only: a directory-partitioned plain dataset (nested
-    * part files) refuses loudly ("nothing to convert") rather than
-    * registering a partial file set — repartition it flat, or
-    * overwrite through the log, to migrate. */
+    * (returns current head) if the dir is already logged. Flat and
+    * hive-partitioned (key=value) layouts both register: nested files
+    * register by their dir-relative path, the partition columns are
+    * recorded with the table (generation-5 readers) and their values
+    * as per-file stats, so partition predicates prune from the log. */
   def convertInPlace(spark: SparkSession, dir: String,
       statsCols: Seq[String] = Nil): Long = {
     if (isLogged(spark, dir)) return snapshot(spark, dir).version
@@ -1539,7 +1542,7 @@ object TxLog {
           s"the written columns ${dfId0.columns.mkString(",")}")
       dfId0.select(order.map(col): _*)
     }
-    enforceConstraints(spark, dir, dfId)
+    val checked = enforceConstraints(spark, dir, dfId)
     val (added, schemaJson) =
       stageData(spark, dir, dfId, (statsCols ++ idMap.keys).distinct,
         // partitionCols survive an overwrite (only registration sets
@@ -1550,11 +1553,14 @@ object TxLog {
     // retired-name reservations) resets with the schema
     commitStaged(spark, dir, "overwrite", added, Nil, removeAll = true,
       schemaJson, txn, staged = added.map(_.path),
-      meta = _ => Meta(mapping = Some(Map.empty), retired = Some(Nil),
-        identity = Option.when(idMap.nonEmpty)(
-          identityAfter(idMap, added, c => c)),
-        generated = Some(genMap).filter(_.nonEmpty),
-        defaults = Some(defMap).filter(_.nonEmpty)),
+      meta = { head =>
+        pinConstraints(checked, head)
+        Meta(mapping = Some(Map.empty), retired = Some(Nil),
+          identity = Option.when(idMap.nonEmpty)(
+            identityAfter(idMap, added, c => c)),
+          generated = Some(genMap).filter(_.nonEmpty),
+          defaults = Some(defMap).filter(_.nonEmpty))
+      },
       expectIdentity = expectId)
   }
 
@@ -1603,7 +1609,7 @@ object TxLog {
         dfFilled.select(order.map(col).toSeq: _*)
       case _ => dfFilled
     }
-    enforceConstraints(spark, dir, dfId)
+    val checked = enforceConstraints(spark, dir, dfId)
     // stage under the table's column mapping; brand-new columns
     // (mergeSchema) claim their own name unless a dropped/renamed
     // column retired it — then a FRESH physical name, or old files'
@@ -1638,9 +1644,12 @@ object TxLog {
     commitStaged(spark, dir, "append", added, Nil, removeAll = false,
       schemaJson, txn, mergeSchema, staged = added.map(_.path),
       freshPhys = freshPhys, stagedFields = baseFields,
-      meta = _ => Meta(identity = Option.when(idMap.nonEmpty)(
-        identityAfter(idMap, added,
-          c => (mapping ++ freshPhys).getOrElse(c, c)))),
+      meta = { head =>
+        pinConstraints(checked, head)
+        Meta(identity = Option.when(idMap.nonEmpty)(
+          identityAfter(idMap, added,
+            c => (mapping ++ freshPhys).getOrElse(c, c))))
+      },
       expectIdentity = expectId,
       txnsMulti = txnsMulti)
   }
@@ -1989,21 +1998,39 @@ object TxLog {
   /** Validate `df` against the table's active constraints — ONE scan
     * for the happy path (any-violation check); only on refusal does a
     * second pass name the culprit. No-op on unlogged dirs and
-    * constraint-free tables. */
+    * constraint-free tables. Returns the constraints it checked, for
+    * the writer's commit to pin with [[pinConstraints]]. */
   private def enforceConstraints(spark: SparkSession, dir: String,
-      df: DataFrame): Unit = {
-    if (!isLogged(spark, dir)) return
+      df: DataFrame): Map[String, String] = {
+    if (!isLogged(spark, dir)) return Map.empty
     val cs = snapshot(spark, dir).constraints
-    if (cs.isEmpty) return
+    if (cs.isEmpty) return cs
     val anyBad = cs.values.map(e => expr(e).eqNullSafe(false))
       .reduce(_ || _)
-    if (df.filter(anyBad).limit(1).count() == 0) return
+    if (df.filter(anyBad).limit(1).count() == 0) return cs
     val culprit = cs.toSeq.sortBy(_._1).find { case (_, e) =>
       df.filter(expr(e).eqNullSafe(false)).limit(1).count() > 0
     }.map(_._1).getOrElse(cs.keys.head)
     throw new IllegalArgumentException(
       s"TxLog: CHECK constraint '$culprit' (${cs(culprit)}) violated " +
         s"by the batch — nothing was written to $dir")
+  }
+
+  /** The claim-time half of [[enforceConstraints]], run inside a data
+    * commit's `meta` against the fresh head: a constraint the head
+    * holds that is not in `checked` (added or redefined while the
+    * batch staged) refuses with ConcurrentModificationException, so
+    * rows validated under the older set never land under the newer
+    * one. A dropped constraint or any other metadata change passes. */
+  private def pinConstraints(checked: Map[String, String],
+      head: TxSnapshot): Unit = {
+    val fresh = head.constraints.filterNot { case (n, e) =>
+      checked.get(n).contains(e) }
+    if (fresh.nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"TxLog: CHECK constraint(s) ${fresh.keys.toSeq.sorted.mkString(", ")} " +
+          "added by a concurrent commit after the batch was validated " +
+          "— re-run the write")
   }
 
   /** A metadata commit — no file moves — through [[commitStaged]]:
@@ -2999,7 +3026,9 @@ object TxLog {
     * Both pin the touched files' vector pointers and refuse files a
     * concurrent commit added inside the read (`at.guard`). `identity`:
     * the verb stages caller-supplied rows, so the identity columns are
-    * statted and their watermark advances under a pin. No touched file
+    * statted and their watermark advances under a pin. `checked`: the
+    * constraints the verb validated its new rows against; the commit
+    * pins them ([[pinConstraints]]). No touched file
     * and no staged row commits no data (a supplied `txn` still advances,
     * metadata-only); every file and vector staged here is deleted on
     * any exit that does not commit. Logs one INFO line: the op, the
@@ -3007,7 +3036,8 @@ object TxLog {
   private def stageTouched(spark: SparkSession, dir: String, at: Located,
       op: String, rows: Option[DataFrame], retire: Option[DataFrame],
       statsCols: Seq[String], txn: Option[(String, Long)],
-      identity: Boolean): Long = {
+      identity: Boolean,
+      checked: Option[Map[String, String]] = None): Long = {
     val Located(snap, touched, keepFiles, guard) = at
     if (keepFiles.isEmpty && rows.isEmpty)
       return txn.fold(snap.version)(commitTxnAdvance(spark, dir, _))
@@ -3057,9 +3087,12 @@ object TxLog {
       removeAll = false, snap.schemaJson, txn,
       staged = dvPath.toSeq ++ added.map(_.path),
       expectDv = keepFiles.map(f => f.path -> f.dv).toMap,
-      meta = _ => Meta(minReader = dvPath.map(_ => 2),
-        identity = Option.when(identity && snap.identity.nonEmpty)(
-          identityAfter(snap.identity, added, snap.phys))),
+      meta = { head =>
+        checked.foreach(pinConstraints(_, head))
+        Meta(minReader = dvPath.map(_ => 2),
+          identity = Option.when(identity && snap.identity.nonEmpty)(
+            identityAfter(snap.identity, added, snap.phys)))
+      },
       expectIdentity =
         if (identity) snap.identity.map { case (c, s) => c -> s.high }
         else Map.empty,
@@ -3106,7 +3139,7 @@ object TxLog {
     require(outside == 0L,
       "TxLog: replaceWhere batch contains row(s) NOT matching the " +
         "predicate — the replaced slice must contain its replacement")
-    enforceConstraints(spark, dir, src)
+    val checked = enforceConstraints(spark, dir, src)
     enforceGenerated(snap, src)
     // nothing matched still stages: the batch inserts into an empty slice
     val at = locatePredicate(spark, dir, snap, pred)
@@ -3114,7 +3147,7 @@ object TxLog {
       if (at.keepFiles.isEmpty) src
       else at.live(spark, dir).filter(!pred.eqNullSafe(true))
         .unionByName(src)),
-      retire = None, statsCols, None, identity = true)
+      retire = None, statsCols, None, identity = true, Some(checked))
   }
 
   /** Refuse assignments (an UPDATE's SET map, a MERGE clause's
@@ -3160,9 +3193,9 @@ object TxLog {
       snap, schema, at.live(spark, dir)
         .withColumn("_graft_upd", pred.eqNullSafe(true)),
       set, Some("_graft_upd")))
-    rewritten.foreach(enforceConstraints(spark, dir, _))
     stageTouched(spark, dir, at, "update", rewritten, retire = None,
-      statsCols, None, identity = false)
+      statsCols, None, identity = false,
+      rewritten.map(enforceConstraints(spark, dir, _)))
   }
 
   /** The UPDATE image of `rows`: each `set` value (cast back to its
@@ -3233,9 +3266,9 @@ object TxLog {
     try {
       val updated = Option.when(at.keepFiles.nonEmpty)(
         updatedImage(spark, snap, schema, matched, set, None))
-      updated.foreach(enforceConstraints(spark, dir, _))
       stageTouched(spark, dir, at, "update-dv", updated, Some(matched),
-        statsCols, None, identity = false)
+        statsCols, None, identity = false,
+        updated.map(enforceConstraints(spark, dir, _)))
     } finally matched.unpersist()
   }
 
@@ -3645,9 +3678,9 @@ object TxLog {
       case (Some(a), Some(b)) => Some(a.unionByName(b))
       case (a, b) => a.orElse(b)
     }
-    stagedDf.foreach(enforceConstraints(spark, dir, _))
     stageTouched(spark, dir, Located(snap, Map.empty, keepFiles, addedGuard),
-      op, stagedDf, retire = None, statsCols, None, identity = true)
+      op, stagedDf, retire = None, statsCols, None, identity = true,
+      stagedDf.map(enforceConstraints(spark, dir, _)))
     } finally releaseCheckpoint(srcData)
   }
 
@@ -3674,7 +3707,7 @@ object TxLog {
     * directive keys, and `inserts` the flag-false directives projected
     * to the table schema (`nIns` of them). */
   private final case class KeyedApply(at: Located, srcKeys: DataFrame,
-      inserts: DataFrame, nIns: Long)
+      inserts: DataFrame, nIns: Long, checked: Map[String, String])
 
   /** The locate step of every keyed apply ([[merge]], [[applyChanges]],
     * [[applyGroupChanges]], [[applyChangesMor]]): validate `changes`
@@ -3763,7 +3796,7 @@ object TxLog {
       val inserts = src.filter(!col(deleteCol))
         .select(schema.fieldNames.map(col).toSeq: _*)
       enforceGenerated(snap, inserts)
-      enforceConstraints(spark, dir, inserts)
+      val checked = enforceConstraints(spark, dir, inserts)
       val keyIntervals = envelopeIntervals(shape, keyCols)
         .map { case (k, lo, hi) => (k, Option(lo), Option(hi)) }
       val cands = prunedSnapshotFiles(spark, snap, keyIntervals)
@@ -3783,7 +3816,8 @@ object TxLog {
         snap.files.filter(f => touched.contains(fileKey(snap, f))),
         files => prunedSnapshotFiles(spark, snap.copy(files =
           files.filterNot(f => seen.contains(f.path))), keyIntervals)
-          .map(_.path)), srcKeys, inserts, shape.getAs[Long]("_graft_nins")))
+          .map(_.path)), srcKeys, inserts, shape.getAs[Long]("_graft_nins"),
+        checked))
     } finally releaseCheckpoint(src)
   }
 
@@ -3800,7 +3834,7 @@ object TxLog {
         if (k.at.keepFiles.isEmpty) Option.when(k.nIns > 0L)(k.inserts)
         else Some(k.at.live(spark, dir).join(k.srcKeys, keyCols, "left_anti")
           .unionByName(k.inserts)),
-        retire = None, statsCols, txn, identity = true)
+        retire = None, statsCols, txn, identity = true, Some(k.checked))
     }
 
   /** Merge-on-read CDC APPLY: same directive semantics as
@@ -3825,7 +3859,7 @@ object TxLog {
         if (k.at.keepFiles.isEmpty) "merge" else "update-dv",
         Option.when(k.nIns > 0L)(k.inserts.repartition(imageParts)),
         Some(k.at.tagged(spark, dir).join(k.srcKeys, keyCols, "left_semi")),
-        statsCols, txn, identity = true)
+        statsCols, txn, identity = true, Some(k.checked))
     }
 
   /** Exactly-once CDC-APPLY sink: materialize a FOLLOWER table from a
@@ -4139,8 +4173,7 @@ object TxLog {
   /** Stats-in-log data skipping: the snapshot restricted to files
     * whose recorded [min, max] for `colName` can intersect [lo, hi] —
     * answered from commit METADATA alone, no footer reads (the Delta
-    * `stats` recipe; [[StatsManifest]] is the rename-managed
-    * equivalent). Conservative: a file without stats for the column
+    * `stats` recipe). Conservative: a file without stats for the column
     * (older commit, different writer) is always kept, and when NO
     * live file has them this is exactly [[read]]. The predicate is
     * NOT applied — callers filter as usual, and parquet row-group

@@ -19,24 +19,14 @@ class EtlSpec extends SparkSpec {
   private def df(rows: (Long, String, Double)*) =
     rows.toDF("id", "code", "value")
 
-  test("recoverStaging completes committed swaps, discards partial ones") {
+  test("every zone dataset is logged; useTxLog = false is refused") {
     val p = new MedallionPipeline(spark, freshRoot())
-    // crash AFTER the target delete: committed staging, no target
-    df((1L, "A", 1.0)).write
-      .parquet(p.path(DataZone.Silver, "t") + "__staging")
-    assert(p.recoverStaging(DataZone.Silver, "t") === "completed")
-    assert(p.read(DataZone.Silver, "t").count() === 1)
-    assert(p.recoverStaging(DataZone.Silver, "t") === "none") // idempotent
-    // crash MID-WRITE: staging without _SUCCESS, target intact
-    p.write(DataZone.Silver, "t2", df((2L, "B", 2.0)), LoadType.Full)
-    val stg = p.path(DataZone.Silver, "t2") + "__staging"
-    df((9L, "Z", 9.0)).write.parquet(stg)
-    val fs = new org.apache.hadoop.fs.Path(stg)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(stg, "_SUCCESS"), false)
-    assert(p.recoverStaging(DataZone.Silver, "t2") === "discarded")
-    assert(p.read(DataZone.Silver, "t2")
-      .select("id").as[Long].collect.toSeq === Seq(2L))
+    p.write(DataZone.Raw, "t", df((1L, "a", 1.0)), LoadType.Full)
+    assert(graft.sources.TxLog.isLogged(spark, p.path(DataZone.Raw, "t")))
+    val e = intercept[IllegalArgumentException] {
+      new MedallionPipeline(spark, freshRoot(), useTxLog = false)
+    }
+    assert(e.getMessage.contains("plain-parquet zones are gone"))
   }
 
   test("FULL overwrites, APPEND accumulates") {
@@ -232,8 +222,10 @@ class EtlSpec extends SparkSpec {
     (1 to 20).foreach(i =>
       p.write(DataZone.Bronze, "t", df((i.toLong, s"v$i", i.toDouble)),
         if (i == 1) LoadType.Full else LoadType.Append))
-    def files() = new java.io.File(p.path(DataZone.Bronze, "t"))
-      .listFiles().count(_.getName.endsWith(".parquet"))
+    // the live files of the head snapshot: replaced files stay on disk
+    // until vacuum, so a directory listing would count them too
+    def files() = graft.sources.TxLog.snapshot(spark,
+      p.path(DataZone.Bronze, "t")).files.size
     assert(files() >= 20)
     val n = p.compact(DataZone.Bronze, "t", rowsPerFile = 10)
     assert(n == 2)
@@ -347,6 +339,38 @@ class EtlSpec extends SparkSpec {
       .get
     assert(scan.metadata("PartitionFilters").contains("o_orderstatus"),
       scan.metadata("PartitionFilters"))
+  }
+
+  test("writePartitioned over a logged dataset keeps its history; another layout is refused") {
+    val p = new MedallionPipeline(spark, freshRoot())
+    def rows(ids: Seq[Long]) =
+      ids.map(i => (i, if (i % 2 == 0) "even" else "odd")).toDF("id", "par")
+    p.write(DataZone.Silver, "t", rows(1L to 3L), LoadType.Full)       // v0
+    p.write(DataZone.Silver, "t", rows(Seq(4L)), LoadType.Append)      // v1
+    val dir = p.path(DataZone.Silver, "t")
+    // a flat logged table: a partitioned rewrite would change its
+    // layout, so it is refused with the log and rows intact
+    val e = intercept[IllegalArgumentException] {
+      p.writePartitioned(DataZone.Silver, "t", rows(Seq(9L)), Seq("par"))
+    }
+    assert(e.getMessage.contains("refusing to re-lay it out"))
+    assert(graft.sources.TxLog.snapshot(spark, dir).version == 1L)
+    assert(p.read(DataZone.Silver, "t").count() == 4)
+    // a partitioned dataset rewritten under the same layout is a new
+    // version, and the old one stays readable
+    p.writePartitioned(DataZone.Gold, "p", rows(1L to 3L), Seq("par"))  // v0
+    p.writePartitioned(DataZone.Gold, "p", rows(Seq(5L)), Seq("par"))   // v1
+    assert(p.history(DataZone.Gold, "p").count() == 2)
+    assert(p.read(DataZone.Gold, "p").select("id").as[Long].collect()
+      .toSeq == Seq(5L))
+    assert(p.readAsOf(DataZone.Gold, "p", 0).select("id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    // the overwrite stayed partitioned: the filter prunes directories
+    val scan = p.read(DataZone.Gold, "p").filter(col("par") === "odd")
+      .queryExecution.executedPlan.collectLeaves().collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+    assert(scan.exists(_.metadata("PartitionFilters").contains("par")),
+      scan.map(_.metadata("PartitionFilters")))
   }
 
   test("standardize_dates parses formats in reference order") {

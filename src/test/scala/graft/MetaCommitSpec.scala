@@ -215,6 +215,51 @@ class MetaCommitSpec extends SparkSpec {
     }
   }
 
+  test("a data commit refuses a CHECK constraint added while it staged; property and drop racers land") {
+    val s = spark
+    import s.implicits._
+    def k5(id: Long) = Seq((id, s"n$id", 5L)).toDF("id", "name", "k")
+    val addSmall = (d: String) => {
+      TxLog.addCheckConstraint(spark, d, "small", "k < 3"); ()
+    }
+    // each writer validates k = 5 against no constraint; the racer's
+    // constraint lands first, so the writer's claim must refuse
+    val writers: Seq[(String, String => Any)] = Seq(
+      "commitAppend" -> (d => TxLog.commitAppend(spark, d, k5(21L))),
+      "commitOverwrite" -> (d => TxLog.commitOverwrite(spark, d, k5(21L))),
+      "merge" -> (d => TxLog.merge(spark, d, k5(1L), Seq("id"))),
+      "update" -> (d => TxLog.update(spark, d, col("id") === 1,
+        Map("k" -> lit(5L)))))
+    writers.foreach { case (name, write) =>
+      val dir = tmp("metacheck")
+      table(dir)
+      intercept[java.util.ConcurrentModificationException] {
+        racing(addSmall(dir))(write(dir))
+      }
+      val h = head(dir)
+      assert(h.version == 1L && h.constraints.keySet == Set("small"), name)
+      assert(TxLog.read(spark, dir).filter(col("k") >= 3).count() == 0L &&
+        TxLog.read(spark, dir).count() == 20L, name)
+      // the refused commit's staged files are gone
+      assert(Files.list(Paths.get(dir)).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet")) ==
+        h.files.size, name)
+    }
+    // a racer that sets a property or drops a constraint takes nothing
+    // away from what the writer checked: the append lands
+    val landings: Seq[(String, String => Any)] = Seq(
+      "setTblProperties" -> (d => TxLog.setTblProperties(spark, d, Map("a" -> "1"))),
+      "dropCheckConstraint" -> (d => TxLog.dropCheckConstraint(spark, d, "big")))
+    landings.foreach { case (name, racer) =>
+      val dir = tmp("metacheck")
+      table(dir)
+      TxLog.addCheckConstraint(spark, dir, "big", "k < 10")
+      assert(racing(racer(dir))(TxLog.commitAppend(spark, dir, k5(21L))) ==
+        3L, name)
+      assert(TxLog.read(spark, dir).filter(col("k") === 5).count() == 1L, name)
+    }
+  }
+
   test("syncIdentity that loses its claim to an append keeps the racer's ids issued") {
     val s = spark
     import s.implicits._

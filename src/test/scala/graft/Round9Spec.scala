@@ -120,94 +120,16 @@ class Round9Spec extends SparkSpec {
       m.contains("maxGroupRows") && m.contains("flagOutliersRobust")))
   }
 
-  test("StatsManifest prunes the file list; results unchanged; append-safe") {
-    import graft.sources.StatsManifest
-    val dir = java.nio.file.Files.createTempDirectory("graftmf").toString
-    val data = s"$dir/t"
-    // range-lay 100 rows over 8 files → disjoint id ranges per file
-    (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
-      .repartitionByRange(8, col("id"))
-      .write.parquet(data)
-    StatsManifest.write(spark, data, Seq("id"))
-
-    val full = spark.read.parquet(data)
-    assert(full.inputFiles.length === 8)
-    val pruned = StatsManifest.prunedRead(spark, data, "id", 10L, 20L)
-    // the scan plans over FEWER files than the dataset holds...
-    assert(pruned.inputFiles.length < full.inputFiles.length,
-      pruned.inputFiles.mkString(","))
-    // ...and the filtered result is identical to the unpruned one
-    val want = full.filter(col("id").between(10, 20))
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    val got = pruned.filter(col("id").between(10, 20))
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(got === want && got.size === 11)
-
-    // a file appended AFTER the manifest must be kept conservatively
-    Seq((1000L, "late")).toDF("id", "v")
-      .write.mode("append").parquet(data)
-    val lateRows = StatsManifest.prunedRead(spark, data, "id", 999L, 1001L)
-      .filter(col("id").between(999, 1001)).count()
-    assert(lateRows === 1L)
-    // out-of-range prune with no matching file still keeps schema
-    assert(StatsManifest.prunedRead(spark, data, "id", -50L, -40L)
-      .filter(col("id").between(-50, -40)).count() === 0L)
-  }
-
-  test("StatsManifest.prunedReadAll intersects a predicate conjunction") {
-    import graft.sources.StatsManifest
-    val dir = java.nio.file.Files.createTempDirectory("graftmc").toString
-    val data = s"$dir/t"
-    def seg(ids: Range, r: String) =
-      ids.map(i => (i.toLong, r)).toDF("id", "region").coalesce(1)
-    seg(1 to 100, "A").write.parquet(data)
-    seg(101 to 200, "A").write.mode("append").parquet(data)
-    seg(201 to 300, "B").write.mode("append").parquet(data)
-    StatsManifest.write(spark, data, Seq("id", "region"))
-    assert(StatsManifest.prunedRead(spark, data, "id", 150L, 250L)
-      .inputFiles.length == 2)
-    assert(StatsManifest.prunedRead(spark, data, "region", "A", "A")
-      .inputFiles.length == 2)
-    val both = StatsManifest.prunedReadAll(spark, data,
-      Seq(("id", 150L, 250L), ("region", "A", "A")))
-    assert(both.inputFiles.length == 1,
-      s"conjunction must intersect, got ${both.inputFiles.mkString(",")}")
-    assert(both.filter(col("id").between(150, 250) &&
-      col("region") === "A").count() == 51)
-  }
-
-  test("StatsManifest.update stats only new files; idempotent when current") {
-    import graft.sources.StatsManifest
-    val dir = java.nio.file.Files.createTempDirectory("graftmu").toString
-    val data = s"$dir/t"
-    (0L until 80L).map(i => (i, s"v$i")).toDF("id", "v")
-      .repartitionByRange(8, col("id"))
-      .write.parquet(data)
-    StatsManifest.write(spark, data, Seq("id"))
-    val before = spark.read.parquet(data).inputFiles.length
-    // append two more ranges; update must stat exactly the new files
-    (100L until 120L).map(i => (i, s"v$i")).toDF("id", "v")
-      .repartitionByRange(2, col("id"))
-      .write.mode("append").parquet(data)
-    val after = spark.read.parquet(data).inputFiles.length
-    assert(StatsManifest.update(spark, data, Seq("id")) === after - before)
-    // refreshed manifest prunes INSIDE the appended range too
-    val pruned = StatsManifest.prunedRead(spark, data, "id", 100L, 105L)
-    assert(pruned.inputFiles.length < after)
-    assert(pruned.filter(col("id").between(100, 105)).count() === 6L)
-    // and a second update with nothing new is a no-op
-    assert(StatsManifest.update(spark, data, Seq("id")) === 0)
-  }
-
   test("MedallionPipeline writeManifest/readPruned round-trips a zone") {
     import graft.etl.{LoadType, MedallionPipeline}
     import graft.quality.DataZone
     val root = java.nio.file.Files.createTempDirectory("graftmp").toString
-    val p = new MedallionPipeline(spark, root)
+    // the per-file stats that a directory manifest used to hold ride
+    // the write's own log commit
+    val p = new MedallionPipeline(spark, root, txStatsCols = Seq("id"))
     val df = (0L until 64L).map(i => (i, i % 4)).toDF("id", "k")
       .repartitionByRange(4, col("id"))
     p.write(DataZone.Silver, "m9", df, LoadType.Full)
-    p.writeManifest(DataZone.Silver, "m9", Seq("id"))
     val pruned = p.readPruned(DataZone.Silver, "m9", "id", 0L, 10L)
     assert(pruned.inputFiles.length < p.read(DataZone.Silver, "m9")
       .inputFiles.length)

@@ -423,12 +423,19 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("directory manifests refuse TxLog-backed datasets (stale-file hazard)") {
+    // a directory-level stats manifest would list the removed but not
+    // yet vacuumed files of a logged dataset: pruned reads judge only
+    // the snapshot's files
     val root = tmp("medman").toString
-    val p = new MedallionPipeline(spark, root, useTxLog = true)
+    val p = new MedallionPipeline(spark, root, txStatsCols = Seq("id"))
     p.write(DataZone.Bronze, "pts", df(1, 2), LoadType.Full)
-    intercept[IllegalArgumentException] {
-      p.writeManifest(DataZone.Bronze, "pts", Seq("id"))
-    }
+    p.write(DataZone.Bronze, "pts", df(3), LoadType.Full)
+    val dir = p.path(DataZone.Bronze, "pts")
+    val onDisk = new java.io.File(dir).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(onDisk > TxLog.snapshot(spark, dir).files.size)
+    assert(idSet(p.readPruned(DataZone.Bronze, "pts", "id", 1, 3)) ==
+      Set(3L))
   }
 
   test("stats-in-log: readPruned skips files whose range can't match") {
@@ -451,6 +458,30 @@ class TxLogSpec extends SparkSpec {
     // an unknown column prunes nothing (conservative)
     assert(TxLog.readPruned(spark, dir, "name", "a", "b")
       .inputFiles.length == full.inputFiles.length)
+  }
+
+  test("partitioned tables record partition-column stats on every write, so partition filters survive") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp("txpartstats").toString
+    def rows(ids: Seq[Long]) =
+      ids.map(i => (i, if (i % 2 == 0) "even" else "odd")).toDF("id", "par")
+    rows(1L to 4L).write.format("txlog").partitionBy("par").save(dir)
+    def partitionFilters(): String = {
+      val scans = TxLog.read(spark, dir).filter(col("par") === "odd")
+        .queryExecution.executedPlan.collectLeaves().collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+      assert(scans.nonEmpty, "the index must plan a partitioned file scan")
+      scans.map(_.metadata("PartitionFilters")).mkString(";")
+    }
+    assert(partitionFilters().contains("par"))
+    // no statsCols: the writes still record `par`
+    TxLog.commitOverwrite(spark, dir, rows(5L to 8L), statsCols = Nil)
+    assert(partitionFilters().contains("par"))
+    TxLog.commitAppend(spark, dir, rows(Seq(9L)), statsCols = Nil)
+    assert(partitionFilters().contains("par"))
+    assert(TxLog.read(spark, dir).filter(col("par") === "odd")
+      .select("id").as[Long].collect().sorted.toSeq == Seq(5L, 7L, 9L))
   }
 
   test("stats-in-log survives checkpoints and mixes with stat-less commits") {
@@ -501,13 +532,11 @@ class TxLogSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val root = tmp("medmigrate").toString
-    // week 1: a pipeline WITHOUT the flag writes plain parquet
-    val plain = new MedallionPipeline(spark, root)
-    plain.write(DataZone.Bronze, "pts", df(1, 2, 3), LoadType.Full)
-    // week 2: the flag is enabled and the first logged write is an
-    // APPEND — the historical rows must be registered, not dropped
-    val p = new MedallionPipeline(spark, root, useTxLog = true,
-      txStatsCols = Seq("id"))
+    val p = new MedallionPipeline(spark, root, txStatsCols = Seq("id"))
+    // week 1: plain parquet lands in the zone directory, outside the log
+    df(1, 2, 3).write.parquet(p.path(DataZone.Bronze, "pts"))
+    // week 2: the first pipeline write is an APPEND — the historical
+    // rows must be registered, not dropped
     p.write(DataZone.Bronze, "pts", df(4), LoadType.Append)
     assert(idSet(p.read(DataZone.Bronze, "pts")) == Set(1L, 2L, 3L, 4L),
       "migration must register pre-existing rows in the log")
@@ -728,9 +757,9 @@ class TxLogSpec extends SparkSpec {
     assert(idSet(p.read(DataZone.Bronze, "pts")) == Set(1L, 2L, 3L))
     assert(p.vacuumTable(DataZone.Bronze, "pts") > 0) // reaps v2's file
     assert(idSet(p.read(DataZone.Bronze, "pts")) == Set(1L, 2L, 3L))
-    // maintenance refuses non-logged datasets
+    // maintenance refuses a directory without a log
     val plain = new MedallionPipeline(spark, tmp("medmaint2").toString)
-    plain.write(DataZone.Bronze, "pts", df(1), LoadType.Full)
+    df(1).write.parquet(plain.path(DataZone.Bronze, "pts"))
     intercept[IllegalArgumentException] {
       plain.vacuumTable(DataZone.Bronze, "pts")
     }
@@ -1289,10 +1318,10 @@ class TxLogSpec extends SparkSpec {
     val byId = out.as[(Long, String)].collect().toMap
     assert(byId(1L) == "first" && byId(50L) == "merged" &&
       byId(200L) == "new" && !byId.contains(95L))
-    // a non-logged dataset refuses the DML surface
+    // a directory without a log refuses the DML surface
     val plain = new MedallionPipeline(spark, tmp("meddml2").toString)
-    plain.write(DataZone.Bronze, "pts",
-      Seq((1L, "a")).toDF("id", "name"), LoadType.Full)
+    Seq((1L, "a")).toDF("id", "name").write
+      .parquet(plain.path(DataZone.Bronze, "pts"))
     intercept[IllegalArgumentException] {
       plain.deleteWhere(DataZone.Bronze, "pts", col("id") === 1)
     }

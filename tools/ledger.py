@@ -90,7 +90,8 @@ ROWS = [
     (101, "q30_interpolate", "hash"),
     (102, "StreamingSpec (drift monitor) | streaming/Streaming.scala",
      "api"),
-    (103, "EtlSpec (recoverStaging) | etl/Medallion.scala", "api"),
+    (103, "TxLogSpec (failed stage cleans up; medallion zone writes "
+     "through the log) | sources/TxLog.scala, etl/Medallion.scala", "api"),
     (104, "er_fuzzy_match", "hash"), (105, "vocab_oov", "hash"),
     (106, "ann_pq_topk", "rows"),
     (107, "Round7/8Spec (persisted dedup index) | operators/Dedup.scala",
@@ -112,8 +113,8 @@ ROWS = [
     (126, "q35_rolling", "hash"), (127, "curation_source_report", "hash"),
     (128, "dq_anomaly_robust", "hash"), (129, "dq_reconciliation", "hash"),
     (130, "pack_tokens", "hash"),
-    (131, "Round9Spec (StatsManifest) | sources/StatsManifest.scala",
-     "api"),
+    (131, "TxLogSpec (stats-in-log readPruned/readPrunedAll; medallion "
+     "readPruned) | sources/TxLog.scala, etl/Medallion.scala", "api"),
     (132, "ann_ivf_pq_topk", "rows"), (133, "text_quality_nb", "hash"),
     (134, "nb_calibration", "hash"), (135, "corpus_snapshot_diff", "hash"),
     (136, "StreamingSpec (NB scoring) | streaming/Streaming.scala", "api"),
