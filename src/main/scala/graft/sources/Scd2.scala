@@ -48,10 +48,12 @@ import org.json4s.jackson.JsonMethods
   * A key deleted at v and re-inserted at v' > v simply has no segment
   * covering [v, v'); an upsert whose payload equals the standing row
   * still opens a new segment IF the source commit actually changed
-  * the row — but a copy-on-write rewrite that left the row identical
-  * produces no feed row and therefore NO spurious version (the feed
-  * diffs pre/post images; net-zero rows vanish — stricter than a
-  * naive sequence-number SCD2 which versions every touch).
+  * the row — but a commit that left the row identical produces no
+  * feed row and therefore NO spurious version, whether it rewrote the
+  * row's file or retired the row under a deletion vector and wrote
+  * its image anew (the feed nets each commit's retired rows against
+  * its added rows; net-zero rows vanish — stricter than a naive
+  * sequence-number SCD2 which versions every touch).
   *
   * Out-of-order protection: a directive at or before a touched key's
   * latest recorded `valid_from` refuses loudly (history is

@@ -335,7 +335,37 @@ object TxLog {
     * and deletion vectors key by — names are UUID-unique). */
   private def nameOf(p: String): String = p.split('/').last
 
-  /** The identity [[readFilesTagged]] emits as TagFile for this
+  /** THE "were vacuumed" refusal: every reader of older entries (the
+    * span readers, [[restore]], both clones) checks its data files and
+    * deletion vectors here before planning a scan, so a reaped file
+    * refuses with a clear contract instead of a scan-time
+    * path-not-found. Bare root entries are looked up in ONE listing of
+    * `dir`, taken on first need and shared by every check on this
+    * instance; only nested or absolute entries (vectors, hive layouts,
+    * clone references) ask the filesystem one by one. */
+  private final class Presence(spark: SparkSession, dir: String) {
+    private val f = fs(spark, new Path(dir))
+    private lazy val root = f.listStatus(new Path(dir))
+      .filter(_.isFile).map(_.getPath.getName).toSet
+    private def gone(paths: Seq[String]): Seq[String] =
+      paths.distinct.filterNot(p =>
+        if (p.contains("/")) f.exists(resolvePath(dir, p)) else root(p))
+
+    /** Refuse `what` (e.g. "cannot restore to 3") when a file of
+      * `files` or a vector of `vectors` is gone; `after` follows the
+      * count and the first names. */
+    def check(files: Seq[String], vectors: Seq[String], what: String,
+        after: String = ""): Unit = {
+      val (gf, gv) = (gone(files), gone(vectors))
+      require(gf.isEmpty && gv.isEmpty, s"TxLog: $what — " +
+        Seq(gf -> "data file(s)", gv -> "deletion vector(s)")
+          .collect { case (g, kind) if g.nonEmpty => s"${g.size} $kind" }
+          .mkString(" and ") +
+        s" were vacuumed (first: ${(gf ++ gv).take(2).mkString(", ")})$after")
+    }
+  }
+
+  /** The identity [[readSnapshotTagged]] emits as TagFile for this
     * snapshot's files: base name for flat tables, dir-relative path
     * for path-partitioned registrations (base names may repeat
     * across partition dirs there). Every TagFile consumer matches
@@ -1814,11 +1844,7 @@ object TxLog {
     // rewrite into a partition-sized one.
     val scope = where match {
       case None => snap.files
-      case Some(pred) =>
-        val schema =
-          DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-        prunedSnapshotFiles(spark, snap, skippingBounds(spark, schema, pred)
-          .toSeq.map { case (c, (lo, hi)) => (c, lo, hi) })
+      case Some(pred) => predicatePrune(spark, snap, pred)(snap.files)
     }
     // a scoped OPTIMIZE whose predicate matches no files is a no-op —
     // never an empty commit. (An UNscoped compact always rewrites:
@@ -2480,13 +2506,8 @@ object TxLog {
     // like restore: a snapshot whose files were already vacuumed
     // cannot be cloned — refuse NOW, not as a scan-time path error
     // on the clone's first read
-    val fsrc = fs(spark, new Path(sourceDir))
-    val gone = (snap.files.map(_.path) ++ snap.files.flatMap(_.dv))
-      .filterNot(p => fsrc.exists(resolvePath(sourceDir, p)))
-    require(gone.isEmpty,
-      s"TxLog: cannot clone $sourceDir@${snap.version} — ${gone.size} " +
-        s"of its files were vacuumed (first: ${gone.take(2)
-          .mkString(", ")})")
+    new Presence(spark, sourceDir).check(snap.files.map(_.path),
+      snap.files.flatMap(_.dv), s"cannot clone $sourceDir@${snap.version}")
     val entries = snap.files.map(f => f.copy(
       path = resolveData(abs, f.path),
       dv = f.dv.map(d => resolveData(abs, d))))
@@ -2547,12 +2568,8 @@ object TxLog {
     // qualify through the Hadoop filesystem (never java.io.File):
     // source and target may live on any configured store
     val abs = fsrc.makeQualified(new Path(sourceDir)).toString
-    val gone = (snap.files.map(_.path) ++ snap.files.flatMap(_.dv))
-      .filterNot(p => fsrc.exists(resolvePath(sourceDir, p)))
-    require(gone.isEmpty,
-      s"TxLog: cannot clone $sourceDir@${snap.version} — ${gone.size} " +
-        s"of its files were vacuumed (first: ${gone.take(2)
-          .mkString(", ")})")
+    new Presence(spark, sourceDir).check(snap.files.map(_.path),
+      snap.files.flatMap(_.dv), s"cannot clone $sourceDir@${snap.version}")
     val all = snap.files.map(_.path) ++ snap.files.flatMap(_.dv)
     val names = all.map(nameOf)
     require(names.distinct.size == names.size,
@@ -2861,78 +2878,71 @@ object TxLog {
   // could have matched, conflicts (ConcurrentModificationException →
   // the caller retries on the new snapshot).
 
-  /** Conservative per-column [lo, hi] constraints implied by a
-    * predicate, for stats-in-log file skipping: the predicate is
-    * ANALYZED against the table schema (the DSL builds lazy column
-    * nodes, and analysis is also what folds `lit(50)` into the
-    * column's type), then conjunctions of comparisons between a bare
-    * column and a foldable value contribute bounds; anything else
-    * (OR, casts on the COLUMN side, column-vs-column) contributes
-    * nothing — the file scan stays exact, skipping is only ever an
-    * optimization. Returned per column as (Option[lo], Option[hi])
-    * with None = unbounded on that side. */
-  private[graft] def skippingBounds(spark: SparkSession,
-      schema: StructType, pred: org.apache.spark.sql.Column)
-      : Map[String, (Option[Any], Option[Any])] = {
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.expressions._
+  /** The stats-decidable part of a DML predicate, as data-source
+    * filters: the predicate is ANALYZED against the table schema (the
+    * DSL builds lazy column nodes), constant-folded (so `lit(50)`
+    * against a long column is the long 50, not a cast) and
+    * prefix-`LIKE`s become `startsWith`; then each top-level conjunct
+    * goes through the same translation the scan pushdown uses
+    * (`PlanBridge.translateFilter`). A conjunct that does not
+    * translate (casts on the COLUMN side, column-vs-column, UDFs)
+    * contributes nothing — the scan stays exact, skipping is only ever
+    * an optimization. */
+  private def skippingFilters(spark: SparkSession, schema: StructType,
+      pred: Column): Seq[org.apache.spark.sql.sources.Filter] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+    import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding,
+      LikeSimplification}
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
     val analyzed = spark.createDataFrame(
         java.util.Collections.emptyList[Row](), schema)
       .filter(pred).queryExecution.analyzed
-    val cond = analyzed.collectFirst {
+    LikeSimplification(ConstantFolding(analyzed)).collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-    }
-    def attr(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    // a foldable side (literal, or the implicit cast analysis wraps
-    // one in) evaluates to its external value; null → no constraint
-    def value(e: Expression): Option[Any] =
-      if (e.foldable)
-        Option(CatalystTypeConverters.convertToScala(e.eval(), e.dataType))
-      else None
-    def leaf(e: Expression): Seq[(String, Option[Any], Option[Any])] =
-      e match {
-        case EqualTo(a, v) if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, value(v), value(v)))
-        case EqualTo(v, a) if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, value(v), value(v)))
-        case EqualNullSafe(a, v)
-            if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, value(v), value(v)))
-        case GreaterThan(a, v)
-            if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, value(v), None))
-        case GreaterThanOrEqual(a, v)
-            if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, value(v), None))
-        case LessThan(a, v) if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, None, value(v)))
-        case LessThanOrEqual(a, v)
-            if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, None, value(v)))
-        case GreaterThan(v, a)
-            if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, None, value(v)))
-        case GreaterThanOrEqual(v, a)
-            if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, None, value(v)))
-        case LessThan(v, a) if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, value(v), None))
-        case LessThanOrEqual(v, a)
-            if attr(a).isDefined && value(v).isDefined =>
-          Seq((attr(a).get, value(v), None))
-        case And(l, r) => leaf(l) ++ leaf(r)
-        case _ => Nil
+        conjuncts(f.condition)
+    }.getOrElse(Nil).flatMap(PlanBridge.translateFilter(_))
+  }
+
+  /** Per-column [lo, hi] constraints implied by a predicate: the
+    * intervals [[TxLogBatch.intervals]] derives from its
+    * [[skippingFilters]], one (Option[lo], Option[hi]) per column with
+    * None = unbounded on that side. */
+  private[graft] def skippingBounds(spark: SparkSession,
+      schema: StructType, pred: Column)
+      : Map[String, (Option[Any], Option[Any])] =
+    TxLogBatch.intervals(skippingFilters(spark, schema, pred))
+      .groupBy(_._1).map { case (c, cs) =>
+        // any single constraint on a column is a NECESSARY condition,
+        // so one lo and one hi from the set is sound
+        c -> ((cs.flatMap(_._2).headOption, cs.flatMap(_._3).headOption))
       }
-    cond.map(leaf).getOrElse(Nil).groupBy(_._1).map { case (c, cs) =>
-      // any single constraint on a column is a NECESSARY condition,
-      // so pruning with one lo and one hi from the set is sound
-      // (conservative when several constraints overlap)
-      c -> ((cs.flatMap(_._2).headOption, cs.flatMap(_._3).headOption))
-    }
+
+  /** The file filter of a DML predicate: any file list restricted to
+    * the files whose recorded stats can satisfy `pred` — its
+    * [[skippingFilters]]' intervals (`IN` and `OR` hulls, prefix
+    * `LIKE`s included) and null predicates, through
+    * [[prunedSnapshotFiles]]. */
+  private[graft] def predicatePrune(spark: SparkSession, snap: TxSnapshot,
+      pred: Column): Seq[TxFile] => Seq[TxFile] = {
+    val filters = skippingFilters(spark,
+      DataType.fromJson(snap.schemaJson).asInstanceOf[StructType], pred)
+    val (intervals, nulls) =
+      (TxLogBatch.intervals(filters), TxLogBatch.nullPreds(filters))
+    files => prunedSnapshotFiles(spark, snap.copy(files = files),
+      intervals, nulls)
+  }
+
+  /** A DML read's guard against concurrent adds: given the head's
+    * files at claim time, the paths of those the read of `snap` did
+    * not see and that `prune` keeps — a file that could hold a row the
+    * read would have matched. Driver-side, metadata-only. */
+  private def addedGuard(snap: TxSnapshot,
+      prune: Seq[TxFile] => Seq[TxFile]): Seq[TxFile] => Seq[String] = {
+    val seen = snap.files.map(_.path).toSet
+    files => prune(files.filterNot(f => seen(f.path))).map(_.path)
   }
 
   /** What a DML verb's locate step found, handed to [[stageTouched]]:
@@ -2954,31 +2964,26 @@ object TxLog {
   /** The locate step of every predicate DML ([[delete]],
     * [[replaceWhere]], [[update]], [[deleteMor]], [[updateMor]]) — the
     * twin of [[locateKeyed]]: stats-prune `snap`'s files by the
-    * predicate's [[skippingBounds]] through [[prunedSnapshotFiles]],
-    * then ONE labelled `touched-probe` over the candidates' LIVE rows
-    * (the tagged read subtracts standing vectors, so already-deleted
-    * rows touch nothing) counts the matches per file — exact,
-    * file-count-sized on the driver. The guard, given the head's files
-    * at claim time, names the files this read missed whose recorded
-    * stats can intersect the predicate (files without stats stay
-    * conservatively conflicting) — driver-side, metadata-only. */
+    * predicate ([[predicatePrune]]), then ONE labelled `touched-probe`
+    * over the candidates' LIVE rows (the tagged read subtracts
+    * standing vectors, so already-deleted rows touch nothing) counts
+    * the matches per file — exact, file-count-sized on the driver. The
+    * guard ([[addedGuard]]) names the files the read missed whose
+    * recorded stats can satisfy the predicate (files without stats
+    * stay conservatively conflicting). */
   private def locatePredicate(spark: SparkSession, dir: String,
       snap: TxSnapshot, pred: Column): Located = {
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val intervals = skippingBounds(spark, schema, pred).toSeq
-      .map { case (c, (lo, hi)) => (c, lo, hi) }
-    val cands = prunedSnapshotFiles(spark, snap, intervals)
+    val prune = predicatePrune(spark, snap, pred)
+    val cands = prune(snap.files)
     val touched =
       if (cands.isEmpty) Map.empty[String, Long]
       else described(spark, "touched-probe") {
         rowsPerFile(readSnapshotTagged(spark, dir, snap.copy(files = cands))
           .filter(pred))
       }
-    val seen = snap.files.map(_.path).toSet
     Located(snap, touched,
       snap.files.filter(f => touched.contains(fileKey(snap, f))),
-      files => prunedSnapshotFiles(spark, snap.copy(files =
-        files.filterNot(f => seen.contains(f.path))), intervals).map(_.path))
+      addedGuard(snap, prune))
   }
 
   /** Inherit skip-stats across a rewrite: the union of columns any
@@ -3483,14 +3488,11 @@ object TxLog {
     // equality conjunct prunes from commit metadata — unless NOT
     // MATCHED BY SOURCE is present, which reads every row by meaning
     val eqPairs = mergeEqPairs(cond, schema, source.columns.toSet)
-    val seenPaths = snap.files.map(_.path).toSet
-    val (cands, addedGuard): (Seq[TxFile], Seq[TxFile] => Seq[String]) =
+    val prune: Seq[TxFile] => Seq[TxFile] =
       if (nmbs.nonEmpty || eqPairs.isEmpty)
         // the merge READS every row (no prunable envelope, or NOT
         // MATCHED BY SOURCE) — any concurrently-added file conflicts
-        (snap.files,
-          files => files.filterNot(f => seenPaths.contains(f.path))
-            .map(_.path))
+        identity
       else {
         val aggs = eqPairs.zipWithIndex.flatMap { case ((_, e), i) =>
           Seq(min(e).as(s"_lo$i"), max(e).as(s"_hi$i")) }
@@ -3500,11 +3502,9 @@ object TxLog {
           if (lo == null || hi == null) Nil
           else Seq((c, Option[Any](lo), Option[Any](hi)))
         }
-        (prunedSnapshotFiles(spark, snap, preds),
-          files => prunedSnapshotFiles(spark, snap.copy(files =
-            files.filterNot(f => seenPaths.contains(f.path))), preds)
-            .map(_.path))
+        files => prunedSnapshotFiles(spark, snap.copy(files = files), preds)
       }
+    val cands = prune(snap.files)
 
     def orConds(cs: Seq[Option[Column]]): Column =
       cs.map(_.getOrElse(lit(true))).reduceOption(_ || _)
@@ -3678,8 +3678,9 @@ object TxLog {
       case (Some(a), Some(b)) => Some(a.unionByName(b))
       case (a, b) => a.orElse(b)
     }
-    stageTouched(spark, dir, Located(snap, Map.empty, keepFiles, addedGuard),
-      op, stagedDf, retire = None, statsCols, None, identity = true,
+    stageTouched(spark, dir,
+      Located(snap, Map.empty, keepFiles, addedGuard(snap, prune)), op,
+      stagedDf, retire = None, statsCols, None, identity = true,
       stagedDf.map(enforceConstraints(spark, dir, _)))
     } finally releaseCheckpoint(srcData)
   }
@@ -3811,13 +3812,11 @@ object TxLog {
       // files a concurrent commit added inside the key envelope could
       // hold a directive key: committing would duplicate the key or
       // resurrect a deleted row
-      val seen = snap.files.map(_.path).toSet
       stage(KeyedApply(Located(snap, touched,
         snap.files.filter(f => touched.contains(fileKey(snap, f))),
-        files => prunedSnapshotFiles(spark, snap.copy(files =
-          files.filterNot(f => seen.contains(f.path))), keyIntervals)
-          .map(_.path)), srcKeys, inserts, shape.getAs[Long]("_graft_nins"),
-        checked))
+        addedGuard(snap, files => prunedSnapshotFiles(spark,
+          snap.copy(files = files), keyIntervals))),
+        srcKeys, inserts, shape.getAs[Long]("_graft_nins"), checked))
     } finally releaseCheckpoint(src)
   }
 
@@ -4102,8 +4101,15 @@ object TxLog {
     * under PHYSICAL column names. Nested (hive-layout) entries read
     * WITHOUT the partition columns and recover them from the file
     * path; root entries — every post-registration write — carry them
-    * as ordinary data. One scan per layout. */
-  private def readSnapshotTagged(spark: SparkSession, dir: String,
+    * as ordinary data. One scan per layout.
+    *
+    * The ONE explicit-path reader: DML probes, change-feed images,
+    * [[changesSince]], the streaming source and [[readSnapshot]]'s
+    * fallback all pass it a snapshot — an entry without a vector reads
+    * as it sits on disk, and the snapshot's schema and mapping are the
+    * names the rows come out under (the streaming source passes its
+    * query-start schema). Untagged callers drop the two tags. */
+  private[sources] def readSnapshotTagged(spark: SparkSession, dir: String,
       snap: TxSnapshot): DataFrame = {
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     require(!schema.fieldNames.contains(TagFile) &&
@@ -4133,16 +4139,6 @@ object TxLog {
     }.reduce(_.unionByName(_))
   }
 
-  /** [[readSnapshotTagged]] of explicit file paths, no vector applied
-    * — committed adds and removes as they sit on disk. */
-  private def readFilesTagged(spark: SparkSession, dir: String,
-      schema: StructType, paths: Seq[String],
-      mapping: Map[String, String] = Map.empty,
-      partCols: Seq[String] = Nil): DataFrame =
-    readSnapshotTagged(spark, dir, TxSnapshot(-1L, schema.json,
-      paths.map(TxFile(_, 0L)), Map.empty, mapping = mapping,
-      partitionCols = partCols))
-
   private[graft] def readSnapshot(spark: SparkSession, dir: String,
       snap: TxSnapshot): DataFrame =
     // the planner-visible presentation first: exact sizeInBytes for
@@ -4155,13 +4151,7 @@ object TxLog {
     // paths instead.
     TxFileRelation.planFor(spark, dir, snap)
       .map(PlanBridge.fromPlan(spark, _))
-      .getOrElse {
-        if (snap.files.exists(_.dv.isDefined))
-          readSnapshotTagged(spark, dir, snap).drop(TagFile, TagIdx)
-        else readAdded(spark, dir, snap.files,
-          DataType.fromJson(snap.schemaJson).asInstanceOf[StructType],
-          snap.mapping, snap.partitionCols)
-      }
+      .getOrElse(readSnapshotTagged(spark, dir, snap).drop(TagFile, TagIdx))
 
   /** Snapshot-isolated read at `asOf` (default: head). The file list
     * and schema come from one log version — concurrent commits cannot
@@ -4212,8 +4202,9 @@ object TxLog {
     * skips, so keeping every file stays correct). Callers derive their
     * intervals three ways:
     *  - predicate callers ([[locatePredicate]] for the five predicate
-    *    DML verbs and their conflict guard, `compact(where)`) from
-    *    [[skippingBounds]];
+    *    DML verbs and their conflict guard, `compact(where)`) through
+    *    [[predicatePrune]], from the same `TxLogBatch.intervals` and
+    *    `nullPreds` translation the scan pushdown uses;
     *  - keyed callers ([[locateKeyed]] and its guard, the Scd2 and
     *    MaterializedAgg follower reads) from an envelope row through
     *    [[envelopeIntervals]];
@@ -4475,31 +4466,9 @@ object TxLog {
       ignoreDeletes: Boolean = false): DataFrame = {
     val (added, snap) = changedFilesDetail(spark, dir, sinceVersion,
       untilVersion, skipChangeCommits, ignoreDeletes)
-    readAdded(spark, dir, added,
-      DataType.fromJson(snap.schemaJson).asInstanceOf[StructType],
-      snap.mapping, snap.partitionCols)
+    readSnapshotTagged(spark, dir, snap.copy(files = added))
+      .drop(TagFile, TagIdx)
   }
-
-  /** Materialize a [[changedFiles]] result under LOGICAL names — the
-    * ONE place both incremental consumption forms ([[changesSince]]
-    * and the streaming source) turn file entries into rows, so path
-    * resolution (dir-relative entries vs a clone's absolute v0
-    * entries) can never fork between them. */
-  private[sources] def readAdded(spark: SparkSession, dir: String,
-      added: Seq[TxFile], schema: StructType,
-      mapping: Map[String, String],
-      partCols: Seq[String] = Nil): DataFrame =
-    if (added.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else if (partCols.isEmpty) {
-      val raw = spark.read.schema(physSchema(schema, mapping))
-        .parquet(added.map(a => resolveData(dir, a.path)): _*)
-      if (mapping.isEmpty) raw
-      else raw.select(schema.fields.map(fl =>
-        col(mapping.getOrElse(fl.name, fl.name)).as(fl.name)).toSeq: _*)
-    } else
-      readFilesTagged(spark, dir, schema, added.map(_.path), mapping,
-        partCols).drop(TagFile, TagIdx)
 
   /** The ONE policy predicate behind `skipChangeCommits` /
     * `ignoreDeletes`: does this commit get skipped WHOLESALE from an
@@ -4545,22 +4514,9 @@ object TxLog {
       untilVersion: Option[Long] = None,
       skipChangeCommits: Boolean = false,
       ignoreDeletes: Boolean = false): (Seq[TxFile], TxSnapshot) = {
-    val (commits, _) = listLog(spark, dir)
-    require(commits.nonEmpty, s"TxLog: no transaction log under $dir/$LogDir")
-    val head = commits.max
-    val until = untilVersion.getOrElse(head)
-    require(until <= head, s"TxLog: until $until beyond head $head")
-    require(sinceVersion <= until,
-      s"TxLog: since $sinceVersion beyond until $until")
-    val span = (sinceVersion + 1) to until
-    val present = commits.toSet
-    val missing = span.filterNot(present)
-    require(missing.isEmpty,
-      s"TxLog: commits ${missing.take(3).mkString(",")}… truncated; " +
-        "incremental read from this version is no longer possible")
-    val f = fs(spark, logPath(dir))
-    val added = span.flatMap { v =>
-      val j = JsonMethods.parse(readText(f, versionFile(dir, v)))
+    val (until, commits) = commitSpan(spark, dir, sinceVersion,
+      untilVersion, "incremental read")
+    val added = commits.flatMap { case (v, j) =>
       val adds = (j \ "add").extract[Seq[TxFile]]
       val removes = (j \ "remove").extract[Seq[String]]
       (j \ "op").extract[String] match {
@@ -4604,22 +4560,38 @@ object TxLog {
     }
     // an appended file later compacted away AND vacuumed is gone from
     // disk even though its commit survives — refuse with the same
-    // clear contract as log truncation instead of a scan-time
-    // path-not-found (one driver listing, not one RPC per file)
-    if (added.nonEmpty) {
-      val live = fs(spark, new Path(dir)).listStatus(new Path(dir))
-        .filter(_.isFile).map(_.getPath.getName).toSet
-      val f2 = fs(spark, new Path(dir))
-      val gone = added.filterNot(a =>
-        if (a.path.contains("/")) f2.exists(resolvePath(dir, a.path))
-        else live.contains(a.path))
-      require(gone.isEmpty,
-        s"TxLog: ${gone.size} delta file(s) in ($sinceVersion, $until] " +
-          s"were vacuumed (first: ${gone.take(2).map(_.path)
-            .mkString(", ")}); incremental read from this version is " +
-          "no longer possible; re-read the full snapshot")
-    }
+    // clear contract as log truncation
+    if (added.nonEmpty)
+      new Presence(spark, dir).check(added.map(_.path), Nil,
+        s"delta of ($sinceVersion, $until]", "; incremental read from " +
+          "this version is no longer possible; re-read the full snapshot")
     (added, snapshot(spark, dir, Some(until)))
+  }
+
+  /** The span step of both span readers ([[changedFilesDetail]],
+    * [[changeFeed]]): the resolved until (default: the head) and every
+    * commit of `(sinceVersion, until]` parsed, in version order.
+    * Refuses an until past the head, a since past the until, and a
+    * span whose commits were truncated — naming `reader` as what is no
+    * longer possible. */
+  private def commitSpan(spark: SparkSession, dir: String,
+      sinceVersion: Long, untilVersion: Option[Long], reader: String)
+      : (Long, Seq[(Long, JValue)]) = {
+    val (commits, _) = listLog(spark, dir)
+    require(commits.nonEmpty, s"TxLog: no transaction log under $dir/$LogDir")
+    val head = commits.max
+    val until = untilVersion.getOrElse(head)
+    require(until <= head, s"TxLog: until $until beyond head $head")
+    require(sinceVersion <= until,
+      s"TxLog: since $sinceVersion beyond until $until")
+    val span = (sinceVersion + 1) to until
+    val missing = span.filterNot(commits.toSet)
+    require(missing.isEmpty,
+      s"TxLog: commits ${missing.take(3).mkString(",")}… truncated; " +
+        s"$reader from this version is no longer possible")
+    val f = fs(spark, logPath(dir))
+    (until,
+      span.map(v => v -> JsonMethods.parse(readText(f, versionFile(dir, v)))))
   }
 
   /** The (files, rows, bytes) a commit's stream-visible additions
@@ -4793,62 +4765,45 @@ object TxLog {
     * lets a downstream copy follow a table THROUGH deletes, updates
     * and merges, which [[changesSince]] (additions only) refuses.
     *
-    * Per commit: appends contribute their rows as inserts;
-    * compactions contribute nothing; DML commits contribute the
-    * multiset diff of JUST their touched files (pre \ post = delete,
-    * post \ pre = insert — an UPDATE's pre/post image pair appears as
-    * one delete + one insert); a mid-span overwrite still refuses
-    * (its retraction is the whole prior table, not a delta) — except
-    * the table-creating commit when reading from `-1`. Cost: log
-    * metadata + scans of only the span's added/removed files, plus
-    * one delta-sized exceptAll shuffle per DML commit; the v−1
-    * pre-image state is replayed ONCE and advanced incrementally
-    * across the span (a DML-heavy span costs one log replay, not one
-    * per DML commit). Like [[changesSince]], refuses when a needed
-    * file was vacuumed. */
+    * Each commit's rows follow from what it did to FILES, never from
+    * its op name, so a rewrite and a deletion-vector commit with the
+    * same effect give the same rows:
+    *  - a commit that moves no file, and a compaction, give nothing;
+    *  - an overwrite or clone gives its rows as inserts at version 0
+    *    (the initial load, read from `-1`) and refuses mid-span — its
+    *    retraction is the whole prior table, not a delta;
+    *  - every other commit: `retired` = the rows live at v−1 and no
+    *    longer live at v in the files it touched (all live rows of a
+    *    removed file; the fresh vector positions of a file it re-adds
+    *    under a new vector), `added` = the live rows of its new
+    *    entries. It emits `retired ∖ added` as deletes and `added ∖
+    *    retired` as inserts (multisets): an UPDATE's pre/post pair is
+    *    one delete + one insert, a row it left as it was gives none.
+    * Cost: log metadata + scans of only the touched and added files;
+    * one delta-sized diff aggregate per commit whose log entries show
+    * both sides non-empty (a delete-only or insert-only commit pays no
+    * shuffle); the v−1 file state is replayed ONCE, at the first
+    * commit that removes a file, and advanced incrementally across the
+    * span. Like [[changesSince]], refuses when a needed file or vector
+    * was vacuumed. */
   def changeFeed(spark: SparkSession, dir: String, sinceVersion: Long,
       untilVersion: Option[Long] = None): DataFrame = {
-    val (commits, _) = listLog(spark, dir)
-    require(commits.nonEmpty, s"TxLog: no transaction log under $dir/$LogDir")
-    val head = commits.max
-    val until = untilVersion.getOrElse(head)
-    require(until <= head, s"TxLog: until $until beyond head $head")
-    require(sinceVersion <= until,
-      s"TxLog: since $sinceVersion beyond until $until")
-    val span = (sinceVersion + 1) to until
-    val present = commits.toSet
-    val missing = span.filterNot(present)
-    require(missing.isEmpty,
-      s"TxLog: commits ${missing.take(3).mkString(",")}… truncated; " +
-        "change feed from this version is no longer possible")
-    val f = fs(spark, logPath(dir))
+    val (until, commits) = commitSpan(spark, dir, sinceVersion,
+      untilVersion, "change feed")
     val untilSnap = snapshot(spark, dir, Some(until))
-    val schema =
-      DataType.fromJson(untilSnap.schemaJson).asInstanceOf[StructType]
-    val mapping = untilSnap.mapping
-    val live = fs(spark, new Path(dir)).listStatus(new Path(dir))
-      .filter(_.isFile).map(_.getPath.getName).toSet
-    def readFiles(paths: Seq[String], v: Long): DataFrame = {
-      val gone = paths.filterNot(p =>
-        if (p.contains("/")) fs(spark, new Path(dir))
-          .exists(resolvePath(dir, p))
-        else live.contains(p))
-      require(gone.isEmpty,
-        s"TxLog: commit $v's file(s) ${gone.take(2).mkString(", ")} " +
-          "were vacuumed; change feed from this version is no longer " +
-          "possible; re-read the full snapshot")
-      readFilesTagged(spark, dir, schema, paths, mapping,
-        untilSnap.partitionCols).drop(TagFile, TagIdx)
-    }
+    val present = new Presence(spark, dir)
+    // live rows of `entries` under the span-end schema: an entry's
+    // vector subtracts, an entry without one reads as it sits on disk
+    def rows(v: Long, entries: Seq[TxFile]): DataFrame =
+      readSnapshotTagged(spark, dir, untilSnap.copy(version = v,
+        files = entries))
     def stamp(df: DataFrame, tpe: String, v: Long): DataFrame =
       df.withColumn("_change_type", lit(tpe))
         .withColumn("_commit_version", lit(v))
-    // v−1 file state for DML pre-images, maintained INCREMENTALLY:
-    // seeded lazily by ONE snapshot at the first commit that needs a
-    // pre-image, then advanced per commit through the same applyCommit
-    // replay the snapshot reader uses — a long span over a
-    // copy-on-write table costs zero extra log replays, and a
-    // DML-heavy span costs one, not one per DML commit
+    // v−1 file state, maintained INCREMENTALLY: seeded by ONE snapshot
+    // at the first commit that removes a file, then advanced per
+    // commit through the same applyCommit replay the snapshot reader
+    // uses — a DML-heavy span costs one log replay, not one per commit
     var prevState: State = null
     def prevFiles(v: Long): Map[String, TxFile] = {
       if (prevState == null) {
@@ -4859,168 +4814,87 @@ object TxLog {
       }
       prevState.files.toMap
     }
-    val legs = span.flatMap { v =>
-      val j = JsonMethods.parse(readText(f, versionFile(dir, v)))
-      val adds = (j \ "add").extract[Seq[TxFile]].map(_.path)
+    val legs = commits.flatMap { case (v, j) =>
+      val adds = (j \ "add").extract[Seq[TxFile]]
       val removes = (j \ "remove").extract[Seq[String]]
-      val out: Seq[DataFrame] = (j \ "op").extract[String] match {
-        // a commit that moves no file (metadata, txn marker) changes no row
-        case _ if adds.isEmpty && removes.isEmpty => Nil
-        case "append" => Seq(stamp(readFiles(adds, v), "insert", v))
-        case "compact" => Nil
-        case "overwrite" | "clone" if v == 0 && sinceVersion < 0 =>
-          val entries = (j \ "add").extract[Seq[TxFile]]
-          if (entries.forall(_.dv.isEmpty))
-            Seq(stamp(readFiles(adds, v), "insert", v))
-          else {
-            // a clone's v0 carries the SOURCE's deletion vectors: the
-            // initial load is adds MINUS vectors (exactly read() of
-            // that snapshot) — raw files would resurrect deleted rows
-            val fd = fs(spark, new Path(dir))
-            val gone = adds.filterNot(p =>
-              if (p.contains("/")) fd.exists(resolvePath(dir, p))
-              else live.contains(p))
-            require(gone.isEmpty,
-              s"TxLog: commit $v's file(s) ${gone.take(2).mkString(", ")} " +
-                "were vacuumed; change feed from this version is no " +
-                "longer possible; re-read the full snapshot")
-            val goneDv = entries.flatMap(_.dv).distinct
-              .filterNot(p => fd.exists(resolvePath(dir, p)))
-            require(goneDv.isEmpty,
-              s"TxLog: commit $v's deletion vector(s) " +
-                s"${goneDv.take(2).mkString(", ")} were vacuumed; change " +
-                "feed from this version is no longer possible; re-read " +
-                "the full snapshot")
-            val liveRows = readSnapshotTagged(spark, dir,
-              TxSnapshot(v, untilSnap.schemaJson, entries, Map.empty,
-                mapping = mapping,
-                partitionCols = untilSnap.partitionCols))
-              .drop(TagFile, TagIdx)
-            Seq(stamp(liveRows, "insert", v))
+      val op = (j \ "op").extract[String]
+      val out: Seq[DataFrame] =
+        if ((adds.isEmpty && removes.isEmpty) || op == "compact") Nil
+        else {
+          require(v == 0 || (op != "overwrite" && op != "clone"),
+            s"TxLog: commit $v is '$op' — its retraction is the whole " +
+              "prior table, not a delta; re-read the full snapshot")
+          val prev = if (removes.isEmpty) Map.empty[String, TxFile]
+            else prevFiles(v)
+          val (reAdded, fresh) = adds.partition(a => prev.contains(a.path))
+          val kept = reAdded.map(_.path).toSet
+          val whole = removes.filterNot(kept)
+            .map(p => prev.getOrElse(p, TxFile(p, 0L)))
+          def dvAt(p: String) = prev.get(p).flatMap(_.dv)
+          val revectored =
+            reAdded.filter(a => a.dv.isDefined && a.dv != dvAt(a.path))
+          val oldDvs = revectored.flatMap(a => dvAt(a.path))
+          present.check((whole ++ revectored ++ fresh).map(_.path),
+            (whole ++ revectored ++ fresh).flatMap(_.dv) ++ oldDvs,
+            s"commit $v's entries", "; change feed from this version " +
+              "is no longer possible; re-read the full snapshot")
+          // a re-added file's retired rows are the positions its new
+          // vector covers beyond its v−1 vector: a pair-identity diff
+          // of two deleted-rows-sized relations, semi-joined onto the
+          // file's raw rows
+          val fromVectors = Option.when(revectored.nonEmpty) {
+            val keys = revectored.map(fileKey(untilSnap, _))
+            def pairs(ps: Seq[String]): DataFrame = spark.read
+              .parquet(ps.distinct.map(resolveData(dir, _)): _*)
+              .filter(col("file").isInCollection(keys))
+            val newer = pairs(revectored.flatMap(_.dv))
+            val gone =
+              if (oldDvs.isEmpty) newer else newer.except(pairs(oldDvs))
+            val raw = rows(v, revectored.map(_.copy(dv = None)))
+            raw.join(broadcast(gone), raw(TagFile) === gone("file") &&
+              raw(TagIdx) === gone("row_index"), "left_semi")
           }
-        case "delete" | "update" | "merge" =>
-          // the pre-image must be the rows LIVE at v−1, not the raw
-          // removed files: a CoW rewrite touching a file that carries
-          // a deletion vector (MoR delete followed by CoW DML) would
-          // otherwise resurrect the vector's rows as spurious feed
-          // deletes — the same class as the clone-v0 hole, at the
-          // CoW-after-MoR intersection (caught by the randomized
-          // feed-follower model check)
-          val prevEntries = prevFiles(v)
-          val removedEntries = removes.map(p =>
-            prevEntries.getOrElse(p, TxFile(p, 0L)))
-          val pre =
-            if (removedEntries.forall(_.dv.isEmpty)) readFiles(removes, v)
-            else {
-              val fd = fs(spark, new Path(dir))
-              val gone = removes.filterNot(p =>
-                if (p.contains("/")) fd.exists(resolvePath(dir, p))
-                else live.contains(p))
-              require(gone.isEmpty,
-                s"TxLog: commit $v's file(s) ${gone.take(2).mkString(", ")} " +
-                  "were vacuumed; change feed from this version is no " +
-                  "longer possible; re-read the full snapshot")
-              val goneDv = removedEntries.flatMap(_.dv).distinct
-                .filterNot(p => fd.exists(resolvePath(dir, p)))
-              require(goneDv.isEmpty,
-                s"TxLog: commit $v's deletion vector(s) " +
-                  s"${goneDv.take(2).mkString(", ")} were vacuumed; " +
-                  "change feed from this version is no longer " +
-                  "possible; re-read the full snapshot")
-              readSnapshotTagged(spark, dir,
-                TxSnapshot(v - 1, untilSnap.schemaJson, removedEntries,
-                  Map.empty, mapping = mapping,
-                  partitionCols = untilSnap.partitionCols))
-                .drop(TagFile, TagIdx)
-            }
-          val post = readFiles(adds, v)
-          // both diff directions in ONE pass: Spark rewrites each
-          // exceptAll into union → count-aggregate → replicate, so the
-          // two legs separately would scan pre AND post twice and pay
-          // two aggregate shuffles. Tagging pre +1 / post −1 and
-          // aggregating once yields the identical multisets — rows
-          // with positive excess are pre-only copies (deletes),
-          // negative excess post-only copies (inserts) — at half the
-          // scans and half the shuffles (guide §2.3/§2.4). Grouping
-          // semantics (null-safe equality, NaN/-0.0 normalization)
-          // match exceptAll's by construction: ExceptAll lowers to the
-          // same Aggregate.
-          val cols = pre.columns.toSeq
-          val diff = pre.withColumn("_graft_w", lit(1L))
-            .unionByName(post.withColumn("_graft_w", lit(-1L)))
-            .groupBy(cols.map(col): _*)
-            .agg(sum(col("_graft_w")).as("_graft_d"))
-            .filter(col("_graft_d") =!= 0L)
-          Seq(diff
-            .select(cols.map(col) :+
-              when(col("_graft_d") > 0, lit("delete"))
-                .otherwise(lit("insert")).as("_change_type") :+
-              abs(col("_graft_d")).cast("int").as("_graft_copies"): _*)
-            .withColumn("_graft_rep",
-              explode(array_repeat(lit(true), col("_graft_copies"))))
-            .drop("_graft_copies", "_graft_rep")
-            .withColumn("_commit_version", lit(v)))
-        case "delete-dv" | "update-dv" =>
-          // deletes = the rows this commit's vectors cover BEYOND the
-          // touched files' vectors at v−1 (pair-identity diff — both
-          // relations are deleted-rows sized); inserts = the commit's
-          // genuinely new files (an update's post-images)
-          val entries = (j \ "add").extract[Seq[TxFile]]
-          val prevAt = prevFiles(v)
-          val (reAdds, newFiles) =
-            entries.partition(e => prevAt.contains(e.path))
-          val touchedPaths = reAdds.map(_.path)
-          val goneData = touchedPaths.filterNot(p =>
-            if (p.contains("/")) fs(spark, new Path(dir))
-              .exists(resolvePath(dir, p))
-            else live.contains(p))
-          require(goneData.isEmpty,
-            s"TxLog: commit $v's file(s) ${goneData.take(2).mkString(", ")} " +
-              "were vacuumed; change feed from this version is no " +
-              "longer possible; re-read the full snapshot")
-          val dvPaths = (reAdds.flatMap(_.dv) ++
-            touchedPaths.flatMap(p => prevAt(p).dv)).distinct
-          val goneDv = dvPaths.filterNot(p =>
-            f.exists(resolvePath(dir, p)))
-          require(goneDv.isEmpty,
-            s"TxLog: commit $v's deletion vector(s) " +
-              s"${goneDv.take(2).mkString(", ")} were vacuumed; change " +
-              "feed from this version is no longer possible; re-read " +
-              "the full snapshot")
-          // vectors key rows by the table's file identity: bare NAME
-          // for flat tables (a cloned entry's PATH is absolute, so
-          // filtering by path would silently drop its deletes),
-          // dir-relative PATH for path-partitioned registrations
-          val touchedNames =
-            if (untilSnap.partitionCols.isEmpty) touchedPaths.map(nameOf)
-            else touchedPaths
-          def dvRel(paths: Seq[String]): Option[DataFrame] =
-            if (paths.isEmpty) None
-            else Some(spark.read
-              .parquet(paths.map(p => resolveData(dir, p)): _*)
-              .filter(col("file").isInCollection(touchedNames)))
-          val newRel = dvRel(reAdds.flatMap(_.dv).distinct).get
-          val fresh = dvRel(touchedPaths.flatMap(p => prevAt(p).dv)
-            .distinct).fold(newRel)(old => newRel.except(old))
-          val raw =
-            readFilesTagged(spark, dir, schema, touchedPaths, mapping,
-              untilSnap.partitionCols)
-          val pre = raw.join(broadcast(fresh),
-            raw(TagFile) === fresh("file") &&
-              raw(TagIdx) === fresh("row_index"), "left_semi")
-            .drop(TagFile, TagIdx)
-          Seq(stamp(pre, "delete", v)) ++
-            (if (newFiles.isEmpty) Nil
-             else Seq(stamp(readFiles(newFiles.map(_.path), v),
-               "insert", v)))
-        case op => throw new IllegalArgumentException(
-          s"TxLog: commit $v is '$op' — its retraction is the whole " +
-            "prior table, not a delta; re-read the full snapshot")
-      }
+          val retired =
+            (Option.when(whole.nonEmpty)(rows(v - 1, whole)) ++ fromVectors)
+              .map(_.drop(TagFile, TagIdx)).reduceOption(_.unionByName(_))
+          val added = Option.when(fresh.nonEmpty)(
+            rows(v, fresh).drop(TagFile, TagIdx))
+          (retired, added) match {
+            case (Some(pre), Some(post)) =>
+              // both diff directions in ONE pass: tagging pre +1 /
+              // post −1 and aggregating once yields exceptAll's two
+              // multisets — positive excess are pre-only copies
+              // (deletes), negative excess post-only copies (inserts) —
+              // at one scan of each side and one aggregate shuffle;
+              // grouping semantics (null-safe equality, NaN/-0.0
+              // normalization) match exceptAll's, which lowers to the
+              // same Aggregate
+              val cols = pre.columns.toSeq
+              val diff = pre.withColumn("_graft_w", lit(1L))
+                .unionByName(post.withColumn("_graft_w", lit(-1L)))
+                .groupBy(cols.map(col): _*)
+                .agg(sum(col("_graft_w")).as("_graft_d"))
+                .filter(col("_graft_d") =!= 0L)
+              Seq(diff
+                .select(cols.map(col) :+
+                  when(col("_graft_d") > 0, lit("delete"))
+                    .otherwise(lit("insert")).as("_change_type") :+
+                  abs(col("_graft_d")).cast("int").as("_graft_copies"): _*)
+                .withColumn("_graft_rep",
+                  explode(array_repeat(lit(true), col("_graft_copies"))))
+                .drop("_graft_copies", "_graft_rep")
+                .withColumn("_commit_version", lit(v)))
+            case (pre, post) =>
+              pre.map(stamp(_, "delete", v)).toSeq ++
+                post.map(stamp(_, "insert", v))
+          }
+        }
       if (prevState != null) applyCommit(prevState, j)
       out
     }
     legs.reduceOption(_.unionByName(_)).getOrElse {
+      val schema =
+        DataType.fromJson(untilSnap.schemaJson).asInstanceOf[StructType]
       val empty = spark.createDataFrame(
         java.util.Collections.emptyList[Row](), schema)
       stamp(empty, "insert", until).limit(0)
@@ -5036,17 +4910,8 @@ object TxLog {
     * [[vacuum]]'s retention. */
   def restore(spark: SparkSession, dir: String, version: Long): Long = {
     val snap = snapshot(spark, dir, Some(version))
-    val f = fs(spark, new Path(dir))
-    val gone = snap.files.filterNot(a =>
-      f.exists(resolvePath(dir, a.path)))
-    require(gone.isEmpty,
-      s"TxLog: cannot restore to $version — ${gone.size} of its files " +
-        s"were vacuumed (first: ${gone.take(2).map(_.path).mkString(", ")})")
-    val goneDv = snap.files.flatMap(_.dv).distinct
-      .filterNot(d => f.exists(resolvePath(dir, d)))
-    require(goneDv.isEmpty,
-      s"TxLog: cannot restore to $version — its deletion vector(s) " +
-        s"${goneDv.take(2).mkString(", ")} were vacuumed")
+    new Presence(spark, dir).check(snap.files.map(_.path),
+      snap.files.flatMap(_.dv), s"cannot restore to $version")
     // metadata replay is full-state last-write-wins, so the restore
     // commit must CARRY the target snapshot's identity / generated /
     // defaults / constraints explicitly (possibly-empty maps RESET) —

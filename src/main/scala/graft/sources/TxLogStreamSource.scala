@@ -64,8 +64,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SQLContext, SparkSession}
   * zero admission budget. Both flags refuse under `readChangeFeed`
   * (the feed already expresses DML as row-level diffs). A dv-FREE
   * clone streams fine: its absolute v0 entries resolve through the
-  * same [[TxLog.readAdded]] helper `changesSince` uses. Cost per
-  * micro-batch: log metadata + a scan of only the delta files.
+  * same [[TxLog.readSnapshotTagged]] reader `changesSince` uses. Cost
+  * per micro-batch: log metadata + a scan of only the delta files.
   */
 class TxLogStreamProvider extends StreamSourceProvider
   with StreamSinkProvider with DataSourceRegister
@@ -592,8 +592,9 @@ class TxLogSource(spark: SparkSession, dir: String,
               "the query started with were dropped mid-stream; restart " +
               "the query to adopt the new schema")
         PlanBridge.asStreamingBatch(spark,
-          TxLog.readAdded(spark, dir, added, tableSchema, mapping0,
-            untilSnap.partitionCols))
+          TxLog.readSnapshotTagged(spark, dir, untilSnap.copy(
+            files = added, schemaJson = tableSchema.json,
+            mapping = mapping0)).drop(TxLog.TagFile, TxLog.TagIdx))
       }
     }
   }

@@ -334,4 +334,39 @@ class Scd2Spec extends SparkSpec {
       s"snapshotAt read $pruned of $all files — no valid_from pruning")
     assertHistory(src, scd, w0)
   }
+
+  test("vector commits net like rewrites: identity updates and upserts feed nothing, open no version") {
+    val s = spark
+    import s.implicits._
+    val same = Seq((3L, 3L, false)).toDF("id", "v", "_del")
+    val verbs: Seq[(String, String => Long)] = Seq(
+      "update" -> (d => TxLog.update(spark, d, col("id") === 3L,
+        Map("v" -> col("v")))),
+      "updateMor" -> (d => TxLog.updateMor(spark, d, col("id") === 3L,
+        Map("v" -> col("v")))),
+      "applyChanges" -> (d => TxLog.applyChanges(spark, d, same,
+        Seq("id"), "_del")),
+      "applyChangesMor" -> (d => TxLog.applyChangesMor(spark, d, same,
+        Seq("id"), "_del")))
+    verbs.foreach { case (name, verb) =>
+      val src = tmp(s"scd2same_$name").toString
+      val scd = tmp(s"scd2sameh_$name").toString + "/t"
+      TxLog.commitOverwrite(spark, src,
+        rows((0L until 10L).map(i => (i, i)): _*).coalesce(1),
+        statsCols = Seq("id"))
+      TxLog.deleteMor(spark, src, col("id") === 9L) // the table's vector
+      val w0 = Scd2.create(spark, src, scd, keys = Seq("id"))
+      assert(TxLog.read(spark, scd).count() == 9L)
+      val v = verb(src)
+      assert(v == w0 + 1, s"$name committed nothing")
+      val feed = TxLog.changeFeed(spark, src, w0, Some(v))
+        .select("id", "v", "_change_type").as[(Long, Long, String)]
+        .collect().toSeq
+      assert(feed.isEmpty, s"$name: an identity change fed $feed")
+      Scd2.refresh(spark, scd)
+      assert(TxLog.read(spark, scd).count() == 9L,
+        s"$name opened a spurious history version")
+      assertHistory(src, scd, w0)
+    }
+  }
 }

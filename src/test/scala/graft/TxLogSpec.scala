@@ -2166,4 +2166,38 @@ class TxLogSpec extends SparkSpec {
     TxLog.releaseCheckpoint(inner)
     assert(!sc.getPersistentRDDs.contains(rddOf(inner).id))
   }
+
+  test("predicate DML prunes on IN hulls, IS NULL and prefix LIKE") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp("txskipshapes").toString
+    // eight files laid out by k: file i holds k in [10i, 10i + 9] and
+    // s = <letter i> + k; only file 7 holds a null k
+    val letters = Seq("a", "c", "e", "g", "m", "p", "r", "t")
+    letters.zipWithIndex.foreach { case (l, i) =>
+      val df = (0 until 10).map { j =>
+        val k = 10L * i + j
+        (Option.when(!(i == 7 && j == 9))(k), s"$l$k")
+      }.toDF("k", "s").coalesce(1)
+      if (i == 0)
+        TxLog.commitOverwrite(spark, dir, df, statsCols = Seq("k", "s"))
+      else TxLog.commitAppend(spark, dir, df, statsCols = Seq("k", "s"))
+    }
+    val snap = TxLog.snapshot(spark, dir)
+    assert(snap.files.size == 8)
+    def fileOf(k: Long): String = TxLog.read(spark, dir)
+      .filter(col("k") === k).select(input_file_name()).as[String]
+      .head().split('/').last
+    def cands(pred: org.apache.spark.sql.Column): Set[String] =
+      TxLog.predicatePrune(spark, snap, pred)(snap.files)
+        .map(_.path.split('/').last).toSet
+    assert(cands(col("k").isin(3L, 7L)) == Set(fileOf(3L)))
+    assert(cands(col("k").isNull) == Set(fileOf(70L)))
+    assert(cands(col("s").like("p%")) == Set(fileOf(50L)))
+    // the verbs that locate through it keep exact row results
+    TxLog.delete(spark, dir, col("k").isin(3L, 7L) || col("k").isNull)
+    TxLog.deleteMor(spark, dir, col("s").like("p%"))
+    assert(TxLog.read(spark, dir).select("k").as[Long].collect().toSet ==
+      ((0L until 79L).toSet -- Set(3L, 7L) -- (50L until 60L)))
+  }
 }

@@ -140,8 +140,8 @@ ROWS = [
     (156, "TxLogSpec (z-ordered compact) | sources/TxLog.scala", "api"),
     (157, "TxLogSpec (delete/update/merge + model check) | "
      "sources/TxLog.scala", "api"),
-    (158, "TxLogSpec (changeFeed replay invariant) | sources/TxLog.scala",
-     "api"),
+    (158, "TxLogSpec (changeFeed replay invariant) + Scd2Spec (vector "
+          "commits net) | sources/TxLog.scala", "api"),
     (159, "bloom_point_lookup", "hash"),
     (160, "BloomIndexSpec | sources/BloomIndex.scala", "api"),
     (161, "TxLogSpec (countWhere metadata-only) | sources/TxLog.scala",
