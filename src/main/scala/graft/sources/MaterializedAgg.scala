@@ -252,7 +252,7 @@ object MaterializedAgg {
     // checkpoint of their own: applyChanges / applyChangesMor
     // materialize their input once before any action.
     val touched = TxLog.described(spark, "mv-deltas-materialize") {
-      TxLog.checkpointed(touchedDeltas(spec, feed))
+      TxLog.checkpointed(touchedDeltas(spec, feed), "mv-deltas")
     }
     try {
       val directives = directivesFor(spark, mvDir, spec, touched, endVersion)
@@ -317,6 +317,18 @@ object MaterializedAgg {
           reduce (_ || _))
   }
 
+  /** The `mv-envelope` aggregate of [[directivesFor]] over the delta
+    * relation `touched`: each key column's touched envelope (`_lo_k`,
+    * `_hi_k`) and retracted envelope (`_rlo_k`, `_rhi_k`). */
+  private[graft] def envelope(touched: DataFrame, keys: Seq[String])
+      : DataFrame = {
+    val envAggs = keys.flatMap(k => Seq(
+      min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k"),
+      min(when(col("_retract") === 1, col(k))).as(s"_rlo_$k"),
+      max(when(col("_retract") === 1, col(k))).as(s"_rhi_$k")))
+    touched.agg(envAggs.head, envAggs.tail: _*)
+  }
+
   /** The per-key directive relation one feed span folds into the view
     * (exposed separately so its plan can be audited). `touched` is
     * [[touchedDeltas]]' output — persisted by [[applyFeed]], since
@@ -331,21 +343,17 @@ object MaterializedAgg {
     val recomputeRetract = spec.mins.nonEmpty || spec.maxs.nonEmpty
     val needRecompute = recomputeAll || recomputeRetract
 
-    // One driver-side pass over the (touched-key-sized) delta
-    // relation: the touched-key envelope and the retracted-key
-    // envelope. They stats-prune the two big reads below — a trickle
-    // refresh against a large view (or a MIN/MAX recompute against a
-    // 100 TB source) plans only the files whose recorded key range
-    // intersects the span, the same pruning applyChanges uses for its
-    // write side. Conservative: a key column with no usable bounds
-    // (all-null in the span, or no recorded stats) falls back to the
-    // full read.
-    val envAggs = keys.flatMap(k => Seq(
-      min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k"),
-      min(when(col("_retract") === 1, col(k))).as(s"_rlo_$k"),
-      max(when(col("_retract") === 1, col(k))).as(s"_rhi_$k")))
+    // One pass over the (touched-key-sized) delta relation — a driver
+    // fold when it is held: the touched-key envelope and the
+    // retracted-key envelope. They stats-prune the two big reads
+    // below — a trickle refresh against a large view (or a MIN/MAX
+    // recompute against a 100 TB source) plans only the files whose
+    // recorded key range intersects the span, the same pruning
+    // applyChanges uses for its write side. Conservative: a key
+    // column with no usable bounds (all-null in the span, or no
+    // recorded stats) falls back to the full read.
     val env = TxLog.described(spark, "mv-envelope") {
-      touched.agg(envAggs.head, envAggs.tail: _*).head()
+      TxLog.foldedHead(envelope(touched, keys))
     }
     val touchedBounds = TxLog.envelopeIntervals(env, keys)
     val retractBounds = TxLog.envelopeIntervals(env, keys, "_rlo_", "_rhi_")

@@ -3,9 +3,10 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Held
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.JsonDSL._
@@ -170,7 +171,7 @@ object Scd2 {
     // (guide §5 reuse + §3.3 plan-size truncation)
     val feed = TxLog.described(spark, "scd2-feed-materialize") {
       TxLog.checkpointed(TxLog.changeFeed(spark, spec.source, w,
-        Some(head)))
+        Some(head)), "scd2-feed")
     }
     try applyDirectives(spark, scdDir, feedDirectives(spec, feed),
       "_scd2_del", "_scd2_seq", txn = Some((WatermarkApp, head)),
@@ -285,30 +286,15 @@ object Scd2 {
       TxLog.checkpointed(changes.select(payload.map(c =>
         col(c).cast(scdT(c)).as(c)) ++ Seq(
         col(seqCol).cast("long").as("_scd2_seq"),
-        col(deleteCol).cast("boolean").as("_scd2_del")): _*))
+        col(deleteCol).cast("boolean").as("_scd2_del")): _*),
+        "scd2-directives")
     }
     try {
-      // ONE action over a per-key aggregate answers all the guards
-      // before any history work: the key count (a span that nets to
-      // zero directives), the duplicate-(key, seq) count — a key is
-      // ambiguous iff it holds more directives than distinct seq
-      // values, with a null-seq group counting as one more distinct
-      // value (countDistinct skips nulls) — one key whose directives
-      // are ALL null-seq (no version to open a segment at), and the
-      // key envelope that prunes the history read
-      val perKey = d.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("_scd2_n"),
-          countDistinct(col("_scd2_seq")).as("_scd2_nseq"),
-          max(col("_scd2_seq").isNull.cast("long")).as("_scd2_nullseq"))
+      // ONE fold over a per-key aggregate answers all the guards
+      // before any history work — on the driver when the directives
+      // are held, as one action otherwise
       val summary = TxLog.described(spark, "scd2-envelope") {
-        perKey.agg(count(lit(1)).as("_scd2_keys"),
-          (count(when(col("_scd2_n") >
-            col("_scd2_nseq") + col("_scd2_nullseq"), 1)).as("_scd2_dups")
-            +: min(when(col("_scd2_nseq") === 0L,
-              struct(keys.map(col): _*))).as("_scd2_nullkey")
-            +: keys.flatMap(k =>
-              Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))): _*)
-          .head()
+        TxLog.foldedHead(envelope(d, keys))
       }
       // a span that nets to zero directives (compaction-only source
       // commits, net-zero rewrites) must still advance the watermark
@@ -343,25 +329,21 @@ object Scd2 {
           col("_scd2_next").as(ValidTo),
           col("_scd2_next").isNull.as(IsCurrent)): _*)
       // each key's first directive version closes its standing
-      // current segment
-      val firsts = d.groupBy(keys.map(col): _*)
-        .agg(min(col("_scd2_seq")).as("_scd2_first"))
+      // current segment (held when the directives are)
+      val firsts = Held.folded(firstSeqs(d, keys))
       // the touched keys' history sliver: consumed by the stale
       // check and the closure batch — touched-key-sized
       val hist = TxLog.checkpointed(
         (if (bounds.size == keys.size)
           TxLog.readPrunedAll(spark, scdDir, bounds)
         else TxLog.read(spark, scdDir))
-          .join(firsts, keys, "inner"))
+          .join(firsts, keys, "inner"), "scd2-history")
       try {
         // append-forward guard over the touched keys' WHOLE history
         // sliver (current and closed): a directive at or before any
         // recorded valid_from would silently rewrite history
         val stale = TxLog.described(spark, "scd2-stale-check") {
-          hist
-            .filter(col("_scd2_first") <= col(ValidFrom))
-            .select((keys.map(col) :+ col(ValidFrom) :+
-              col("_scd2_first")): _*).limit(1).collect()
+          staleRows(hist, keys)
         }
         require(stale.isEmpty, {
           val r = stale.head
@@ -389,6 +371,42 @@ object Scd2 {
             statsCols = keys :+ ValidFrom, txn = txn)
       } finally TxLog.releaseCheckpoint(hist)
     } finally TxLog.releaseCheckpoint(d)
+  }
+
+  /** The guards of [[applyDirectives]] over its directive relation
+    * `d`, one row: the key count (a span that nets to zero
+    * directives), the duplicate-(key, seq) count — a key is ambiguous
+    * iff it holds more directives than distinct seq values, with a
+    * null-seq group counting as one more distinct value
+    * (countDistinct skips nulls) — the least key whose directives are
+    * ALL null-seq (no version to open a segment at), and the key
+    * envelope (`_lo_k`, `_hi_k`) that prunes the history read. */
+  private[graft] def envelope(d: DataFrame, keys: Seq[String]): DataFrame =
+    d.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_scd2_n"),
+        countDistinct(col("_scd2_seq")).as("_scd2_nseq"),
+        max(col("_scd2_seq").isNull.cast("long")).as("_scd2_nullseq"))
+      .agg(count(lit(1)).as("_scd2_keys"),
+        (count(when(col("_scd2_n") >
+          col("_scd2_nseq") + col("_scd2_nullseq"), 1)).as("_scd2_dups")
+          +: min(when(col("_scd2_nseq") === 0L,
+            struct(keys.map(col): _*))).as("_scd2_nullkey")
+          +: keys.flatMap(k =>
+            Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))): _*)
+
+  /** Each directive key's least seq (`_scd2_first`). */
+  private[graft] def firstSeqs(d: DataFrame, keys: Seq[String]): DataFrame =
+    d.groupBy(keys.map(col): _*).agg(min(col("_scd2_seq")).as("_scd2_first"))
+
+  /** At most one history row of the touched keys' sliver `hist` that
+    * opens at or after its key's first directive — `(keys…,
+    * valid_from, first)`; a driver filter when `hist` is held. */
+  private[graft] def staleRows(hist: DataFrame, keys: Seq[String])
+      : Seq[Row] = {
+    val q = hist.filter(col("_scd2_first") <= col(ValidFrom))
+      .select((keys.map(col) :+ col(ValidFrom) :+ col("_scd2_first")): _*)
+      .limit(1)
+    TxLog.foldedRows(q)
   }
 
   /** The current row state — the type-1 view of the history. */

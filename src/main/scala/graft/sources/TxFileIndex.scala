@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias,
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project,
   Union}
 import org.apache.spark.sql.execution.datasources.{DataSourceStrategy,
-  FileFormat, FileIndex, HadoopFsRelation, LogicalRelation,
+  FileIndex, HadoopFsRelation, LogicalRelation,
   PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.PlanBridge
@@ -303,11 +303,6 @@ private[graft] object TxFileRelation {
     val schema =
       DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     val phys = TxLog.physSchema(schema, snap.mapping)
-    // vectors subtract over the parquet `_metadata` struct, which a
-    // (pathological) physical column of that name shadows — refuse
-    // the presentation rather than resurrect deleted rows
-    if (snap.files.exists(_.dv.isDefined) &&
-        phys.fieldNames.contains(FileFormat.METADATA_NAME)) return None
     TxFileIndex.build(spark, dir, snap).map { whole =>
       // nullability RELAXES at the relation (what DataSource's own
       // resolveRelation does via asNullable): an evolved column may

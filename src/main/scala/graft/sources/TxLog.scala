@@ -6,7 +6,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{PlanBridge, StatsWrite}
+import org.apache.spark.sql.graft.{Held, PlanBridge, StatsWrite}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.json4s._
 import org.json4s.JsonDSL._
@@ -66,34 +66,84 @@ object TxLog {
 
   val LogDir = "_graft_log"
 
-  /** Materialize a bounded, multiply-consumed relation ONCE and
-    * TRUNCATE its lineage (eager localCheckpoint). The DML surfaces
-    * drive several actions over their directive/source relations;
-    * `.persist()` alone makes re-EXECUTION cheap but every action
-    * still re-PLANS the full analyzed tree — for a change-feed span
-    * (one diff pipeline per DML commit, referenced by several
-    * branches) that tree reaches hundreds of exchanges and the
-    * per-action planning cost dwarfs the data (guide §3.3:
-    * materialize to truncate very large plans). After the checkpoint
-    * every consumer plans against one flat LogicalRDD. Blocks must be
-    * freed with [[releaseCheckpoint]] once consumed — the
-    * ContextCleaner only gets to them at some later GC. */
-  private[graft] def checkpointed(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true)
+  /** Materialize a bounded, multiply-consumed relation ONCE with its
+    * lineage TRUNCATED. The DML surfaces drive several actions over
+    * their directive/source relations; `.persist()` alone makes
+    * re-EXECUTION cheap but every action still re-PLANS the full
+    * analyzed tree — for a change-feed span (one diff pipeline per DML
+    * commit, referenced by several branches) that tree reaches
+    * hundreds of exchanges and the per-action planning cost dwarfs
+    * the data (guide §3.3: materialize to truncate very large plans).
+    *
+    * ONE job — the eager local checkpoint's — materializes and
+    * measures the relation ([[Held.checkpoint]]); the size decides its
+    * form:
+    *  - within a positive `budget` of bytes it is DRIVER-HELD: a
+    *    `LocalRelation` over the rows that job returned, its cached
+    *    blocks freed at once. Joins against it can broadcast as
+    *    planned, with no adaptive re-plan (the keyed applies' probes
+    *    and anti-joins do), and projections, filters and declarative
+    *    aggregates over it run on the driver with no job
+    *    ([[foldedHead]], [[Held.folded]]); lost executor blocks cannot
+    *    touch it;
+    *  - past the budget it is the eager local checkpoint it always
+    *    was: one flat `LogicalRDD` whose blocks live on the executors
+    *    until [[releaseCheckpoint]]. Its lineage is gone, so a lost
+    *    block (a dead executor, an evicted or unpersisted RDD) fails
+    *    every later consumer with Spark's "checkpoint block not found"
+    *    error — the verb throws before it commits, it never reads
+    *    wrong rows.
+    *
+    * The default budget is [[HeldBudget]]. One INFO line per call on
+    * `graft.sources.TxLog` names the form: `txlog materialize <label>:
+    * driver rows=<n> bytes=<b>` or `distributed bytes=<b>`. */
+  private[graft] def checkpointed(df: DataFrame, label: String,
+      budget: Long = HeldBudget.value): DataFrame = {
+    val (frame, m) = Held.checkpoint(df, budget)
+    m.rows match {
+      case Some(rows) => log.info(
+        s"txlog materialize $label: driver rows=${rows.size} bytes=${m.bytes}")
+      case None =>
+        log.info(s"txlog materialize $label: distributed bytes=${m.bytes}")
+    }
+    frame
+  }
+
+  /** The bytes one [[checkpointed]] relation may hold on the driver.
+    * `Scd2.refresh` holds the most at once — its feed, its directives,
+    * the history sliver and the apply source — and four relations at
+    * this budget fit in an eighth of the heap. A zero budget holds
+    * nothing; tests of the distributed form scope one with
+    * `HeldBudget.withValue(0L) { … }`. */
+  private[graft] val HeldBudget =
+    new scala.util.DynamicVariable[Long](Runtime.getRuntime.maxMemory / 32)
 
   /** Free the executor storage behind one frame [[checkpointed]]
     * returned: exactly the RDD at its root — never another checkpoint
     * it was built from, which may still have live consumers. After
     * release the frame is not recomputable — call only once every
-    * consumer is done. */
+    * consumer is done. A driver-held frame has no storage to free. */
   private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
         r.rdd.unpersist(blocking = false)
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
       case p => throw new IllegalArgumentException(
         s"TxLog: releaseCheckpoint needs a frame returned by checkpointed, " +
           s"got a ${p.nodeName} plan")
     }
+
+  /** The first row of `df` — a projection, filter or declarative
+    * aggregate over [[checkpointed]] relations — computed on the
+    * driver with no job when they are held, and by `df.head()`
+    * otherwise. */
+  private[graft] def foldedHead(df: DataFrame): Row =
+    Held.fold(df).map(_.head).getOrElse(df.head())
+
+  /** Every row of `df`, as [[foldedHead]]: on the driver when the
+    * relations under it are held, by `df.collect()` otherwise. */
+  private[graft] def foldedRows(df: DataFrame): Seq[Row] =
+    Held.fold(df).getOrElse(df.collect().toSeq)
 
   /** Label the Spark jobs `f` launches `txlog:label` (guide §1.5) so
     * profilers and the UI attribute commit-machinery phases
@@ -3232,11 +3282,20 @@ object TxLog {
   /** Where a table's deletion vectors live (dir-relative). */
   val DvDir = "_graft_dv"
 
-  /** Rows per file key of a tagged relation (`TagFile` column) —
-    * driver-side, one row per file. */
-  private def rowsPerFile(tagged: DataFrame): Map[String, Long] =
-    tagged.groupBy(TagFile).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+  /** Rows per file key of a tagged relation (`TagFile` column). Each
+    * task counts its own rows per file and the driver sums the
+    * (partition, file) counts: one job and no shuffle, where a
+    * `groupBy` count runs a map stage and a result stage. */
+  private def rowsPerFile(tagged: DataFrame): Map[String, Long] = {
+    import org.apache.spark.sql.Encoders
+    tagged.select(col(TagFile)).as(Encoders.STRING)
+      .mapPartitions { files =>
+        val n = scala.collection.mutable.HashMap.empty[String, Long]
+        files.foreach(f => n(f) = n.getOrElse(f, 0L) + 1L)
+        n.iterator
+      }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+  }
 
   /** Merge-on-read DELETE (Delta's deletion-vector delete): [[delete]]'s
     * semantics, but the matched rows' positions join a deletion vector
@@ -3482,7 +3541,7 @@ object TxLog {
     // cardinality stats, NMBS probe, firing pairs, inserts) —
     // materialize it once with lineage truncated (Delta's
     // materialize-source precedent)
-    val srcData = checkpointed(source)
+    val srcData = checkpointed(source, "merge-source")
     try {
     // candidate files: the source envelope on every `t.c = s-expr`
     // equality conjunct prunes from commit metadata — unless NOT
@@ -3496,7 +3555,7 @@ object TxLog {
       else {
         val aggs = eqPairs.zipWithIndex.flatMap { case ((_, e), i) =>
           Seq(min(e).as(s"_lo$i"), max(e).as(s"_hi$i")) }
-        val row = srcData.alias("s").agg(aggs.head, aggs.tail: _*).head()
+        val row = foldedHead(srcData.alias("s").agg(aggs.head, aggs.tail: _*))
         val preds = eqPairs.zipWithIndex.flatMap { case ((c, _), i) =>
           val (lo, hi) = (row.get(2 * i), row.get(2 * i + 1))
           if (lo == null || hi == null) Nil
@@ -3706,9 +3765,11 @@ object TxLog {
     * staging body: `at` the files holding a live row of a directive
     * key (guarded by the key envelope), `srcKeys` the distinct
     * directive keys, and `inserts` the flag-false directives projected
-    * to the table schema (`nIns` of them). */
+    * to the table schema (`nIns` of them); `held` when the directives
+    * are driver-held and `srcKeys` a static broadcast. */
   private final case class KeyedApply(at: Located, srcKeys: DataFrame,
-      inserts: DataFrame, nIns: Long, checked: Map[String, String])
+      inserts: DataFrame, nIns: Long, checked: Map[String, String],
+      held: Boolean)
 
   /** The locate step of every keyed apply ([[merge]], [[applyChanges]],
     * [[applyGroupChanges]], [[applyChangesMor]]): validate `changes`
@@ -3750,30 +3811,19 @@ object TxLog {
     // re-planning the caller's whole directive tree (for Scd2: the
     // span's change-feed diff legs + the history closures — hundreds
     // of plan nodes per action). Touched-key-sized by the keyed-apply
-    // contract, so materializing is bounded (guide §5).
+    // contract, so materializing is bounded (guide §5) — and usually
+    // small enough to hold on the driver.
     val src = checkpointed(changes.select((schema.fieldNames.map(col) :+
-      col(deleteCol).cast("boolean").as(deleteCol)).toSeq: _*))
+      col(deleteCol).cast("boolean").as(deleteCol)).toSeq: _*),
+      "apply-source")
     try {
       // ONE directive-sized pass answers every metadata question:
       // empty batch, the per-key ambiguity guard, the insert count
       // (merge-on-read partitions its image staging by it) and the key
-      // envelope that stats-prunes candidates and guards the commit
+      // envelope that stats-prunes candidates and guards the commit —
+      // a driver fold when the directives are held
       val shape = described(spark, "apply-shape") {
-        val aggs = Seq(count(lit(1)).as("_graft_nkeys"),
-          max(col("_graft_n")).as("_graft_maxn"),
-          max(col("_graft_forms")).as("_graft_maxforms"),
-          sum(col("_graft_ins")).as("_graft_nins")) ++
-          keyCols.flatMap(k =>
-            Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))
-        // a key's forms: delete and/or insert — two maxes, where a
-        // countDistinct would plan a second aggregation round
-        def has(c: Column) = coalesce(max(c.cast("long")), lit(0L))
-        src.groupBy(keyCols.map(col): _*)
-          .agg(count(lit(1)).as("_graft_n"),
-            (has(col(deleteCol)) + has(!col(deleteCol))).as("_graft_forms"),
-            sum(when(col(deleteCol), 0L).otherwise(1L)).as("_graft_ins"))
-          .agg(aggs.head, aggs.tail: _*)
-          .head()
+        foldedHead(applyShape(src, keyCols, deleteCol))
       }
       // an empty directive batch (e.g. a compaction-only feed span) is
       // a no-op for the DATA — but a supplied marker still advances
@@ -3801,7 +3851,12 @@ object TxLog {
       val keyIntervals = envelopeIntervals(shape, keyCols)
         .map { case (k, lo, hi) => (k, Option(lo), Option(hi)) }
       val cands = prunedSnapshotFiles(spark, snap, keyIntervals)
-      val srcKeys = src.select(keyCols.map(col): _*).distinct()
+      // held directives hold their distinct keys too: the probe and the
+      // survivors' anti-join plan them as a static broadcast — no
+      // shuffle of the directive side, no adaptive re-plan
+      val keys = Held.folded(src.select(keyCols.map(col): _*).distinct())
+      val held = Held.isHeld(keys)
+      val srcKeys = if (held) broadcast(keys) else keys
       val touched =
         if (cands.isEmpty) Map.empty[String, Long]
         else described(spark, "apply-touched-probe") {
@@ -3816,8 +3871,30 @@ object TxLog {
         snap.files.filter(f => touched.contains(fileKey(snap, f))),
         addedGuard(snap, files => prunedSnapshotFiles(spark,
           snap.copy(files = files), keyIntervals))),
-        srcKeys, inserts, shape.getAs[Long]("_graft_nins"), checked))
+        srcKeys, inserts, shape.getAs[Long]("_graft_nins"), checked, held))
     } finally releaseCheckpoint(src)
+  }
+
+  /** The `apply-shape` aggregate of [[locateKeyed]] over its
+    * directive relation `src`: key count, most directives and forms
+    * (delete, insert) of one key, insert count, and each key column's
+    * envelope (`_lo_k`, `_hi_k`). */
+  private[graft] def applyShape(src: DataFrame, keyCols: Seq[String],
+      deleteCol: String): DataFrame = {
+    val aggs = Seq(count(lit(1)).as("_graft_nkeys"),
+      max(col("_graft_n")).as("_graft_maxn"),
+      max(col("_graft_forms")).as("_graft_maxforms"),
+      sum(col("_graft_ins")).as("_graft_nins")) ++
+      keyCols.flatMap(k =>
+        Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))
+    // a key's forms: delete and/or insert — two maxes, where a
+    // countDistinct would plan a second aggregation round
+    def has(c: Column) = coalesce(max(c.cast("long")), lit(0L))
+    src.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("_graft_n"),
+        (has(col(deleteCol)) + has(!col(deleteCol))).as("_graft_forms"),
+        sum(when(col(deleteCol), 0L).otherwise(1L)).as("_graft_ins"))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** The copy-on-write body of [[merge]] / [[applyChanges]] /
@@ -3829,11 +3906,33 @@ object TxLog {
       group: Boolean, op: String): Long =
     locateKeyed(spark, dir, changes, keyCols, deleteCol, op, txn,
         group) { k =>
-      stageTouched(spark, dir, k.at, "merge",
+      val rows =
         if (k.at.keepFiles.isEmpty) Option.when(k.nIns > 0L)(k.inserts)
         else Some(k.at.live(spark, dir).join(k.srcKeys, keyCols, "left_anti")
-          .unionByName(k.inserts)),
+          .unionByName(k.inserts))
+      stageTouched(spark, dir, k.at, "merge",
+        if (k.held) rows.map(packed(spark, _, k.at.keepFiles)) else rows,
         retire = None, statsCols, txn, identity = true, Some(k.checked))
+    }
+
+  /** A keyed rewrite over held directives, packed into the files the
+    * distributed plan writes. There the survivors' anti-join shuffles,
+    * and adaptive execution coalesces the shuffle into partitions of
+    * the advisory size (at most the shuffle partitions); the broadcast
+    * anti-join keeps the scan's layout instead — about one partition
+    * per touched file, plus the held inserts' partitions — so each
+    * rewrite would add files. `rows` coalesces (no shuffle) to the
+    * touched files' recorded bytes over the advisory size; it stays as
+    * it is when some touched file has no recorded size. */
+  private def packed(spark: SparkSession, rows: DataFrame,
+      touched: Seq[TxFile]): DataFrame =
+    if (touched.exists(_.bytes.isEmpty)) rows
+    else {
+      val conf = spark.sessionState.conf
+      val parts = touched.flatMap(_.bytes).sum /
+        conf.getConf(org.apache.spark.sql.internal.SQLConf
+          .ADVISORY_PARTITION_SIZE_IN_BYTES) + 1
+      rows.coalesce(math.min(parts, conf.numShufflePartitions.toLong).toInt)
     }
 
   /** Merge-on-read CDC APPLY: same directive semantics as
@@ -4012,9 +4111,9 @@ object TxLog {
     * pruning right (stats recorded the true value at registration)
     * but every returned row wrong/NULL. The null sentinel applies
     * before any decode. */
-  private def pathPartValue(physName: String,
+  private def pathPartValue(m: Column, physName: String,
       dt: DataType): org.apache.spark.sql.Column = {
-    val seg = regexp_extract(col("_metadata.file_path"),
+    val seg = regexp_extract(m.getField("file_path"),
       "/" + java.util.regex.Pattern.quote(physName) + "=([^/]+)/", 1)
     when(seg === "" || seg === "__HIVE_DEFAULT_PARTITION__",
       lit(null)).otherwise(pathDecode(pathDecode(seg))).cast(dt)
@@ -4027,9 +4126,9 @@ object TxLog {
     * segments — anchored from the right, so URI-scheme normalization
     * differences between the driver's view of `dir` and the
     * scanner's `_metadata.file_path` can never shift it. */
-  private def fileKeyExpr(depth: Int): Column =
-    if (depth == 0) col("_metadata.file_name")
-    else pathDecode(regexp_extract(col("_metadata.file_path"),
+  private def fileKeyExpr(m: Column, depth: Int): Column =
+    if (depth == 0) m.getField("file_name")
+    else pathDecode(regexp_extract(m.getField("file_path"),
       "/((?:[^/]+/){" + depth + "}[^/]+)$", 1))
 
   /** How many partition dirs an entry sits below the table root:
@@ -4039,6 +4138,12 @@ object TxLog {
   private def keyDepth(snap: TxSnapshot, f: TxFile): Int =
     if (snap.partitionCols.isEmpty || !f.path.contains('/')) 0
     else snap.partitionCols.size
+
+  /** A scan's parquet `_metadata` struct, resolved as the scan's
+    * metadata column — never by name, which a data column called
+    * `_metadata` would shadow. */
+  private def fileMeta(scan: DataFrame): Column =
+    scan.metadataColumn("_metadata")
 
   private lazy val log =
     org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
@@ -4075,16 +4180,20 @@ object TxLog {
       s"vectoredFiles=${dvFiles.size} deletedRows=$dvRows")
     if (asFilter) {
       val dv = DvIndex.broadcastFor(spark, dir, snap, dvFiles)
-      Seq(scan(snap.files).filter(!PlanBridge.column(DvDeleted(
-        PlanBridge.expression(col("_metadata.file_path")),
-        PlanBridge.expression(col("_metadata.row_index")), dv))))
+      val all = scan(snap.files)
+      val m = fileMeta(all)
+      Seq(all.filter(!PlanBridge.column(DvDeleted(
+        PlanBridge.expression(m.getField("file_path")),
+        PlanBridge.expression(m.getField("row_index")), dv))))
     } else {
       val vectors = spark.read.parquet(dvFiles.flatMap(_.dv).distinct
         .map(p => resolveData(dir, p)): _*)
       val vectored = dvFiles.groupBy(keyDepth(snap, _)).toSeq
         .sortBy(_._1).map { case (depth, fs) =>
-          val keyed = scan(fs).withColumn(TagFile, fileKeyExpr(depth))
-            .withColumn(TagIdx, col("_metadata.row_index"))
+          val leg = scan(fs)
+          val m = fileMeta(leg)
+          val keyed = leg.withColumn(TagFile, fileKeyExpr(m, depth))
+            .withColumn(TagIdx, m.getField("row_index"))
           keyed.join(vectors, keyed(TagFile) === vectors("file") &&
             keyed(TagIdx) === vectors("row_index"), "left_anti")
             .drop(TagFile, TagIdx)
@@ -4129,12 +4238,13 @@ object TxLog {
         def scan(fs: Seq[TxFile]): DataFrame = spark.read.schema(readS)
           .parquet(fs.map(f => resolveData(dir, f.path)): _*)
         liveScans(spark, dir, snap.copy(files = files), scan).map { live =>
+          val m = fileMeta(live)
           inject.foldLeft(live)((d, pp) =>
-            d.withColumn(pp, pathPartValue(pp, physS(pp).dataType)))
+            d.withColumn(pp, pathPartValue(m, pp, physS(pp).dataType)))
             .select(schema.fields.map(fl =>
               col(snap.phys(fl.name)).as(fl.name)).toSeq ++
-              Seq(fileKeyExpr(depth).as(TagFile),
-                col("_metadata.row_index").as(TagIdx)): _*)
+              Seq(fileKeyExpr(m, depth).as(TagFile),
+                m.getField("row_index").as(TagIdx)): _*)
         }
     }.reduce(_.unionByName(_))
   }
@@ -4146,9 +4256,8 @@ object TxLog {
     // time, native (dynamic) partition pruning, vectorized parquet
     // under whole-stage codegen, vectors subtracted in the scan
     // ([[liveScans]]). The index refuses only structurally (no files,
-    // missing bytes, unrecoverable partition values, a column
-    // shadowing `_metadata`); those snapshots read their explicit
-    // paths instead.
+    // missing bytes, unrecoverable partition values); those snapshots
+    // read their explicit paths instead.
     TxFileRelation.planFor(spark, dir, snap)
       .map(PlanBridge.fromPlan(spark, _))
       .getOrElse(readSnapshotTagged(spark, dir, snap).drop(TagFile, TagIdx))

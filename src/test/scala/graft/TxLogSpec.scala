@@ -2095,12 +2095,18 @@ class TxLogSpec extends SparkSpec {
         assert(ls.contains("txlog:stage-write"), s"$name: $ls")
       }
       // merge shares applyChanges' locate step: ONE shape query answers
-      // the duplicate guard and the key envelope
+      // the duplicate guard and the key envelope — a driver fold with
+      // no job while the directives are held, one labelled query past
+      // the budget (an update-only merge: the row count stays)
       val mergeJobs = jobsByOp.toMap.apply("merge")
-      val shapeQueries = mergeJobs.collect {
-        case ("txlog:apply-shape", id, _) => id }.distinct
-      assert(shapeQueries.size == 1 && shapeQueries.head.nonEmpty, mergeJobs)
+      assert(!mergeJobs.exists(_._1 == "txlog:apply-shape"), mergeJobs)
       assert(!mergeJobs.exists(_._1 == "txlog:key-envelope"), mergeJobs)
+      val distJobs = TxLog.HeldBudget.withValue(0L)(jobsOf(
+        TxLog.merge(spark, dir, kv(50, 55), Seq("id"), statsCols = Seq("id"))))
+      val shapeQueries = distJobs.collect {
+        case ("txlog:apply-shape", id, _) => id }.distinct
+      assert(shapeQueries.size == 1 && shapeQueries.head.nonEmpty, distJobs)
+      assert(!distJobs.exists(_._1 == "txlog:key-envelope"), distJobs)
       jobsByOp.foreach { case (name, jobs) =>
         assert(pruningJobs(jobs).isEmpty, s"$name: ${pruningJobs(jobs)}") }
       // pruning a read: metadata only
@@ -2150,8 +2156,11 @@ class TxLogSpec extends SparkSpec {
       .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
     def cached(d: DataFrame): Boolean = sc.getRDDStorageInfo
       .exists(i => i.id == rddOf(d).id && i.numCachedPartitions > 0)
-    val inner = TxLog.checkpointed(spark.range(0, 100, 1, 4).toDF("id"))
-    val outer = TxLog.checkpointed(inner.filter(col("id") % 2 === 0))
+    // a zero budget keeps both frames distributed (executor blocks)
+    val inner = TxLog.checkpointed(spark.range(0, 100, 1, 4).toDF("id"),
+      "inner", budget = 0L)
+    val outer = TxLog.checkpointed(inner.filter(col("id") % 2 === 0),
+      "outer", budget = 0L)
     assert(cached(inner) && cached(outer))
     // a frame DERIVED from checkpoints is not a handle: refused, and
     // nothing is freed
