@@ -78,7 +78,7 @@ object TxLog {
     * ONE job — the eager local checkpoint's — materializes and
     * measures the relation ([[Held.checkpoint]]); the size decides its
     * form:
-    *  - within a positive `budget` of bytes it is DRIVER-HELD: a
+    *  - within a positive budget of bytes it is DRIVER-HELD: a
     *    `LocalRelation` over the rows that job returned, its cached
     *    blocks freed at once. Joins against it can broadcast as
     *    planned, with no adaptive re-plan (the keyed applies' probes
@@ -94,12 +94,15 @@ object TxLog {
     *    error — the verb throws before it commits, it never reads
     *    wrong rows.
     *
-    * The default budget is [[HeldBudget]]. One INFO line per call on
+    * The budget is [[HeldBudget]], capped at what the driver accepts
+    * back from one job and ships out in task messages: half of
+    * `spark.driver.maxResultSize` and of `spark.rpc.message.maxSize`
+    * ([[Held.acceptable]]) — a relation past either stays distributed
+    * rather than failing the job. One INFO line per call on
     * `graft.sources.TxLog` names the form: `txlog materialize <label>:
     * driver rows=<n> bytes=<b>` or `distributed bytes=<b>`. */
-  private[graft] def checkpointed(df: DataFrame, label: String,
-      budget: Long = HeldBudget.value): DataFrame = {
-    val (frame, m) = Held.checkpoint(df, budget)
+  private[graft] def checkpointed(df: DataFrame, label: String): DataFrame = {
+    val (frame, m) = Held.checkpoint(df, HeldBudget.value)
     m.rows match {
       case Some(rows) => log.info(
         s"txlog materialize $label: driver rows=${rows.size} bytes=${m.bytes}")
@@ -109,10 +112,14 @@ object TxLog {
     frame
   }
 
-  /** The bytes one [[checkpointed]] relation may hold on the driver.
+  /** The bytes one [[checkpointed]] relation may hold on the driver,
+    * before the driver's own caps ([[Held.acceptable]]).
     * `Scd2.refresh` holds the most at once — its feed, its directives,
     * the history sliver and the apply source — and four relations at
-    * this budget fit in an eighth of the heap. A zero budget holds
+    * this budget fit in an eighth of the heap. Consumers may copy a
+    * held relation again (its scan's rows, a broadcast's hash
+    * relation, a folded key set), so the footprint can reach a few
+    * such eighths at the bound. A zero budget holds
     * nothing; tests of the distributed form scope one with
     * `HeldBudget.withValue(0L) { … }`. */
   private[graft] val HeldBudget =
@@ -3765,11 +3772,9 @@ object TxLog {
     * staging body: `at` the files holding a live row of a directive
     * key (guarded by the key envelope), `srcKeys` the distinct
     * directive keys, and `inserts` the flag-false directives projected
-    * to the table schema (`nIns` of them); `held` when the directives
-    * are driver-held and `srcKeys` a static broadcast. */
+    * to the table schema (`nIns` of them). */
   private final case class KeyedApply(at: Located, srcKeys: DataFrame,
-      inserts: DataFrame, nIns: Long, checked: Map[String, String],
-      held: Boolean)
+      inserts: DataFrame, nIns: Long, checked: Map[String, String])
 
   /** The locate step of every keyed apply ([[merge]], [[applyChanges]],
     * [[applyGroupChanges]], [[applyChangesMor]]): validate `changes`
@@ -3851,12 +3856,13 @@ object TxLog {
       val keyIntervals = envelopeIntervals(shape, keyCols)
         .map { case (k, lo, hi) => (k, Option(lo), Option(hi)) }
       val cands = prunedSnapshotFiles(spark, snap, keyIntervals)
-      // held directives hold their distinct keys too: the probe and the
-      // survivors' anti-join plan them as a static broadcast — no
-      // shuffle of the directive side, no adaptive re-plan
-      val keys = Held.folded(src.select(keyCols.map(col): _*).distinct())
-      val held = Held.isHeld(keys)
-      val srcKeys = if (held) broadcast(keys) else keys
+      // held directives hold their distinct keys too: a local relation
+      // with exact stats, so the probe and the survivors' anti-join
+      // plan it as a broadcast up front when it is within the join
+      // threshold — no shuffle of the directive side, no adaptive
+      // re-plan
+      val srcKeys =
+        Held.folded(src.select(keyCols.map(col): _*).distinct())
       val touched =
         if (cands.isEmpty) Map.empty[String, Long]
         else described(spark, "apply-touched-probe") {
@@ -3871,7 +3877,7 @@ object TxLog {
         snap.files.filter(f => touched.contains(fileKey(snap, f))),
         addedGuard(snap, files => prunedSnapshotFiles(spark,
           snap.copy(files = files), keyIntervals))),
-        srcKeys, inserts, shape.getAs[Long]("_graft_nins"), checked, held))
+        srcKeys, inserts, shape.getAs[Long]("_graft_nins"), checked))
     } finally releaseCheckpoint(src)
   }
 
@@ -3911,7 +3917,8 @@ object TxLog {
         else Some(k.at.live(spark, dir).join(k.srcKeys, keyCols, "left_anti")
           .unionByName(k.inserts))
       stageTouched(spark, dir, k.at, "merge",
-        if (k.held) rows.map(packed(spark, _, k.at.keepFiles)) else rows,
+        if (Held.isHeld(k.srcKeys)) rows.map(packed(spark, _, k.at.keepFiles))
+        else rows,
         retire = None, statsCols, txn, identity = true, Some(k.checked))
     }
 
@@ -3919,7 +3926,8 @@ object TxLog {
     * distributed plan writes. There the survivors' anti-join shuffles,
     * and adaptive execution coalesces the shuffle into partitions of
     * the advisory size (at most the shuffle partitions); the broadcast
-    * anti-join keeps the scan's layout instead — about one partition
+    * anti-join that held keys within the join threshold plan keeps the
+    * scan's layout instead — about one partition
     * per touched file, plus the held inserts' partitions — so each
     * rewrite would add files. `rows` coalesces (no shuffle) to the
     * touched files' recorded bytes over the advisory size; it stays as

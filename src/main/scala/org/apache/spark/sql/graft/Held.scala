@@ -15,7 +15,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
   GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
+import org.apache.spark.SparkConf
+import org.apache.spark.internal.config.MAX_RESULT_SIZE
 import org.apache.spark.rdd.LocalRDDCheckpointData
+import org.apache.spark.util.RpcUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -38,17 +41,20 @@ object Held {
     * `localCheckpoint` runs, under the same SQL execution — whose
     * tasks cache their partition and count its rows' bytes, returning
     * the rows themselves while the partition is within `budget /
-    * partitions`. When every partition fit and the total is within a
-    * positive `budget`, the result is a `LocalRelation` over those
+    * partitions`; `budget` is first capped at what the driver accepts
+    * ([[acceptable]]). When every partition fit and the total is
+    * within a positive budget, the result is a `LocalRelation` over those
     * rows and the cached blocks are freed; otherwise the cached RDD
     * becomes the local checkpoint Spark's eager `localCheckpoint`
     * returns (same storage level, same `LogicalRDD`), its lineage
     * truncated without another job. The RDD is marked for
     * checkpointing only after the job, so a held result never depends
     * on its blocks surviving. */
-  def checkpoint(df: DataFrame, budget: Long): (DataFrame, Measured) = {
+  def checkpoint(df: DataFrame, requested: Long): (DataFrame, Measured) = {
     val ds = df.asInstanceOf[ClassicDataset[Row]]
     val qe = ds.queryExecution
+    val budget =
+      math.min(requested, acceptable(df.sparkSession.sparkContext.getConf))
     SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
       val rdd = qe.executedPlan.execute().map(_.copy())
       rdd.persist(LocalRDDCheckpointData.DEFAULT_STORAGE_LEVEL)
@@ -81,6 +87,19 @@ object Held {
           Measured(bytes, None))
       }
     }
+  }
+
+  /** The most bytes of rows the driver can take back from one
+    * materializing job and ship out again: half of
+    * `spark.driver.maxResultSize` (the job's task results carry the
+    * rows; a non-positive size is unlimited) and half of
+    * `spark.rpc.message.maxSize` (a held relation's scan partitions
+    * travel inside task messages). Past either, Spark would abort the
+    * job or its consumer's tasks instead of falling back. */
+  def acceptable(conf: SparkConf): Long = {
+    val results = conf.get(MAX_RESULT_SIZE)
+    math.min(if (results > 0L) results / 2 else Long.MaxValue,
+      RpcUtils.maxMessageSizeBytes(conf).toLong / 2)
   }
 
   /** Whether `df` is a driver-held relation. */

@@ -30,7 +30,7 @@ class HeldSpec extends SparkSpec {
     * distributed (zero budget). */
   private def forms(rel: DataFrame): (DataFrame, DataFrame) = {
     val held = TxLog.checkpointed(rel, "held")
-    val dist = TxLog.checkpointed(rel, "dist", budget = 0L)
+    val dist = TxLog.HeldBudget.withValue(0L)(TxLog.checkpointed(rel, "dist"))
     assert(held.queryExecution.analyzed.isInstanceOf[
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
     assert(dist.queryExecution.analyzed.isInstanceOf[LogicalRDD])
@@ -225,7 +225,8 @@ class HeldSpec extends SparkSpec {
     def df = spark.range(0, 1000, 1, 4).toDF("id")
       .groupBy((col("id") % 10).as("g")).agg(sum("id").as("s"))
     val (eager, sparkJobs) = jobDescriptions(df.localCheckpoint(eager = true))
-    val (ours, ourJobs) = jobDescriptions(TxLog.checkpointed(df, "x", budget = 0L))
+    val (ours, ourJobs) = TxLog.HeldBudget.withValue(0L)(
+      jobDescriptions(TxLog.checkpointed(df, "x")))
     try {
       assert(ourJobs.size == sparkJobs.size, (ourJobs, sparkJobs))
       val (a, b) = (eager.queryExecution.analyzed.asInstanceOf[LogicalRDD],
@@ -248,11 +249,55 @@ class HeldSpec extends SparkSpec {
     }
   }
 
+  test("the held budget is capped at what the driver accepts back and ships out") {
+    val mib = 1024L * 1024L
+    def conf(kv: (String, String)*) = new org.apache.spark.SparkConf(false)
+      .setAll(kv)
+    // defaults: a 1 GiB result cap and a 128 MiB task message
+    assert(Held.acceptable(conf()) == 64L * mib)
+    assert(Held.acceptable(conf("spark.driver.maxResultSize" -> "10m")) ==
+      5L * mib)
+    // a non-positive result cap is unlimited: the message size bounds it
+    assert(Held.acceptable(conf("spark.driver.maxResultSize" -> "0",
+      "spark.rpc.message.maxSize" -> "512")) == 256L * mib)
+    // a requested budget past the cap is cut to it
+    val df = spark.range(0, 10, 1, 2).toDF("id")
+    val (held, m) = Held.checkpoint(df, Long.MaxValue)
+    assert(Held.isHeld(held) && m.rows.map(_.size).contains(10))
+    assert(Held.acceptable(spark.sparkContext.getConf) < Long.MaxValue)
+  }
+
+  test("a held copy-on-write merge writes one file per small rewrite and one for inserts only") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp("heldpack")
+    TxLog.commitOverwrite(spark, dir, (1L to 20L).map(i => (i, s"n$i"))
+      .toDF("id", "name").repartition(1), statsCols = Seq("id"))
+    def files = TxLog.snapshot(spark, dir).files.map(_.path).toSet
+    def addedBy(merge: => Unit): Set[String] = {
+      val before = files
+      merge
+      files -- before
+    }
+    // one touched file: its survivors and four inserts land as one file
+    val rewrite = addedBy(TxLog.merge(spark, dir, Seq((2L, "two"),
+      (21L, "a"), (22L, "b"), (23L, "c"), (24L, "d")).toDF("id", "name"),
+      Seq("id")))
+    assert(rewrite.size == 1, rewrite)
+    assert(files == rewrite)
+    // inserts only: no touched file, one new file
+    val inserts = addedBy(TxLog.merge(spark, dir,
+      (30L to 35L).map(i => (i, s"n$i")).toDF("id", "name"), Seq("id")))
+    assert(inserts.size == 1, inserts)
+    assert(TxLog.read(spark, dir).count() == 30L)
+  }
+
   test("each materialization logs its form, rows and bytes") {
     val df = spark.range(0, 10, 1, 2).toDF("id")
     val (_, lines) = infoLines("graft.sources.TxLog") {
       TxLog.checkpointed(df, "probe")
-      TxLog.releaseCheckpoint(TxLog.checkpointed(df, "probe0", budget = 0L))
+      TxLog.releaseCheckpoint(
+        TxLog.HeldBudget.withValue(0L)(TxLog.checkpointed(df, "probe0")))
     }
     val held = lines.collect {
       case l if l.startsWith("txlog materialize probe:") => l }
@@ -309,8 +354,9 @@ class HeldSpec extends SparkSpec {
       .toDF("id", "name").repartition(2), statsCols = Seq("id"))
     val before = TxLog.snapshot(spark, dir).version
     val rows = TxLog.read(spark, dir).collect().toSet
-    val src = TxLog.checkpointed(Seq((2L, "two"), (11L, "eleven"))
-      .toDF("id", "name").repartition(2), "lost", budget = 0L)
+    val src = TxLog.HeldBudget.withValue(0L)(TxLog.checkpointed(
+      Seq((2L, "two"), (11L, "eleven")).toDF("id", "name").repartition(2),
+      "lost"))
     src.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
       .unpersist(blocking = true)
     def lostBlock(e: Throwable): Boolean =

@@ -730,7 +730,7 @@ class Round12Spec extends SparkSpec {
       s"rename-span update window diverged: $w")
   }
 
-  test("randomized feed-follower model check: per-commit change feed reconstructs every snapshot") {
+  testBothForms("randomized feed-follower model check: per-commit change feed reconstructs every snapshot") {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(1207)

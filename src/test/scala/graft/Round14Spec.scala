@@ -206,7 +206,7 @@ class Round14Spec extends SparkSpec {
     assert(TxLog.snapshot(spark, mv).version == vBefore)
   }
 
-  test("materialized agg: randomized DML model check — view equals recompute after every refresh") {
+  testBothForms("materialized agg: randomized DML model check — view equals recompute after every refresh") {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(1408)
@@ -632,7 +632,7 @@ class Round14Spec extends SparkSpec {
 
   // ---- MV aggregate classes: avgs + others -------------------------
 
-  test("materialized agg: avgs maintain sum/cnt under nulls; avg equals recompute") {
+  testBothForms("materialized agg: avgs maintain sum/cnt under nulls; avg equals recompute") {
     val s = spark
     import s.implicits._
     val T = graft.sources.TxLog
@@ -672,7 +672,7 @@ class Round14Spec extends SparkSpec {
     }
   }
 
-  test("materialized agg: others (count distinct) recomputes touched keys; view equals recompute") {
+  testBothForms("materialized agg: others (count distinct) recomputes touched keys; view equals recompute") {
     val s = spark
     import s.implicits._
     val T = graft.sources.TxLog

@@ -717,7 +717,7 @@ class Round15Spec extends SparkSpec {
       "a vacuumed partitioned table must carry no unaccounted bytes")
   }
 
-  test("hive layout: randomized DML model check on a registered partitioned table") {
+  testBothForms("hive layout: randomized DML model check on a registered partitioned table") {
     val s = spark
     import s.implicits._
     val dir = tmp("r15partmodel").toString + "/t"

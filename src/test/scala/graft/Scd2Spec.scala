@@ -103,7 +103,7 @@ class Scd2Spec extends SparkSpec {
     assertHistory(src, scd, w0)
   }
 
-  test("scd2: randomized DML model — snapshotAt(v) equals source@v for every v after every refresh") {
+  testBothForms("scd2: randomized DML model — snapshotAt(v) equals source@v for every v after every refresh") {
     val rnd = new scala.util.Random(14)
     val src = tmp("scd2model").toString
     val scd = tmp("scd2modelh").toString + "/t"

@@ -25,6 +25,16 @@ abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
 
+  /** Registers test `name`, and `name` again with every
+    * `TxLog.checkpointed` relation left distributed (zero held budget)
+    * — the form a relation past the budget takes — so a model check
+    * covers both. */
+  def testBothForms(name: String)(body: => Any): Unit = {
+    test(name)(body)
+    test(s"$name (zero held budget)")(
+      graft.sources.TxLog.HeldBudget.withValue(0L)(body))
+  }
+
   /** `body`'s result and the messages the named logger logs at INFO
     * or above while it runs (the session itself logs at WARN). */
   def infoLines[T](logger: String)(body: => T): (T, Seq[String]) = {

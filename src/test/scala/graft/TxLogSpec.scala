@@ -2157,10 +2157,10 @@ class TxLogSpec extends SparkSpec {
     def cached(d: DataFrame): Boolean = sc.getRDDStorageInfo
       .exists(i => i.id == rddOf(d).id && i.numCachedPartitions > 0)
     // a zero budget keeps both frames distributed (executor blocks)
-    val inner = TxLog.checkpointed(spark.range(0, 100, 1, 4).toDF("id"),
-      "inner", budget = 0L)
-    val outer = TxLog.checkpointed(inner.filter(col("id") % 2 === 0),
-      "outer", budget = 0L)
+    val (inner, outer) = TxLog.HeldBudget.withValue(0L) {
+      val in = TxLog.checkpointed(spark.range(0, 100, 1, 4).toDF("id"), "inner")
+      (in, TxLog.checkpointed(in.filter(col("id") % 2 === 0), "outer"))
+    }
     assert(cached(inner) && cached(outer))
     // a frame DERIVED from checkpoints is not a handle: refused, and
     // nothing is freed
