@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.sources.TxLog
 
 /** Generic deduplication operators (SURVEY.md §2.5) over ANY document
   * table — callers name the id/text columns; the oracle-checked
@@ -416,8 +417,14 @@ object Dedup {
     * changed labels (the number the observer needs) instead of the
     * slightly cheaper `isEmpty` probe; semantics are identical.
     *
-    * Its Spark jobs are labelled `dedup:components-{edges,count,collect,
-    * round}` ([[graft.JobLabels]]). */
+    * `TxLog.checkpointed` materializes the symmetrized edges once
+    * (`components-edges`) and its budget picks the path: held on the
+    * driver with integral ids and no `onRound`, a union-find over
+    * primitive arrays ([[HeldEdges]], `int` parents) returns held
+    * labels with no further job; otherwise the rounds above run.
+    *
+    * Its Spark jobs are labelled `dedup:components-{edges,round}`
+    * ([[graft.JobLabels]]). */
   def components(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25,
       onRound: Option[(Int, Long) => Unit] = None): DataFrame = {
@@ -432,66 +439,32 @@ object Dedup {
       graft.JobLabels.described(session, "dedup", s"components-$phase")(f)
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
     val undirected = labelled("edges") {
-      edges
+      TxLog.checkpointed(edges
         .select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
         .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct(), "components-edges")
     }
-    // SMALL-GRAPH fast path: below `spark.graft.components.localMaxEdges`
-    // distinct directed edges (default 2M ≈ 32 MB of longs — the same
-    // bounded-collect class as a broadcast hash relation), a driver
-    // union-find with min-root union answers in ONE collect instead of
-    // O(log diameter) join+checkpoint rounds of ~5 Spark jobs each.
-    // Result is identical by definition (component = min reachable id,
-    // exactly what min-root union-find computes); the distributed
-    // propagation below stays the path for integral graphs past the
-    // bound, for non-integral id types, and whenever the caller asked
-    // for per-round diagnostics (`onRound`).
-    val localMax = session.conf
-      .get("spark.graft.components.localMaxEdges", "2000000").toLong
-    val integralIds = undirected.schema.fields.head.dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    if (onRound.isEmpty && integralIds && localMax > 0 &&
-        labelled("count")(undirected.count()) <= localMax) {
-      val idType = undirected.schema.fields.head.dataType
-      val edgeRows = labelled("collect") {
-        undirected
-          .select(col("src").cast("long"), col("dst").cast("long"))
-          .collect()
-      }
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      edgeRows.foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        // min-root union: the smaller id stays the root, so every
-        // node's final root IS its component's minimum id
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
-      import scala.jdk.CollectionConverters._
-      val out = parent.keySet().asScala.toSeq.sorted
-        .map(n => (n, find(n)))
-      release(undirected)
-      import session.implicits._
-      return out.toDF("node", "component")
-        .select(col("node").cast(idType).as("node"),
-          col("component").cast(idType).as("component"))
+    // DRIVER path over held integral edges: min-root union-find
+    // computes exactly min reachable id, with no job instead of O(log
+    // diameter) rounds of ~5 jobs each
+    if (onRound.isEmpty) HeldEdges.of(undirected) match {
+      case None =>
+      case Some(g) =>
+        val parent = Array.range(0, g.nodes.length)
+        @annotation.tailrec def find(x: Int): Int =
+          if (parent(x) == x) x
+          else { parent(x) = parent(parent(x)); find(parent(x)) } // halving
+        g.src.indices.foreach { k =>
+          val ra = find(g.src(k)); val rb = find(g.dst(k))
+          // the smaller index (= id) stays the root: roots are minima
+          if (ra < rb) parent(rb) = ra
+          else if (rb < ra) parent(ra) = rb
+        }
+        val idType = undirected.schema.head.dataType
+        return g.perNode(undirected, idType, "component", idType)((r, i) =>
+          HeldEdges.setId(r, 1, idType, g.nodes(find(i))))
     }
     var labels = labelled("round") {
       undirected.select(col("src").as("node")).distinct()
@@ -545,7 +518,7 @@ object Dedup {
       labels = updated.drop("_old")
       i += 1
     }
-    release(undirected)
+    TxLog.releaseCheckpoint(undirected)
     if (!converged)
       throw new IllegalStateException(
         s"components did not converge within $maxIter rounds " +

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.TxLog
+
 /** Similarity-graph analytics (round-4, §2d) — once a kNN/near-dup
   * graph exists ([[Similarity.knnGraph]], [[Dedup]] pair lists), the
   * curation questions become graph questions: how connected is the
@@ -163,7 +165,13 @@ object Graph {
     * aggregate per round, checkpoint-and-release state); the sorted
     * folds trade the native sum's map-side combine for per-group
     * arrays, which is the price of replayability — use [[pagerank]]
-    * when tolerance-level reproducibility is enough. */
+    * when tolerance-level reproducibility is enough.
+    *
+    * `TxLog.checkpointed` materializes the edges once
+    * (`pagerank-edges`) and its budget picks the path: held on the
+    * driver with integral ids, the folds replay over primitive arrays
+    * ([[HeldEdges]], edges sorted once by (dst, src), `double` ranks)
+    * with no further job; otherwise the distributed iteration runs. */
   def pagerankDet(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 10, damping: Double = 0.85,
       danglingBuckets: Int = 64): DataFrame = {
@@ -172,102 +180,47 @@ object Graph {
     require(danglingBuckets > 0, "danglingBuckets must be positive")
     def foldSum(arr: Column): Column =
       aggregate(arr, lit(0.0), (acc, x) => acc + x)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint(true)
-    // SMALL-GRAPH fast path (the [[Dedup.components]] union-find
-    // precedent — same bounded-collect class as a broadcast build):
-    // below `spark.graft.pagerank.localMaxEdges` edges (default 2M
-    // ≈ 32 MB of long pairs) the whole iteration runs on the driver.
-    // Every float reduction in the recipe is a FIXED-ORDER fold over
-    // explicitly sorted keys, so replaying the identical fold order in
-    // plain Scala doubles produces the identical bits — the point of
-    // the Det form — while replacing iters × (edge-join + broadcast +
-    // checkpoint) Spark jobs with ONE collect. Pinned bit-for-bit
-    // against the distributed path by GraphSpec; the distributed
-    // iteration below stays the path for graphs past the bound and
-    // for non-integral id types.
-    val session = edges.sparkSession
-    val localMax = session.conf
-      .get("spark.graft.pagerank.localMaxEdges", "2000000").toLong
-    val integralIds = e.schema.fields.forall(_.dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    })
-    if (integralIds && localMax > 0 && e.count() <= localMax) {
-      // node id type = what the distributed union of src/dst widens to
-      val idType = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .schema.head.dataType
-      val edgeArr = e.select(col("src").cast("long"),
-        col("dst").cast("long")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      Dedup.release(e)
-      val outDeg = new java.util.HashMap[Long, Long]()
-      val nodeSet = new java.util.TreeSet[java.lang.Long]()
-      edgeArr.foreach { case (s, d) =>
-        outDeg.merge(s, 1L, _ + _)
-        nodeSet.add(s); nodeSet.add(d)
-      }
-      import scala.jdk.CollectionConverters._
-      val nodes = nodeSet.asScala.toArray.map(_.longValue)
-      val n = nodes.length.toDouble
-      var rank = new java.util.HashMap[Long, java.lang.Double]()
-      nodes.foreach(nd => rank.put(nd, 1.0 / n))
-      val teleport = (1.0 - damping) / n
-      var i = 0
-      while (i < iters) {
-        // contribs: per dst, fold rank(src)/out_degree(src) over the
-        // (src, c)-sorted in-edge list — array_sort(struct(src, c))'s
-        // order, summed left-to-right from 0.0
-        val inLists = new java.util.HashMap[Long,
-          scala.collection.mutable.ArrayBuffer[(Long, Double)]]()
-        edgeArr.foreach { case (s, d) =>
-          val c = rank.get(s) / outDeg.get(s)
-          inLists.computeIfAbsent(d,
-            _ => scala.collection.mutable.ArrayBuffer.empty)
-            .append((s, c))
+    val e = TxLog.checkpointed(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      "pagerank-edges")
+    // DRIVER path over held integral edges: every float reduction of
+    // the recipe is a FIXED-ORDER fold over sorted keys, so replaying
+    // it in plain doubles gives the identical bits (pinned against the
+    // distributed path by Round17Spec) with no per-iteration job.
+    HeldEdges.of(e) match {
+      case None =>
+      case Some(g) =>
+        val nn = g.nodes.length
+        val n = nn.toDouble
+        val outDeg = new Array[Long](nn)
+        g.src.foreach(s => outDeg(s) += 1)
+        // in-edges sorted ONCE by (dst, src), packed in a long: per
+        // dst, array_sort(struct(src, c))'s order (c depends on src)
+        val inEdges = Array.tabulate(g.src.length)(k =>
+          (g.dst(k).toLong << 32) | g.src(k))
+        java.util.Arrays.sort(inEdges)
+        val bucket = g.nodes.map(nd =>
+          java.lang.Math.floorMod(nd, danglingBuckets.toLong).toInt)
+        val teleport = (1.0 - damping) / n
+        val ranks = (0 until iters).foldLeft(Array.fill(nn)(1.0 / n)) {
+          (rank, _) =>
+            // dangling mass: per pmod bucket over id-ordered ranks, then
+            // across buckets in order (an empty one adds +0.0: no change)
+            val sums = new Array[Double](danglingBuckets)
+            g.nodes.indices.foreach { v =>
+              if (outDeg(v) == 0L) sums(bucket(v)) += rank(v)
+            }
+            val dangling = sums.sum // left to right
+            // contribs: per dst, rank(src)/out_degree(src) left to right
+            val contrib = new Array[Double](nn)
+            inEdges.foreach(k =>
+              contrib((k >>> 32).toInt) += rank(k.toInt) / outDeg(k.toInt))
+            Array.tabulate(nn)(v =>
+              teleport + damping * (contrib(v) + dangling / n))
         }
-        val contrib = new java.util.HashMap[Long, java.lang.Double]()
-        inLists.forEach { (d, lst) =>
-          contrib.put(d, lst.sortBy(identity)
-            .foldLeft(0.0)((acc, x) => acc + x._2))
-        }
-        // dangling mass: the two-level bucketed fold — per
-        // pmod(node, buckets) bucket over node-sorted ranks, then
-        // across the bucket sums in bucket order
-        val bucketLists = new java.util.TreeMap[Long,
-          scala.collection.mutable.ArrayBuffer[(Long, Double)]]()
-        nodes.foreach { nd =>
-          if (!outDeg.containsKey(nd)) {
-            val k = danglingBuckets.toLong
-            val b = ((nd % k) + k) % k
-            bucketLists.computeIfAbsent(b,
-              _ => scala.collection.mutable.ArrayBuffer.empty)
-              .append((nd, rank.get(nd).doubleValue))
-          }
-        }
-        val bucketSums = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-        bucketLists.forEach { (b, lst) =>
-          bucketSums.append(
-            (b, lst.sortBy(identity).foldLeft(0.0)((acc, x) => acc + x._2)))
-        }
-        val dangling = bucketSums.sortBy(identity)
-          .foldLeft(0.0)((acc, x) => acc + x._2)
-        val next = new java.util.HashMap[Long, java.lang.Double]()
-        nodes.foreach { nd =>
-          val c: Double =
-            if (contrib.containsKey(nd)) contrib.get(nd) else 0.0
-          next.put(nd, teleport + damping * (c + dangling / n))
-        }
-        rank = next
-        i += 1
-      }
-      import session.implicits._
-      return nodes.toSeq.map(nd => (nd, rank.get(nd).doubleValue))
-        .toDF("node", "pagerank")
-        .select(col("node").cast(idType).as("node"), col("pagerank"))
+        return g.perNode(e, commonIdType(e, "src", "dst")
+          .getOrElse(e.schema.head.dataType), "pagerank", DoubleType)(
+          (r, v) => r.setDouble(1, ranks(v)))
     }
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
@@ -307,7 +260,7 @@ object Graph {
       ranks = updated
       i += 1
     }
-    Dedup.release(e)
+    TxLog.releaseCheckpoint(e)
     ranks.select(col("node"), col("rank").as("pagerank"))
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.TxLog
+
 /** Corpus-trained naive-Bayes document classifier (round-9): the
   * fastText-style quality-classifier curation signal (Joulin et al.
   * 2016; the "train a cheap classifier on weak labels, score the
@@ -118,23 +120,17 @@ object NaiveBayes {
     * column contract unchanged from round-9's first landing).
     * Output: (doc_id, label 0/1, n_tokens, lp_pos, lp_neg, pred).
     *
-    * `materialize = true` localCheckpoints the tokenized instance
-    * relation ONCE and derives training counts, model scalars, AND
-    * scoring from it — without it every downstream stage re-reads and
-    * re-tokenizes the documents (7 scans in the round-9 plan audit).
-    * The checkpoint is executor-local MEMORY_AND_DISK storage sized
-    * like the token arrays, so at full 100 TB corpus scale prefer a
-    * durable checkpoint dir or accept the rescans; at weak-label
-    * training scale (a labeled sample, the fastText recipe) it is the
-    * right default trade. Results are bit-identical either way
-    * (verified by the unchanged oracle hash); callers that consume
-    * the result should release the checkpoint blocks when done
-    * ([[graft.operators.Dedup.release]] — Verify already does). */
+    * `TxLog.checkpointed` materializes the tokenized instances ONCE
+    * (`nb-tokens`) for training counts, model scalars AND scoring —
+    * not 7 document scans (round-9 plan audit). Its budget picks the
+    * form: held on the driver, or an executor checkpoint the caller
+    * frees with [[graft.operators.Dedup.release]] once the result is
+    * consumed (Verify does). Results are bit-identical either way. */
   def trainScore(docs: DataFrame, idCol: String, textCol: String,
-      labelCol: String, materialize: Boolean = false): DataFrame = {
+      labelCol: String): DataFrame = {
     val base = tokens(docs, idCol, textCol,
       Seq(col(labelCol).cast("boolean").as("label")))
-    val shared = if (materialize) base.localCheckpoint() else base
+    val shared = TxLog.checkpointed(base, "nb-tokens")
     val m = trainFromBase(shared)
     scoreFromBase(m, shared, Some("label"))
       .select(col("doc_id"), col("label"), col("n_tokens"),

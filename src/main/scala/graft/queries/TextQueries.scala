@@ -194,10 +194,7 @@ object TextQueries {
         size(toks)).between(3.0, 8.0), 2).otherwise(0)
     val labeled = docs(s, dir)
       .select(col("doc_id"), t, (score >= 8).as("label"))
-    // materialize: tokenize + label ONCE (localCheckpoint), instead of
-    // the 7 re-scans the round-9 plan audit measured; hash unchanged
-    NaiveBayes.trainScore(labeled, "doc_id", "text", "label",
-      materialize = true)
+    NaiveBayes.trainScore(labeled, "doc_id", "text", "label")
   }
 
   /** nb_calibration (round-9) — the classifier EVALUATION surface

@@ -968,7 +968,7 @@ object TxLog {
     //     scoped files' RECORDED BYTES, zero extra passes);
     //  2. `spark.graft.write.tasksPerValue = n` — a constant n-way
     //     salt per value (the session knob);
-    //  3. `spark.graft.write.autoSalt` (default on): ONE narrow
+    //  3. otherwise the auto-salt histogram: ONE narrow
     //     count per partition value over the batch, then each value
     //     gets ceil(its rows / the mean value's rows) tasks — a 90/10
     //     skewed batch fans its hot value out and leaves cold values
@@ -985,8 +985,6 @@ object TxLog {
       .get("spark.graft.write.tasksPerValue", "1").toInt
     require(tasksPerValue >= 1,
       "TxLog: spark.graft.write.tasksPerValue must be >= 1")
-    val autoSalt = spark.conf
-      .get("spark.graft.write.autoSalt", "true").toBoolean
     // the salted forms pin the shuffle partition count: an
     // AQE-coalesced tiny shuffle would merge the salt slices back
     // into one task, silently defeating the requested parallelism —
@@ -1114,7 +1112,7 @@ object TxLog {
           pmod(saltBase, lit(tasksPerValue)): _*)
       else {
         val h =
-          if (autoSalt && valueTasks.isEmpty && bigEnough) histTasks()
+          if (valueTasks.isEmpty && bigEnough) histTasks()
           else Map.empty[String, Int]
         if (h.exists(_._2 > 1)) pidShuffle(h)
         else df.repartition(partCols.map(col): _*)

@@ -21,6 +21,7 @@ import org.apache.spark.rdd.LocalRDDCheckpointData
 import org.apache.spark.util.RpcUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 
 /** Driver-held relations: the one job that materializes a local
   * checkpoint also returns its rows while they fit a byte budget
@@ -103,8 +104,19 @@ object Held {
   }
 
   /** Whether `df` is a driver-held relation. */
-  def isHeld(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+  def isHeld(df: DataFrame): Boolean = rows(df).isDefined
+
+  /** A driver-held relation's rows, uncopied; None if not held. */
+  def rows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.analyzed match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
+
+  /** A driver-held relation of `schema` over `rows`. */
+  def relation(like: DataFrame, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    ofRows(like, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** `df`'s rows computed on the driver, or None when some leaf of its
     * optimized plan is not held or some node is not a projection,
@@ -118,8 +130,7 @@ object Held {
   /** `df` as a driver-held relation with fresh attributes when
     * [[fold]] can compute it; `df` itself otherwise. */
   def folded(df: DataFrame): DataFrame =
-    evalHeld(df).fold(df)(rows =>
-      ofRows(df, LocalRelation(DataTypeUtils.toAttributes(df.schema), rows)))
+    evalHeld(df).fold(df)(relation(df, df.schema, _))
 
   /** [[eval]] of `df`'s optimized plan — optimized only when every
     * relation under its analyzed plan is held. */

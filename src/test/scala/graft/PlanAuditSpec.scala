@@ -368,8 +368,8 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
     assert(count(p, "BroadcastExchange") >= 2, p)
     assert(count(p, "Exchange hashpartitioning") <= 5, p)
-    // round-10: the tokenized instance relation is checkpointed once
-    // (trainScore materialize=true) — every stage reads the checkpoint,
+    // round-10: the tokenized instance relation is materialized once
+    // (trainScore, through TxLog.checkpointed) — every stage reads it,
     // not the parquet; 7 documents scans collapse to 0
     assert(count(p, "FileScan parquet") <= 3, p)
     graft.operators.Dedup.release(df) // free the audited checkpoint

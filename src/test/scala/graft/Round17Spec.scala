@@ -592,16 +592,40 @@ class Round17Spec extends SparkSpec {
     val fast = Graph.pagerankDet(e, "src", "dst", iters = 9,
       danglingBuckets = 4)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    s.conf.set("spark.graft.pagerank.localMaxEdges", "0")
-    val dist =
-      try Graph.pagerankDet(e, "src", "dst", iters = 9,
+    val dist = TxLog.HeldBudget.withValue(0L)(
+      Graph.pagerankDet(e, "src", "dst", iters = 9,
         danglingBuckets = 4)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      finally s.conf.unset("spark.graft.pagerank.localMaxEdges")
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     assert(fast.keySet == dist.keySet,
       "fast path must emit exactly the distributed node set")
     assert(bits(fast) == bits(dist),
       "fast path must be BIT-identical to the distributed folds")
+  }
+
+  test("pagerankDet: the held budget picks the path at the edges'" +
+      " measured bytes, and both paths give the same bits") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.Graph
+    // one partition, so the budget's per-partition share is all of it
+    val e = (Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 5L -> 4L,
+      -6L -> 5L, 6L -> 6L) ++ (10L until 40L).map(i => i -> (i * 3 % 41)))
+      .toDF("src", "dst").coalesce(1)
+    val iters = 6
+    def run(budget: Long) = underBudget(budget, "pagerank-edges") {
+      Graph.pagerankDet(e, "src", "dst", iters = iters, danglingBuckets = 4)
+        .collect().map(r => r.getLong(0) ->
+          java.lang.Double.doubleToLongBits(r.getDouble(1))).toMap
+    }
+    val b = measuredBytes(run(TxLog.HeldBudget.value)._2)
+    val (driver, atBudget, driverJobs) = run(b)
+    assert(atBudget.contains(": driver rows="), atBudget)
+    // only the job that materializes the edges: no per-iteration job
+    assert(driverJobs.size < iters, driverJobs)
+    val (dist, overBudget, distJobs) = run(b - 1)
+    assert(overBudget.contains(": distributed bytes="), overBudget)
+    assert(distJobs.size >= iters, distJobs)
+    assert(driver == dist, "both paths must give the same bits")
   }
 
   // ---- seeded PQ (the oracle-hashable flat-PQ plan) ------------------

@@ -87,4 +87,19 @@ abstract class SparkSpec extends AnyFunSuite {
       (r, seen.toArray.map(_.toString).toSeq)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body` run with `TxLog.HeldBudget` at `budget` bytes: its result,
+    * the one `txlog materialize <label>:` line it logged, and the
+    * descriptions of the jobs it launched. */
+  def underBudget[T](budget: Long, label: String)(
+      body: => T): (T, String, Seq[String]) = {
+    val ((r, jobs), lines) = infoLines("graft.sources.TxLog")(
+      graft.sources.TxLog.HeldBudget.withValue(budget)(jobDescriptions(body)))
+    val Seq(line) = lines.filter(_.startsWith(s"txlog materialize $label:"))
+    (r, line, jobs)
+  }
+
+  /** The bytes a `txlog materialize` line measured. */
+  def measuredBytes(line: String): Long =
+    "bytes=(\\d+)".r.findFirstMatchIn(line).get.group(1).toLong
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, TextHash}
 import graft.queries.{DedupQueries, SimilarityQueries, TextQueries}
+import graft.sources.TxLog
 
 /** SURVEY.md §2.5/2.6/2.7 rows-only operators: expression semantics,
   * candidate-generation guarantees, LSH recall. */
@@ -262,16 +263,14 @@ class TextDedupSpec extends SparkSpec {
       .toDF("id_a", "id_b")
     sc.setJobDescription("caller")
     try {
+      // the driver path runs only the jobs that materialize the edges
       val fast = jobsOf(graft.operators.Dedup.release(
         graft.operators.Dedup.components(pairs, "id_a", "id_b")))
-      assert(Seq("edges", "count", "collect")
-        .forall(p => fast.contains(s"dedup:components-$p")), fast)
-      assert(fast.forall(_.startsWith("dedup:components-")), fast)
-      spark.conf.set("spark.graft.components.localMaxEdges", "0")
-      val dist =
-        try jobsOf(graft.operators.Dedup.release(
-          graft.operators.Dedup.components(pairs, "id_a", "id_b")))
-        finally spark.conf.unset("spark.graft.components.localMaxEdges")
+      assert(fast.nonEmpty && fast.forall(_ == "dedup:components-edges"),
+        fast)
+      val dist = TxLog.HeldBudget.withValue(0L)(jobsOf(
+        graft.operators.Dedup.release(
+          graft.operators.Dedup.components(pairs, "id_a", "id_b"))))
       assert(dist.contains("dedup:components-edges") &&
         dist.contains("dedup:components-round"), dist)
       assert(dist.forall(_.startsWith("dedup:components-")), dist)
@@ -307,12 +306,32 @@ class TextDedupSpec extends SparkSpec {
     val pairs = edges.toDF("id_a", "id_b")
     val fast = graft.operators.Dedup.components(pairs, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.components.localMaxEdges", "0")
-    val dist =
-      try graft.operators.Dedup.components(pairs, "id_a", "id_b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("spark.graft.components.localMaxEdges")
+    val dist = TxLog.HeldBudget.withValue(0L)(
+      graft.operators.Dedup.components(pairs, "id_a", "id_b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(fast == dist)
+  }
+
+  test("components: the held budget picks the path at the edges'" +
+      " measured bytes, and both paths give the same labels") {
+    // adaptive execution coalesces the small distinct edge set into one
+    // partition, so the budget's per-partition share is all of it
+    val pairs = ((0 until 60).map(i => (i.toLong, (i * 7 % 60).toLong)) ++
+      Seq((100L, 101L), (101L, 102L), (7L, 7L))).toDF("id_a", "id_b")
+    def run(budget: Long) = underBudget(budget, "components-edges") {
+      val c = graft.operators.Dedup.components(pairs, "id_a", "id_b")
+      try c.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally graft.operators.Dedup.release(c)
+    }
+    val b = measuredBytes(run(TxLog.HeldBudget.value)._2)
+    val (driver, atBudget, driverJobs) = run(b)
+    assert(atBudget.contains(": driver rows="), atBudget)
+    assert(!driverJobs.contains("dedup:components-round"), driverJobs)
+    val (dist, overBudget, distJobs) = run(b - 1)
+    assert(overBudget.contains(": distributed bytes="), overBudget)
+    assert(distJobs.contains("dedup:components-round"), distJobs)
+    assert(driver == dist)
+    assert(driver(102L) == 100L && driver(49L) == 1L)
   }
 
   test("components/dropNearDuplicates pin only their result blocks") {
@@ -323,25 +342,24 @@ class TextDedupSpec extends SparkSpec {
     val baseline = pinned
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L), (7L, 9L), (9L, 8L))
       .toDF("id_a", "id_b")
-    // small integral graphs take the round-21 driver union-find fast
-    // path: the labels come back as a LOCAL relation — nothing stays
-    // pinned at all (the undirected edge checkpoint was released)
+    // small integral graphs take the driver union-find path: the
+    // edges are held on the driver and the labels come back as a
+    // LOCAL relation — nothing stays pinned at all
     val out = graft.operators.Dedup.components(pairs, "id_a", "id_b")
     assert(pinned == baseline)
     assert(out.count() == 8)
     graft.operators.Dedup.release(out) // no-op on the local result
     assert(pinned == baseline)
-    // the DISTRIBUTED path (forced via the edge bound) keeps the old
-    // contract: every superseded round + the undirected edge set are
-    // unpersisted, only the returned labels stay cached
-    spark.conf.set("spark.graft.components.localMaxEdges", "0")
-    try {
+    // the DISTRIBUTED path (forced by a zero held budget) keeps the
+    // old contract: every superseded round + the undirected edge set
+    // are unpersisted, only the returned labels stay cached
+    TxLog.HeldBudget.withValue(0L) {
       val outDist = graft.operators.Dedup.components(pairs, "id_a", "id_b")
       assert(pinned == baseline + 1)
       assert(outDist.count() == 8)
       graft.operators.Dedup.release(outDist)
       assert(pinned == baseline)
-    } finally spark.conf.unset("spark.graft.components.localMaxEdges")
+    }
 
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
